@@ -91,6 +91,8 @@ object Prof {
     t("warmup")(sig.limit(1000).count())
     val h75 = operators.HilbertOps.hilbertH
     t("convPlus_75tap")(operators.FirOps.convPlus(sig, h75).count())
+    // the 8-kernel Morlet bank (17–121 taps, re + im) as ONE convBank scan
+    t("cwt_bank")(operators.CwtOps.cwtMorlet(sigSorted, presorted = true).count())
     t("sosfilt_butter")(operators.IirOps.sosfilt(sig, operators.IirOps.butterLp).count())
     t("sosfilt_presorted")(
       operators.IirOps.sosfilt(sigSorted, operators.IirOps.butterLp, presorted = true).count()

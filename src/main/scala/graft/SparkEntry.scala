@@ -32,8 +32,10 @@ object SparkEntry {
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2; built once,
+    * so `queries(name)` lookups don't re-concatenate the module maps.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     BaseQueries.queries ++
       operators.ProTools.queries ++
       operators.FirOps.queries ++
@@ -69,7 +71,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver rows-only check.
     */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     BaseQueries.oracleSql ++
       operators.ProTools.oracleSql ++
       operators.FirOps.oracleSql ++

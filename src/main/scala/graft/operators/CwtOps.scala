@@ -15,15 +15,14 @@ import graft.core.{Dsp, Signal}
   * grid with ±4s support (≤ 121 taps — inside the left-associated
   * oracle-parity bound). Output per sample: |W_s x|² at each scale.
   *
-  * Spark shape: the whole bank is 2·|scales| more lag-sums inside the
-  * ONE channel-window pass every FIR rides ([[FirOps.sameExpr]]) — zero
-  * additional shuffles; real/imag parts are materialized once in a
-  * first projection so the power never re-evaluates a conv tree. The
-  * kernels embed as literals in BOTH plans, so re/im agree to the last
-  * bit cross-engine and the squared magnitude hashes exactly (FIR
-  * precedent). At production scale, larger scales (>128 taps) run
-  * through the segmented FFT path (`functions.SegConv`) like any long
-  * kernel.
+  * Spark shape: the whole bank — re and im kernels for every scale —
+  * runs as ONE [[FirOps.convBank]] channel scan, the kernel every
+  * 'same'-mode FIR rides; with `presorted` it adds zero shuffles. The
+  * scan accumulates in [[FirOps.sameExprSql]]'s term order, so re/im
+  * agree to the last bit cross-engine and the squared magnitude hashes
+  * exactly (FIR precedent). At production scale, larger scales (>128
+  * taps) run through the segmented FFT path (`functions.SegConv`) like
+  * any long kernel.
   */
 object CwtOps {
 
@@ -49,17 +48,16 @@ object CwtOps {
     * magnitude per scale, zero-extended edges (numpy conv semantics).
     */
   def cwtMorlet(sig: DataFrame, presorted: Boolean = false): DataFrame = {
-    val reIm = sig.select(
-      Seq(col("channel"), col("n")) ++ scales.flatMap { s =>
-        val (re, im) = kernel(s)
-        Seq(FirOps.sameExpr(re).as(s"re$s"), FirOps.sameExpr(im).as(s"im$s"))
-      }: _*
-    )
-    reIm.select(
-      Seq(col("channel"), col("n")) ++ scales.map { s =>
-        Dsp.round6(col(s"re$s") * col(s"re$s") + col(s"im$s") * col(s"im$s")).as(s"pow_s$s")
-      }: _*
-    )
+    val bank = scales.toSeq.flatMap { s => val (re, im) = kernel(s); Seq(re, im) }
+    val ys = col("ys")
+    FirOps
+      .convBank(sig, bank, presorted)
+      .select(
+        Seq(col("channel"), col("n")) ++ scales.indices.map { i =>
+          val (re, im) = (ys(2 * i), ys(2 * i + 1))
+          Dsp.round6(re * re + im * im).as(s"pow_s${scales(i)}")
+        }: _*
+      )
   }
 
   def cwtMorletSql: String = {
@@ -80,10 +78,10 @@ object CwtOps {
       s"SELECT channel, n, $pows FROM w8"
   }
 
-  /** The production route for scales past the lag-sum bound: 257 taps
-    * at scale 32 (>128 — outside the left-associated oracle-parity
-    * window, which is why this path is spec-pinned rather than
-    * hash-gated).
+  /** The production route for scales past the oracle lag-sum bound:
+    * 257 taps at scale 32 (>128 — outside the left-associated
+    * oracle-parity window, which is why this path is spec-pinned rather
+    * than hash-gated).
     */
   val longScale = 32
 
@@ -94,10 +92,10 @@ object CwtOps {
     * kernels run as [[graft.functions.exprs.seg_conv]] FFT convolutions
     * over the same assembled segment (re/im never pay assembly twice),
     * core regions explode back to rows. O(log segLen) per sample vs
-    * O(M) for the lag-sum bank. Contract (CwtLongSpec pins it):
-    * round6(re² + im²) on the 6-dp-rounded 'same' convolutions equals
-    * the lag-sum path under the same rounding — the fir_oa_fast parity
-    * bar.
+    * O(M) for the direct [[FirOps.convBank]] scan. Contract (CwtLongSpec
+    * pins it): round6(re² + im²) on the 6-dp-rounded 'same' convolutions
+    * equals the direct [[FirOps.same]] path under the same rounding —
+    * the fir_oa_fast parity bar.
     */
   def cwtMorletLong(sig: DataFrame, s: Int = longScale, segLen: Int = 1024): DataFrame = {
     val (re, im) = kernel(s)

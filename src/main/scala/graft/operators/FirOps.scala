@@ -11,20 +11,22 @@ import graft.core.{Dsp, Signal}
   * Reference: openseize `filtering/fir.py` (window families) applied via
   * `core/numerical.py:158` `oaconvolve` with numpy modes full/same/valid.
   *
-  * Spark-first shape: a linear convolution y[n] = Σ_k h[k]·x[n−k+Δ] is a
-  * fixed pattern of `lag`/`lead` references within one
-  * `PARTITION BY channel ORDER BY n` window — a single shuffle+sort, then
-  * whole-stage-codegen'd arithmetic; no UDFs, no state. Edge samples use
-  * zero extension (numpy conv semantics) via `coalesce(·, 0)`.
+  * Spark-first shape: 'same' mode is one channel-partitioned scan
+  * ([[convBank]]) — a JIT'd per-kernel loop over fixed blocks with a
+  * halo, no per-tap window frames. 'valid' and 'full' are a fixed
+  * pattern of `lag`/`lead` references within one
+  * `PARTITION BY channel ORDER BY n` window. Edge samples use zero
+  * extension (numpy conv semantics).
   *
-  * The same coefficient array also renders the DuckDB oracle expression,
-  * term-for-term in the same left-associated order, so both engines agree to the
+  * The same coefficient array also renders the DuckDB oracle expression
+  * ([[sameExprSql]]), and the scan accumulates term-for-term in that
+  * expression's left-associated order, so both engines agree to the
   * last ulp; outputs are rounded to 6 dp on both sides to make the
   * comparison hash-stable.
   *
-  * Scale: one window sort per channel partition; the M lag references are
-  * per-row O(M) work with no extra shuffle. For M ≳ 128 the segmented
-  * overlap-add FFT path (`functions.SegConv`) is preferred.
+  * Scale: one channel sort, then O(M) work per output sample per
+  * kernel. For M ≳ 128 the segmented overlap-add FFT path
+  * (`functions.SegConv`) is preferred.
   */
 object FirOps {
 
@@ -41,29 +43,10 @@ object FirOps {
     else if (j < 0) s"lag(x, ${-j}) OVER w"
     else "x"
 
-  /** Same-mode convolution of column x as a reusable Column expression.
-    * Kernels ≤128 taps sum left-associated (matching the SQL oracle's
-    * parse order term-for-term); longer kernels use a balanced reduction
-    * to bound expression-tree depth (those run through the FFT fast path
-    * or rows-only checks, so cross-engine order parity is not needed).
+  /** Same-mode convolution as a DuckDB lag-sum: Σ_k h[k]·x[n − k + L],
+    * left-associated in ascending k — the term order [[convBank]]
+    * reproduces. Expects window `w` over (channel, n).
     */
-  def sameExpr(h: Array[Double]): Column = {
-    val l = (h.length - 1) / 2
-    val terms = h.zipWithIndex
-      .map { case (c, k) => lit(c) * coalesce(shifted(l - k), lit(0.0)) }
-    if (terms.length <= 128) terms.reduceLeft(_ + _)
-    else {
-      def bal(ts: Array[Column]): Column =
-        if (ts.length == 1) ts(0)
-        else {
-          val (a, b) = ts.splitAt(ts.length / 2)
-          bal(a) + bal(b)
-        }
-      bal(terms)
-    }
-  }
-
-  /** SQL twin of [[sameExpr]]; expects window `w` over (channel, n). */
   def sameExprSql(h: Array[Double]): String = {
     val l = (h.length - 1) / 2
     h.zipWithIndex
@@ -73,7 +56,7 @@ object FirOps {
 
   /** Centered ('same') convolution: y[n] = Σ_k h[k]·x[n − k + L], L = (M−1)/2. */
   def same(sig: DataFrame, h: Array[Double]): DataFrame =
-    sig.select(col("channel"), col("n"), round(sameExpr(h), 6).as("y"))
+    convPlus(sig, h).select(col("channel"), col("n"), round(col("y"), 6).as("y"))
 
   def sameSql(h: Array[Double]): String =
     s"${Signal.sigCte} SELECT channel, n, round(${sameExprSql(h)}, 6) AS y FROM sig " +
@@ -146,7 +129,7 @@ object FirOps {
     * partitioning), each extended segment runs one FFT convolution
     * inside the custom `SegConv` expression, and the core region
     * explodes back to rows. O(log S) per sample vs O(M) for the
-    * lag-sum path — the win for kernels with hundreds+ taps.
+    * direct [[convBank]] scan — the win for kernels with hundreds+ taps.
     */
   /** The scatter/assemble half of [[sameFast]]: samples land in their
     * own segment plus L-sample halos of both neighbors, and each
@@ -278,34 +261,49 @@ object FirOps {
       .drop("max_n")
   }
 
-  /** 'same'-mode convolution as a channel-parallel mapPartitions scan,
-    * bit-exact with [[sameExpr]]: terms accumulate in ascending-k
-    * left-associated order with literal 0.0 contributions outside the
-    * signal, so any oracle written against the lag-sum stays valid.
-    *
-    * Why it exists: WindowExec evaluates each lag/lead as an interpreted
-    * per-row frame — at 100+ taps (Hilbert chains) that interpretive
-    * overhead dominates. Here the kernel is one JIT'd loop; channels
-    * remain the parallel unit exactly like the IIR scan.
-    *
-    * Memory-bounded: samples are consumed in fixed blocks with an
-    * (m-1)-sample halo carried between blocks, so peak task memory is
-    * O(blockSize + m) regardless of channel length — a channel of
-    * billions of samples never materializes in one task.
-    * Output: (channel, n, x, y).
+  /** 'same'-mode convolution of ONE kernel: the `ys[0]` projection of
+    * [[convBank]]. Output: (channel, n, x, y).
     */
   def convPlus(
       sig: DataFrame,
       h: Array[Double],
       presorted: Boolean = false,
       blockSizeHint: Int = 1 << 16
+  ): DataFrame =
+    convBank(sig, Seq(h), presorted, blockSizeHint)
+      .select(col("channel"), col("n"), col("x"), col("ys")(0).as("y"))
+
+  /** 'same'-mode convolution of K kernels in ONE channel-parallel
+    * mapPartitions scan, bit-exact with [[sameExprSql]]: per kernel,
+    * terms accumulate in ascending-k left-associated order with
+    * `h(k) * 0.0` contributions outside the signal.
+    *
+    * Why it exists: WindowExec evaluates each lag/lead as an interpreted
+    * per-row frame — at 100+ taps that overhead dominates. Here each
+    * kernel is one JIT'd loop over a shared sample buffer; channels
+    * remain the parallel unit exactly like the IIR scan.
+    *
+    * Memory-bounded: samples are consumed in fixed blocks with the
+    * longest kernel's halos carried between blocks, so peak task memory
+    * is O(blockSize + max m) regardless of channel length.
+    * Output: (channel, n, x, ys) with `ys(q)` = kernel q's convolution.
+    */
+  def convBank(
+      sig: DataFrame,
+      hs: Seq[Array[Double]],
+      presorted: Boolean = false,
+      blockSizeHint: Int = 1 << 16
   ): DataFrame = {
+    require(hs.nonEmpty && hs.forall(_.nonEmpty), "convBank needs at least one non-empty kernel")
     val spark = sig.sparkSession
     import spark.implicits._
-    val hl = h.clone()
-    val m = hl.length
-    val l = (m - 1) / 2
-    val blockSize = math.max(blockSizeHint, 4 * m)
+    val bank = hs.map(_.clone()).toArray
+    val nk = bank.length
+    val ls = bank.map(h => (h.length - 1) / 2)
+    val mMax = bank.map(_.length).max
+    val lookahead = (mMax - 1) / 2      // largest l: both halos grow with m
+    val lookback = mMax - 1 - lookahead // largest m−1−l
+    val blockSize = math.max(blockSizeHint, 4 * mMax)
     val typed = sig
       .select(col("channel"), col("n"), col("x"))
       .as[(String, Long, Double)]
@@ -319,8 +317,7 @@ object FirOps {
     ordered
       .mapPartitions { (it: Iterator[(String, Long, Double)]) =>
         val in = it.buffered
-        new Iterator[Iterator[(String, Long, Double, Double)]] {
-          private val lb = m - 1 - l // left lookback per output
+        new Iterator[Iterator[(String, Long, Double, Array[Double])]] {
           private var ch: String = null
           private val ns = scala.collection.mutable.ArrayBuffer.empty[Long]
           private val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -329,7 +326,7 @@ object FirOps {
 
           def hasNext: Boolean = in.hasNext || xs.nonEmpty
 
-          def next(): Iterator[(String, Long, Double, Double)] = {
+          def next(): Iterator[(String, Long, Double, Array[Double])] = {
             if (xs.isEmpty) { ch = in.head._1; base = 0L; nextOut = 0L }
             var read = 0
             while (read < blockSize && in.hasNext && in.head._1 == ch) {
@@ -337,29 +334,37 @@ object FirOps {
             }
             val channelDone = !in.hasNext || in.head._1 != ch
             val avail = base + xs.length // inputs read so far (channel-absolute)
-            val lastOut = if (channelDone) avail - 1 else avail - 1 - l
+            val lastOut = if (channelDone) avail - 1 else avail - 1 - lookahead
             val nOut = math.max(0L, lastOut - nextOut + 1).toInt
-            val out = new Array[(String, Long, Double, Double)](nOut)
+            val out = new Array[(String, Long, Double, Array[Double])](nOut)
             var j = 0
             while (j < nOut) {
               val i = nextOut + j
-              var acc = 0.0
-              var k = 0
-              while (k < m) {
-                val idx = i + l - k
-                val t = hl(k) * (if (idx >= 0 && idx < avail) xs((idx - base).toInt) else 0.0)
-                acc = if (k == 0) t else acc + t
-                k += 1
+              val ys = new Array[Double](nk)
+              var q = 0
+              while (q < nk) {
+                val h = bank(q)
+                val l = ls(q)
+                var acc = 0.0
+                var k = 0
+                while (k < h.length) {
+                  val idx = i + l - k
+                  val t = h(k) * (if (idx >= 0 && idx < avail) xs((idx - base).toInt) else 0.0)
+                  acc = if (k == 0) t else acc + t
+                  k += 1
+                }
+                ys(q) = acc
+                q += 1
               }
               val rel = (i - base).toInt
-              out(j) = (ch, ns(rel), xs(rel), acc)
+              out(j) = (ch, ns(rel), xs(rel), ys)
               j += 1
             }
             nextOut = lastOut + 1
             if (channelDone && nextOut >= avail) {
               ns.clear(); xs.clear() // channel finished
             } else {
-              val dropTo = math.max(0L, nextOut - lb) // keep lookback halo
+              val dropTo = math.max(0L, nextOut - lookback) // keep lookback halo
               val dropCount = (dropTo - base).toInt
               if (dropCount > 0) { ns.remove(0, dropCount); xs.remove(0, dropCount); base = dropTo }
             }
@@ -367,7 +372,7 @@ object FirOps {
           }
         }.flatten
       }
-      .toDF("channel", "n", "x", "y")
+      .toDF("channel", "n", "x", "ys")
   }
 
   // ---- designed filters over the test signal (fs nominal 100 Hz) ----

@@ -18,9 +18,9 @@ import graft.core.{Dsp, Signal}
   * same analytic transform; its Monte-Carlo surrogate machinery is
   * round-2 work).
   *
-  * Spark shape: the Hilbert FIR is one more lag-sum in the channel
-  * window — envelope and phase are row-local expressions on top; PLV is
-  * a channel-pair equi-join on n followed by one aggregation.
+  * Spark shape: the Hilbert FIR is one [[FirOps.convPlus]] channel scan
+  * — envelope and phase are row-local expressions on top; PLV is a
+  * channel-pair equi-join on n followed by one aggregation.
   */
 object HilbertOps {
 

@@ -76,6 +76,51 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(blocked == whole) // bit-exact across block boundaries
   }
 
+  // a mixed-length bank: the 121-tap kernel is longer than channels a
+  // (7) and c (41), and channel e crosses several 484-sample blocks
+  private val bank: Seq[Array[Double]] = Seq(
+    Array.tabulate(9)(k => (k - 4) * 0.37),
+    Array.tabulate(25)(k => math.sin(k + 1.0) / (k + 1.0)),
+    Array.tabulate(121)(k => math.cos(k * 0.21) * math.exp(-k / 60.0))
+  )
+  private val bankChans = chans :+ ("e" -> Array.fill(2000)(rnd.nextDouble() * 10 - 5))
+  private def bankDf = bankChans
+    .flatMap { case (ch, xs) => xs.zipWithIndex.map { case (v, i) => (ch, i.toLong, v) } }
+    .toDF("channel", "n", "x")
+
+  private def bankOut(hs: Seq[Array[Double]], blockSizeHint: Int): Map[(String, Long), Seq[Double]] =
+    FirOps
+      .convBank(bankDf, hs, blockSizeHint = blockSizeHint)
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Double](3))
+      .toMap
+
+  test("convBank: every kernel of a mixed-length bank matches the naive convolution") {
+    val got = bankOut(bank, 1 << 16)
+    for ((ch, xs) <- bankChans) {
+      assert(got.count(_._1._1 == ch) == xs.length, s"$ch row count")
+      for ((h, q) <- bank.zipWithIndex) {
+        val want = naiveSame(xs, h)
+        want.indices.foreach { i =>
+          assert(got((ch, i.toLong))(q) == want(i), s"kernel $q $ch[$i]") // bit-exact
+        }
+      }
+    }
+  }
+
+  test("convBank mixed-halo handoff: tiny blocks equal whole-channel results") {
+    // blockSizeHint floors at 4·121 = 484 samples: channels d and e cross
+    // block boundaries with the 121-tap halo serving all three kernels
+    assert(bankOut(bank, 1) == bankOut(bank, 1 << 16))
+    // an all-1-tap bank keeps no halo: its buffer drains at every
+    // 4-sample block boundary mid-channel and restarts indexing there
+    val one = Seq(Array(2.0))
+    val blocked = bankOut(one, 1)
+    assert(blocked.size == bankChans.map(_._2.length).sum, "every sample exactly once")
+    for ((ch, xs) <- bankChans; i <- xs.indices)
+      assert(blocked((ch, i.toLong)) == Seq(2.0 * xs(i)), s"$ch[$i]")
+  }
+
   test("polyResample block/halo handoff: tiny blocks equal large-block results") {
     val h = Array.tabulate(21)(k => math.sin(k * 1.3))
     val whole = ResampleOps.polyResample(sigDf, 3, 2, h).collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap

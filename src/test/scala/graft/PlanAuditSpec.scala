@@ -120,6 +120,38 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  // every gate built on FirOps.same / CwtOps.cwtMorlet runs the
+  // convBank channel scan: a Lag/Lead window expression in its plan
+  // means a per-tap window frame came back. fir_rect_valid keeps the
+  // lag-sum by design ('valid' mode) and proves the matcher live.
+  test("same-mode FIR and CWT gates plan no lag/lead windows; cwt_morlet adds no exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{Lag, Lead}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+        case other => other.children
+      }
+      p +: (kids ++ p.subqueries).flatMap(nodes)
+    }
+    def plan(name: String): Seq[SparkPlan] =
+      nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+    def offsetWindows(name: String): Int =
+      plan(name).flatMap(_.expressions.flatMap(_.collect { case e @ (_: Lag | _: Lead) => e })).size
+    assert(offsetWindows("fir_rect_valid") > 0, "matcher is stale: fir_rect_valid plans no lag/lead")
+    val scanGates = Seq(
+      "fir_rect", "fir_bartlett_lp", "fir_hamming_lp", "fir_hann_bp", "fir_blackman_hp",
+      "fir_kaiser_lp", "fir_kaiser_bs", "fir_remez_lp", "fir_remez_bp", "cwt_morlet", "pipeline_demo"
+    )
+    val bad = scanGates.map(q => q -> offsetWindows(q)).filter(_._2 > 0)
+    assert(bad.isEmpty, s"lag/lead window expressions in: ${bad.mkString(", ")}")
+    // presorted over Signal.long: the ranking window's exchange is the only one
+    val exchanges = plan("cwt_morlet").count(_.isInstanceOf[Exchange])
+    assert(exchanges == 1, s"cwt_morlet plans $exchanges exchanges, want 1")
+  }
+
   test("star join broadcasts its dimension sides") {
     val plan = SparkEntry.queries("q2_join")(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"q2_join should broadcast dims:\n${plan.take(600)}")
