@@ -110,6 +110,26 @@ object Prof {
     // 257-tap Morlet quadrature pair through ONE segment assembly +
     // two SegConv FFT convolutions — the >128-tap CWT routing
     t("cwt_long257")(operators.CwtOps.cwtMorletLong(sig).count())
+    // the signal cut along n into 8 recordings of 8 channels, through the
+    // distributed EDF sink (one file per recording)
+    t("edf_write") {
+      val spr = 100
+      val per = nPerCh / 8 / spr * spr
+      sources.Edf.writeSpark(
+        sig
+          .filter(col("n") < per * 8)
+          .select(
+            concat(lit("rec"), (col("n") / per).cast("bigint")).as("recording"),
+            col("channel"),
+            (col("n") % per).as("n"),
+            col("x")
+          ),
+        sources.Scratch.dir("prof_edf"),
+        fs = 100.0,
+        samplesPerRecord = spr
+      )
+      per * 8 * nCh
+    }
     // PROF_ICA=1: FastICA fit over the 8-channel signal — one transpose
     // shuffle + one tiny aggregate per fixed-point iteration (4
     // components, capped iterations). The per-iteration scan is the

@@ -100,26 +100,28 @@ object CwtOps {
   def cwtMorletLong(sig: DataFrame, s: Int = longScale, segLen: Int = 1024): DataFrame = {
     val (re, im) = kernel(s)
     val l = (re.length - 1) / 2
-    val conv = FirOps
+    FirOps
       .segAssemble(sig, l, segLen)
       .select(
         col("channel"),
         col("s"),
+        col("len"),
         graft.functions.exprs.seg_conv(col("xs"), re).as("yr"),
         graft.functions.exprs.seg_conv(col("xs"), im).as("yi")
       )
-    val bounds = sig.groupBy(col("channel")).agg(max(col("n")).as("max_n"))
-    conv
-      .select(col("channel"), col("s"), posexplode(arrays_zip(col("yr"), col("yi"))).as(Seq("j", "z")))
-      .filter(col("j") >= 2 * l && col("j") < segLen + 2 * l)
+      .select(
+        col("channel"),
+        col("s"),
+        col("len"),
+        posexplode(arrays_zip(col("yr"), col("yi"))).as(Seq("j", "z"))
+      )
+      .filter(col("j") >= 2 * l && col("j") < col("len") + 2 * l)
       .select(
         col("channel"),
         (col("s") * segLen + col("j") - 2 * l).cast("bigint").as("n"),
         round(col("z.yr"), 6).as("re"),
         round(col("z.yi"), 6).as("im")
       )
-      .join(broadcast(bounds), Seq("channel"))
-      .filter(col("n") <= col("max_n"))
       .select(
         col("channel"),
         col("n"),

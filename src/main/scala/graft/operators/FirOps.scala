@@ -138,7 +138,7 @@ object FirOps {
     * convolutions per assembled segment (the long-scale CWT runs the
     * re and im Morlet kernels over one assembly).
     */
-  /** Halo-extended segment assembly — (channel, s, xs[segLen + 2l])
+  /** Halo-extended segment assembly — (channel, s, len, xs[segLen + 2l])
     * where xs covers global positions [s·segLen − l, s·segLen + segLen
     * + l), zero-padded outside the signal. REQUIRES the Signal
     * contract: contiguous n = 0..cnt−1 per channel (both call sites —
@@ -156,9 +156,14 @@ object FirOps {
     * O(block + extLen) at any channel length, no shuffle of scattered
     * rows at all. Segment arrays are value-identical to the scatter
     * form (zeros and sample placement agree position-for-position);
-    * trailing segments whose core lies wholly past the signal end were
-    * only ever dropped by the callers' n ≤ max_n clip and are simply
+    * trailing segments whose core lies wholly past the signal end are
     * not emitted.
+    *
+    * Each segment also carries `len`, its number of in-signal core
+    * samples, min(segLen, cnt − s·segLen): the scan knows each channel's
+    * length as it streams, so callers clip their output to core
+    * positions j < 2l + len without a second pass over the signal for
+    * per-channel bounds.
     */
   private[graft] def segAssemble(
       sig: DataFrame,
@@ -178,7 +183,7 @@ object FirOps {
     ordered
       .mapPartitions { (it0: Iterator[(String, Long, Double)]) =>
         val in = it0.buffered
-        new Iterator[Iterator[(String, Long, Array[Double])]] {
+        new Iterator[Iterator[(String, Long, Int, Array[Double])]] {
           private var ch: String = null
           // extended coordinates m = n + l; segment s occupies
           // m ∈ [s·segLen, s·segLen + extLen)
@@ -194,7 +199,7 @@ object FirOps {
           private var active = false
           def hasNext: Boolean = in.hasNext || active
 
-          def next(): Iterator[(String, Long, Array[Double])] = {
+          def next(): Iterator[(String, Long, Int, Array[Double])] = {
             if (!active) {
               active = true
               ch = in.head._1; base = 0L; s = 0L; nData = 0L
@@ -215,13 +220,16 @@ object FirOps {
               while (i < e) { xs += 0.0; i += 1 }
             }
             val avail = base + xs.length
-            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Array[Double])]
+            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Array[Double])]
             // only segments with in-signal core: s ≤ (cnt−1) div segLen
             while (s * segLen + extLen <= avail && (!channelDone || s <= (nData - 1).max(0L) / segLen)) {
               val seg = new Array[Double](extLen)
               var i = 0
               while (i < extLen) { seg(i) = xs((s * segLen + i - base).toInt); i += 1 }
-              out += ((ch, s, seg))
+              // a segment emitted before its channel ends has a whole
+              // core in-signal (it needed l samples past it), so the
+              // current count is exact here too
+              out += ((ch, s, math.min(segLen.toLong, nData - s * segLen).toInt, seg))
               s += 1
             }
             if (channelDone) { xs.clear(); active = false }
@@ -234,31 +242,27 @@ object FirOps {
           }
         }.flatten
       }
-      .toDF("channel", "s", "xs")
+      .toDF("channel", "s", "len", "xs")
   }
 
   def sameFast(sig: DataFrame, h: Array[Double], segLen: Int = 1024): DataFrame = {
     val m = h.length
     val l = (m - 1) / 2
     // full conv of xs (extLen) with h → index j = p + 2l maps to sample
-    // n = s*segLen + p
-    val conv = segAssemble(sig, l, segLen).select(
-      col("channel"),
-      col("s"),
-      graft.functions.exprs.seg_conv(col("xs"), h).as("ys")
-    )
-    val bounds = sig.groupBy(col("channel")).agg(max(col("n")).as("max_n"))
-    conv
-      .select(col("channel"), col("s"), posexplode(col("ys")).as(Seq("j", "y")))
-      .filter(col("j") >= 2 * l && col("j") < segLen + 2 * l)
+    // n = s*segLen + p; the clip keeps the segment's in-signal core
+    segAssemble(sig, l, segLen)
+      .select(
+        col("channel"),
+        col("s"),
+        col("len"),
+        posexplode(graft.functions.exprs.seg_conv(col("xs"), h)).as(Seq("j", "y"))
+      )
+      .filter(col("j") >= 2 * l && col("j") < col("len") + 2 * l)
       .select(
         col("channel"),
         (col("s") * segLen + col("j") - 2 * l).cast("bigint").as("n"),
         round(col("y"), 6).as("y")
       )
-      .join(broadcast(bounds), Seq("channel"))
-      .filter(col("n") <= col("max_n")) // trailing zero-padded positions
-      .drop("max_n")
   }
 
   /** 'same'-mode convolution of ONE kernel: the `ys[0]` projection of

@@ -1,9 +1,11 @@
 package graft.sources
 
-import java.io.{DataOutputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,9 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark integration: `readSpark` parallelizes at file granularity via
   * `binaryFiles` (a 100 TB EEG corpus is thousands of recordings — file
   * parallelism is the natural partitioning; per-file record parsing
-  * streams inside the executor). The writer is a driver-side sink like
-  * the reference's Writer, plus a `splitter` producing per-channel-group
-  * files (edf.py:780).
+  * streams inside the executor). `write` is a driver-side sink like the
+  * reference's Writer, `writeSpark` its one-file-per-recording executor
+  * form, plus a `splitter` producing per-channel-group files
+  * (edf.py:780).
   */
 object Edf {
 
@@ -102,6 +105,60 @@ object Edf {
     field(32, _ => "")
   }
 
+  /** Write one EDF file, the format both writers share: int16 full
+    * scale, `spr` samples of every channel per record, each channel's
+    * physical bounds from its raw (min, max) through [[physRange]].
+    * `fill(r, rec)` puts record r's physical samples into `rec`
+    * channel-major (`rec(i·spr + j)` is channel i's j-th sample of the
+    * record); each record is quantized and written before the next is
+    * asked for.
+    */
+  private def writeFile(
+      path: String,
+      labels: Seq[String],
+      rawRanges: Seq[(Double, Double)],
+      nRecords: Int,
+      fs: Double,
+      spr: Int
+  )(fill: (Int, Array[Double]) => Unit): Header = {
+    val nCh = labels.length
+    val ranges = rawRanges.map { case (mn, mx) => physRange(mn, mx) }
+    val hdr = Header(
+      nRecords,
+      spr / fs,
+      labels.toVector,
+      ranges.map(_._1).toVector,
+      ranges.map(_._2).toVector,
+      Vector.fill(nCh)(-32768),
+      Vector.fill(nCh)(32767),
+      Vector.fill(nCh)(spr)
+    )
+    val rec = new Array[Double](nCh * spr)
+    val buf = ByteBuffer.allocate(hdr.recordBytes).order(ByteOrder.LITTLE_ENDIAN)
+    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path), 1 << 16))
+    try {
+      writeHeader(out, hdr)
+      for (r <- 0 until hdr.nRecords) {
+        fill(r, rec)
+        buf.clear()
+        for (i <- 0 until nCh) {
+          val s = hdr.slope(i); val o = hdr.offset(i)
+          var k = i * spr
+          while (k < (i + 1) * spr) {
+            // floor(v + ½), textually matching the SQL oracle (Math.round
+            // deviates from it on one pathological sub-half double)
+            val dig =
+              math.max(-32768L, math.min(32767L, math.floor((rec(k) - o) / s + 0.5).toLong)).toInt
+            buf.putShort(dig.toShort)
+            k += 1
+          }
+        }
+        out.write(buf.array(), 0, hdr.recordBytes)
+      }
+    } finally out.close()
+    hdr
+  }
+
   /** Write channels (label → samples) as one EDF file. Samples are
     * quantized to int16 over each channel's [min, max] physical range.
     */
@@ -115,60 +172,41 @@ object Edf {
     val len = channels.head._2.length
     require(channels.forall(_._2.length == len), "equal channel lengths required")
     val spr = samplesPerRecord
-    val nRecords = len / spr
-    require(nRecords * spr == len, s"length $len not a multiple of $spr")
-    val ranges = channels.map { case (_, xs) => physRange(xs.min, xs.max) }
-    val physMin = ranges.map(_._1).toVector
-    val physMax = ranges.map(_._2).toVector
-    val hdr = Header(
-      nRecords,
-      spr / fs,
-      channels.map(_._1).toVector,
-      physMin,
-      physMax,
-      Vector.fill(channels.length)(-32768),
-      Vector.fill(channels.length)(32767),
-      Vector.fill(channels.length)(spr)
-    )
-    val out = new DataOutputStream(new FileOutputStream(path))
-    try {
-      writeHeader(out, hdr)
-      // data records
-      val buf = ByteBuffer.allocate(hdr.recordBytes).order(ByteOrder.LITTLE_ENDIAN)
-      for (r <- 0 until nRecords) {
-        buf.clear()
-        for (i <- channels.indices) {
-          val xs = channels(i)._2
-          val s = hdr.slope(i); val o = hdr.offset(i)
-          var j = r * spr
-          while (j < (r + 1) * spr) {
-            // floor(v + ½), textually matching the SQL oracle (Math.round
-            // deviates from it on one pathological sub-half double)
-            val dig =
-              math.max(-32768L, math.min(32767L, math.floor((xs(j) - o) / s + 0.5).toLong)).toInt
-            buf.putShort(dig.toShort)
-            j += 1
-          }
-        }
-        out.write(buf.array(), 0, hdr.recordBytes)
-      }
-    } finally out.close()
-    hdr
+    require(len % spr == 0, s"length $len not a multiple of $spr")
+    val arrays = channels.map(_._2).toArray
+    val ranges = arrays.map(xs => (xs.min, xs.max)).toSeq
+    writeFile(path, channels.map(_._1), ranges, len / spr, fs, spr) { (r, rec) =>
+      for (i <- arrays.indices) System.arraycopy(arrays(i), r * spr, rec, i * spr, spr)
+    }
   }
 
   /** Distributed EDF sink: one EDF file per `recording` group, written
     * EXECUTOR-side (reference Writer is file_io/edf.py:591; this is its
     * cluster shape — the driver-side [[write]] stays for small exports).
     *
-    * Input rows (recording, channel, n, x) with dense per-recording n, a
-    * multiple of `samplesPerRecord` per channel. Phys ranges come from a
-    * distributed pre-aggregation (one row per recording×channel — tiny),
-    * then each recording's rows stream through one task sorted by
-    * (n, channel): a data record is flushed every spr·nCh rows, so peak
-    * task memory is O(spr·nCh) no matter how long the recording is.
-    * Parallelism = recordings, the natural unit (a 100 TB corpus is
-    * thousands of recordings; one sequential file each is an EDF format
-    * constraint).
+    * ONE action over ONE evaluation of `sig`, as the reference Writer
+    * consumes its producer once (under AQE that is two jobs: the
+    * recording exchange's map stage, then the write). Rows (recording,
+    * channel, n, x) are exchanged by recording and sorted by
+    * (recording, n, channel), and each task streams one recording at a
+    * time into an executor-local spool file of raw doubles (8 B per
+    * sample, row order, so every data record is one contiguous spr·nCh
+    * block) while tracking each channel's label, min and max. Only then are the recording's
+    * physical ranges known: the header is written and the data records
+    * are quantized from the spool one at a time, so task memory is
+    * O(spr·nCh) at any recording length. The spool is deleted whether
+    * or not the write succeeds. Parallelism = recordings, the natural
+    * unit (a 100 TB corpus is thousands of recordings; one sequential
+    * file each is an EDF format constraint). The bytes equal [[write]]'s
+    * for the same channels in label order.
+    *
+    * Validation contract: a recording is written only if its channels
+    * at n = 0 recur, in the same sorted order, at every n = 0..cnt−1,
+    * each (channel, n) exactly once, and cnt is a multiple of
+    * `samplesPerRecord`. Anything else (a gap or duplicate in n, unequal
+    * channel lengths, a partial last record) fails the task with an
+    * IllegalArgumentException before that recording's `.edf` is
+    * created. Recordings that other tasks finished stay written.
     */
   def writeSpark(
       sig: DataFrame,
@@ -178,69 +216,72 @@ object Edf {
   ): Unit = {
     val spark = sig.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    import org.apache.spark.sql.functions.col
     val spr = samplesPerRecord
-    val stats: Map[String, Vector[(String, Long, Double, Double)]] = sig
-      .groupBy(col("recording"), col("channel"))
-      .agg(count(lit(1)).as("cnt"), min(col("x")).as("mn"), max(col("x")).as("mx"))
-      .collect()
-      .map(r => (r.getString(0), (r.getString(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
-      .groupBy(_._1)
-      .map { case (rec, rows) => rec -> rows.map(_._2).sortBy(_._1).toVector }
-    stats.foreach { case (rec, chs) =>
-      require(
-        chs.forall(c => c._2 == chs.head._2 && c._2 % spr == 0),
-        s"recording $rec: equal per-channel lengths, multiple of $spr required"
-      )
-    }
-    val bc = spark.sparkContext.broadcast(stats)
     sig
       .select(col("recording"), col("channel"), col("n"), col("x"))
       .as[(String, String, Long, Double)]
       .repartition(col("recording"))
       .sortWithinPartitions(col("recording"), col("n"), col("channel"))
       .foreachPartition { (it: Iterator[(String, String, Long, Double)]) =>
-        var cur: String = null
-        var out: DataOutputStream = null
-        var hdr: Header = null
-        var chIdx: Map[String, Int] = null
-        var buf: ByteBuffer = null
-        var filled = 0
-        def flush(): Unit = if (filled > 0) {
-          out.write(buf.array(), 0, hdr.recordBytes); buf.clear(); filled = 0
-        }
-        def close(): Unit = if (out != null) { flush(); out.close(); out = null }
-        try it.foreach { case (rec, ch, n, x) =>
-          if (rec != cur) {
-            close()
-            cur = rec
-            val chs = bc.value(rec)
-            val nCh = chs.length
-            val ranges = chs.map(c => physRange(c._3, c._4))
-            hdr = Header(
-              (chs.head._2 / spr).toInt,
-              spr / fs,
-              chs.map(_._1),
-              ranges.map(_._1).toVector,
-              ranges.map(_._2).toVector,
-              Vector.fill(nCh)(-32768),
-              Vector.fill(nCh)(32767),
-              Vector.fill(nCh)(spr)
-            )
-            chIdx = chs.map(_._1).zipWithIndex.toMap
-            buf = ByteBuffer.allocate(hdr.recordBytes).order(ByteOrder.LITTLE_ENDIAN)
-            Files.createDirectories(Paths.get(outDir))
-            out = new DataOutputStream(new FileOutputStream(s"$outDir/$rec.edf"))
-            writeHeader(out, hdr)
-          }
-          val i = chIdx(ch)
-          val s = hdr.slope(i); val o = hdr.offset(i)
-          val dig = math.max(-32768L, math.min(32767L, math.floor((x - o) / s + 0.5).toLong)).toInt
-          buf.putShort((i * spr + (n % spr).toInt) * 2, dig.toShort)
-          filled += 1
-          if (filled == hdr.recordBytes / 2) flush()
-        } finally close() // also releases the fd if the task fails mid-write
+        val rows = it.buffered
+        while (rows.hasNext) writeRecording(rows, outDir, fs, spr)
       }
+  }
+
+  /** [[writeSpark]]'s per-recording step: consumes the rows of the
+    * recording at the head of `rows` ((n, channel)-sorted) through a
+    * spool, validates them, then writes `outDir/<recording>.edf`.
+    */
+  private def writeRecording(
+      rows: scala.collection.BufferedIterator[(String, String, Long, Double)],
+      outDir: String,
+      fs: Double,
+      spr: Int
+  ): Unit = {
+    val rec = rows.head._1
+    def check(ok: Boolean, msg: => String): Unit =
+      if (!ok) throw new IllegalArgumentException(s"recording $rec: $msg")
+    val labels = ArrayBuffer.empty[String]
+    val mins = ArrayBuffer.empty[Double]
+    val maxs = ArrayBuffer.empty[Double]
+    val spool = Files.createTempFile("graft_edf_", ".spool")
+    try {
+      var pos = 0L // rows spooled; row pos must be (n = pos / nCh, channel pos % nCh)
+      val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(spool), 1 << 16))
+      try while (rows.hasNext && rows.head._1 == rec) {
+        val (_, ch, n, x) = rows.next()
+        if (n == 0 && pos == labels.length) { // the n = 0 rows fix the channel list
+          check(labels.isEmpty || labels.last != ch, s"channel $ch repeats n = 0")
+          labels += ch; mins += x; maxs += x
+        } else {
+          val nCh = labels.length
+          check(nCh > 0, s"n starts at $n, not 0")
+          val i = (pos % nCh).toInt
+          check(
+            n == pos / nCh && ch == labels(i),
+            s"($ch, n = $n) where (${labels(i)}, n = ${pos / nCh}) belongs: every channel needs " +
+              "each n = 0..cnt-1 exactly once"
+          )
+          mins(i) = math.min(mins(i), x); maxs(i) = math.max(maxs(i), x)
+        }
+        out.writeDouble(x)
+        pos += 1
+      } finally out.close()
+      val nCh = labels.length
+      val recordRows = nCh * spr
+      check(pos % recordRows == 0, s"equal per-channel lengths, multiple of $spr required")
+      val nRecords = (pos / recordRows).toInt
+      val block = new Array[Byte](recordRows * 8)
+      val bb = ByteBuffer.wrap(block)
+      Files.createDirectories(Paths.get(outDir))
+      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(spool), 1 << 16))
+      try writeFile(s"$outDir/$rec.edf", labels.toSeq, mins.zip(maxs).toSeq, nRecords, fs, spr) { (_, record) =>
+        in.readFully(block)
+        var k = 0 // spool row k of the block is sample k / nCh of channel k % nCh
+        while (k < recordRows) { record((k % nCh) * spr + k / nCh) = bb.getDouble(8 * k); k += 1 }
+      } finally in.close()
+    } finally Files.deleteIfExists(spool)
   }
 
   /** Parse the ASCII header of an EDF byte array. */

@@ -23,8 +23,9 @@ object EdfOps {
     "edf_roundtrip" -> { (s, dir) =>
       // distributed write→read round-trip: the sample axis splits into
       // 4 "recordings", each written as its own EDF file executor-side
-      // (Edf.writeSpark — no driver collect of signal data; the only
-      // collects are per-channel count/min/max stats). readSpark then
+      // (Edf.writeSpark — one action and no driver collect: each task
+      // derives its recording's phys ranges from a local spool pass,
+      // and nothing returns to the driver). readSpark then
       // reassembles the global sample index from the file names.
       val sig = Signal.long(s, dir)
       val len =

@@ -79,6 +79,21 @@ class FastPathSpec extends AnyFunSuite {
     assert(plan.contains("segconv"), "SegConv not in the physical plan")
   }
 
+  test("sameFast and cwtMorletLong keep same's row set when channel lengths differ") {
+    import graft.operators.CwtOps
+    // no length a multiple of either segLen; channel b is shorter than one segment
+    val lens = Seq("a" -> 450, "b" -> 77, "c" -> 1000)
+    val rnd = new scala.util.Random(19)
+    val rows = for ((ch, len) <- lens; n <- 0 until len) yield (ch, n.toLong, rnd.nextGaussian())
+    val uneven = spark.sparkContext.parallelize(rnd.shuffle(rows), 3).toDF("channel", "n", "x")
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("channel", "n").collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    val want = keys(FirOps.same(uneven, FirOps.kaiserLp))
+    assert(want.size == lens.map(_._2).sum)
+    assert(keys(FirOps.sameFast(uneven, FirOps.kaiserLp, segLen = 128)) == want)
+    assert(keys(CwtOps.cwtMorletLong(uneven, segLen = 300)) == want)
+  }
+
   test("fft welch equals the inner-product welch at nfft=64") {
     // run the fast path at the slow path's nfft for comparability
     val slow = SpectraOps

@@ -120,15 +120,11 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
-  // every gate built on FirOps.same / CwtOps.cwtMorlet runs the
-  // convBank channel scan: a Lag/Lead window expression in its plan
-  // means a per-tap window frame came back. fir_rect_valid keeps the
-  // lag-sum by design ('valid' mode) and proves the matcher live.
-  test("same-mode FIR and CWT gates plan no lag/lead windows; cwt_morlet adds no exchange") {
-    import org.apache.spark.sql.catalyst.expressions.{Lag, Lead}
+  // every node of a gate query's executed plan, through the AQE
+  // wrapper's initial plan and subqueries
+  private def planNodes(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     def nodes(p: SparkPlan): Seq[SparkPlan] = {
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
@@ -136,10 +132,18 @@ class PlanAuditSpec extends AnyFunSuite {
       }
       p +: (kids ++ p.subqueries).flatMap(nodes)
     }
-    def plan(name: String): Seq[SparkPlan] =
-      nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+    nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+  }
+
+  // every gate built on FirOps.same / CwtOps.cwtMorlet runs the
+  // convBank channel scan: a Lag/Lead window expression in its plan
+  // means a per-tap window frame came back. fir_rect_valid keeps the
+  // lag-sum by design ('valid' mode) and proves the matcher live.
+  test("same-mode FIR and CWT gates plan no lag/lead windows; cwt_morlet adds no exchange") {
+    import org.apache.spark.sql.catalyst.expressions.{Lag, Lead}
+    import org.apache.spark.sql.execution.exchange.Exchange
     def offsetWindows(name: String): Int =
-      plan(name).flatMap(_.expressions.flatMap(_.collect { case e @ (_: Lag | _: Lead) => e })).size
+      planNodes(name).flatMap(_.expressions.flatMap(_.collect { case e @ (_: Lag | _: Lead) => e })).size
     assert(offsetWindows("fir_rect_valid") > 0, "matcher is stale: fir_rect_valid plans no lag/lead")
     val scanGates = Seq(
       "fir_rect", "fir_bartlett_lp", "fir_hamming_lp", "fir_hann_bp", "fir_blackman_hp",
@@ -148,8 +152,18 @@ class PlanAuditSpec extends AnyFunSuite {
     val bad = scanGates.map(q => q -> offsetWindows(q)).filter(_._2 > 0)
     assert(bad.isEmpty, s"lag/lead window expressions in: ${bad.mkString(", ")}")
     // presorted over Signal.long: the ranking window's exchange is the only one
-    val exchanges = plan("cwt_morlet").count(_.isInstanceOf[Exchange])
+    val exchanges = planNodes("cwt_morlet").count(_.isInstanceOf[Exchange])
     assert(exchanges == 1, s"cwt_morlet plans $exchanges exchanges, want 1")
+  }
+
+  // segAssemble hands each segment its in-signal length, so the
+  // overlap-add path clips its tail without a per-channel max(n)
+  // aggregate broadcast back onto the rows
+  test("fir_oa_fast plans no aggregate and no broadcast join") {
+    val names = planNodes("fir_oa_fast").map(_.nodeName)
+    val bad = names.filter(n => n.contains("HashAggregate") || n.contains("BroadcastHashJoin"))
+    assert(bad.isEmpty, s"fir_oa_fast plans ${bad.mkString(", ")}")
+    assert(names.exists(_.contains("MapPartitions")), s"matcher is stale: ${names.mkString(", ")}")
   }
 
   test("star join broadcasts its dimension sides") {

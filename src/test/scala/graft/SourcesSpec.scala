@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Edf
@@ -90,6 +92,71 @@ class EdfSpec extends AnyFunSuite {
     val want = (0 until 64).map(n => (17 * 64 + n).toDouble % 97)
     val tol = 97.0 / 65534.0 * 1.01
     r17.zip(want).foreach { case (g, w) => assert(math.abs(g - w) <= tol) }
+  }
+
+  test("writeSpark writes the same bytes as the driver-side write") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val spr = 64
+    // per recording: a noisy channel, a constant one (physRange's
+    // widened-range branch) and one past |x| = 1000 (whole-number bounds)
+    val recs = Seq("r0", "r1", "r2").map { rec =>
+      rec -> Seq(
+        "a" -> Array.fill(3 * spr)(rnd.nextDouble() * 200 - 100),
+        "b" -> Array.fill(3 * spr)(7.25),
+        "c" -> Array.fill(3 * spr)(-1500 - rnd.nextDouble() * 3000)
+      )
+    }
+    val rows = for ((rec, chans) <- recs; (ch, xs) <- chans; n <- xs.indices) yield (rec, ch, n.toLong, xs(n))
+    val df = spark.sparkContext.parallelize(rnd.shuffle(rows), 3).toDF("recording", "channel", "n", "x")
+    val dist = tmpDir
+    val local = tmpDir
+    Edf.writeSpark(df, dist, fs = 64.0, samplesPerRecord = spr)
+    for ((rec, chans) <- recs) {
+      Edf.write(s"$local/$rec.edf", chans, fs = 64.0, samplesPerRecord = spr)
+      def bytes(dir: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$rec.edf"))
+      assert(java.util.Arrays.equals(bytes(dist), bytes(local)), s"$rec.edf differs")
+    }
+  }
+
+  test("writeSpark evaluates its input once") {
+    import spark.implicits._
+    val rows = for (rec <- Seq("r0", "r1"); ch <- Seq("a", "b"); n <- 0 until 128)
+      yield (rec, ch, n.toLong, (n % 17).toDouble)
+    val seen = spark.sparkContext.longAccumulator("writeSpark input rows")
+    val df = spark.sparkContext
+      .parallelize(rows, 2)
+      .map { r => seen.add(1); r }
+      .toDF("recording", "channel", "n", "x")
+    Edf.writeSpark(df, tmpDir, fs = 64.0, samplesPerRecord = 64)
+    assert(seen.value == rows.size)
+  }
+
+  test("writeSpark rejects non-dense or unequal channels before creating the file") {
+    import spark.implicits._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def spools(): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("graft_edf_")).toSet
+      finally s.close()
+    }
+    def ch(name: String, ns: Seq[Int]) = ns.map(n => ("r0", name, n.toLong, n.toDouble))
+    val bad = Seq(
+      "gap in n" -> (ch("a", (0 to 6) :+ 8) ++ ch("b", 0 to 7)),
+      "unequal lengths" -> (ch("a", 0 to 7) ++ ch("b", 0 to 3)),
+      "duplicate n" -> (ch("a", (0 to 7) :+ 5) ++ ch("b", 0 to 7)),
+      "partial record" -> (ch("a", 0 to 5) ++ ch("b", 0 to 5))
+    )
+    val before = spools()
+    for ((what, rows) <- bad) {
+      val dir = tmpDir
+      val e = intercept[Exception] {
+        Edf.writeSpark(rows.toDF("recording", "channel", "n", "x"), dir, fs = 4.0, samplesPerRecord = 4)
+      }
+      assert(e.getMessage.contains("recording r0"), s"$what: ${e.getMessage}")
+      assert(new java.io.File(dir).list().isEmpty, s"$what left a file")
+    }
+    assert(spools() == before, "a spool file was left behind")
   }
 
   test("ranged read decodes only the needed records and channels") {
