@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -561,108 +561,216 @@ object Dedup {
   /** Connected components over an undirected near-dup pair graph —
     * the step that turns pairwise candidates into actual dedup groups
     * (every doc gets `comp_id` = the smallest doc_id reachable from it;
-    * a pipeline then keeps one doc per comp_id).
+    * a pipeline then keeps one doc per comp_id). Ids are read as
+    * BIGINT; an edge with a null end connects nothing and is dropped.
     *
-    * Algorithm: iterative min-label propagation with pointer jumping
-    * (each round a node takes the min of its neighbors' labels, then
-    * shortcuts `comp := comp(comp)`), so convergence is O(log diameter)
-    * rounds rather than O(diameter) — near-dup clusters are usually
-    * dense and shallow, but a chain-shaped cluster must not stall the
-    * pipeline. Each round is two equi-joins on doc_id plus one
-    * aggregate; nothing is ever all-pairs and only a single Long per
-    * node is carried between rounds. Lineage is truncated per round
-    * (localCheckpoint; on a cluster this would be a reliable
-    * checkpoint). Labels only decrease, so sum(comp) is a strictly
-    * decreasing convergence witness — one cheap scalar per round
-    * instead of a changed-rows anti-join.
+    * Edge store: both orientations of every pair from ONE evaluation of
+    * `pairs` (the subtree is often an LSH candidate pipeline), hash-
+    * partitioned by `dst`, eagerly localCheckpointed. Unsorted and
+    * partitioned by the round join key, so a round's edges⋈labels join
+    * shuffles only the labels side.
+    *
+    * Seed: a union-find over each edge partition (local contraction,
+    * Łącki et al. 2018), rooted at the smallest id of its local
+    * component; then per node the min and max of its roots across
+    * partitions, in one eager checkpoint. An Observation on that action
+    * counts the nodes whose min ≠ max. When the count is 0 the seed is
+    * already every component's minimum: each edge lies inside one
+    * partition's local component, so its two ends get the same root
+    * there, and agreeing roots are therefore constant along every edge,
+    * i.e. across a component; the component's minimum is its own root
+    * wherever it appears. Then no round runs — the common case after
+    * AQE coalesces a gate- or bench-sized edge store to one partition.
+    *
+    * Fallback rounds (only on disagreement), from the seed's min root.
+    * Each round (1) a node takes the min of its own and its neighbours'
+    * labels (one aggregation, eagerly checkpointed); (2) hook: the node
+    * a label names takes the least label any node carrying it reached;
+    * (3) pointer jump `comp := comp(comp)`. Without the hook a label
+    * learns nothing until propagation walks back to the local minimum
+    * it names, which is O(diameter) rounds on a chain with shuffled ids;
+    * with it every labelled tree merges into a neighbouring one each
+    * round, O(log n) rounds. Invariant: a label is an id in the node's
+    * component and ≤ the node, so the component minimum labels itself.
+    * Witness: an Observation on the checkpoint's action counts the labels
+    * step (1) lowered. 0 means labels are constant along every edge,
+    * hence equal to the component minimum, and the loop stops there (no
+    * separate witness job, no sentinel). Every checkpoint's size
+    * estimate is its observed row count (see [[checkpointObserved]]).
+    *
+    * Memory outside Spark's manager (neither spills): the per-partition
+    * union-find ([[LongUnionFind]]) holds at most 40 bytes per distinct
+    * node, and distinct nodes ≤ 2 × the edge rows of the partition; and
+    * the rounds' SHUFFLE_HASH joins build the labels side in memory per
+    * partition (ADVICE low #1) — beyond the measured docs100 decade a
+    * partition's build could OOM where a sort-merge join would spill.
     */
   def components(nodes: DataFrame, pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    // eager localCheckpoint BEFORE the symmetrize union: the pair
-    // subtree (often an LSH candidate pipeline) computes exactly once;
-    // both union branches read the cached blocks. persist() here would
-    // evaluate the subtree once per branch AND leak without a paired
-    // unpersist (gate functions return before execution) —
-    // ContextCleaner reclaims checkpoint blocks instead.
-    val p = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint()
-    // r17: pre-partition (and pre-sort) the symmetrized edge table by
-    // the per-round join key ONCE — localCheckpoint preserves the
-    // partitioning and ordering, so every round's edges⋈labels join
-    // shuffles/sorts only the labels side (guide §2.4: establish the
-    // partitioning once). Was: edges re-shuffled + re-sorted per round.
-    val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint()
-    // iterate ONLY over nodes that touch an edge: a node with no
-    // neighbors can never change its label, and the pair graph is
-    // orders of magnitude smaller than the corpus (at 100 TB the
-    // near-dup pairs are a sliver of the documents) — singletons join
-    // back in one pass at the end.
-    // init fuses the first propagation round for free: label =
-    // min(own id, min neighbor id) is exactly what round 1 of the old
-    // doc_id-identity init computed, for the cost of the same single
-    // groupBy shuffle the distinct() needed anyway. Lazy checkpoint:
-    // round 1's convergence action materializes it in the same job.
-    // r18: EAGER — this frame feeds round 1's msgs join AND the stepped
-    // union, i.e. two consumers inside one job; the lazy form made the
-    // first convergence action write three checkpoint generations while
-    // streaming the 27M-edge join and OOM'd the 8g docs100 decade run
-    // (ec12df9's eager-per-round form passes at 96.8 s / 18 GiB spill —
-    // measured r18; the r17 gate-scale win survives, see below).
-    var labels = edges
-      .groupBy(col("src").as("doc_id"))
-      .agg(least(col("doc_id"), min(col("dst"))).as("comp"))
-      .localCheckpoint()
-    var prevSum = -1L
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      // r17 round slimming (guide §2.4): the old shape was
-      // edges⋈labels → groupBy(src) → LEFT JOIN back onto labels —
-      // two shuffles of the labels-sized frame plus the join. min is
-      // associative, so "own label ∪ neighbor labels, grouped min"
-      // computes the identical least(comp, coalesce(nbr, comp)) with
-      // ONE aggregation exchange and no join-back. Values unchanged.
-      val msgs = edges
-        .join(labels.select(col("doc_id").as("dst"), col("comp").as("nc")).hint("SHUFFLE_HASH"), Seq("dst"))
-        .select(col("src").as("doc_id"), col("nc").as("comp"))
-      val stepped = labels
-        .unionByName(msgs)
-        .groupBy(col("doc_id"))
-        .agg(min(col("comp")).as("comp"))
-        // r18: EAGER — stepped feeds BOTH sides of the jump self-join;
-        // the lazy form recomputes the union-min subtree per side (98 vs
-        // 84 stages at gate scale, measured) and its read-ahead double-
-        // buffering OOM'd the docs100 decade on 8g. Gate-scale wall is a
-        // wash (interleaved A/B ×3: within noise); decade: see above.
-        .localCheckpoint()
-      // pointer jump: follow the label's own label (labels are minima
-      // over edge-node ids, which are themselves edge nodes, so the
-      // inner self-join is total). stepped is hash-partitioned by
-      // doc_id from its aggregation, so the jid side joins exchange-free.
-      val jumped = stepped
-        .join(
-          stepped.select(col("doc_id").as("jid"), col("comp").as("jcomp")).hint("SHUFFLE_HASH"),
-          col("comp") === col("jid")
-        )
-        .select(col("doc_id"), col("jcomp").as("comp"))
-        .localCheckpoint(false)
-      // the convergence aggregate IS the round's one materializing
-      // action (labels only decrease, so an unchanged sum means the
-      // round was a no-op). Superseded rounds' checkpoint blocks are
-      // ContextCleaner-reclaimed once `labels` stops referencing them;
-      // peak live storage is ~two generations of (doc_id, comp) longs.
-      val s = jumped.agg(coalesce(sum(col("comp")), lit(0L))).head().getLong(0)
-      converged = s == prevSum
-      prevSum = s
-      labels = jumped
-      it += 1
-    }
-    require(converged, s"components: not converged after $maxIters rounds")
+    val labels = componentLabels(pairs, maxIters)._1
+    val idType = nodes.schema("doc_id").dataType
     nodes
       .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp_id"))
+      .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).cast(idType).as("comp_id"))
+  }
+
+  /** (doc_id, comp) for every node that touches an edge — the body of
+    * [[components]] — plus the number of fallback rounds it ran.
+    */
+  private[graft] def componentLabels(pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val (edges, _) = checkpointObserved(
+      pairs
+        .select(
+          explode(
+            array(
+              struct(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")),
+              struct(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst"))
+            )
+          ).as("e")
+        )
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .repartition(col("dst"))
+    )
+    val (seed, split) = checkpointObserved(
+      edges
+        .as[(Long, Long)]
+        .mapPartitions { it =>
+          val uf = new LongUnionFind
+          it.foreach { case (s, d) => uf.union(s, d) }
+          Iterator.tabulate(uf.size)(i => (uf.id(i), uf.rootId(i)))
+        }
+        .toDF("doc_id", "root")
+        .groupBy(col("doc_id"))
+        .agg(min(col("root")).as("comp"), max(col("root")).as("hi")),
+      count(when(col("comp") =!= col("hi"), lit(1))).as("changed")
+    )
+    var labels = seed.select(col("doc_id"), col("comp"))
+    var changed = split("changed")
+    var rounds = 0
+    while (changed > 0 && rounds < maxIters) {
+      val msgs = edges
+        .join(labels.select(col("doc_id").as("dst"), col("comp").as("nc")).hint("SHUFFLE_HASH"), Seq("dst"))
+        .select(col("src").as("doc_id"), col("nc").as("comp"), lit(null).cast("long").as("old"))
+      // eager: stepped feeds the hook and both sides of the jump
+      val (stepped, lowered) = checkpointObserved(
+        labels
+          .select(col("doc_id"), col("comp"), col("comp").as("old"))
+          .unionByName(msgs)
+          .groupBy(col("doc_id"))
+          .agg(min(col("comp")).as("comp"), min(col("old")).as("old")),
+        count(when(col("comp") < col("old"), lit(1))).as("changed")
+      )
+      changed = lowered("changed")
+      labels =
+        if (changed == 0) stepped.select(col("doc_id"), col("comp"))
+        else {
+          val hooked = stepped
+            .select(col("doc_id"), col("comp"))
+            .unionByName(stepped.select(col("old").as("doc_id"), col("comp")))
+            .groupBy(col("doc_id"))
+            .agg(min(col("comp")).as("comp"))
+          // labels are ids of edge nodes, so the self-join is total
+          hooked
+            .join(
+              hooked.select(col("doc_id").as("jid"), col("comp").as("jcomp")).hint("SHUFFLE_HASH"),
+              col("comp") === col("jid")
+            )
+            .select(col("doc_id"), col("jcomp").as("comp"))
+        }
+      rounds += 1
+    }
+    require(changed == 0, s"components: not converged after $maxIters rounds")
+    (labels, rounds)
+  }
+
+  /** Eager localCheckpoint of `df` plus its row count and `metrics`
+    * (Long-valued), all observed on the checkpoint's own action. The
+    * checkpoint's size estimate is re-based on the observed row count
+    * ([[org.apache.spark.sql.graftbridge.Bridge.withRowCount]]): a
+    * checkpoint keeps its origin plan's estimate and joins multiply
+    * estimates, so over the rounds the estimate (a BigInt) squared every
+    * round and planning stalled after about 20 rounds.
+    */
+  private def checkpointObserved(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
+    val obs = Observation()
+    val ck = df.observe(obs, count(lit(1)).as("rows"), metrics: _*).localCheckpoint()
+    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    (org.apache.spark.sql.graftbridge.Bridge.withRowCount(ck, m("rows")), m)
+  }
+
+  /** Union-find over arbitrary 64-bit ids in primitive arrays; each root
+    * is the smallest id of its set. Ids are numbered densely in arrival
+    * order (`ids`, `parent`), and an open-addressing table (`slots`,
+    * index + 1, 0 = empty, load ≤ 1/2) maps an id to its number. With n
+    * ids: slots ≤ 4n ints, ids < 2n longs, parent < 2n ints — at most
+    * 40 bytes per id, plus the array being copied while one grows.
+    */
+  private[graft] final class LongUnionFind {
+    private var slots = new Array[Int](16)
+    private var ids = new Array[Long](8)
+    private var parent = new Array[Int](8)
+    private var n = 0
+
+    def size: Int = n
+    def id(i: Int): Long = ids(i)
+    def rootId(i: Int): Long = ids(find(i))
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra != rb) {
+        if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) {
+        parent(i) = parent(parent(i)) // path halving
+        i = parent(i)
+      }
+      i
+    }
+
+    private def slot(id: Long): Int = {
+      // murmur3's 64-bit finalizer: strided ids (replica offsets) spread
+      var z = (id ^ (id >>> 33)) * 0xff51afd7ed558ccdL
+      z = (z ^ (z >>> 33)) * 0xc4ceb9fe1a85ec53L
+      (z ^ (z >>> 33)).toInt & (slots.length - 1)
+    }
+
+    private def index(id: Long): Int = {
+      val mask = slots.length - 1
+      var h = slot(id)
+      while (slots(h) != 0 && ids(slots(h) - 1) != id) h = (h + 1) & mask
+      if (slots(h) != 0) slots(h) - 1
+      else {
+        if (n == ids.length) {
+          ids = java.util.Arrays.copyOf(ids, 2 * n)
+          parent = java.util.Arrays.copyOf(parent, 2 * n)
+        }
+        ids(n) = id
+        parent(n) = n
+        n += 1
+        slots(h) = n
+        if (2 * n > slots.length) grow()
+        n - 1
+      }
+    }
+
+    private def grow(): Unit = {
+      slots = new Array[Int](2 * slots.length)
+      val mask = slots.length - 1
+      var i = 0
+      while (i < n) {
+        var h = slot(ids(i))
+        while (slots(h) != 0) h = (h + 1) & mask
+        slots(h) = i + 1
+        i += 1
+      }
+    }
   }
 
   /** Oracle: transitive min-reachability as a recursive CTE — `reach`

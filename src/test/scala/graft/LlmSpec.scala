@@ -97,6 +97,31 @@ class LlmSpec extends AnyFunSuite {
     assert(comp.length == 64 && comp.forall(_.getLong(1) == 0L))
   }
 
+  test("components over simhash pairs stays within a fixed Spark job budget") {
+    // pairs, edge store, seed and the collect: 8 jobs. The per-round
+    // label loop this guards against ran 27 here
+    val group = "components-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "components job budget")
+    try {
+      val comp = Dedup.components(docs.select(col("doc_id")), Dedup.simhashPairs(docs)).collect()
+      assert(comp.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
+    } finally {
+      sc.clearJobGroup()
+      // job-start events reach listeners asynchronously
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0 && jobs.get <= 12, s"components ran ${jobs.get} Spark jobs")
+  }
+
   test("decontam counts shared shingles, clean docs emit no row") {
     val train = Seq(
       (1L, "secret bench phrase here plus extra words padding out"), // shares shingles
