@@ -83,6 +83,14 @@ object Prof {
           f"peakTaskMem=${peakMem.get / (1 << 20)}%5d MiB  spill=${spilled.get / (1 << 20)}%4d MiB  rows=$rows"
       )
     }
+    // full materialization: a noop-sink write evaluates every column,
+    // where count() lets Catalyst prune the ones a kernel computes; the
+    // row count rides the same pass
+    def written(df: org.apache.spark.sql.DataFrame): Long = {
+      val obs = org.apache.spark.sql.Observation()
+      df.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+      obs.get("rows").asInstanceOf[Long]
+    }
     // channel-partitioned, (channel, n)-sorted copy — what Signal.long
     // hands the gate queries; isolates kernel+codec from the exchange
     val sigSorted = sig.repartition(col("channel"))
@@ -209,32 +217,32 @@ object Prof {
       // round-10 additions: shift-robust CDC chunking, winnowing
       // fingerprints, and the full chunk→embed→retrieve composition
       t(s"docs${docsX}_chunks_cdc", nDocs)(llm.TextStats.chunksCdc(docs).count())
-      t(s"docs${docsX}_winnow", nDocs)(llm.TextStats.winnow(docs).count())
+      t(s"docs${docsX}_winnow", nDocs)(written(llm.TextStats.winnow(docs)))
       // the df-cap rule under the replica cliques: every original's fps
       // are shared by its docsX−1 siblings (true positives), so the cap
       // must WIDEN with the replica factor — 5·docsX keeps the 10×
       // behavior identical (cap 50 = the gate default) and de-vacuates
       // 100× (df ≈ 100 was silently capped out by the fixed 50; r16)
       t(s"docs${docsX}_winnow_overlap", nDocs)(
-        llm.TextStats.winnowOverlap(docs, maxDf = 5 * docsX).count()
+        written(llm.TextStats.winnowOverlap(docs, maxDf = 5 * docsX))
       )
       // top-k report form: the s-cap bounds per-doc incidence and the
       // capped-fp-set class collapse removes exact-replica cliques; the
       // perturbed-replica residue stays clique-quadratic by design
       t(s"docs${docsX}_winnow_topk", nDocs)(
-        llm.TextStats.winnowTopk(docs, maxDf = 5 * docsX).count()
+        written(llm.TextStats.winnowTopk(docs, maxDf = 5 * docsX))
       )
       // scale banding (16 planes, 2×8-bit): the gate's 2×4-bit config is
       // sized for the 500-doc corpus; background candidates per query
       // grow ~nBands·nChunks·2^-width (the hePlanes widen rule)
       t(s"docs${docsX}_retrieve_chunks", nDocs)(
-        llm.Dedup.retrieveChunks(docs, nPlanes = 16, nBands = 2).count()
+        written(llm.Dedup.retrieveChunks(docs, nPlanes = 16, nBands = 2))
       )
       // r15: late-interaction MaxSim at the same scale banding — the
       // collision cap keeps stage 2 candidate-bounded, so the decade
       // pins that the full chunk-grid stage never goes corpus-sized
       t(s"docs${docsX}_retrieve_maxsim", nDocs)(
-        llm.Dedup.retrieveMaxsim(docs, nPlanes = 16, nBands = 2).count()
+        written(llm.Dedup.retrieveMaxsim(docs, nPlanes = 16, nBands = 2))
       )
       t(s"docs${docsX}_sketch_cms", nDocs)(llm.Sketches.cmsTopTokens(docs).count())
       t(s"docs${docsX}_corpus_shard", nDocs)(llm.Curation.corpusShard(docs).count())

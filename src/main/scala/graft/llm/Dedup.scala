@@ -1342,49 +1342,16 @@ object Dedup {
     * candidate pairs. At corpus scale widen the bands (see [[hePlanes]]).
     */
   /** Mean-centered dense grid + banded hyperplane signatures over an
-    * integer (key…, bucket, s) sum frame — the machinery shared by
-    * [[hashEmbedDupes]] (key = doc_id) and [[retrieveChunks]] (key =
-    * (doc_id, chunk_id)). Centering uses the overflow-safe
-    * floor(t_b/n) micro-bias documented on [[hashEmbedDupes]]; keys
-    * absent from a bucket sit at −mean, not 0 — that IS centering.
+    * integer (doc_id, bucket, s) sum frame — [[hashEmbedDupes]]'
+    * machinery. Centering uses the overflow-safe floor(t_b/n)
+    * micro-bias documented on [[hashEmbedDupes]]; keys absent from a
+    * bucket sit at −mean, not 0 — that IS centering. Grid form: doc-level
+    * hash embeddings (~90 tokens over 64 buckets) are dense in the bucket
+    * space, so one checkpointed grid serves the signature aggregation
+    * and the scoring joins. The chunk family computes the same values
+    * row-locally instead ([[chunkVectors]]).
     * Returns (dense(key…, bucket, cv), sig(key…, n2, bv0..)) — both
     * localCheckpointed (each fans out into downstream joins).
-    */
-  /** Sparse form — the CHUNK family's shape ([[retrieveChunks]] /
-    * [[retrieveMaxsim]]: 32-token vectors over 64 buckets, keys = every
-    * chunk). r15 scale rework, measured at the 5M-chunk decade: the
-    * grid form materialized the FULL corpus-wide centered grid
-    * (keys × dim rows — 320M at the decade, a data-sized checkpoint
-    * the 8g default heap couldn't even aggregate) just to (a) sign the
-    * hyperplanes and (b) score candidates. Both uses collapse:
-    *
-    * (a) SIGNATURES from the SPARSE sums alone — algebra, not
-    * approximation: with m_b = floor(t_b/n) the per-bucket centering
-    * mean and σ_b ∈ {−1,+1} the plane signs,
-    * `d_i = Σ_b (s_b − m_b)σ_b = Σ_{nonzero} s_b σ_b − Σ_{ALL b} m_b σ_b`
-    * — the second term is a per-plane CONSTANT; likewise
-    * `n2 = Σ_{nonzero}(s_b² − 2 s_b m_b) + Σ_b m_b²`. The aggregation
-    * input shrinks from keys×dim to the nonzero rows, and the grid
-    * join disappears.
-    *
-    * (b) the dense grid only ever scores CANDIDATES, a banded-join-
-    * bounded set — `denseOf(subset)` builds it for exactly those keys.
-    *
-    * m_b, the per-plane constants, and Σm² ride as LITERALS from one
-    * bounded driver collect (dim rows — the codebook-collect class),
-    * computed with the SAME floor-of-double-ratio expression as
-    * before, so every emitted value is bit-identical to the grid form
-    * and the unchanged DuckDB oracles (which still replay the dense
-    * grid) keep hashing.
-    */
-  /** Grid form — the right shape when vectors are DENSE in the bucket
-    * space and keys are corpus-bounded (doc-level hash embeddings:
-    * ~90 tokens over 64 buckets makes the grid the SAME order as the
-    * nonzero sums, so the sparse algebra saves nothing and its extra
-    * job barriers cost ~40% at gate scale — measured r15: 6.5 → 9.1 s
-    * solo). One checkpointed grid serves the signature aggregation
-    * and the scoring joins. The CHUNK family (sparse 32-token vectors,
-    * 10× the keys) uses [[centeredBandSignatures]] instead.
     */
   private def gridBandSignatures(
       keys: DataFrame,
@@ -1431,73 +1398,6 @@ object Dedup {
       )
       .localCheckpoint() // fans out into the banded joins and norm lookups
     (dense, sig)
-  }
-
-  private def centeredBandSignatures(
-      keys: DataFrame,
-      sums: DataFrame,
-      keyCols: Seq[String],
-      dim: Int,
-      nPlanes: Int,
-      nBands: Int
-  ): (DataFrame => DataFrame, DataFrame) = {
-    require(nPlanes % nBands == 0, s"nBands $nBands must divide plane count $nPlanes")
-    val width = nPlanes / nBands
-    val kc = keyCols.map(col)
-    // pin the token aggregation once: totals, signatures, and every
-    // candidate grid read this checkpoint
-    val sumsC = sums.localCheckpoint()
-    val n = keys.count()
-    val tArr = Array.fill(dim)(0L)
-    sumsC
-      .groupBy(col("bucket"))
-      .agg(sum(col("s")).as("t"))
-      .collect()
-      .foreach(r => tArr(r.getAs[Long]("bucket").toInt) = r.getAs[Long]("t"))
-    // the exact expression the grid form evaluated per row
-    val mArr = tArr.map(t => math.floor(t.toDouble / n.toDouble).toLong)
-    val mLit = array(mArr.map(lit): _*)
-    def mOf(bucket: Column): Column = element_at(mLit, bucket.cast("int") + 1)
-    def sgn(mask: Long, b: Int): Long = (((mask >> b) & 1L) * 2L) - 1L
-    val cPlane = (0 until nPlanes).map { i =>
-      val mask = planeMask(i, dim)
-      (0 until dim).map(b => mArr(b) * sgn(mask, b)).sum
-    }
-    val c2 = mArr.map(m => m * m).sum
-    def pSign(i: Int): Column =
-      expr(s"(shiftright(CAST(${planeMask(i, dim)} AS BIGINT), CAST(bucket AS INT)) & 1) * 2 - 1")
-    val aggs = (0 until nPlanes).map(i => sum(col("s") * pSign(i)).as(s"sd$i")) :+
-      sum(col("s") * col("s") - lit(2L) * col("s") * mOf(col("bucket"))).as("sn2")
-    val sp = sumsC.groupBy(kc: _*).agg(aggs.head, aggs.tail: _*)
-    // a key whose every token-sign cancelled has NO nonzero bucket —
-    // it still carries the all-constant centered row (left join)
-    val sig = keys
-      .join(sp, keyCols, "left")
-      .select(
-        kc ++ Seq((coalesce(col("sn2"), lit(0L)) + lit(c2)).as("n2")) ++
-          (0 until nBands).map { j =>
-            (0 until width)
-              .map { k =>
-                val i = j * width + k
-                when(coalesce(col(s"sd$i"), lit(0L)) - lit(cPlane(i)) > 0, lit(1L << k))
-                  .otherwise(lit(0L))
-              }
-              .reduce(_ + _)
-              .as(s"bv$j")
-          }: _*
-      )
-      .localCheckpoint() // fans out into the banded joins and norm lookups
-    val denseOf: DataFrame => DataFrame = subset =>
-      subset
-        .select(kc :+ explode(array((0 until dim).map(b => lit(b.toLong)): _*)).as("bucket"): _*)
-        .join(sumsC, keyCols :+ "bucket", "left")
-        .select(
-          kc ++ Seq(
-            col("bucket"),
-            (coalesce(col("s"), lit(0L)) - mOf(col("bucket"))).as("cv")
-          ): _*
-        )
-    (denseOf, sig)
   }
 
   def hashEmbedDupes(
@@ -1680,63 +1580,125 @@ object Dedup {
   val rcChunkTok = 32
   val rcDim = 64
 
-  /** Shared chunk-embedding machinery: (dense grid, signatures,
-    * exploded band frame) over the fixed-window chunks — the prefix
-    * [[retrieveChunks]] and [[retrieveMaxsim]] both stand on.
+  /** Per-chunk bucket sign-sums, one row-local kernel over the docs:
+    * (doc_id, chunk_id, s), `s` the chunk's [[rcDim]] sums as an int
+    * array. Tokens are `slice(split(text, " "), 1, maxTokens)` cut into
+    * [[rcChunkTok]]-token windows; a token's bucket is its md5's bytes
+    * 0–3 read unsigned, mod [[rcDim]], and its sign is bit 4 of byte 4
+    * (+1 when set) — the hex-substring forms [[retrieveChunksSql]]
+    * replays, from one digest per token. Every chunk is emitted, also
+    * one whose signs all cancel (it still counts toward the centering
+    * mean); a null text emits none.
     */
-  private def chunkBandFrames(
-      docs: DataFrame,
-      nPlanes: Int,
-      nBands: Int
-  ): (DataFrame => DataFrame, DataFrame, DataFrame) = {
-    val toks = slice(split(col("text"), " "), 1, TextStats.maxTokens)
-    val ch = docs
-      .select(col("doc_id"), toks.as("toks"), least(size(toks), lit(TextStats.maxTokens)).as("dl"))
-      .select(
-        col("doc_id"),
-        col("toks"),
-        explode(sequence(lit(0), expr(s"(dl - 1) div $rcChunkTok").cast("int"))).as("c")
-      )
-      .select(
-        col("doc_id"),
-        col("c").cast("long").as("chunk_id"),
-        slice(col("toks"), (col("c") * rcChunkTok + lit(1)).cast("int"), lit(rcChunkTok)).as("ctoks")
-      )
-      .localCheckpoint() // feeds the token stream, the dense grid, and the chunk count
-    val sums = ch
-      .select(col("doc_id"), col("chunk_id"), explode(col("ctoks")).as("tok"))
-      .select(
-        col("doc_id"),
-        col("chunk_id"),
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % rcDim).as("bucket"),
-        (conv(substring(md5(col("tok")), 9, 1), 16, 10).cast("long") % 2 * 2 - 1).as("sign")
-      )
-      .groupBy(col("doc_id"), col("chunk_id"), col("bucket"))
-      .agg(sum(col("sign")).as("s"))
-      .filter(col("s") =!= 0)
-    val (denseOf, sig) = centeredBandSignatures(
-      ch.select(col("doc_id"), col("chunk_id")),
-      sums,
-      Seq("doc_id", "chunk_id"),
-      rcDim,
-      nPlanes,
-      nBands
+  private[graft] def chunkSums(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .select(col("doc_id"), col("text"))
+      .filter(col("text").isNotNull)
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.flatMap { case (docId, text) =>
+          // Spark's split(text, " ") is Java's split with limit −1:
+          // empty tokens, trailing ones included, stay tokens
+          val toks = text.split(" ", -1)
+          val dl = math.min(toks.length, TextStats.maxTokens)
+          Iterator.range(0, (dl + rcChunkTok - 1) / rcChunkTok).map { c =>
+            val s = new Array[Int](rcDim)
+            var i = c * rcChunkTok
+            val end = math.min(dl, i + rcChunkTok)
+            while (i < end) {
+              val h = md.digest(toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+              s((u % rcDim).toInt) += ((h(4) >> 4) & 1) * 2 - 1
+              i += 1
+            }
+            (docId, c.toLong, s)
+          }
+        }
+      }
+      .toDF("doc_id", "chunk_id", "s")
+  }
+
+  /** The chunk family's vectors, one row per chunk:
+    * (doc_id, chunk_id, cv, n2, bvs). [[chunkSums]] is checkpointed
+    * once; an Observation on that action returns the chunk count n and
+    * the bucket totals t_b, so no separate aggregate job runs. The rest
+    * is row-local against literal arrays: cv_b = s_b − floor(t_b/n)
+    * (the same double expression the oracle's dense grid evaluates),
+    * n2 = Σ cv², and band j's value sets bit k when plane j·width + k
+    * has Σ_b cv_b·σ_b > 0 ([[planeMask]] signs). These are the integers
+    * the oracle's grid and signature CTEs compute, so scores and bands
+    * are bit-identical by construction.
+    *
+    * Layout: the checkpoint holds one UnsafeRow per chunk, 304 bytes —
+    * an 8-byte null bitmap, three 8-byte slots, and the 64-int `s`
+    * array (8-byte length, 8-byte element null bitmap, 256 bytes of
+    * values). `cv` has the same 272-byte array layout; `bvs` is one
+    * long per band. Nothing is keyed on bucket: no (chunk, bucket)
+    * aggregate, no bucket join, no grid.
+    */
+  private def chunkVectors(docs: DataFrame, nPlanes: Int, nBands: Int): DataFrame = {
+    require(nPlanes % nBands == 0, s"nBands $nBands must divide plane count $nPlanes")
+    val width = nPlanes / nBands
+    val (sums, obs) = checkpointObserved(
+      chunkSums(docs),
+      (0 until rcDim).map(b => sum(element_at(col("s"), b + 1).cast("long")).as(s"t$b")): _*
     )
-    val bands = sig.select(
-      col("doc_id"),
-      col("chunk_id"),
-      posexplode(array((0 until nBands).map(j => col(s"bv$j")): _*)).as(Seq("bi", "bv"))
-    )
-    (denseOf, sig, bands)
+    val n = obs("rows").toDouble
+    val m = Array.tabulate(rcDim)(b => math.floor(obs(s"t$b").toDouble / n).toLong)
+    val masks = Array.tabulate(nPlanes)(planeMask(_, rcDim))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    sums
+      .as[(Long, Long, Array[Int])]
+      .map { case (docId, chunkId, s) =>
+        val cv = Array.tabulate(rcDim)(b => (s(b) - m(b)).toInt)
+        val n2 = cv.foldLeft(0L)((a, x) => a + x.toLong * x)
+        val bvs = Array.tabulate(nBands) { j =>
+          (0 until width).foldLeft(0L) { (bv, k) =>
+            val mask = masks(j * width + k)
+            val d = (0 until rcDim).foldLeft(0L)((a, b) => if (((mask >> b) & 1L) == 1L) a + cv(b) else a - cv(b))
+            if (d > 0) bv | (1L << k) else bv
+          }
+        }
+        (docId, chunkId, cv, n2, bvs)
+      }
+      .toDF("doc_id", "chunk_id", "cv", "n2", "bvs")
+  }
+
+  /** Every (query chunk, chunk of another doc) pair sharing a band value,
+    * each pair once. `q` carries the query chunks with their band values
+    * as `qbvs` and `qdoc`; the match is a broadcast equi-join on
+    * (band, value) over the posexploded bands of both sides, and a pair
+    * sharing several bands is kept only at its lowest shared band —
+    * the oracle's DISTINCT without a shuffle.
+    */
+  private def bandMatches(vecs: DataFrame, q: DataFrame, nBands: Int): DataFrame = {
+    val firstShared = (0 until nBands)
+      .map(j => lit(j) >= col("bi") || element_at(col("qbvs"), j + 1) =!= element_at(col("bvs"), j + 1))
+      .reduce(_ && _)
+    vecs
+      .select(col("*"), posexplode(col("bvs")).as(Seq("bi", "bv")))
+      .join(broadcast(q.select(col("*"), posexplode(col("qbvs")).as(Seq("bi", "bv")))), Seq("bi", "bv"))
+      .filter(col("doc_id") =!= col("qdoc") && firstShared)
+  }
+
+  /** round6 cosine of two centered chunk vectors: the exact integer dot
+    * product over the norms, the oracle's `num / sqrt(na2 · nb2)`.
+    */
+  private def chunkCos(a: Column, b: Column, na2: Column, nb2: Column): Column = {
+    val num = aggregate(zip_with(a, b, (x, y) => x.cast("long") * y.cast("long")), lit(0L), _ + _)
+    graft.core.Dsp.round6(num.cast("double") / sqrt(na2.cast("double") * nb2.cast("double")))
   }
 
   /** Top-k chunk retrieval for each query doc's first chunk: the
     * text→chunk→embed→candidates→rank composition as ONE query. Scale
-    * shape: chunking and embedding are row-local + one (chunk, bucket)
-    * aggregation; centering totals are a dim-row broadcast; the
-    * candidate join is banded (background ~nBands·n·2^-width per
-    * query); cosine/norm joins touch candidates only; the final rank
-    * window partitions by the real query key.
+    * shape: [[chunkVectors]] is one row-local kernel and one checkpoint;
+    * the candidates are a broadcast banded join (background
+    * ~nBands·n·2^-width per query) scored row-locally from the vectors
+    * they carry; the final rank window partitions by the real query key.
     */
   def retrieveChunks(
       docs: DataFrame,
@@ -1744,69 +1706,24 @@ object Dedup {
       nBands: Int = rcBands
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // scan fan-out (guide §2.5): the chunk explode + per-token md5
-    // stream otherwise inherit the single-file scan's one partition
-    // (measured r17: 5.0→3.1 s at sf0.1; retrieve_maxsim measured WORSE
-    // with the same fan — its collision-capped query side dominates —
-    // so the fan lives here, not in the shared chunkBandFrames prefix)
-    val (denseOf, sig, bands) =
-      chunkBandFrames(graft.core.Tables.fan(docs, "doc_id"), nPlanes, nBands)
-    val qb = bands
+    // scan fan-out (guide §2.5): the per-token md5 kernel otherwise
+    // inherits the single-file scan's one partition (measured r17:
+    // 5.0→3.1 s at sf0.1; retrieve_maxsim measured WORSE with the same
+    // fan — its collision-capped query side dominates — so the fan
+    // lives here, not in the shared chunkVectors)
+    val vecs = chunkVectors(Tables.fan(docs, "doc_id"), nPlanes, nBands)
+    val q = vecs
       .filter(col("doc_id") < rcQueryDocs && col("chunk_id") === 0)
-      .select(col("doc_id").as("qdoc"), col("bi"), col("bv"))
-    val cand = bands
-      .join(broadcast(qb), Seq("bi", "bv"))
-      .filter(col("doc_id") =!= col("qdoc"))
-      .select(col("qdoc"), col("doc_id").as("doc_b"), col("chunk_id").as("chunk_b"))
-      .distinct() // a pair can share both bands; score it once
-      .localCheckpoint() // feeds the candidate grid AND the num join
-    // centered vectors for the QUERY and CANDIDATE chunks only (r15:
-    // the corpus-wide grid is gone — candidates are banded-bounded)
-    val qd = denseOf(
-      sig
-        .filter(col("doc_id") < rcQueryDocs && col("chunk_id") === 0)
-        .select(col("doc_id"), col("chunk_id"))
-    )
-    val bd = denseOf(
-      cand.select(col("doc_b").as("doc_id"), col("chunk_b").as("chunk_id")).distinct()
-    )
-    val num = cand
-      .join(
-        qd.select(col("doc_id").as("qdoc"), col("bucket"), col("cv").as("ca")),
-        Seq("qdoc")
-      )
-      .join(
-        bd.select(
-          col("doc_id").as("doc_b"),
-          col("chunk_id").as("chunk_b"),
-          col("bucket"),
-          col("cv").as("cb")
-        ),
-        Seq("doc_b", "chunk_b", "bucket")
-      )
-      .groupBy(col("qdoc"), col("doc_b"), col("chunk_b"))
-      .agg(sum(col("ca") * col("cb")).as("num"))
-    val qn = sig
-      .filter(col("chunk_id") === 0 && col("doc_id") < rcQueryDocs)
-      .select(col("doc_id").as("qdoc"), col("n2").as("na2"))
+      .select(col("doc_id").as("qdoc"), col("cv").as("qcv"), col("n2").as("na2"), col("bvs").as("qbvs"))
     val w = Window
       .partitionBy(col("qdoc"))
       .orderBy(col("cos").desc, col("doc_b").asc, col("chunk_b").asc)
-    num
-      .join(broadcast(qn), Seq("qdoc"))
-      .join(
-        sig.select(col("doc_id").as("doc_b"), col("chunk_id").as("chunk_b"), col("n2").as("nb2")),
-        Seq("doc_b", "chunk_b")
-      )
+    bandMatches(vecs, q, nBands)
       .select(
         col("qdoc"),
-        col("doc_b"),
-        col("chunk_b"),
-        graft.core.Dsp
-          .round6(
-            col("num").cast("double") / sqrt(col("na2").cast("double") * col("nb2").cast("double"))
-          )
-          .as("cos")
+        col("doc_id").as("doc_b"),
+        col("chunk_id").as("chunk_b"),
+        chunkCos(col("qcv"), col("cv"), col("na2"), col("n2")).as("cos")
       )
       .select(col("qdoc"), col("doc_b"), col("chunk_b"), col("cos"), row_number().over(w).as("rank"))
       .filter(col("rank") <= rcTopK)
@@ -1828,7 +1745,8 @@ object Dedup {
         s"SELECT doc_id, chunk_id, $j AS bi, CAST($bv AS BIGINT) AS bv FROM sig"
       }
       .mkString(" UNION ALL ")
-    s"WITH t AS (SELECT doc_id, list_slice(string_split(text, ' '), 1, ${TextStats.maxTokens}) AS toks FROM documents), " +
+    s"WITH t AS (SELECT doc_id, list_slice(string_split(text, ' '), 1, ${TextStats.maxTokens}) AS toks FROM documents " +
+      "WHERE text IS NOT NULL), " +
       s"d AS (SELECT doc_id, toks, least(len(toks), ${TextStats.maxTokens}) AS dl FROM t), " +
       s"ch AS MATERIALIZED (SELECT doc_id, CAST(g.c AS BIGINT) AS chunk_id, " +
       s"list_slice(toks, g.c * $rcChunkTok + 1, g.c * $rcChunkTok + $rcChunkTok) AS ctoks " +
@@ -1897,80 +1815,35 @@ object Dedup {
       nBands: Int = rcBands
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (denseOf, sig, bands) = chunkBandFrames(docs, nPlanes, nBands)
-    val qb = bands
+    val vecs = chunkVectors(docs, nPlanes, nBands)
+    val q = vecs
       .filter(col("doc_id") < rcQueryDocs)
-      .select(col("doc_id").as("qdoc"), col("chunk_id").as("chunk_q"), col("bi"), col("bv"))
-    val coll = bands
-      .join(broadcast(qb), Seq("bi", "bv"))
-      .filter(col("doc_id") =!= col("qdoc"))
-      .select(col("qdoc"), col("chunk_q"), col("doc_id").as("doc_b"), col("chunk_id").as("chunk_b"))
-      .distinct()
+      .select(
+        col("doc_id").as("qdoc"),
+        col("chunk_id").as("chunk_q"),
+        col("cv").as("qcv"),
+        col("n2").as("na2"),
+        col("bvs").as("qbvs")
+      )
     val wc = Window.partitionBy(col("qdoc")).orderBy(col("ncoll").desc, col("doc_b").asc)
-    val cand = coll
-      .groupBy(col("qdoc"), col("doc_b"))
+    val cand = bandMatches(vecs, q, nBands)
+      .groupBy(col("qdoc"), col("doc_id").as("doc_b"))
       .agg(count(lit(1)).as("ncoll"))
       .select(col("qdoc"), col("doc_b"), row_number().over(wc).as("cr"))
       .filter(col("cr") <= msCand)
       .select(col("qdoc"), col("doc_b"))
-      .localCheckpoint() // feeds the candidate grid AND the num join
-    // centered vectors for every query chunk and every chunk of the
-    // capped candidate docs (r15: no corpus-wide grid; r16: ONE keyed
-    // union builds the grid once — the query and candidate keysets
-    // ride a single explode + sums join instead of two, halving the
-    // sparse path's job barriers — then the checkpointed grid serves
-    // both sides of the scoring join, values unchanged per key)
-    val gridKeys = sig
-      .filter(col("doc_id") < rcQueryDocs)
-      .select(col("doc_id"), col("chunk_id"))
-      .unionByName(
-        sig
-          .join(cand.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"))
-          .select(col("doc_id"), col("chunk_id"))
-      )
-      .distinct()
-    val grid = denseOf(gridKeys).localCheckpoint() // feeds BOTH scoring sides
-    val qd = grid.filter(col("doc_id") < rcQueryDocs)
-    val bd = grid // the num join's (doc_b, bucket) keys restrict to candidates
-    val num = cand
-      .join(
-        qd.select(
-          col("doc_id").as("qdoc"),
-          col("chunk_id").as("chunk_q"),
-          col("bucket"),
-          col("cv").as("ca")
-        ),
-        Seq("qdoc")
-      )
-      .join(
-        bd.select(
-          col("doc_id").as("doc_b"),
-          col("chunk_id").as("chunk_b"),
-          col("bucket"),
-          col("cv").as("cb")
-        ),
-        Seq("doc_b", "bucket")
-      )
-      .groupBy(col("qdoc"), col("chunk_q"), col("doc_b"), col("chunk_b"))
-      .agg(sum(col("ca") * col("cb")).as("num"))
-    val qn = sig
-      .filter(col("doc_id") < rcQueryDocs)
-      .select(col("doc_id").as("qdoc"), col("chunk_id").as("chunk_q"), col("n2").as("na2"))
-    val cos = num
-      .join(broadcast(qn), Seq("qdoc", "chunk_q"))
-      .join(
-        sig.select(col("doc_id").as("doc_b"), col("chunk_id").as("chunk_b"), col("n2").as("nb2")),
-        Seq("doc_b", "chunk_b")
-      )
+    // every query chunk against every chunk of its capped candidate
+    // docs: at most msCand docs per query, so this side broadcasts at
+    // any corpus size and the corpus vectors stream past it
+    val pairs = cand.join(q.select(col("qdoc"), col("chunk_q"), col("qcv"), col("na2")), Seq("qdoc"))
+    val cos = vecs
+      .select(col("doc_id").as("doc_b"), col("cv"), col("n2"))
+      .join(broadcast(pairs), Seq("doc_b"))
       .select(
         col("qdoc"),
         col("chunk_q"),
         col("doc_b"),
-        graft.core.Dsp
-          .round6(
-            col("num").cast("double") / sqrt(col("na2").cast("double") * col("nb2").cast("double"))
-          )
-          .as("cos")
+        chunkCos(col("qcv"), col("cv"), col("na2"), col("n2")).as("cos")
       )
     val best = cos
       .groupBy(col("qdoc"), col("doc_b"), col("chunk_q"))

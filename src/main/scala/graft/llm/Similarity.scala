@@ -840,6 +840,14 @@ object Similarity {
   private def walkEdges(e: DataFrame): DataFrame =
     e.repartition(col("vid_a")).localCheckpoint()
 
+  /** `score` maps a (qid, vid) frame to (qid, vid, cos); null means the
+    * exact cosine [[graphScore]]. Contract: a scorer must be
+    * deterministic per (qid, vid) and return round6-rounded scores. The
+    * walk scores a node once, when it enters the state, and ranks later
+    * rounds on that carried score, while the SQL oracles rescore the
+    * frontier every round — a stateful or unrounded scorer would
+    * diverge from them without any error.
+    */
   private def beamWalk(
       emb: DataFrame,
       edges: DataFrame,

@@ -440,23 +440,49 @@ object TextStats {
     */
   val winnowW = 4
 
-  def winnow(docs: DataFrame, w: Int = winnowW): DataFrame = {
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("i"))
-      .rowsBetween(0, w - 1)
-    // full windows only (count = w); the distinct reuses the window's
-    // doc_id hash partitioning (doc_id ⊆ (doc_id, fp)) — one shuffle
-    shingles(docs)
-      .select(col("doc_id"), col("i"), md5(col("sh")).as("h"))
-      .select(
-        col("doc_id"),
-        min(col("h")).over(win).as("fp"),
-        count(lit(1)).over(win).as("cnt")
-      )
-      .filter(col("cnt") === w)
-      .select(col("doc_id"), col("fp"))
-      .distinct()
+  def winnow(docs: DataFrame, w: Int = winnowW): DataFrame =
+    winnowFps(docs, w).select(col("doc_id"), explode(col("fps")).as("fp"))
+
+  /** Lowercase hex of a digest — Spark's `md5` string form. */
+  private def hex(bytes: Array[Byte]): String = {
+    val sb = new java.lang.StringBuilder(bytes.length * 2)
+    bytes.foreach(b => sb.append(Character.forDigit((b >> 4) & 0xf, 16)).append(Character.forDigit(b & 0xf, 16)))
+    sb.toString
+  }
+
+  /** Each doc's distinct winnowing fingerprints, sorted ascending, in
+    * one row-local kernel: (doc_id, fps). The 3-shingles are
+    * [[shingles]]' (positions 1..min(n − 2, maxTokens) of
+    * `split(text, " ")`), hashed to md5 hex; every FULL window of `w`
+    * consecutive shingle hashes contributes its minimum. A doc with no
+    * full window, or a null text, emits no row. Hex strings are ASCII,
+    * so Java's String order is Spark's binary string order.
+    */
+  private[graft] def winnowFps(docs: DataFrame, w: Int = winnowW): DataFrame = {
+    require(w > 0, s"w must be positive, got $w")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .select(col("doc_id"), col("text"))
+      .filter(col("text").isNotNull)
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        it.flatMap { case (docId, text) =>
+          // Spark's split(text, " ") is Java's split with limit −1
+          val toks = text.split(" ", -1)
+          val nSh = math.min(toks.length - 2, maxTokens)
+          if (nSh < w) None
+          else {
+            val h = Array.tabulate(nSh) { i =>
+              hex(md.digest(s"${toks(i)} ${toks(i + 1)} ${toks(i + 2)}".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+            }
+            val fps = Iterator.range(0, nSh - w + 1).map(j => h.slice(j, j + w).min).toArray.sorted.distinct
+            Some((docId, fps))
+          }
+        }
+      }
+      .toDF("doc_id", "fps")
   }
 
   def winnowSql(w: Int = winnowW): String = {
@@ -533,12 +559,13 @@ object TextStats {
     *
     *  1. each doc keeps its bottom-[[wtCap]] fingerprints (MOSS's own
     *     cap — per-doc incidence is bounded by s·df regardless of doc
-    *     length);
+    *     length), a slice of its [[winnowFps]] row;
     *  2. docs are collapsed into CLASSES by the md5 of their capped
     *     fp set (the mm_wav_fp_pairs distinct-signature rule: replica
     *     cliques — the quadratic term in the full pair table — collapse
     *     to ONE representative each, so pairing volume is over classes,
-    *     clique-free by construction);
+    *     clique-free by construction) in one groupBy(sig) that also
+    *     carries the representative's capped set (`min_by`);
     *  3. class pairs share fps via the df-capped equi-join, exact
     *     shared-fp counts, then ONE rank window caps the report at
     *     [[wtK]] partners per class (n_shared desc, partner asc).
@@ -553,24 +580,14 @@ object TextStats {
       k: Int = wtK,
       maxDf: Int = woMaxDf
   ): DataFrame = {
-    val capW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("fp"))
-    val capped = winnow(docs)
-      .select(col("doc_id"), col("fp"), row_number().over(capW).as("rn"))
-      .filter(col("rn") <= s)
-      .select(col("doc_id"), col("fp"))
-      .localCheckpoint() // feeds the signature agg AND the class fp set
-    val cls = capped
-      .groupBy(col("doc_id"))
-      .agg(md5(concat_ws(",", sort_array(collect_list(col("fp"))))).as("sig"))
+    require(s > 0, s"s must be positive, got $s")
+    val capped = slice(col("fps"), 1, s)
+    val cls = winnowFps(docs)
+      .select(col("doc_id"), capped.as("fps"), md5(concat_ws(",", capped)).as("sig"))
       .groupBy(col("sig"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"))
-      .localCheckpoint() // rep fp-set join + both size joins
-    val cfps = capped
-      .join(cls.select(col("rep").as("doc_id")), Seq("doc_id"))
-      .select(col("doc_id").as("rep"), col("fp"))
-      .localCheckpoint() // df counts + both pair sides
+      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"), min_by(col("fps"), col("doc_id")).as("fps"))
+      .localCheckpoint() // the rep fp sets + both size joins
+    val cfps = cls.select(col("rep"), explode(col("fps")).as("fp"))
     val keep = cfps
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("dfreq"))
@@ -695,11 +712,6 @@ object TextStats {
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        def hex(bytes: Array[Byte]): String = {
-          val sb = new java.lang.StringBuilder(bytes.length * 2)
-          bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))
-          sb.toString
-        }
         val gMemo = scala.collection.mutable.HashMap.empty[Char, Long]
         def g(c: Char): Long = gMemo.getOrElseUpdate(
           c, {

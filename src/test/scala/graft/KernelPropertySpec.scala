@@ -150,6 +150,110 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  // ---- text kernels: per-document mapPartitions forms vs the Column
+  // forms they replaced (kept here only as references) ----
+
+  private val textRnd = new scala.util.Random(7)
+  private val vocab = Seq("a", "bb", "ccc", "the", "of", "Ünïcödé", "漢字", "😀x", "naïve", "z")
+  private def randText(n: Int): String = Seq.fill(n)(vocab(textRnd.nextInt(vocab.length))).mkString(" ")
+  private def rep(n: Int): String = Seq.fill(n)("x y z").mkString(" ")
+  private val edgeTexts: Seq[String] = Seq(
+    "", " ", "a  b", "a b ", "  lead and trail  ", "a", "a b", "a b c", "a b c d", "a b c d e",
+    "a b c d e f", // w + 2 tokens: exactly one full window
+    rep(7), // repeated shingles
+    randText(1100), // past maxTokens
+    (1 to 1030).map(i => s"t$i").mkString(" "),
+    "漢字 Ünïcödé 😀x naïve 漢字 Ünïcödé"
+  )
+  private lazy val textDocs = {
+    val texts = edgeTexts ++ Seq.fill(60)(randText(1 + textRnd.nextInt(140)))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  test("chunkSums kernel equals the exploded md5 (chunk, bucket) sums") {
+    import graft.llm.{Dedup, TextStats}
+    val toks = slice(split(col("text"), " "), 1, TextStats.maxTokens)
+    val ch = textDocs
+      .select(col("doc_id"), toks.as("toks"), least(size(toks), lit(TextStats.maxTokens)).as("dl"))
+      .select(
+        col("doc_id"),
+        col("toks"),
+        explode(sequence(lit(0), expr(s"(dl - 1) div ${Dedup.rcChunkTok}").cast("int"))).as("c")
+      )
+      .select(
+        col("doc_id"),
+        col("c").cast("long").as("chunk_id"),
+        slice(col("toks"), (col("c") * Dedup.rcChunkTok + lit(1)).cast("int"), lit(Dedup.rcChunkTok)).as("ctoks")
+      )
+    val refSums = ch
+      .select(col("doc_id"), col("chunk_id"), explode(col("ctoks")).as("tok"))
+      .select(
+        col("doc_id"),
+        col("chunk_id"),
+        (conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % Dedup.rcDim).as("bucket"),
+        (conv(substring(md5(col("tok")), 9, 1), 16, 10).cast("long") % 2 * 2 - 1).as("sign")
+      )
+      .groupBy(col("doc_id"), col("chunk_id"), col("bucket"))
+      .agg(sum(col("sign")).as("s"))
+      .filter(col("s") =!= 0)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    val kernel = Dedup.chunkSums(textDocs).collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
+    assert(kernel.forall(_._3.length == Dedup.rcDim))
+    val keys = kernel.map(k => (k._1, k._2))
+    assert(keys.toSeq.sorted == ch.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted, "chunk keys differ")
+    val sums = kernel.flatMap { case (d, c, s) =>
+      s.zipWithIndex.collect { case (v, b) if v != 0 => (d, c, b.toLong, v.toLong) }
+    }.toSet
+    assert(sums == refSums, s"kernel-only ${(sums -- refSums).take(5)}; reference-only ${(refSums -- sums).take(5)}")
+    assert(keys.exists(_._2 == 31L) && !keys.exists(_._2 == 32L), "the maxTokens cap is not exercised")
+    assert(Dedup.chunkSums(Seq((1L, null: String)).toDF("doc_id", "text")).count() == 0, "a null text made chunks")
+  }
+
+  test("winnowFps kernel equals the shingle-window min form") {
+    import graft.llm.TextStats
+    val w = TextStats.winnowW
+    val win = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id")).orderBy(col("i")).rowsBetween(0, w - 1)
+    val docs = textDocs.unionByName(Seq((900L, null: String)).toDF("doc_id", "text"))
+    val ref = TextStats
+      .shingles(docs)
+      .select(col("doc_id"), col("i"), md5(col("sh")).as("h"))
+      .select(col("doc_id"), min(col("h")).over(win).as("fp"), count(lit(1)).over(win).as("cnt"))
+      .filter(col("cnt") === w)
+      .select(col("doc_id"), col("fp"))
+      .distinct()
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+      .toSet
+    val rows = TextStats.winnowFps(docs).collect().map(r => r.getLong(0) -> r.getSeq[String](1))
+    rows.foreach { case (d, fps) => assert(fps.nonEmpty && fps == fps.sorted.distinct, s"doc $d: $fps") }
+    val got = rows.flatMap { case (d, fps) => fps.map(d -> _) }.toSet
+    assert(got == ref, s"kernel-only ${(got -- ref).take(5)}; reference-only ${(ref -- got).take(5)}")
+    // no full window below w + 2 tokens; exactly one at w + 2
+    val byDoc = rows.toMap
+    edgeTexts.zipWithIndex.foreach { case (t, i) =>
+      val n = t.split(" ", -1).length
+      if (n < w + 2) assert(!byDoc.contains(i.toLong), s"'$t' has no full window")
+    }
+    assert(byDoc(edgeTexts.indexOf("a b c d e f").toLong).length == 1)
+    assert(TextStats.winnow(docs).collect().map(r => (r.getLong(0), r.getString(1))).toSet == ref)
+  }
+
+  test("a null-text doc leaves retrieveChunks output unchanged") {
+    import graft.llm.Dedup
+    // every doc repeats one token, so its bucket's mean is far from 0 and
+    // 32 phantom all-zero chunks would move the centering
+    def doc(pfx: String): String = (1 to 40).map(i => if (i % 5 == 0) "common" else s"$pfx$i").mkString(" ")
+    val base = ((0 to 3) ++ (5 to 12)).map(d => (d.toLong, doc(s"d${d % 6}w"))).toDF("doc_id", "text")
+    val withNull = base.unionByName(Seq((99L, null: String)).toDF("doc_id", "text"))
+    def out(d: org.apache.spark.sql.DataFrame) =
+      Dedup.retrieveChunks(d).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4))).toSet
+    val want = out(base)
+    assert(want.nonEmpty)
+    assert(out(withNull) == want)
+  }
 }
 
 /** Non-power-of-two nfft goes through SpectrumSeg's direct-DFT branch;

@@ -100,26 +100,30 @@ class LlmSpec extends AnyFunSuite {
   test("components over simhash pairs stays within a fixed Spark job budget") {
     // pairs, edge store, seed and the collect: 8 jobs. The per-round
     // label loop this guards against ran 27 here
-    val group = "components-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "components job budget")
-    try {
-      val comp = Dedup.components(docs.select(col("doc_id")), Dedup.simhashPairs(docs)).collect()
-      assert(comp.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
-    } finally {
-      sc.clearJobGroup()
-      // job-start events reach listeners asynchronously
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get > 0 && jobs.get <= 12, s"components ran ${jobs.get} Spark jobs")
+    val (comp, jobs) = SparkProbe.jobs(
+      Dedup.components(docs.select(col("doc_id")), Dedup.simhashPairs(docs)).collect()
+    )
+    assert(comp.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L))
+    assert(jobs > 0 && jobs <= 12, s"components ran $jobs Spark jobs")
+  }
+
+  test("retrieve_chunks stays within a fixed Spark job budget") {
+    // kernel checkpoint, query broadcast, rank exchange and the collect:
+    // 4 jobs. The keyed (chunk, bucket) form this guards against ran 23
+    val (rows, jobs) = SparkProbe.jobs(Dedup.retrieveChunks(docs).collect())
+    assert(rows.exists(r => r.getAs[Long]("qdoc") == 1L && r.getAs[Long]("doc_b") == 4L), rows.mkString(", "))
+    assert(jobs > 0 && jobs <= 8, s"retrieveChunks ran $jobs Spark jobs")
+  }
+
+  test("winnow_topk stays within a fixed Spark job budget") {
+    // class checkpoint, df-capped pair count and the report: 9 jobs. The
+    // per-doc window, capped checkpoint and cfps join form ran 15
+    val run = (1 to 16).map(i => s"common$i").mkString(" ")
+    val d = Seq((1L, s"aa bb $run cc"), (2L, s"xx $run yy zz"), (3L, s"$run ww"), (4L, "p1 p2 p3 p4 p5 p6 p7"))
+      .toDF("doc_id", "text")
+    val (rows, jobs) = SparkProbe.jobs(graft.llm.TextStats.winnowTopk(d).collect())
+    assert(rows.nonEmpty)
+    assert(jobs > 0 && jobs <= 12, s"winnowTopk ran $jobs Spark jobs")
   }
 
   test("decontam counts shared shingles, clean docs emit no row") {

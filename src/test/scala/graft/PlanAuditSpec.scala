@@ -122,18 +122,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   // every node of a gate query's executed plan, through the AQE
   // wrapper's initial plan and subqueries
-  private def planNodes(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
-        case other => other.children
-      }
-      p +: (kids ++ p.subqueries).flatMap(nodes)
-    }
-    nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
-  }
+  private def planNodes(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    SparkProbe.nodes(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
 
   // every gate built on FirOps.same / CwtOps.cwtMorlet runs the
   // convBank channel scan: a Lag/Lead window expression in its plan
@@ -164,6 +154,35 @@ class PlanAuditSpec extends AnyFunSuite {
     val bad = names.filter(n => n.contains("HashAggregate") || n.contains("BroadcastHashJoin"))
     assert(bad.isEmpty, s"fir_oa_fast plans ${bad.mkString(", ")}")
     assert(names.exists(_.contains("MapPartitions")), s"matcher is stale: ${names.mkString(", ")}")
+  }
+
+  // the chunk and winnow kernels do per-document work row-locally: the
+  // plans of every action a gate runs, construction-time checkpoints
+  // included, key no aggregate or join on bucket and window nothing by
+  // doc_id. dedup_hash_embed's grid (inside a checkpoint) and
+  // text_chunks_cdc's boundary window prove both matchers live.
+  test("retrieve gates key nothing on bucket; winnow_topk windows nothing by doc_id") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    def actionNodes(name: String) = {
+      val (df, plans) = SparkProbe.actionPlans(SparkEntry.queries(name)(spark, sf))
+      (plans :+ df.queryExecution.executedPlan).flatMap(SparkProbe.nodes)
+    }
+    def on(col: String, es: Seq[Expression]): Boolean =
+      es.exists(_.collectFirst { case a: Attribute if a.name == col => a }.nonEmpty)
+    def bucketKeyed(name: String): Seq[String] = actionNodes(name).collect {
+      case a: BaseAggregateExec if on("bucket", a.groupingExpressions) => s"$name: ${a.nodeName} by bucket"
+      case j: BaseJoinExec if on("bucket", j.leftKeys ++ j.rightKeys) => s"$name: ${j.nodeName} on bucket"
+    }
+    def docWindows(name: String): Seq[String] = actionNodes(name).collect {
+      case w: WindowExecBase if on("doc_id", w.partitionSpec) => s"$name: ${w.nodeName} by doc_id"
+    }
+    assert(bucketKeyed("dedup_hash_embed").nonEmpty, "matcher is stale: dedup_hash_embed keys nothing on bucket")
+    assert(docWindows("text_chunks_cdc").nonEmpty, "matcher is stale: text_chunks_cdc windows nothing by doc_id")
+    val bad = bucketKeyed("retrieve_chunks") ++ bucketKeyed("retrieve_maxsim") ++ docWindows("winnow_topk")
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("star join broadcasts its dimension sides") {
