@@ -35,12 +35,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // a query that throws must leave NO output behind: a previous run's
+    // parquet in a reused out dir would otherwise pass the compare
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name)) {
+        deleteRecursively(Paths.get(s"$outDir/$name"))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failed += name
         }
       }
     }
@@ -61,5 +66,16 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
+
+  private def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).forEach(q => Files.delete(q))
+      finally walk.close()
+    }
 }

@@ -65,8 +65,8 @@ object Fft {
     * optional one-sided doubling (skipping DC, and Nyquist only when it
     * exists, i.e. for even n — scipy one-sided semantics). One instance
     * caches the DFT trig tables; use one instance per task/thread.
-    * Shared by the `SpectrumSeg` Catalyst expression and the streaming
-    * frame scan in SpectraOps. The input array is not retained.
+    * Used by the streaming frame scan in SpectraOps (Welch, STFT). The
+    * input array is not retained.
     */
   final class Periodogram(
       win: Array[Double],

@@ -44,57 +44,6 @@ case class SegConv(child: Expression, kernel: Seq[Double]) extends UnaryExpressi
   override protected def withNewChildInternal(c: Expression): SegConv = copy(child = c)
 }
 
-/** Fused mean-detrend → window-multiply → |RFFT|² in one kernel: the
-  * Welch periodogram core without the ~nfft-literal zip_with/aggregate
-  * expression blob (which costs seconds of codegen compile per query at
-  * large nfft). Mean accumulates left-associated from 0.0, exactly like
-  * the `aggregate(xs, 0.0, _+_)` column it replaces.
-  */
-case class WinRfftMag2(child: Expression, win: Seq[Double], demean: Boolean)
-    extends UnaryExpression
-    with CodegenFallback {
-  @transient private lazy val w = win.toArray
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(v: Any): Any = {
-    val xs = v.asInstanceOf[ArrayData].toDoubleArray()
-    var s = 0.0
-    var i = 0
-    while (i < xs.length) { s += xs(i); i += 1 }
-    val m = if (demean) s / xs.length else 0.0
-    val xw = new Array[Double](xs.length)
-    i = 0
-    while (i < xs.length) { xw(i) = (xs(i) - m) * w(i); i += 1 }
-    new GenericArrayData(Fft.rfftMag2(xw))
-  }
-  override protected def withNewChildInternal(c: Expression): WinRfftMag2 = copy(child = c)
-}
-
-/** Full modified-periodogram kernel over one segment: detrend
-  * (none/constant/linear over implicit positions 0..n−1) → window →
-  * |RFFT|² → density/spectrum normalization with optional one-sided
-  * doubling. Emits the n/2+1 bin powers. Replaces the explicit-DFT
-  * term explosion (×(nfft/2+1) rows per sample) for every Welch/STFT
-  * variant; the explicit-DFT SQL stays as the oracle, agreeing after
-  * 6 dp rounding (same bar the FFT fast path already clears).
-  * Delegates to the shared [[Fft.Periodogram]] kernel (also used by the
-  * streaming frame scan in SpectraOps).
-  */
-case class SpectrumSeg(
-    child: Expression,
-    win: Seq[Double],
-    detrend: String,
-    norm: Double,
-    doubled: Boolean
-) extends UnaryExpression
-    with CodegenFallback {
-  @transient private lazy val kernel =
-    new Fft.Periodogram(win.toArray, detrend, norm, doubled)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    new GenericArrayData(kernel(v.asInstanceOf[ArrayData].toDoubleArray()))
-  override protected def withNewChildInternal(c: Expression): SpectrumSeg = copy(child = c)
-}
-
 /** Left-associated dot product of two `array<double>` columns — the
   * cosine-scoring hot path without `aggregate(zip_with(...))`'s
   * per-element interpreted lambdas and intermediate zipped array.
@@ -492,18 +441,8 @@ object exprs {
     Bridge.column(BpeEncode(Bridge.expression(toks), merges))
   def byte_remap(s: Column): Column = Bridge.column(ByteRemap(Bridge.expression(s)))
   def byte_unremap(s: Column): Column = Bridge.column(ByteUnremap(Bridge.expression(s)))
-  def spectrum_seg(
-      c: Column,
-      win: Array[Double],
-      detrend: String,
-      norm: Double,
-      doubled: Boolean
-  ): Column =
-    Bridge.column(SpectrumSeg(Bridge.expression(c), win.toSeq, detrend, norm, doubled))
   def rfft_mag2(c: Column): Column =
     Bridge.column(RfftMag2(Bridge.expression(c)))
-  def win_rfft_mag2(c: Column, win: Array[Double], demean: Boolean): Column =
-    Bridge.column(WinRfftMag2(Bridge.expression(c), win.toSeq, demean))
   def seg_conv(c: Column, h: Array[Double]): Column =
     Bridge.column(SegConv(Bridge.expression(c), h.toSeq))
   def dot_d(a: Column, b: Column): Column =

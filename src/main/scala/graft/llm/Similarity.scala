@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Dsp, Tables}
@@ -21,6 +21,28 @@ import graft.core.{Dsp, Tables}
   * At 100 TB the brute-force path is a broadcast of the (small) query
   * set against a partitioned corpus — no shuffle on the corpus side;
   * the LSH path turns it into an equi-join on bucket signatures.
+  *
+  * The flat-index ANN family is one core (FAISS's index-factory
+  * decomposition: coarse quantizer × coder × refine): cell ranking →
+  * router → scorer → optional exact refine of a shortlist →
+  * `rankTopK`. Each entry point is a configuration of it:
+  *
+  * | entry point        | router                         | scorer           | refine              |
+  * |--------------------|--------------------------------|------------------|---------------------|
+  * | `topk`             | brute                          | exact cosine     | —                   |
+  * | `ivfTopk`          | IVF cells                      | exact cosine     | —                   |
+  * | `filteredTopk`     | IVF cells, label-filtered corpus | exact cosine   | —                   |
+  * | `sq8Topk`          | brute                          | SQ8 approx       | exact cosine        |
+  * | `sq8TopkIvf`       | IVF cells                      | SQ8 approx       | exact cosine        |
+  * | `pqTopk`           | brute                          | PQ               | —                   |
+  * | `ivfPqTopk`        | IVF cells                      | IVF-PQ residual  | —                   |
+  * | `ivfPqTrainedGate` | IVF cells                      | IVF-PQ (q6 Lloyd codebooks) | exact cosine |
+  * | `ivfPqTopkTrained` | IVF cells (trained, unit vectors) | IVF-PQ (Lloyd codebooks) | unit dot |
+  * | `ivfServeTopk`     | pruned raw cell store          | exact cosine     | —                   |
+  * | `ivfLayoutTopk`    | pruned raw cell store, query 0 | exact cosine     | —                   |
+  * | `ivfPqServeTopk`   | pruned packed-code cell store  | IVF-PQ residual  | —                   |
+  *
+  * The graph walks (`graphServe*`) reuse the exact and SQ8 scorers.
   */
 object Similarity {
 
@@ -49,27 +71,232 @@ object Similarity {
   private def cosExpr: org.apache.spark.sql.Column =
     graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb"))
 
-  private val cosSqlExpr: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> list_extract($a, i) * list_extract($b, i)))"
-    s"${dot("va", "vb")} / (sqrt(${dot("va", "va")}) * sqrt(${dot("vb", "vb")}))"
+  // ---- DuckDB oracle fragments: the 64-term left-associated dot
+  // product and squared distance every vector oracle is built from ----
+
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, 64), i -> list_extract($a, i) * list_extract($b, i)))"
+
+  private def d2Sql(a: String, b: String, n: Int = 64): String =
+    s"list_sum(list_transform(generate_series(1, $n), i -> " +
+      s"(list_extract($a, i) - list_extract($b, i)) * (list_extract($a, i) - list_extract($b, i))))"
+
+  private def cosSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
+
+  private val cosSqlExpr: String = cosSql("va", "vb")
+
+  /** The SQ8 coder in DuckDB: the max-abs scale and the BIGINT codes. */
+  private val sq8ScaleSql = "greatest(list_max(list_transform(v, x -> abs(x))), 1.0e-30)"
+  private val sq8CodeSql = "list_transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT))"
+
+  /** The IVF oracle CTE prefix `vs, cents, dists, rankedc, assign, `:
+    * deterministic first-`nList` cells, argmin with the cid tie-break.
+    * `mat` names the CTEs rendered AS MATERIALIZED; `label` keeps the
+    * label column in vs.
+    */
+  private def ivfCtesSql(nList: Int, mat: Set[String] = Set.empty, label: Boolean = false): String = {
+    def cte(name: String) = if (mat(name)) s"$name AS MATERIALIZED" else s"$name AS"
+    s"${cte("vs")} (SELECT vec_id, ${if (label) "label, " else ""}" +
+      "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
+      s"${cte("cents")} (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
+      s"${cte("dists")} (SELECT a.vec_id AS pid, c.cid AS cid, ${d2Sql("a.v", "c.cv")} AS d2 FROM vs a CROSS JOIN cents c), " +
+      s"${cte("rankedc")} (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
+      s"${cte("assign")} (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), "
   }
 
-  def topk(emb: DataFrame): DataFrame = {
+  /** The `qcells` CTE: the `nProbe` nearest cells of each query row. */
+  private def qcellsSql(nProbe: Int, queries: String = s"pid < $nQueries"): String =
+    s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND $queries), "
+
+  /** The final per-query rank over CTE `src`, projecting `out`. */
+  private def rankSql(src: String, metric: String, dir: String, out: String = ""): String =
+    s"ranked AS (SELECT qid, vid, $metric, row_number() OVER (PARTITION BY qid ORDER BY $metric $dir, vid ASC) " +
+      s"AS rank FROM $src) SELECT ${if (out.isEmpty) s"qid, vid, $metric, rank" else out} FROM ranked WHERE rank <= $topK"
+
+  // ---- The flat-index ANN core. Every flat top-k / serve entry point
+  // (table in the object doc) is cell ranking → router → scorer →
+  // optional exact refine → rankTopK. Wide payloads never ride a sort:
+  // the cell ranking and every rank read narrow (id, key, metric)
+  // frames, and the vectors join back after the prune ----
+
+  /** Centroid frame (cid, cv): trained centroids, or the first `nList`
+    * vectors of `vs` (the deterministic, oracle-replayable cells).
+    */
+  private def centroidFrame(vs: DataFrame, nList: Int, centroids: Option[Array[Array[Double]]]): DataFrame =
+    centroids match {
+      case Some(cs) =>
+        val spark = vs.sparkSession
+        import spark.implicits._
+        cs.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv")
+      case None => vs.filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv"))
+    }
+
+  /** (vec_id, cid, d2) from every point of `points` (vec_id, v) to every
+    * broadcast centroid: the narrow frame the cell ranking reads.
+    */
+  private def cellDists(points: DataFrame, cents: DataFrame): DataFrame =
+    points
+      .join(broadcast(cents))
+      .select(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"))
+
+  /** The cell ranking: each vec_id's `n` nearest cells under the total
+    * order (d2 asc, cid asc). n = 1 (corpus assignment) is a map-side
+    * combinable `min_by`, no sort; n > 1 (query probes) is a per-id
+    * rank. Emits (vec_id, cid).
+    */
+  private def nearestCells(d: DataFrame, n: Int): DataFrame =
+    if (n == 1) d.groupBy(col("vec_id")).agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
+    else {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id"))
+        .orderBy(col("d2").asc, col("cid").asc)
+      d.withColumn("cr", row_number().over(w)).filter(col("cr") <= n).select(col("vec_id"), col("cid"))
+    }
+
+  /** Probed cells (qid, cid) of the `queries` rows of `vs` (vec_id, v). */
+  private def probeCells(vs: DataFrame, cents: DataFrame, nProbe: Int, queries: Column): DataFrame =
+    nearestCells(cellDists(vs.filter(queries), cents), nProbe).select(col("vec_id").as("qid"), col("cid"))
+
+  /** A scorer: the query side `q` (qid, …; always broadcast), the corpus
+    * side `c` (vid, …) and the `metric` one joined pair row yields;
+    * `desc` when larger is nearer.
+    */
+  private final case class Scorer(q: DataFrame, c: DataFrame, metric: String, value: Column, desc: Boolean)
+
+  /** Exact cosine round(dot/(na·nb), 6): the brute baseline, every
+    * refine and the graph walks' exact score. `keep` filters the corpus
+    * side (filtered search drops non-matching rows before any dot).
+    */
+  private def cosScorer(emb: DataFrame, nQ: Int = nQueries, keep: Column = lit(true)): Scorer = {
     val vs = vecsN(emb)
-    val q = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    val c = vs.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-    val scored = broadcast(q)
-      .join(c, col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), round(cosExpr, 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
+    Scorer(
+      vs.filter(col("vec_id") < nQ).select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na")),
+      vs.filter(keep).select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb")),
+      "cos",
+      round(cosExpr, 6),
+      desc = true
+    )
+  }
+
+  /** The SQ8 coder: m = max|v_i| (floored at 1e-30) and the codes
+    * q_i = round-half-up(v_i/m·127) cast to `t`, added to `vecs` (…, v).
+    */
+  private def sq8Code(vecs: DataFrame, t: String): DataFrame =
+    vecs
+      .withColumn("m", expr("greatest(array_max(transform(v, x -> abs(x))), 1.0e-30)"))
+      .withColumn("q", expr(s"transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS $t))"))
+
+  /** (vec_id, nrm, m, q BIGINT): the coded frame the SQ8 scorer reads. */
+  private def sq8Codes(emb: DataFrame): DataFrame =
+    sq8Code(vecsN(emb), "BIGINT").select(col("vec_id"), col("nrm"), col("m"), col("q"))
+
+  /** SQ8 approx cosine over `coded`: the exact BIGINT code dot × both
+    * scales / 127² / both norms, 6 dp.
+    */
+  private def sq8Approx(coded: DataFrame, nQ: Int, metric: String): Scorer =
+    Scorer(
+      coded
+        .filter(col("vec_id") < nQ)
+        .select(col("vec_id").as("qid"), col("q").as("qa"), col("m").as("ma"), col("nrm").as("na")),
+      coded.select(col("vec_id").as("vid"), col("q").as("qb"), col("m").as("mb"), col("nrm").as("nb")),
+      metric,
+      round(
+        expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
+          .cast("double") * col("ma") * col("mb") / lit(127.0 * 127.0) / (col("na") * col("nb")),
+        6
+      ),
+      desc = true
+    )
+
+  /** PQ asymmetric distance round6(‖qr − vq‖²): the exact query (or its
+    * residual `qr`) against the corpus reconstruction `vq` in `c`.
+    */
+  private def pqScorer(q: DataFrame, c: DataFrame, qr: Column): Scorer =
+    Scorer(q, c, "ad2", graft.core.Dsp.round6(graft.functions.exprs.sq_dist(qr, col("vq"))), desc = false)
+
+  /** round6(va·vb) over unit vectors (vec_id, v): the trained refine. */
+  private def unitDotScorer(unit: DataFrame): Scorer =
+    Scorer(
+      unit.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"), col("v").as("va")),
+      unit.select(col("vec_id").as("vid"), col("v").as("vb")),
+      "cos",
+      graft.core.Dsp.round6(graft.functions.exprs.dot_d(col("va"), col("vb"))),
+      desc = true
+    )
+
+  private def score(s: Scorer, pairs: DataFrame, ride: Seq[String] = Nil): DataFrame =
+    pairs.select(Seq(col("qid"), col("vid")) ++ ride.map(col) :+ s.value.as(s.metric): _*)
+
+  /** Brute router: every query against every other corpus row. */
+  private def bruteScore(s: Scorer): DataFrame =
+    score(s, broadcast(s.q).join(s.c, col("qid") =!= col("vid")))
+
+  /** Cell router: cell members (cid, vid, …) meet the broadcast probed
+    * cells (qid, cid) on cid. A vector lives in one cell, so each
+    * (qid, vid) pair surfaces once; a query never returns itself.
+    */
+  private def cellPairs(members: DataFrame, probes: DataFrame): DataFrame =
+    members.join(broadcast(probes), Seq("cid")).filter(col("qid") =!= col("vid"))
+
+  /** The probe table collected as a local cid → probing qids map: at
+    * most nQ·nProbe entries, at any corpus size.
+    */
+  private def probeCellLiterals(probes: DataFrame): Map[Long, Seq[Long]] =
+    probes.collect().toSeq.groupBy(_.getLong(1)).map { case (c, rs) => c -> rs.map(_.getLong(0)).sorted }
+
+  /** Literal cell router, for members that already carry their payload
+    * (a cell store, the checkpointed IVF-PQ index): each member row of a
+    * probed cell explodes into the queries probing it — no join, no
+    * broadcast, no shuffle below the query join (a probe window there
+    * makes Spark inject a runtime bloom filter on the query scan: two
+    * extra jobs per request).
+    */
+  private def probedPairs(members: DataFrame, probed: Map[Long, Seq[Long]]): DataFrame =
+    members
+      .filter(col("cid").isin(probed.keys.toSeq: _*))
+      .withColumn("qid", explode(element_at(typedLit(probed), col("cid"))))
+      .filter(col("qid") =!= col("vid"))
+
+  /** Score routed pairs that already carry the corpus side. */
+  private def scorePairs(s: Scorer, pairs: DataFrame): DataFrame =
+    score(s, pairs.join(broadcast(s.q), Seq("qid")))
+
+  /** Score routed (qid, vid, …) candidates: fetch the corpus side on vid
+    * and the broadcast query side on qid; other columns ride along.
+    */
+  private def scoreCands(s: Scorer, cands: DataFrame): DataFrame =
+    score(
+      s,
+      cands.join(s.c, Seq("vid")).join(broadcast(s.q), Seq("qid")),
+      cands.columns.filterNot(Set("qid", "vid")).toSeq
+    )
+
+  /** The total order of every rank: the metric (nearest first), ties to
+    * the lower vid.
+    */
+  private def nearestFirst(s: Scorer): Seq[Column] =
+    Seq(if (s.desc) col(s.metric).desc else col(s.metric).asc, col("vid").asc)
+
+  /** Each query's `k` nearest scored rows plus their 1-based rank. */
+  private def rankTopK(scored: DataFrame, s: Scorer, k: Int = topK): DataFrame =
     scored
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(w).as("rank"))
-      .filter(col("rank") <= topK)
+      .withColumn(
+        "rank",
+        row_number().over(org.apache.spark.sql.expressions.Window.partitionBy(col("qid")).orderBy(nearestFirst(s): _*))
+      )
+      .filter(col("rank") <= k)
+
+  /** Exact refine (the FAISS IndexRefineFlat shape): the top `shortlist`
+    * per query under `s`, its metric riding along, rescored by `exact`
+    * and ranked. Only shortlist × queries rows touch raw vectors.
+    */
+  private def refineTopK(scored: DataFrame, s: Scorer, shortlist: Int, exact: Scorer): DataFrame =
+    rankTopK(scoreCands(exact, rankTopK(scored, s, shortlist).drop("rank")), exact)
+
+  def topk(emb: DataFrame): DataFrame = {
+    val s = cosScorer(emb)
+    rankTopK(bruteScore(s), s)
   }
 
   val topkSql: String =
@@ -77,8 +304,7 @@ object Similarity {
       s"scored AS (SELECT q.vec_id AS qid, c.vec_id AS vid, round($cosSqlExpr, 6) AS cos FROM " +
       s"(SELECT vec_id, v AS va FROM vs WHERE vec_id < $nQueries) q(vec_id, va) " +
       "CROSS JOIN (SELECT vec_id, v AS vb FROM vs) c(vec_id, vb) WHERE q.vec_id <> c.vec_id), " +
-      "ranked AS (SELECT qid, vid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, cos, rank FROM ranked WHERE rank <= $topK"
+      rankSql("scored", "cos", "DESC")
 
   /** Deterministic pseudo-random hyperplanes, generated driver-side and
     * embedded as literals in both engines. Seeded once: `planesN(8)` is
@@ -240,6 +466,57 @@ object Similarity {
     centers
   }
 
+  /** The IVF cell index: corpus assignment (vid, cid) and the queries'
+    * probed cells (qid, cid) under the one cell ranking. Trained
+    * (spherical) centroids rank unit vectors, so cells follow cosine;
+    * the deterministic first-`nList` cells rank raw v (the oracle
+    * config).
+    */
+  private def ivfCells(
+      emb: DataFrame,
+      nList: Int,
+      nProbe: Int,
+      centroids: Option[Array[Array[Double]]]
+  ): (DataFrame, DataFrame) = {
+    val vs = vecsN(emb)
+    val pts =
+      if (centroids.isDefined) vs.select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("v"))
+      else vs.select(col("vec_id"), col("v"))
+    val cents = centroidFrame(vs, nList, centroids)
+    (
+      nearestCells(cellDists(pts, cents), 1).select(col("vec_id").as("vid"), col("cid")),
+      probeCells(pts, cents, nProbe, col("vec_id") < nQueries)
+    )
+  }
+
+  /** The (qid, vid) candidate set an IVF probe would score, each pair
+    * once (a vector lives in one cell, so no dedup pass runs) — exposed
+    * for recall/cost accounting in tests and benchmarks.
+    */
+  def ivfCandidates(
+      emb: DataFrame,
+      nList: Int = 16,
+      nProbe: Int = 4,
+      centroids: Option[Array[Array[Double]]] = None
+  ): DataFrame = {
+    val (assign, probes) = ivfCells(emb, nList, nProbe, centroids)
+    cellPairs(assign, probes).select(col("qid"), col("vid"))
+  }
+
+  /** IVF router over the in-memory corpus: the cell members are the
+    * assignment joined to the scorer's corpus side.
+    */
+  private def ivfScore(
+      s: Scorer,
+      emb: DataFrame,
+      nList: Int,
+      nProbe: Int,
+      centroids: Option[Array[Array[Double]]] = None
+  ): DataFrame = {
+    val (assign, probes) = ivfCells(emb, nList, nProbe, centroids)
+    scorePairs(s, cellPairs(assign.join(s.c, Seq("vid")), probes))
+  }
+
   /** IVF top-k: coarse-quantize the corpus to `nList` centroid cells
     * (deterministic centroids: the first nList vectors), probe the
     * `nProbe` nearest cells per query, rank only those candidates.
@@ -248,74 +525,14 @@ object Similarity {
     * broadcast nested-loop over a tiny centroid set; candidate scoring
     * is an equi-join on cell id.
     */
-  /** The deduped (qid, vid) candidate set an IVF probe would score —
-    * exposed for recall/cost accounting in tests and benchmarks.
-    */
-  def ivfCandidates(
-      emb: DataFrame,
-      nList: Int = 16,
-      nProbe: Int = 4,
-      centroids: Option[Array[Array[Double]]] = None
-  ): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // trained (spherical) centroids assign on unit vectors — cell
-    // ranking then follows cosine; the oracle path keeps raw v
-    val vs = vecsN(emb).withColumn("vq", transform(col("v"), x => x / col("nrm")))
-    val assignCol = if (centroids.isDefined) "vq" else "v"
-    val cents = centroids match {
-      // trained quantizer (kmeansParallel) — the production path
-      case Some(cs) =>
-        cs.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv")
-      // deterministic first-nList cells so the DuckDB oracle can replay
-      case None => vs.filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv"))
-    }
-    def nearestCells(points: DataFrame, idCol: String, keep: Int): DataFrame = {
-      val d = points
-        .join(broadcast(cents))
-        .select(
-          col(idCol),
-          col("cid"),
-          graft.functions.exprs.sq_dist(col(assignCol), col("cv")).as("d2")
-        )
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(idCol))
-        .orderBy(col("d2").asc, col("cid").asc)
-      d.select(col(idCol), col("cid"), row_number().over(w).as("cr")).filter(col("cr") <= keep)
-    }
-    val assign = nearestCells(vs, "vec_id", 1).select(col("vec_id").as("vid"), col("cid"))
-    val qcells = nearestCells(vs.filter(col("vec_id") < nQueries), "vec_id", nProbe)
-      .select(col("vec_id").as("qid"), col("cid"))
-    // dedup (qid, vid) BEFORE scoring: a pair surfacing via multiple
-    // probed cells must not pay the dot product twice
-    qcells
-      .join(assign, Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"))
-      .distinct()
-  }
-
   def ivfTopk(
       emb: DataFrame,
       nList: Int = 16,
       nProbe: Int = 4,
       centroids: Option[Array[Array[Double]]] = None
   ): DataFrame = {
-    val vs = vecsN(emb)
-    val corpus = vs.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-    val q = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    val scored = ivfCandidates(emb, nList, nProbe, centroids)
-      .join(corpus, Seq("vid"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"), round(cosExpr, 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scored
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(w).as("rank"))
-      .filter(col("rank") <= topK)
+    val s = cosScorer(emb)
+    rankTopK(ivfScore(s, emb, nList, nProbe, centroids), s)
   }
 
   private def arrSql(xs: Array[Double]): String =
@@ -330,10 +547,8 @@ object Similarity {
     * Spark plan uses.
     */
   private def lshCtes(ps: Array[Array[Double]]): String = {
-    def planeDot(p: Array[Double]) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> list_extract(v, i) * list_extract(${arrSql(p)}, i)))"
     val sig = ps.zipWithIndex
-      .map { case (p, idx) => s"(CASE WHEN ${planeDot(p)} > 0 THEN ${1L << idx} ELSE 0 END)" }
+      .map { case (p, idx) => s"(CASE WHEN ${dotSql("v", arrSql(p))} > 0 THEN ${1L << idx} ELSE 0 END)" }
       .mkString(" + ")
     "vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
       s"b AS MATERIALIZED (SELECT vec_id, CAST($sig AS BIGINT) AS bucket FROM vs)"
@@ -433,7 +648,7 @@ object Similarity {
     * are compared, not the semantics. The threshold compares the
     * ROUNDED cosine on both engines (artifact_mask precedent), and
     * the argmin assignment rides the exact (d2, cid) struct order via
-    * one min_by aggregation (ivfResiduals shape — no rank window, no
+    * one min_by aggregation (the [[nearestCells]] n = 1 shape — no rank window, no
     * wide payload through a sort).
     */
   def semDedup(emb: DataFrame, nList: Int = 16, tau: Double = 0.4): DataFrame = {
@@ -585,7 +800,7 @@ object Similarity {
     * (Σ|cell|² bounded, never n²); ranking partitions by the REAL
     * per-vector key over the NARROW (vid_a, vid_b, cos) frame — the
     * scalar cosine is computed before the window, so no wide payload
-    * rides the sort (the r10 ivfResiduals lesson). At scale the
+    * rides the sort (the r10 wide-payload lesson). At scale the
     * within-cell graph misses boundary-crossing true neighbors;
     * production probes the nProbe nearest cells per vector (the
     * sim_ivf multi-probe machinery) — same plan, more candidate rows.
@@ -736,20 +951,13 @@ object Similarity {
   /** CTE list ending at `r(vid_a, vid_b, cos, rank)` — shared by the
     * k-NN gate and the label-propagation chain built on it.
     */
-  private def knnCtes(nList: Int): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    "vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS MATERIALIZED (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
+  private def knnCtes(nList: Int): String =
+    ivfCtesSql(nList, Set("vs", "assign")) +
       "pairs AS (SELECT x.vid AS vid_a, y.vid AS vid_b, xa.v AS va, yb.v AS vb FROM assign x " +
       "JOIN assign y ON y.cid = x.cid AND x.vid <> y.vid " +
       "JOIN vs xa ON xa.vec_id = x.vid JOIN vs yb ON yb.vec_id = y.vid), " +
       s"scored AS (SELECT vid_a, vid_b, round($cosSqlExpr, 6) AS cos FROM pairs), " +
       "r AS (SELECT vid_a, vid_b, cos, row_number() OVER (PARTITION BY vid_a ORDER BY cos DESC, vid_b ASC) AS rank FROM scored)"
-  }
 
   def knnGraphSql(nList: Int = 16, k: Int = 3): String =
     s"WITH ${knnCtes(nList)} SELECT vid_a, vid_b, cos, rank FROM r WHERE rank <= $k"
@@ -790,7 +998,7 @@ object Similarity {
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
-    graphScore(emb, visited, nQ)
+    scoreCands(cosScorer(emb, nQ), visited)
       .filter(col("vid") =!= col("qid"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= topK)
@@ -808,15 +1016,17 @@ object Similarity {
       nQ: Int
   ): DataFrame = {
     val edges = walkEdges(knnGraph(emb, nList, k).select(col("vid_a"), col("vid_b")))
-    val seedW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val seeds = centDists(emb, nList)
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("cid"), row_number().over(seedW).as("cr"))
-      .filter(col("cr") <= beam)
-      .select(col("qid"), col("cid").cast("long").as("vid"))
+    val seeds = walkSeeds(emb, nList, beam, nQ)
     beamWalk(emb, edges, seeds, beam, rounds, nQ)
+  }
+
+  /** Walk seeds (qid, vid): each query's `beam` nearest deterministic
+    * cells — their centroids are corpus vectors.
+    */
+  private def walkSeeds(emb: DataFrame, nList: Int, beam: Int, nQ: Int): DataFrame = {
+    val vs = vecsD(emb).select(col("vec_id"), col("v"))
+    probeCells(vs, centroidFrame(vs, nList, None), beam, col("vec_id") < nQ)
+      .select(col("qid"), col("cid").cast("long").as("vid"))
   }
 
   /** The walk loop shared by the deterministic and trained paths —
@@ -841,7 +1051,7 @@ object Similarity {
     e.repartition(col("vid_a")).localCheckpoint()
 
   /** `score` maps a (qid, vid) frame to (qid, vid, cos); null means the
-    * exact cosine [[graphScore]]. Contract: a scorer must be
+    * exact [[cosScorer]]. Contract: a scorer must be
     * deterministic per (qid, vid) and return round6-rounded scores. The
     * walk scores a node once, when it enters the state, and ranks later
     * rounds on that carried score, while the SQL oracles rescore the
@@ -861,7 +1071,7 @@ object Similarity {
     // code-dot approximation (the walk only needs ORDER, the final
     // re-rank stays exact either way)
     val sc: DataFrame => DataFrame =
-      if (score != null) score else (idx: DataFrame) => graphScore(emb, idx, nQ)
+      if (score != null) score else (idx: DataFrame) => scoreCands(cosScorer(emb, nQ), idx)
     // r17: visited and expanded fold into ONE flagged state frame —
     // the not-yet-expanded candidates are a filter instead of a
     // left-anti join, the two per-round union+distinct passes become
@@ -943,7 +1153,7 @@ object Similarity {
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
-    graphScore(emb, visited, nQ)
+    scoreCands(cosScorer(emb, nQ), visited)
       .filter(col("vid") =!= col("qid"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= topK)
@@ -1010,36 +1220,10 @@ object Similarity {
   /** SQ8 coded frame + the approx scorer over it — the walk-ranking
     * leg shared by [[graphServeHierSq8]] and the trained sq8 path. */
   private def sq8Scorer(emb: DataFrame, nQ: Int): DataFrame => DataFrame = {
-    val coded = vecsN(emb)
-      .withColumn("m", expr("greatest(array_max(transform(v, x -> abs(x))), 1.0e-30)"))
-      .select(
-        col("vec_id"),
-        col("nrm"),
-        col("m"),
-        expr("transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT))").as("q")
-      )
-      .repartition(col("vec_id")) // per-round score joins key on vid (r17)
-      .localCheckpoint() // feeds the query side AND every round's score
-    val qside = coded
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("q").as("qa"), col("m").as("ma"), col("nrm").as("na"))
-    idx =>
-      idx
-        .join(
-          coded
-            .select(col("vec_id").as("vid"), col("q").as("qb"), col("m").as("mb"), col("nrm").as("nb")),
-          Seq("vid")
-        )
-        .join(broadcast(qside), Seq("qid"))
-        .select(
-          col("qid"),
-          col("vid"),
-          round(
-            expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-              .cast("double") * col("ma") * col("mb") / lit(127.0 * 127.0) / (col("na") * col("nb")),
-            6
-          ).as("cos")
-        )
+    // per-round score joins key on vid (r17); the checkpoint feeds the
+    // query side AND every round's score
+    val s = sq8Approx(sq8Codes(emb).repartition(col("vec_id")).localCheckpoint(), nQ, "cos")
+    idx => scoreCands(s, idx)
   }
 
   /** In-cell HIERARCHY edges — the published cure for the measured
@@ -1145,19 +1329,12 @@ object Similarity {
         .unionByName(hierEdges(av, kDown))
         .distinct()
     )
-    val seedW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val seeds = centDists(emb, nList)
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("cid"), row_number().over(seedW).as("cr"))
-      .filter(col("cr") <= beam)
-      .select(col("qid"), col("cid").cast("long").as("vid"))
+    val seeds = walkSeeds(emb, nList, beam, nQ)
     val visited = beamWalk(emb, edges, seeds, beam, rounds, nQ)
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
-    graphScore(emb, visited, nQ)
+    scoreCands(cosScorer(emb, nQ), visited)
       .filter(col("vid") =!= col("qid"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= topK)
@@ -1194,56 +1371,38 @@ object Similarity {
         .distinct()
     )
     val scoreSq8 = sq8Scorer(emb, nQ)
-    val seedW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val seeds = centDists(emb, nList)
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("cid"), row_number().over(seedW).as("cr"))
-      .filter(col("cr") <= beam)
-      .select(col("qid"), col("cid").cast("long").as("vid"))
+    val seeds = walkSeeds(emb, nList, beam, nQ)
     val visited = beamWalk(emb, edges, seeds, beam, rounds, nQ, scoreSq8)
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
-    graphScore(emb, visited, nQ)
+    scoreCands(cosScorer(emb, nQ), visited)
       .filter(col("vid") =!= col("qid"))
       .withColumn("rank", row_number().over(wr))
       .filter(col("rank") <= topK)
       .select(col("qid"), col("vid"), col("cos"))
   }
 
-  /** Chained-CTE replay of [[graphServeHier]]: the knn chain + the
+  /** Chained-CTE replay of [[graphServeHierSq8]]: the knn chain + the
     * hierarchy CTEs (md5-ordered pivot draw, up/down/pivot edges) +
-    * the same per-round walk chain as [[graphServeSql]].
+    * the same per-round walk chain as [[graphServeSql]], each round
+    * scored on SQ8 codes.
     */
-  def graphServeHierSql(
-      nList: Int = 16,
-      k: Int = 3,
-      kDown: Int = 2,
-      beam: Int = 4,
-      rounds: Int = 2
-  ): String = graphServeHierSqlBuilder(nList, k, kDown, beam, rounds, sq8 = false)
-
   def graphServeHierSq8Sql(
       nList: Int = 16,
       k: Int = 3,
       kDown: Int = 2,
       beam: Int = 4,
       rounds: Int = 2
-  ): String = graphServeHierSqlBuilder(nList, k, kDown, beam, rounds, sq8 = true)
+  ): String = graphServeHierSqlBuilder(nList, k, kDown, beam, rounds)
 
   private def graphServeHierSqlBuilder(
       nList: Int,
       k: Int,
       kDown: Int,
       beam: Int,
-      rounds: Int,
-      sq8: Boolean
+      rounds: Int
   ): String = {
-    val d2of = (a: String, b: String) =>
-      "list_sum(list_transform(generate_series(1, 64), i -> " +
-        s"(list_extract($a, i) - list_extract($b, i)) * (list_extract($a, i) - list_extract($b, i))))"
     val sb = new StringBuilder
     sb ++= s"WITH ${knnCtes(nList)}, "
     sb ++= "hsz AS (SELECT cid, CAST(ceil(sqrt(count(*))) AS INT) AS np FROM assign GROUP BY cid), "
@@ -1252,7 +1411,7 @@ object Similarity {
     sb ++= "piv AS MATERIALIZED (SELECT p.cid, p.vid AS pid FROM prnk p " +
       "JOIN hsz h ON h.cid = p.cid WHERE p.rn <= h.np), "
     sb ++= "mp AS MATERIALIZED (SELECT a.vid, p.pid, " +
-      s"${d2of("x.v", "y.v")} AS d2 FROM assign a JOIN piv p ON p.cid = a.cid " +
+      s"${d2Sql("x.v", "y.v")} AS d2 FROM assign a JOIN piv p ON p.cid = a.cid " +
       "JOIN vs x ON x.vec_id = a.vid JOIN vs y ON y.vec_id = p.pid WHERE a.vid <> p.pid), "
     sb ++= "up AS (SELECT vid AS vid_a, pid AS vid_b FROM (SELECT vid, pid, " +
       "row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, pid ASC) AS rn FROM mp) WHERE rn = 1), "
@@ -1266,36 +1425,23 @@ object Similarity {
       "UNION ALL SELECT vid_a, vid_b FROM dn " +
       "UNION ALL SELECT vid_a, vid_b FROM pe)), "
     sb ++= s"qv AS MATERIALIZED (SELECT vec_id AS qid, v AS va FROM vs WHERE vec_id < $nQueries), "
-    if (sq8) {
-      val dvv = "list_sum(list_transform(generate_series(1, 64), i -> " +
-        "list_extract(v, i) * list_extract(v, i)))"
-      sb ++= s"qt8 AS (SELECT vec_id, v, sqrt($dvv) AS nrm, " +
-        "greatest(list_max(list_transform(v, x -> abs(x))), 1.0e-30) AS m FROM vs), "
-      sb ++= "coded AS MATERIALIZED (SELECT vec_id, nrm, m, " +
-        "list_transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT)) AS q FROM qt8), "
-      sb ++= s"qv8 AS MATERIALIZED (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na " +
-        s"FROM coded WHERE vec_id < $nQueries), "
-    }
+    sb ++= s"qt8 AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm, $sq8ScaleSql AS m FROM vs), "
+    sb ++= s"coded AS MATERIALIZED (SELECT vec_id, nrm, m, $sq8CodeSql AS q FROM qt8), "
+    sb ++= s"qv8 AS MATERIALIZED (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na " +
+      s"FROM coded WHERE vec_id < $nQueries), "
     sb ++= s"v0 AS MATERIALIZED (SELECT DISTINCT pid AS qid, CAST(cid AS BIGINT) AS vid " +
       s"FROM rankedc WHERE pid < $nQueries AND cr <= $beam), "
     sb ++= "e0 AS (SELECT qid, vid FROM v0 WHERE 1 = 0), "
-    val dotq = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "list_extract(qa, i) * list_extract(qb, i)))"
+    val dotq = dotSql("qa", "qb")
     for (rd <- 1 to rounds) {
       val prev = s"v${rd - 1}"
       val prevE = s"e${rd - 1}"
       sb ++= s"c$rd AS (SELECT qid, vid FROM $prev EXCEPT SELECT qid, vid FROM $prevE), "
-      if (sq8) {
-        sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.qa AS qa, q.ma AS ma, q.na AS na, " +
-          s"b.q AS qb, b.m AS mb, b.nrm AS nb FROM c$rd t " +
-          s"JOIN coded b ON b.vec_id = t.vid JOIN qv8 q ON q.qid = t.qid), "
-        sb ++= s"s$rd AS (SELECT qid, vid, " +
-          s"round(CAST($dotq AS DOUBLE) * ma * mb / (127.0e0 * 127.0e0) / (na * nb), 6) AS cos FROM p$rd), "
-      } else {
-        sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.va AS va, b.v AS vb FROM c$rd t " +
-          s"JOIN vs b ON b.vec_id = t.vid JOIN qv q ON q.qid = t.qid), "
-        sb ++= s"s$rd AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM p$rd), "
-      }
+      sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.qa AS qa, q.ma AS ma, q.na AS na, " +
+        s"b.q AS qb, b.m AS mb, b.nrm AS nb FROM c$rd t " +
+        s"JOIN coded b ON b.vec_id = t.vid JOIN qv8 q ON q.qid = t.qid), "
+      sb ++= s"s$rd AS (SELECT qid, vid, " +
+        s"round(CAST($dotq AS DOUBLE) * ma * mb / (127.0e0 * 127.0e0) / (na * nb), 6) AS cos FROM p$rd), "
       sb ++= s"b$rd AS MATERIALIZED (SELECT qid, vid FROM (SELECT qid, vid, " +
         s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rn FROM s$rd) WHERE rn <= $beam), "
       sb ++= s"e$rd AS MATERIALIZED (SELECT DISTINCT qid, vid FROM " +
@@ -1310,24 +1456,6 @@ object Similarity {
     sb ++= "SELECT qid, vid, cos FROM (SELECT qid, vid, cos, " +
       s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM sf) WHERE rank <= $topK"
     sb.toString
-  }
-
-  /** Score a (qid, vid) frame against the query vectors: one equi-join
-    * on vid + one broadcast of the nQ-row query table. */
-  private def graphScore(emb: DataFrame, idx: DataFrame, nQ: Int): DataFrame = {
-    val vs = vecsN(emb)
-    val qtab = vs
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    idx
-      .join(vs.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb")), Seq("vid"))
-      .join(broadcast(qtab), Seq("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        round(graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos")
-      )
   }
 
   /** Chained-CTE replay of [[graphServe]]'s deterministic walk: the
@@ -1438,14 +1566,8 @@ object Similarity {
 
   /** The semDedup CTE chain ending at `keep(vid, cid, kept)` — shared
     * by the semdedup gate oracle and the D4 sampler's oracle (r15). */
-  private def semDedupCtes(nList: Int, tau: Double): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    "vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS MATERIALIZED (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
+  private def semDedupCtes(nList: Int, tau: Double): String =
+    ivfCtesSql(nList, Set("vs", "assign")) +
       "pairs AS (SELECT y.vid AS vid_b, xa.v AS va, yb.v AS vb FROM assign x " +
       "JOIN assign y ON y.cid = x.cid AND x.vid < y.vid " +
       "JOIN vs xa ON xa.vec_id = x.vid JOIN vs yb ON yb.vec_id = y.vid), " +
@@ -1453,7 +1575,6 @@ object Similarity {
       s"dropped AS (SELECT DISTINCT vid_b FROM scored WHERE cos >= ${graft.core.Dsp.lit(tau)}), " +
       "keep AS MATERIALIZED (SELECT s.vid, s.cid, (d.vid_b IS NULL) AS kept " +
       "FROM assign s LEFT JOIN dropped d ON d.vid_b = s.vid)"
-  }
 
   def semDedupSql(nList: Int = 16, tau: Double = 0.4): String =
     s"WITH ${semDedupCtes(nList, tau)} " +
@@ -1476,65 +1597,8 @@ object Similarity {
     * stream comes IVF-scoped exactly like sim_pq_topk.
     */
   def sq8Topk(emb: DataFrame, shortlist: Int = 20, nQ: Int = nQueries): DataFrame = {
-    val vs = vecsN(emb)
-    val quant = vs.select(
-      col("vec_id"),
-      col("v"),
-      col("nrm"),
-      expr("greatest(array_max(transform(v, x -> abs(x))), 1.0e-30)").as("m")
-    )
-    val coded = quant
-      .select(
-        col("vec_id"),
-        col("v"),
-        col("nrm"),
-        col("m"),
-        expr("transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT))").as("q")
-      )
-      .localCheckpoint() // feeds the query table AND the corpus side
-    val qtab = coded
-      .filter(col("vec_id") < nQ)
-      .select(
-        col("vec_id").as("qid"),
-        col("q").as("qa"),
-        col("m").as("ma"),
-        col("nrm").as("na")
-      )
-    val approx = coded
-      .select(col("vec_id").as("vid"), col("q").as("qb"), col("m").as("mb"), col("nrm").as("nb"))
-      .join(broadcast(qtab))
-      .filter(col("vid") =!= col("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        round(
-          expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-            .cast("double") * col("ma") * col("mb") / lit(127.0 * 127.0) / (col("na") * col("nb")),
-          6
-        ).as("approx")
-      )
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vid").asc)
-    val short = approx
-      .withColumn("rn", row_number().over(ws))
-      .filter(col("rn") <= shortlist)
-      .select(col("qid"), col("vid"), col("approx"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    short
-      .join(coded.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb")), Seq("vid"))
-      .join(broadcast(vs.filter(col("vec_id") < nQ).select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))), Seq("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        col("approx").as("cos_sq8"),
-        round(graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos")
-      )
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
+    val s = sq8Approx(sq8Codes(emb).localCheckpoint(), nQ, "cos_sq8") // feeds both scorer sides
+    refineTopK(bruteScore(s), s, shortlist, cosScorer(emb, nQ))
       .select(col("qid"), col("vid"), col("cos"), col("cos_sq8"))
   }
 
@@ -1543,13 +1607,7 @@ object Similarity {
     * 1 B/dim + one scale. Input frame: (vec_id, v).
     */
   def sq8Encode(vecs: DataFrame): DataFrame =
-    vecs
-      .withColumn("m", expr("greatest(array_max(transform(v, x -> abs(x))), 1.0e-30)"))
-      .select(
-        col("vec_id"),
-        col("m").cast("float").as("m"),
-        expr("transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS TINYINT))").as("q")
-      )
+    sq8Code(vecs, "TINYINT").select(col("vec_id"), col("m").cast("float").as("m"), col("q"))
 
   /** SQ8 over IVF-SCOPED candidates — the scale form of [[sq8Topk]]
     * (its brute query×corpus shape is the gate baseline; a 100 TB
@@ -1564,118 +1622,28 @@ object Similarity {
       shortlist: Int = 20,
       nQ: Int = nQueries
   ): DataFrame = {
-    val vs = vecsN(emb)
-    val coded = vs
-      .withColumn("m", expr("greatest(array_max(transform(v, x -> abs(x))), 1.0e-30)"))
-      .select(
-        col("vec_id"),
-        col("nrm"),
-        col("m"),
-        expr("transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT))").as("q")
-      )
-      .localCheckpoint() // feeds the query side AND the candidate side
-    val qside = coded
-      .filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), col("q").as("qa"), col("m").as("ma"), col("nrm").as("na"))
-    val approx = ivfCandidates(emb, nList, nProbe)
-      .join(
-        coded.select(col("vec_id").as("vid"), col("q").as("qb"), col("m").as("mb"), col("nrm").as("nb")),
-        Seq("vid")
-      )
-      .join(broadcast(qside), Seq("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        round(
-          expr("aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)")
-            .cast("double") * col("ma") * col("mb") / lit(127.0 * 127.0) / (col("na") * col("nb")),
-          6
-        ).as("approx")
-      )
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vid").asc)
-    val short = approx
-      .withColumn("rn", row_number().over(ws))
-      .filter(col("rn") <= shortlist)
-      .select(col("qid"), col("vid"), col("approx"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    short
-      .join(vs.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb")), Seq("vid"))
-      .join(
-        broadcast(
-          vs.filter(col("vec_id") < nQ)
-            .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-        ),
-        Seq("qid")
-      )
-      .select(
-        col("qid"),
-        col("vid"),
-        col("approx").as("cos_sq8"),
-        round(graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos")
-      )
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
+    val s = sq8Approx(sq8Codes(emb).localCheckpoint(), nQ, "cos_sq8") // feeds both scorer sides
+    refineTopK(ivfScore(s, emb, nList, nProbe), s, shortlist, cosScorer(emb, nQ))
       .select(col("qid"), col("vid"), col("cos"), col("cos_sq8"))
   }
 
-  def sq8TopkIvfSql(nList: Int = 16, nProbe: Int = 4, shortlist: Int = 20): String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> list_extract($a, i) * list_extract($b, i)))"
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    val cosExact = s"${dot("q.v", "b.v")} / (sqrt(${dot("q.v", "q.v")}) * sqrt(${dot("b.v", "b.v")}))"
-    "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid < $nQueries), " +
+  def sq8TopkIvfSql(nList: Int = 16, nProbe: Int = 4, shortlist: Int = 20): String =
+    "WITH " + ivfCtesSql(nList, Set("vs")) + qcellsSql(nProbe) +
       "cand AS (SELECT DISTINCT q.qid, s.vid FROM qcells q JOIN assign s ON s.cid = q.cid WHERE q.qid <> s.vid), " +
-      s"nr AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS nrm FROM vs), " +
-      "qt AS (SELECT vec_id, v, nrm, greatest(list_max(list_transform(v, x -> abs(x))), 1.0e-30) AS m FROM nr), " +
-      "coded AS MATERIALIZED (SELECT vec_id, nrm, m, " +
-      "list_transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT)) AS q FROM qt), " +
+      s"nr AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm FROM vs), " +
+      s"qt AS (SELECT vec_id, v, nrm, $sq8ScaleSql AS m FROM nr), " +
+      s"coded AS MATERIALIZED (SELECT vec_id, nrm, m, $sq8CodeSql AS q FROM qt), " +
       s"qv AS (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na FROM coded WHERE vec_id < $nQueries), " +
       "ap AS (SELECT cand.qid, cand.vid, " +
-      s"round(CAST(${dot("qv.qa", "b.q")} AS DOUBLE) * qv.ma * b.m / (127.0e0 * 127.0e0) / (qv.na * b.nrm), 6) AS approx " +
+      s"round(CAST(${dotSql("qv.qa", "b.q")} AS DOUBLE) * qv.ma * b.m / (127.0e0 * 127.0e0) / (qv.na * b.nrm), 6) AS approx " +
       "FROM cand JOIN coded b ON b.vec_id = cand.vid JOIN qv ON qv.qid = cand.qid), " +
       s"sh AS MATERIALIZED (SELECT qid, vid, approx FROM (SELECT qid, vid, approx, " +
       s"row_number() OVER (PARTITION BY qid ORDER BY approx DESC, vid ASC) AS rn FROM ap) WHERE rn <= $shortlist), " +
       "ex AS (SELECT s.qid, s.vid, s.approx AS cos_sq8, " +
-      s"round($cosExact, 6) AS cos FROM sh s " +
+      s"round(${cosSql("q.v", "b.v")}, 6) AS cos FROM sh s " +
       "JOIN vs b ON b.vec_id = s.vid JOIN vs q ON q.vec_id = s.qid) " +
       "SELECT qid, vid, cos, cos_sq8 FROM (SELECT qid, vid, cos, cos_sq8, " +
       s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM ex) WHERE rank <= $topK"
-  }
-
-  def sq8TopkSql(shortlist: Int = 20): String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> list_extract($a, i) * list_extract($b, i)))"
-    val dotq = dot("qv.qa", "c.q")
-    val cosExact = s"${dot("q.v", "b.v")} / (sqrt(${dot("q.v", "q.v")}) * sqrt(${dot("b.v", "b.v")}))"
-    "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"nr AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS nrm FROM vs), " +
-      "qt AS (SELECT vec_id, v, nrm, " +
-      "greatest(list_max(list_transform(v, x -> abs(x))), 1.0e-30) AS m FROM nr), " +
-      "coded AS MATERIALIZED (SELECT vec_id, v, nrm, m, " +
-      "list_transform(v, x -> CAST(floor(x / m * 127.0e0 + 0.5e0) AS BIGINT)) AS q FROM qt), " +
-      s"qv AS (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na FROM coded WHERE vec_id < $nQueries), " +
-      "ap AS (SELECT qv.qid, c.vec_id AS vid, " +
-      s"round(CAST($dotq AS DOUBLE) * qv.ma * c.m / (127.0e0 * 127.0e0) / (qv.na * c.nrm), 6) AS approx " +
-      "FROM coded c CROSS JOIN qv WHERE c.vec_id <> qv.qid), " +
-      s"sh AS MATERIALIZED (SELECT qid, vid, approx FROM (SELECT qid, vid, approx, " +
-      s"row_number() OVER (PARTITION BY qid ORDER BY approx DESC, vid ASC) AS rn FROM ap) WHERE rn <= $shortlist), " +
-      "ex AS (SELECT s.qid, s.vid, s.approx AS cos_sq8, " +
-      s"round($cosExact, 6) AS cos FROM sh s " +
-      "JOIN vs b ON b.vec_id = s.vid JOIN vs q ON q.vec_id = s.qid) " +
-      "SELECT qid, vid, cos, cos_sq8 FROM (SELECT qid, vid, cos, cos_sq8, " +
-      s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM ex) WHERE rank <= $topK"
-  }
 
   // ---- Product quantization (Jégou et al., TPAMI 2011): compress the
   // corpus 32× (64 doubles → 8 byte-codes) and rank by asymmetric
@@ -1689,6 +1657,10 @@ object Similarity {
   val pqK = 16 // centroids per subspace
   private val pqSub = 64 / pqM
 
+  /** Codebooks from pqK vectors: cb(j)(ci) = j-th subvector of vector ci. */
+  private def codebookFrom(vectors: Seq[Seq[Double]]): Array[Array[Array[Double]]] =
+    Array.tabulate(pqM, pqK)((j, ci) => vectors(ci).slice(j * pqSub, (j + 1) * pqSub).toArray)
+
   /** Deterministic gate codebooks: cb(j)(ci) = j-th subvector of the
     * vector with vec_id = ci. One bounded driver collect (pqK rows) —
     * the same shape the IVF gate's first-nList centroids use.
@@ -1700,35 +1672,45 @@ object Similarity {
       .select(col("vec_id"), col("v"))
       .collect()
     require(rows.length == pqK, s"corpus smaller than pqK=$pqK")
-    Array.tabulate(pqM, pqK) { (j, ci) =>
-      rows(ci).getSeq[Double](1).slice(j * pqSub, (j + 1) * pqSub).toArray
-    }
+    codebookFrom(rows.toSeq.map(_.getSeq[Double](1)))
   }
 
-  /** Row-local PQ encode + reconstruct: per subspace the 16 centroid
-    * distances, argmin (first-match = lowest code on ties), and the
-    * codebook row lookup all run as projections over literal arrays —
-    * a pure map off the scan, no shuffle, no join. Emits
-    * (vec_id, vq) with vq the 64-dim reconstruction.
+  private def pqSubvec(v: Column, j: Int): Column = slice(v, j * pqSub + 1, pqSub)
+
+  /** The PQ encode step: the 1-based code of subvector `sv` under the
+    * subspace codebook `cbj` — the pqK literal distances, argmin, ties
+    * to the first (lowest) centroid index. A pure projection: no
+    * shuffle, no join.
+    */
+  private def pqArgmin(sv: Column, cbj: Array[Array[Double]]): Column = {
+    val ds = array(cbj.map(c => graft.functions.exprs.sq_dist(sv, typedLit(c.toSeq))).toSeq: _*)
+    array_position(ds, array_min(ds))
+  }
+
+  /** Row-local encode + reconstruct of the 64-dim array column `v`. */
+  private def pqReconCol(v: Column, cb: Array[Array[Array[Double]]]): Column =
+    concat((0 until pqM).map { j =>
+      element_at(typedLit(cb(j).map(_.toSeq).toSeq), pqArgmin(pqSubvec(v, j), cb(j)).cast("int"))
+    }: _*)
+
+  /** Row-local encode of `v` to ONE packed BIGINT: 4 bits per subspace
+    * code (pqK = 16), subspace j at bits [4j, 4j+4). Disjoint bit
+    * fields sum ≡ OR, exact integer arithmetic.
+    */
+  private def pqCodeCol(v: Column, cb: Array[Array[Array[Double]]]): Column =
+    (0 until pqM)
+      .map(j => (pqArgmin(pqSubvec(v, j), cb(j)) - 1).cast("long") * lit(1L << (4 * j)))
+      .reduce(_ + _)
+
+  /** Row-local PQ encode + reconstruct: emits (vec_id, vq) with vq the
+    * 64-dim reconstruction.
     */
   def pqReconstruct(emb: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame =
     pqReconstructV(vecsD(emb).select(col("vec_id"), col("v")), cb)
 
-  /** Same, over an already-projected (vec_id, v: array<double>) frame —
-    * the IVF+PQ path feeds residual vectors through here.
-    */
-  def pqReconstructV(vd: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame = {
-    val parts = (0 until pqM).map { j =>
-      val sv = slice(col("v"), j * pqSub + 1, pqSub)
-      val ds = array(
-        (0 until pqK).map(ci => graft.functions.exprs.sq_dist(sv, typedLit(cb(j)(ci).toSeq))): _*
-      )
-      // 1-based code; ties take the first (lowest) centroid index
-      val code = array_position(ds, array_min(ds)).cast("int")
-      element_at(typedLit(cb(j).map(_.toSeq).toSeq), code)
-    }
-    vd.select(col("vec_id"), concat(parts: _*).as("vq"))
-  }
+  /** Same, over an already-projected (vec_id, v: array<double>) frame. */
+  def pqReconstructV(vd: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame =
+    vd.select(col("vec_id"), pqReconCol(col("v"), cb).as("vq"))
 
   /** PQ top-k: exact query vectors (vec_id < nQueries, broadcast)
     * against the PQ-reconstructed corpus, ranked by asymmetric squared
@@ -1738,57 +1720,42 @@ object Similarity {
     */
   def pqTopk(emb: DataFrame, codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
     val cb = codebooks.getOrElse(pqCodebooks(emb))
-    val corpus = pqReconstruct(emb, cb).select(col("vec_id").as("vid"), col("vq").as("vb"))
-    val q = vecsD(emb)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"))
-    broadcast(q)
-      .join(corpus, col("qid") =!= col("vid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp.round6(graft.functions.exprs.sq_dist(col("va"), col("vb"))).as("ad2")
-      )
-      .select(
-        col("qid"),
-        col("vid"),
-        col("ad2"),
-        row_number()
-          .over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("qid"))
-              .orderBy(col("ad2").asc, col("vid").asc)
-          )
-          .as("rank")
-      )
-      .filter(col("rank") <= topK)
+    val s = pqScorer(
+      vecsD(emb).filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"), col("v").as("va")),
+      pqReconstruct(emb, cb).select(col("vec_id").as("vid"), col("vq")),
+      col("va")
+    )
+    rankTopK(bruteScore(s), s)
   }
+
+  /** `d` + `a` CTEs: the nearest codebook row (d2 asc, ci asc) of every
+    * (id, j) subvector of `subs` under the codebook CTE `cb`.
+    */
+  private def pqArgminSql(d: String, a: String, subs: String, cb: String, id: String): String =
+    s"$d AS (SELECT s.$id, s.j, c.ci, ${d2Sql("s.sv", "c.cv", pqSub)} AS d2 FROM $subs s JOIN $cb c ON c.j = s.j), " +
+      s"$a AS (SELECT $id, j, ci FROM (SELECT $id, j, ci, " +
+      s"row_number() OVER (PARTITION BY $id, j ORDER BY d2 ASC, ci ASC) AS rn FROM $d) WHERE rn = 1), "
+
+  private def pqSliceSql(v: String): String = s"list_slice($v, g.j * $pqSub + 1, (g.j + 1) * $pqSub)"
+
+  private val pqSubspacesSql = s"generate_series(0, ${pqM - 1}) g(j)"
 
   /** SQL twin of [[pqTopk]]'s gate instance: codebooks re-derived from
     * the first pqK vectors, argmin codes with lowest-index tiebreak,
     * ordered subspace reassembly, 64-term asymmetric distance.
     */
-  val pqTopkSql: String = {
-    val subD2 = s"list_sum(list_transform(generate_series(1, $pqSub), i -> " +
-      "(list_extract(s.sv, i) - list_extract(c.cv, i)) * (list_extract(s.sv, i) - list_extract(c.cv, i))))"
-    val ad2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(va, i) - list_extract(vb, i)) * (list_extract(va, i) - list_extract(vb, i))))"
+  val pqTopkSql: String =
     "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cb AS MATERIALIZED (SELECT g.j AS j, vec_id AS ci, list_slice(v, g.j * $pqSub + 1, (g.j + 1) * $pqSub) AS cv " +
-      s"FROM vs, generate_series(0, ${pqM - 1}) g(j) WHERE vec_id < $pqK), " +
-      s"subs AS (SELECT vec_id, g.j AS j, list_slice(v, g.j * $pqSub + 1, (g.j + 1) * $pqSub) AS sv " +
-      s"FROM vs, generate_series(0, ${pqM - 1}) g(j)), " +
-      s"dists AS (SELECT s.vec_id, s.j, c.ci, $subD2 AS d2 FROM subs s JOIN cb c ON c.j = s.j), " +
-      "codes AS (SELECT vec_id, j, ci FROM (SELECT vec_id, j, ci, " +
-      "row_number() OVER (PARTITION BY vec_id, j ORDER BY d2 ASC, ci ASC) AS rn FROM dists) WHERE rn = 1), " +
+      s"cb AS MATERIALIZED (SELECT g.j AS j, vec_id AS ci, ${pqSliceSql("v")} AS cv " +
+      s"FROM vs, $pqSubspacesSql WHERE vec_id < $pqK), " +
+      s"subs AS (SELECT vec_id, g.j AS j, ${pqSliceSql("v")} AS sv FROM vs, $pqSubspacesSql), " +
+      pqArgminSql("dists", "codes", "subs", "cb", "vec_id") +
       "recon AS MATERIALIZED (SELECT vec_id, flatten(list(cv ORDER BY j)) AS vq " +
       "FROM codes JOIN cb USING (j, ci) GROUP BY vec_id), " +
       s"pairs AS (SELECT q.vec_id AS qid, r.vec_id AS vid, q.v AS va, r.vq AS vb FROM vs q " +
       s"JOIN recon r ON q.vec_id < $nQueries AND q.vec_id <> r.vec_id), " +
-      s"scored AS (SELECT qid, vid, ${graft.core.Dsp.round6Sql(ad2)} AS ad2 FROM pairs), " +
-      "ranked AS (SELECT qid, vid, ad2, row_number() OVER (PARTITION BY qid ORDER BY ad2 ASC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, ad2, rank FROM ranked WHERE rank <= $topK"
-  }
+      s"scored AS (SELECT qid, vid, ${graft.core.Dsp.round6Sql(d2Sql("va", "vb"))} AS ad2 FROM pairs), " +
+      rankSql("scored", "ad2", "ASC")
 
   /** Production codebook trainer: per-subspace Lloyd iterations,
     * initialized at the deterministic gate codebooks. Each iteration is
@@ -1802,11 +1769,6 @@ object Similarity {
   def pqTrain(emb: DataFrame, iters: Int = 5): Array[Array[Array[Double]]] =
     pqTrainV(vecsD(emb).select(col("vec_id"), col("v")), pqCodebooks(emb), iters)
 
-  /** Same trainer over an already-projected (vec_id, v: array<double>)
-    * frame with explicit initial codebooks — the residual-PQ path of
-    * the trained IVF+PQ composition feeds residual vectors through
-    * here.
-    */
   /** floor(x·1e6+0.5)/1e6 — the Dsp.round6 formula applied driver-side
     * to codebook entries. The trained-gate config quantizes every
     * codebook to micros at each iteration boundary on BOTH engines, so
@@ -1816,6 +1778,11 @@ object Similarity {
     */
   private def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
+  /** Same trainer over an already-projected (vec_id, v: array<double>)
+    * frame with explicit initial codebooks — the residual-PQ path of
+    * the trained IVF+PQ composition feeds residual vectors through
+    * here.
+    */
   def pqTrainV(
       vd: DataFrame,
       init: Array[Array[Array[Double]]],
@@ -1823,11 +1790,7 @@ object Similarity {
       quantize: Boolean = false
   ): Array[Array[Array[Double]]] = {
     val subs = vd
-      .select(
-        col("vec_id"),
-        posexplode(array((0 until pqM).map(j => slice(col("v"), j * pqSub + 1, pqSub)): _*))
-          .as(Seq("j", "sv"))
-      )
+      .select(col("vec_id"), posexplode(array((0 until pqM).map(j => pqSubvec(col("v"), j)): _*)).as(Seq("j", "sv")))
       .persist()
     var cb = init
     // r17 note: a broadcast-join codebook (stable plan, codegen cached
@@ -1835,12 +1798,7 @@ object Similarity {
     // build + the assignment join-back cost more than the per-round
     // janino compile of this literal projection. Kept literal.
     for (_ <- 1 to iters) {
-      val codeCol = coalesce((0 until pqM).map { j =>
-        val ds = array(
-          (0 until pqK).map(ci => graft.functions.exprs.sq_dist(col("sv"), typedLit(cb(j)(ci).toSeq))): _*
-        )
-        when(col("j") === j, array_position(ds, array_min(ds)))
-      }: _*)
+      val codeCol = coalesce((0 until pqM).map(j => when(col("j") === j, pqArgmin(col("sv"), cb(j)))): _*)
       val cells = subs
         .select(col("j"), codeCol.as("ci"), posexplode(col("sv")).as(Seq("d", "x")))
         .groupBy(col("j"), col("ci"), col("d"))
@@ -1864,39 +1822,61 @@ object Similarity {
   // production ANN layout at 10⁹+ vectors: 8 B/vector index + nProbe/
   // nList of the corpus scored per query. ----
 
-  /** Cell assignment + residuals (deterministic first-nList centroids —
-    * the oracle-replayable gate config). Emits (vid, cid, r). The
-    * argmin is a `min_by` AGGREGATION keyed on the exact (d2, cid)
-    * struct order — map-side combinable (the nList candidate rows per
-    * vector collapse to ONE before any shuffle), no rank-sort window,
-    * and the min_by payload carries (cid, v, cv) in O(1) aggregation
-    * state per group — neither the wide-payload-through-a-sort spill
-    * pattern (measured 4.3 GiB at the 100k decade, r10) nor the r11
-    * first-draft's corpus-sized join-back (+0.4 s of gate-scale stage
-    * scheduling on the serve path).
+  /** An IVF+PQ index over `vs` (vec_id, v) and the centroid frame
+    * `cents`: the (vid, cid, r = v − cv) residuals of each vector to its
+    * argmin cell, checkpointed (the codebook rows, the Lloyd scans, the
+    * encode and the candidate stream all read them), and the residual
+    * codebooks — initialized at residuals [from, from + pqK),
+    * micro-quantized ([[q6]]) when `quantize`, then `iters` Lloyd
+    * rounds of [[pqTrainV]] (0 keeps the deterministic init).
     */
-  private def ivfResiduals(emb: DataFrame, nList: Int): DataFrame = {
-    val vs = vecsD(emb)
-    val centsDf = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    vs.select(col("vec_id"), col("v"))
-      .join(broadcast(centsDf))
-      .select(
-        col("vec_id"),
-        struct(
-          graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"),
-          col("cid")
-        ).as("key"),
-        struct(col("cid"), col("v"), col("cv")).as("pay")
-      )
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("pay"), col("key")).as("pay"))
-      .select(
-        col("vec_id").as("vid"),
-        col("pay.cid").as("cid"),
-        zip_with(col("pay.v"), col("pay.cv"), (a, b) => a - b).as("r")
-      )
+  private def ivfPqIndex(
+      vs: DataFrame,
+      cents: DataFrame,
+      from: Int,
+      iters: Int,
+      quantize: Boolean
+  ): (DataFrame, Array[Array[Array[Double]]]) = {
+    val resid = vs
+      .join(nearestCells(cellDists(vs, cents), 1), Seq("vec_id"))
+      .join(broadcast(cents), Seq("cid"))
+      .select(col("vec_id").as("vid"), col("cid"), zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
+      .localCheckpoint()
+    // 16 rows, sorted after the collect: an orderBy would plan a range-partitioned sort
+    val rows = resid.filter(col("vid") >= from && col("vid") < from + pqK).collect().sortBy(_.getLong(0))
+    require(rows.length == pqK, s"corpus smaller than ${from + pqK} vectors")
+    val init = codebookFrom(rows.toSeq.map(r => r.getSeq[Double](2).map(x => if (quantize) q6(x) else x)))
+    val cb =
+      if (iters == 0) init
+      else pqTrainV(resid.select(col("vid").as("vec_id"), col("r").as("v")), init, iters, quantize)
+    (resid, cb)
+  }
+
+  /** The IVF-PQ residual scorer: each query's residual to the probed
+    * cell (va − cv) against the member's reconstructed residual vq.
+    * `recon` = (cid, vid, vq); a member's cell is the probed cell.
+    */
+  private def ivfPqScorer(vs: DataFrame, cents: DataFrame, recon: DataFrame): Scorer =
+    pqScorer(
+      vs.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"), col("v").as("va")),
+      recon.join(broadcast(cents), Seq("cid")),
+      zip_with(col("va"), col("cv"), (a, b) => a - b)
+    )
+
+  /** In-memory IVF-PQ: the index, its scorer and the scored probe
+    * candidates of the nQueries query rows.
+    */
+  private def ivfPqScore(
+      vs: DataFrame,
+      cents: DataFrame,
+      nProbe: Int,
+      from: Int,
+      iters: Int,
+      quantize: Boolean
+  ): (Scorer, DataFrame) = {
+    val (resid, cb) = ivfPqIndex(vs, cents, from, iters, quantize)
+    val s = ivfPqScorer(vs, cents, resid.select(col("cid"), col("vid"), pqReconCol(col("r"), cb).as("vq")))
+    (s, scorePairs(s, probedPairs(s.c, probeCellLiterals(probeCells(vs, cents, nProbe, col("vec_id") < nQueries)))))
   }
 
   /** IVF+PQ top-k: probe `nProbe` cells per query, rank candidates by
@@ -1907,60 +1887,9 @@ object Similarity {
     * construction).
     */
   def ivfPqTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
-    val vs = vecsD(emb)
-    // localCheckpoint, not persist: it materializes once for the
-    // codebook collect + both plan branches, and its blocks are
-    // ContextCleaner-reclaimed when unreferenced — a DataFrame persist
-    // would pin the CacheManager entry for the session lifetime (the
-    // query function returns before execution, so it can never call
-    // unpersist at the right time)
-    val resid = ivfResiduals(emb, nList).localCheckpoint()
-    val cbRows = resid
-      .filter(col("vid") >= nList && col("vid") < nList + pqK)
-      .orderBy(col("vid"))
-      .collect()
-    require(cbRows.length == pqK, s"corpus smaller than nList+pqK=${nList + pqK}")
-    val cb = Array.tabulate(pqM, pqK) { (j, ci) =>
-      cbRows(ci).getSeq[Double](2).slice(j * pqSub, (j + 1) * pqSub).toArray
-    }
-    val reconR = pqReconstructV(resid.select(col("vid").as("vec_id"), col("r").as("v")), cb)
-      .select(col("vec_id").as("vid"), col("vq"))
-    val centsDf = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // probed cells per query: same window shape as assignment, keep nProbe
-    val qd = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"))
-      .join(broadcast(centsDf))
-      .withColumn("d2", graft.functions.exprs.sq_dist(col("va"), col("cv")))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val qcells = qd
-      .select(col("qid"), col("cid"), col("va"), col("cv"), row_number().over(wq).as("cr"))
-      .filter(col("cr") <= nProbe)
-      .select(col("qid"), col("cid"), col("va"), col("cv"))
-    val assign = resid.select(col("vid"), col("cid"))
-    val scored = qcells
-      .join(assign, Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .join(reconR, Seq("vid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp
-          .round6(
-            graft.functions.exprs.sq_dist(zip_with(col("va"), col("cv"), (a, b) => a - b), col("vq"))
-          )
-          .as("ad2")
-      )
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("ad2").asc, col("vid").asc)
-    scored
-      .select(col("qid"), col("vid"), col("ad2"), row_number().over(w).as("rank"))
-      .filter(col("rank") <= topK)
+    val vs = vecsD(emb).select(col("vec_id"), col("v"))
+    val (s, scored) = ivfPqScore(vs, centroidFrame(vs, nList, None), nProbe, nList, 0, quantize = false)
+    rankTopK(scored, s)
   }
 
   /** TRAINED IVF+PQ composition — kmeans|| coarse cells
@@ -1972,10 +1901,12 @@ object Similarity {
     * cell ranking and the asymmetric distances order by cosine and
     * recall is measured against the exact cosine [[topk]] baseline
     * (ScaleSpec pins recall@5 ≥ 0.9 on a planted-cluster corpus; the
-    * Prof PROF_EMB decade records the number at 100k vectors). Same
-    * scale shape as the gate path: assignment + probe windows are
-    * per-key, candidate scoring is an equi-join on cid, codebooks and
-    * centroids live as literals.
+    * Prof PROF_EMB decade records the number at 100k vectors). The PQ
+    * codes produce a SHORTLIST of `refine` candidates per query; only
+    * those fetch their raw vectors for an exact re-rank (the FAISS
+    * IndexRefineFlat shape) — PQ distortion on tight within-cluster
+    * margins otherwise caps recall@5 well below the IVF probe bound
+    * (measured 0.38 unrefined vs 0.95+ refined on the spec corpus).
     */
   def ivfPqTopkTrained(
       emb: DataFrame,
@@ -1984,112 +1915,16 @@ object Similarity {
       iters: Int = 3,
       refine: Int = 50
   ): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val vs = vecsN(emb).select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("v"))
-    val centsDf =
-      broadcast(cents.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv"))
-    // assignment window over (vec_id, cid, d2) ONLY — carrying the two
-    // 64-double vectors through the nList-wide per-key sort multiplies
-    // the shuffled bytes ~40× (measured 4.3 GB spill at the 100k decade
-    // before this split); the residual joins the vectors back AFTER the
-    // 1-row-per-vector argmin
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val assign = vs
-      .join(centsDf)
-      .select(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"))
-      .select(col("vec_id"), col("cid"), row_number().over(w).as("cr"))
-      .filter(col("cr") === 1)
-      .select(col("vec_id"), col("cid"))
-    val resid = vs
-      .join(assign, Seq("vec_id"))
-      .join(centsDf.select(col("cid"), col("cv")), Seq("cid"))
-      .select(
-        col("vec_id").as("vid"),
-        col("cid"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r")
-      )
-      .localCheckpoint() // feeds codebook init, training scans, recon, and assignment
-    val initRows = resid.filter(col("vid") < pqK).orderBy(col("vid")).collect()
-    require(initRows.length == pqK, s"corpus smaller than pqK=$pqK")
-    val init = Array.tabulate(pqM, pqK) { (j, ci) =>
-      initRows(ci).getSeq[Double](2).slice(j * pqSub, (j + 1) * pqSub).toArray
-    }
-    val cb = pqTrainV(resid.select(col("vid").as("vec_id"), col("r").as("v")), init, iters)
-    val reconR = pqReconstructV(resid.select(col("vid").as("vec_id"), col("r").as("v")), cb)
-      .select(col("vec_id").as("vid"), col("vq"))
-    val qd = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"))
-      .join(centsDf)
-      .withColumn("d2", graft.functions.exprs.sq_dist(col("va"), col("cv")))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val qcells = qd
-      .select(col("qid"), col("cid"), col("va"), col("cv"), row_number().over(wq).as("cr"))
-      .filter(col("cr") <= nProbe)
-      .select(col("qid"), col("cid"), col("va"), col("cv"))
-    val scored = qcells
-      .join(resid.select(col("vid"), col("cid")), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .join(reconR, Seq("vid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp
-          .round6(
-            graft.functions.exprs.sq_dist(zip_with(col("va"), col("cv"), (a, b) => a - b), col("vq"))
-          )
-          .as("ad2")
-      )
-    // refine (the FAISS IndexRefineFlat shape): the PQ codes produce a
-    // SHORTLIST of `refine` candidates per query; only those fetch their
-    // raw vectors for an exact re-rank — at serving scale the refine
-    // step reads refine×nQueries raw vectors, not the corpus. PQ
-    // distortion on tight within-cluster margins otherwise caps
-    // recall@5 well below the IVF probe bound (measured 0.38 unrefined
-    // vs 0.95+ refined on the planted-cluster spec corpus).
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("ad2").asc, col("vid").asc)
-    val shortlist = scored
-      .select(col("qid"), col("vid"), row_number().over(wr).as("pq_rank"))
-      .filter(col("pq_rank") <= refine)
-      .select(col("qid"), col("vid"))
-    val exact = shortlist
-      .join(vs.select(col("vec_id").as("vid"), col("v").as("vb")), Seq("vid"))
-      .join(broadcast(vs.filter(col("vec_id") < nQueries).select(col("vec_id").as("qid"), col("v").as("va"))), Seq("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp.round6(graft.functions.exprs.dot_d(col("va"), col("vb"))).as("cos")
-      )
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    exact
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(wf).as("rank"))
-      .filter(col("rank") <= topK)
+    val (s, scored) = ivfPqScore(vs, centroidFrame(vs, 0, Some(cents)), nProbe, 0, iters, quantize = false)
+    refineTopK(scored, s, refine, unitDotScorer(vs)).select(col("qid"), col("vid"), col("cos"), col("rank"))
   }
 
-  /** Row-local PQ encode to ONE packed BIGINT — 4 bits per subspace
-    * code (pqK = 16), subspace j at bits [4j, 4j+4): the 8-byte
-    * serving payload that replaces 256 B of raw floats in the index
-    * tier. Disjoint bit fields sum ≡ OR, exact integer arithmetic.
+  /** Row-local PQ encode to ONE packed BIGINT — the 8-byte serving
+    * payload that replaces 256 B of raw floats in the index tier.
     */
-  def pqEncodePacked(vd: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame = {
-    val parts = (0 until pqM).map { j =>
-      val sv = slice(col("v"), j * pqSub + 1, pqSub)
-      val ds = array(
-        (0 until pqK).map(ci => graft.functions.exprs.sq_dist(sv, typedLit(cb(j)(ci).toSeq))): _*
-      )
-      (array_position(ds, array_min(ds)) - 1).cast("long") * lit(1L << (4 * j))
-    }
-    vd.select(col("vec_id"), parts.reduce(_ + _).as("code"))
-  }
+  def pqEncodePacked(vd: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame =
+    vd.select(col("vec_id"), pqCodeCol(col("v"), cb).as("code"))
 
   /** Unpack a packed code and reconstruct the vector from literal
     * codebooks — bit-identical to [[pqReconstructV]] for the same
@@ -2107,93 +1942,43 @@ object Similarity {
     * written as `partitionBy(cid)` parquet whose data columns are ONLY
     * (vid, code BIGINT) — 8 B/vector where [[ivfServeTopk]]'s layout
     * stores 256 B of raw floats, the 32× I/O reduction that makes a
-    * 10⁹-vector serving tier scannable. Probe: the queries' probed-cell
-    * UNION renders as partition-pruning literals, candidates arrive via
-    * one broadcast equi-join of the (qid, cid) probe table, residual
-    * reconstruction happens IN the probe from literal codebooks
-    * ([[pqDecodePacked]]), rank per real qid key. The oracle is
+    * 10⁹-vector serving tier scannable. The probe reads only the probed
+    * cell partitions and reconstructs residuals IN the probe from
+    * literal codebooks ([[pqDecodePacked]]). The oracle is
     * [[ivfPqTopkSql]] VERBATIM — serving through the codes store must
     * reproduce the in-memory IVF+PQ answers exactly (codes are exact
     * BIGINTs, reconstruction identical).
     */
   def ivfPqServeTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
-    val spark = emb.sparkSession
-    val store = graft.sources.Scratch.dir("sim_ivfpq_serve")
-    val vs = vecsD(emb)
-    val resid = ivfResiduals(emb, nList).localCheckpoint()
-    val cbRows = resid
-      .filter(col("vid") >= nList && col("vid") < nList + pqK)
-      .orderBy(col("vid"))
-      .collect()
-    require(cbRows.length == pqK, s"corpus smaller than nList+pqK=${nList + pqK}")
-    val cb = Array.tabulate(pqM, pqK) { (j, ci) =>
-      cbRows(ci).getSeq[Double](2).slice(j * pqSub, (j + 1) * pqSub).toArray
-    }
-    pqEncodePacked(resid.select(col("vid").as("vec_id"), col("r").as("v")), cb)
-      .select(col("vec_id").as("vid"), col("code"))
-      .join(resid.select(col("vid"), col("cid")), Seq("vid"))
-      .repartition(col("cid")) // one file per cell (guide §6; see writeRawCellStore)
-      .write
-      .partitionBy("cid")
-      .mode("overwrite")
-      .parquet(s"$store/codes")
-    val centsDf = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val qd = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"))
-      .join(broadcast(centsDf))
-      .withColumn("d2", graft.functions.exprs.sq_dist(col("va"), col("cv")))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val qcells = qd
-      .select(col("qid"), col("cid"), col("va"), col("cv"), row_number().over(wq).as("cr"))
-      .filter(col("cr") <= nProbe)
-      .select(col("qid"), col("cid"), col("va"), col("cv"))
-      .localCheckpoint() // referenced by the literal collect AND the probe join
-    val probeCells = probeCellLiterals(qcells)
-    val cand = spark.read
-      .parquet(s"$store/codes")
-      .filter(col("cid").isin(probeCells: _*))
-      .select(col("vid").as("vec_id"), col("code"), col("cid").cast("long").as("cid"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("ad2").asc, col("vid").asc)
-    pqDecodePacked(cand, cb)
-      .select(col("vec_id").as("vid"), col("cid"), col("vq"))
-      .join(broadcast(qcells), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp
-          .round6(
-            graft.functions.exprs.sq_dist(zip_with(col("va"), col("cv"), (a, b) => a - b), col("vq"))
-          )
-          .as("ad2")
-      )
-      .select(col("qid"), col("vid"), col("ad2"), row_number().over(wr).as("rank"))
-      .filter(col("rank") <= topK)
+    val vs = vecsD(emb).select(col("vec_id"), col("v"))
+    val cents = centroidFrame(vs, nList, None)
+    val (resid, cb) = ivfPqIndex(vs, cents, nList, 0, quantize = false)
+    val store = writeCellStore(
+      resid.select(col("vid"), col("cid"), pqCodeCol(col("r"), cb).as("code")),
+      "sim_ivfpq_serve",
+      "codes"
+    )
+    val probed = probeCellLiterals(probeCells(vs, cents, nProbe, col("vec_id") < nQueries))
+    val members = pqDecodePacked(
+      readCells(emb.sparkSession, store, probed).select(col("cid").cast("long").as("cid"), col("vid"), col("code")),
+      cb
+    )
+    val s = ivfPqScorer(vs, cents, members.select(col("cid"), col("vid"), col("vq")))
+    rankTopK(scorePairs(s, probedPairs(s.c, probed)), s)
   }
 
   /** TRAINED IVF+PQ, gate config — the oracle-replayable twin of
     * [[ivfPqTopkTrained]]: deterministic first-nList coarse cells (the
     * kmeans|| composition stays `[t]` — its seeding can't ride SQL
     * CTEs), but the residual CODEBOOKS ARE TRAINED by the production
-    * [[pqTrainV]] Lloyd loop (init = first-pqK residuals, `iters`
-    * distributed assignment+mean rounds) and the serve path runs the
-    * full PQ-shortlist → exact-cosine REFINE composition (the FAISS
-    * IndexRefineFlat shape [[ivfPqTopkTrained]] measured recall@5 =
-    * 1.000 with at the 100k decade). Codebooks are micro-quantized at
-    * every iteration boundary on BOTH engines ([[q6]]) so the discrete
-    * encode/argmin chain is ulp-proof cross-engine; the oracle replays
-    * init → 2 Lloyd rounds → encode → probe → shortlist → refine as
-    * chained CTEs. Scale shape identical to [[ivfPqTopk]]: per-key
-    * windows, equi-join candidates, id-only ranking frames, literal
-    * codebooks; the refine reads refine×nQueries raw vectors, never
-    * the corpus.
+    * [[pqTrainV]] Lloyd loop (init = residuals nList..nList+pqK−1,
+    * `iters` distributed assignment+mean rounds) and the serve path
+    * runs the full PQ-shortlist → exact-cosine REFINE composition.
+    * Codebooks are micro-quantized at every iteration boundary on BOTH
+    * engines ([[q6]]) so the discrete encode/argmin chain is ulp-proof
+    * cross-engine; the oracle replays init → 2 Lloyd rounds → encode →
+    * probe → shortlist → refine as chained CTEs. The refine reads
+    * refine×nQueries raw vectors, never the corpus.
     */
   def ivfPqTrainedGate(
       emb: DataFrame,
@@ -2202,69 +1987,35 @@ object Similarity {
       iters: Int = 2,
       refine: Int = 20
   ): DataFrame = {
-    val resid = ivfResiduals(emb, nList).localCheckpoint()
-    val cbRows = resid
-      .filter(col("vid") >= nList && col("vid") < nList + pqK)
-      .orderBy(col("vid"))
-      .collect()
-    require(cbRows.length == pqK, s"corpus smaller than nList+pqK=${nList + pqK}")
-    val init = Array.tabulate(pqM, pqK) { (j, ci) =>
-      cbRows(ci).getSeq[Double](2).slice(j * pqSub, (j + 1) * pqSub).map(q6).toArray
-    }
-    val cb =
-      pqTrainV(resid.select(col("vid").as("vec_id"), col("r").as("v")), init, iters, quantize = true)
-    val reconR = pqReconstructV(resid.select(col("vid").as("vec_id"), col("r").as("v")), cb)
-      .select(col("vec_id").as("vid"), col("vq"))
-    val vs = vecsN(emb)
-    val centsDf = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val qn = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-      .localCheckpoint() // probed by the cell ranking, the PQ scoring, and the refine
-    // probe-cell ranking on (qid, cid, d2) only; va/cv join back after
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val qcells = qn
-      .join(broadcast(centsDf))
-      .select(col("qid"), col("cid"), graft.functions.exprs.sq_dist(col("va"), col("cv")).as("d2"))
-      .select(col("qid"), col("cid"), row_number().over(wq).as("cr"))
-      .filter(col("cr") <= nProbe)
-      .select(col("qid"), col("cid"))
-      .join(broadcast(centsDf), Seq("cid"))
-      .join(broadcast(qn.select(col("qid"), col("va"))), Seq("qid"))
-    val scored = qcells
-      .join(resid.select(col("vid"), col("cid")), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .join(reconR, Seq("vid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        graft.core.Dsp
-          .round6(
-            graft.functions.exprs.sq_dist(zip_with(col("va"), col("cv"), (a, b) => a - b), col("vq"))
-          )
-          .as("ad2")
-      )
-    val ws = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("ad2").asc, col("vid").asc)
-    val shortlist = scored
-      .select(col("qid"), col("vid"), row_number().over(ws).as("pq_rank"))
-      .filter(col("pq_rank") <= refine)
-      .select(col("qid"), col("vid"))
-    val exact = shortlist
-      .join(vs.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb")), Seq("vid"))
-      .join(broadcast(qn.select(col("qid"), col("va"), col("na"))), Seq("qid"))
-      .select(col("qid"), col("vid"), round(cosExpr, 6).as("cos"))
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    exact
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(wf).as("rank"))
-      .filter(col("rank") <= topK)
+    val vs = vecsD(emb).select(col("vec_id"), col("v"))
+    val (s, scored) = ivfPqScore(vs, centroidFrame(vs, nList, None), nProbe, nList, iters, quantize = true)
+    refineTopK(scored, s, refine, cosScorer(emb)).select(col("qid"), col("vid"), col("cos"), col("rank"))
+  }
+
+  /** The IVF-PQ oracle prefix: the IVF CTEs and the residuals. */
+  private def ivfPqCtesSql(nList: Int): String =
+    "WITH " + ivfCtesSql(nList, Set("vs", "cents", "rankedc", "assign")) +
+      "resid AS MATERIALIZED (SELECT a.vid, a.cid, list_transform(generate_series(1, 64), i -> " +
+      "list_extract(v.v, i) - list_extract(c.cv, i)) AS r " +
+      "FROM assign a JOIN vs v ON v.vec_id = a.vid JOIN cents c ON c.cid = a.cid), "
+
+  /** Residual subvectors, one row per (vid, j). */
+  private def rsubsSql(mat: Boolean): String =
+    s"rsubs AS${if (mat) " MATERIALIZED" else ""} (SELECT vid, g.j AS j, ${pqSliceSql("r")} AS sv " +
+      s"FROM resid, $pqSubspacesSql), "
+
+  /** The IVF-PQ probe CTEs: `pairs` of each query's probed cells with
+    * their members' reconstructions `rrecon`, and their round6
+    * asymmetric residual distances `scored`.
+    */
+  private def ivfPqProbeSql(pairs: String, scored: String): String = {
+    val score = "list_sum(list_transform(generate_series(1, 64), i -> " +
+      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i)) * " +
+      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i))))"
+    s"$pairs AS (SELECT q.qid, s.vid, qa.v AS va, c.cv AS cv, rr.vq AS vq FROM qcells q " +
+      "JOIN assign s ON s.cid = q.cid AND s.vid <> q.qid " +
+      "JOIN vs qa ON qa.vec_id = q.qid JOIN cents c ON c.cid = q.cid JOIN rrecon rr ON rr.vid = s.vid), " +
+      s"$scored AS (SELECT qid, vid, ${graft.core.Dsp.round6Sql(score)} AS ad2 FROM $pairs), "
   }
 
   /** SQL twin of [[ivfPqTrainedGate]]: the full init → Lloyd → encode →
@@ -2272,21 +2023,11 @@ object Similarity {
     * micro-quantized at every iteration boundary like the Spark side.
     */
   def ivfPqTrainedSql(nList: Int = 16, nProbe: Int = 4, iters: Int = 2, refine: Int = 20): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    val subD2 =
-      s"list_sum(list_transform(generate_series(1, $pqSub), i -> " +
-        "(list_extract(s.sv, i) - list_extract(c.cv, i)) * (list_extract(s.sv, i) - list_extract(c.cv, i))))"
-    val score = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i)) * " +
-      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i))))"
     // one Lloyd round: assign every residual subvector under cb{t-1},
     // per-(j, ci, dim) mean, micro-quantize, empty cells keep cb{t-1}
     def lloyd(t: Int): String = {
       val prev = if (t == 1) "cb0" else s"cb${t - 1}"
-      s"d$t AS (SELECT s.vid, s.j, c.ci, $subD2 AS d2 FROM rsubs s JOIN $prev c ON c.j = s.j), " +
-        s"a$t AS (SELECT vid, j, ci FROM (SELECT vid, j, ci, " +
-        s"row_number() OVER (PARTITION BY vid, j ORDER BY d2 ASC, ci ASC) AS rn FROM d$t) WHERE rn = 1), " +
+      pqArgminSql(s"d$t", s"a$t", "rsubs", prev, "vid") +
         s"m$t AS (SELECT a.j, a.ci, u.i AS d, floor(avg(list_extract(s.sv, u.i)) * 1.0e6 + 0.5e0) / 1.0e6 AS mx " +
         s"FROM a$t a JOIN rsubs s ON s.vid = a.vid AND s.j = a.j, generate_series(1, $pqSub) u(i) " +
         "GROUP BY a.j, a.ci, u.i), " +
@@ -2295,278 +2036,158 @@ object Similarity {
         "ON m.j = p.j AND m.ci = p.ci)"
     }
     val cbF = s"cb$iters"
-    "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS MATERIALIZED (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS MATERIALIZED (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      "resid AS MATERIALIZED (SELECT a.vid, a.cid, list_transform(generate_series(1, 64), i -> " +
-      "list_extract(v.v, i) - list_extract(c.cv, i)) AS r " +
-      "FROM assign a JOIN vs v ON v.vec_id = a.vid JOIN cents c ON c.cid = a.cid), " +
-      s"rsubs AS MATERIALIZED (SELECT vid, g.j AS j, list_slice(r, g.j * $pqSub + 1, (g.j + 1) * $pqSub) AS sv " +
-      s"FROM resid, generate_series(0, ${pqM - 1}) g(j)), " +
+    ivfPqCtesSql(nList) + rsubsSql(mat = true) +
       s"cb0 AS MATERIALIZED (SELECT g.j AS j, vid - $nList AS ci, " +
-      s"list_transform(list_slice(r, g.j * $pqSub + 1, (g.j + 1) * $pqSub), x -> floor(x * 1.0e6 + 0.5e0) / 1.0e6) AS cv " +
-      s"FROM resid, generate_series(0, ${pqM - 1}) g(j) WHERE vid >= $nList AND vid < ${nList + pqK}), " +
+      s"list_transform(${pqSliceSql("r")}, x -> floor(x * 1.0e6 + 0.5e0) / 1.0e6) AS cv " +
+      s"FROM resid, $pqSubspacesSql WHERE vid >= $nList AND vid < ${nList + pqK}), " +
       (1 to iters).map(lloyd).mkString(", ") + ", " +
-      s"de AS (SELECT s.vid, s.j, c.ci, $subD2 AS d2 FROM rsubs s JOIN $cbF c ON c.j = s.j), " +
-      "ae AS (SELECT vid, j, ci FROM (SELECT vid, j, ci, " +
-      "row_number() OVER (PARTITION BY vid, j ORDER BY d2 ASC, ci ASC) AS rn FROM de) WHERE rn = 1), " +
+      pqArgminSql("de", "ae", "rsubs", cbF, "vid") +
       s"rrecon AS MATERIALIZED (SELECT vid, flatten(list(cv ORDER BY j)) AS vq " +
       s"FROM ae JOIN $cbF USING (j, ci) GROUP BY vid), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid < $nQueries), " +
-      "pqpairs AS (SELECT q.qid, s.vid, qa.v AS va, c.cv AS cv, rr.vq AS vq FROM qcells q " +
-      "JOIN assign s ON s.cid = q.cid AND s.vid <> q.qid " +
-      "JOIN vs qa ON qa.vec_id = q.qid JOIN cents c ON c.cid = q.cid JOIN rrecon rr ON rr.vid = s.vid), " +
-      s"pqscored AS (SELECT qid, vid, ${graft.core.Dsp.round6Sql(score)} AS ad2 FROM pqpairs), " +
+      qcellsSql(nProbe) + ivfPqProbeSql("pqpairs", "pqscored") +
       s"shortlist AS (SELECT qid, vid FROM (SELECT qid, vid, " +
       s"row_number() OVER (PARTITION BY qid ORDER BY ad2 ASC, vid ASC) AS rn FROM pqscored) WHERE rn <= $refine), " +
       "xpairs AS (SELECT s.qid, s.vid, qa.v AS va, cb.v AS vb FROM shortlist s " +
       "JOIN vs qa ON qa.vec_id = s.qid JOIN vs cb ON cb.vec_id = s.vid), " +
       s"exact AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM xpairs), " +
-      "ranked AS (SELECT qid, vid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM exact) " +
-      s"SELECT qid, vid, cos, rank FROM ranked WHERE rank <= $topK"
+      rankSql("exact", "cos", "DESC")
   }
 
   /** SQL twin of [[ivfPqTopk]] (nList=16, nProbe=4). */
-  def ivfPqTopkSql(nList: Int = 16, nProbe: Int = 4): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    val subD2 = s"list_sum(list_transform(generate_series(1, $pqSub), i -> " +
-      "(list_extract(s.sv, i) - list_extract(c.cv, i)) * (list_extract(s.sv, i) - list_extract(c.cv, i))))"
-    val score = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i)) * " +
-      "((list_extract(va, i) - list_extract(cv, i)) - list_extract(vq, i))))"
-    "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS MATERIALIZED (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS MATERIALIZED (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      "resid AS MATERIALIZED (SELECT a.vid, a.cid, list_transform(generate_series(1, 64), i -> " +
-      "list_extract(v.v, i) - list_extract(c.cv, i)) AS r " +
-      "FROM assign a JOIN vs v ON v.vec_id = a.vid JOIN cents c ON c.cid = a.cid), " +
-      s"rcb AS MATERIALIZED (SELECT g.j AS j, vid - $nList AS ci, " +
-      s"list_slice(r, g.j * $pqSub + 1, (g.j + 1) * $pqSub) AS cv " +
-      s"FROM resid, generate_series(0, ${pqM - 1}) g(j) WHERE vid >= $nList AND vid < ${nList + pqK}), " +
-      s"rsubs AS (SELECT vid, g.j AS j, list_slice(r, g.j * $pqSub + 1, (g.j + 1) * $pqSub) AS sv " +
-      s"FROM resid, generate_series(0, ${pqM - 1}) g(j)), " +
-      s"rdists AS (SELECT s.vid, s.j, c.ci, $subD2 AS d2 FROM rsubs s JOIN rcb c ON c.j = s.j), " +
-      "rcodes AS (SELECT vid, j, ci FROM (SELECT vid, j, ci, " +
-      "row_number() OVER (PARTITION BY vid, j ORDER BY d2 ASC, ci ASC) AS rn FROM rdists) WHERE rn = 1), " +
+  def ivfPqTopkSql(nList: Int = 16, nProbe: Int = 4): String =
+    ivfPqCtesSql(nList) +
+      s"rcb AS MATERIALIZED (SELECT g.j AS j, vid - $nList AS ci, ${pqSliceSql("r")} AS cv " +
+      s"FROM resid, $pqSubspacesSql WHERE vid >= $nList AND vid < ${nList + pqK}), " +
+      rsubsSql(mat = false) +
+      pqArgminSql("rdists", "rcodes", "rsubs", "rcb", "vid") +
       "rrecon AS MATERIALIZED (SELECT vid, flatten(list(cv ORDER BY j)) AS vq " +
       "FROM rcodes JOIN rcb USING (j, ci) GROUP BY vid), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid < $nQueries), " +
-      "pairs AS (SELECT q.qid, s.vid, qa.v AS va, c.cv AS cv, rr.vq AS vq FROM qcells q " +
-      "JOIN assign s ON s.cid = q.cid AND s.vid <> q.qid " +
-      "JOIN vs qa ON qa.vec_id = q.qid JOIN cents c ON c.cid = q.cid JOIN rrecon rr ON rr.vid = s.vid), " +
-      s"scored AS (SELECT qid, vid, ${graft.core.Dsp.round6Sql(score)} AS ad2 FROM pairs), " +
-      "ranked AS (SELECT qid, vid, ad2, row_number() OVER (PARTITION BY qid ORDER BY ad2 ASC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, ad2, rank FROM ranked WHERE rank <= $topK"
-  }
+      qcellsSql(nProbe) + ivfPqProbeSql("pairs", "scored") +
+      rankSql("scored", "ad2", "ASC")
 
-  /** SQL twin of [[ivfTopk]] (nList=16, nProbe=4): deterministic
-    * centroids (first nList vectors), argmin cell assignment with cid
-    * tiebreak, nProbe nearest cells per query, cosine on candidates only.
+  /** SQL twin of the exact-cosine IVF paths: deterministic centroids
+    * (first nList vectors), argmin cell assignment with cid tiebreak,
+    * the `nProbe` nearest cells of the `queries` rows, cosine on
+    * candidates only (restricted to `labelKeep` when given).
     */
-  def ivfTopkSql(nList: Int = 16, nProbe: Int = 4): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    "WITH vs AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid < $nQueries), " +
+  private def ivfCosSql(
+      nList: Int,
+      nProbe: Int,
+      queries: String = s"pid < $nQueries",
+      labelKeep: Option[Int] = None,
+      out: String = ""
+  ): String =
+    "WITH " + ivfCtesSql(nList, label = labelKeep.isDefined) + qcellsSql(nProbe, queries) +
       "pairs AS (SELECT q.qid, s.vid, qa.v AS va, cb.v AS vb FROM qcells q JOIN assign s ON s.cid = q.cid " +
-      "JOIN vs qa ON qa.vec_id = q.qid JOIN vs cb ON cb.vec_id = s.vid WHERE q.qid <> s.vid), " +
+      "JOIN vs qa ON qa.vec_id = q.qid JOIN vs cb ON cb.vec_id = s.vid " +
+      s"WHERE q.qid <> s.vid${labelKeep.fold("")(l => s" AND cb.label = $l")}), " +
       s"scored AS (SELECT DISTINCT qid, vid, round($cosSqlExpr, 6) AS cos FROM pairs), " +
-      "ranked AS (SELECT qid, vid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, cos, rank FROM ranked WHERE rank <= $topK"
+      rankSql("scored", "cos", "DESC", out)
+
+  /** SQL twin of [[ivfTopk]] (nList=16, nProbe=4). */
+  def ivfTopkSql(nList: Int = 16, nProbe: Int = 4): String = ivfCosSql(nList, nProbe)
+
+  // ---- The ANN SERVING layout: vectors written `partitionBy(cell)` so
+  // a probe reads ONLY its probed cell partitions — on object storage,
+  // partition pruning is what turns IVF's candidate bound into an I/O
+  // bound (the scan skips (nList − nProbe)/nList of the corpus bytes;
+  // PlanAuditSpec pins the PartitionFilters). Float arrays and BIGINT
+  // codes round-trip parquet losslessly, so serving through a store
+  // must not change a single answer ----
+
+  /** A written cell store: its path and its read-back schema (the
+    * data columns, then the int `cid` partition column) — declared on
+    * read, so serving runs no schema-inference job.
+    */
+  private final case class CellStore(path: String, schema: org.apache.spark.sql.types.StructType)
+
+  /** Write `rows` (…, cid) as a `partitionBy(cid)` parquet cell store
+    * under `Scratch.dir(name)/sub`. r17 (guide §6, small files):
+    * clustered by the partition column so each cell writes ONE file
+    * instead of one per (task × cell) — the write-side analogue of
+    * Iceberg's hash distribution-mode.
+    */
+  private def writeCellStore(rows: DataFrame, name: String, sub: String): CellStore = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val path = s"${graft.sources.Scratch.dir(name)}/$sub"
+    rows.repartition(col("cid")).write.partitionBy("cid").mode("overwrite").parquet(path)
+    CellStore(path, StructType(rows.schema.filterNot(_.name == "cid") :+ StructField("cid", IntegerType)))
   }
 
-  /** The ANN SERVING layout: embeddings written `partitionBy(cell)`
-    * so a probe reads ONLY its nProbe cell partitions — on object
-    * storage, partition pruning is what turns IVF's candidate bound
-    * into an I/O bound (the scan skips (nList − nProbe)/nList of the
-    * corpus bytes; PlanAuditSpec pins the PartitionFilters). The gate
-    * runs query vec 0 through the layout: assignment identical to
-    * [[ivfCandidates]]' deterministic-centroid path, the probed cells
-    * a bounded nList-row driver collect rendered as partition-pruning
-    * literals, exact cosine + rank over the read-back candidates. The
-    * oracle is the single-query IVF SQL over raw embeddings — the
-    * float arrays round-trip parquet losslessly, so the layout must
-    * not change a single answer.
+  /** Read only the probed cell partitions: the probed-cell UNION as
+    * partition-pruning literals (int: the partition column's read-back
+    * type — a long literal would cast the column and defeat pruning).
     */
-  /** Distances of every vector to the deterministic first-`nList`
-    * centroids: (vec_id, cid, d2) — ids + metric ONLY (the r10 rule:
-    * wide payloads never ride the ranking windows built on this
-    * frame). Shared by the serving-layout paths.
-    */
-  private def centDists(emb: DataFrame, nList: Int): DataFrame = {
-    val vs = vecsN(emb)
-    val cents = vs.filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv"))
-    vs.join(broadcast(cents))
-      .select(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"))
-  }
+  private def readCells(spark: SparkSession, store: CellStore, probed: Map[Long, Seq[Long]]): DataFrame =
+    spark.read
+      .schema(store.schema)
+      .parquet(store.path)
+      .filter(col("cid").isin(probed.keys.map(_.toInt).toSeq.sorted: _*))
 
-  /** Deterministic-centroid cell assignment + the partitionBy(cid)
-    * raw-embedding store write shared by [[ivfLayoutTopk]] and
-    * [[ivfServeTopk]]; returns the store root. The serving-layout
-    * contract lives here ONCE: assignment ranks (vec_id, cid, d2)
-    * only, and the store keys raw embeddings by their cell partition.
+  /** The raw-embedding store router shared by [[ivfLayoutTopk]] and
+    * [[ivfServeTopk]]: (vec_id, embedding) written under each vector's
+    * deterministic cell, then the `queries` rows' probed cells scored
+    * exactly from the pruned read.
     */
-  private def writeRawCellStore(emb: DataFrame, nList: Int, name: String): String = {
-    val store = graft.sources.Scratch.dir(name)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val assign = centDists(emb, nList)
-      .select(col("vec_id"), col("cid"), row_number().over(w).as("cr"))
-      .filter(col("cr") === 1)
-      .select(col("vec_id"), col("cid"))
-    emb
-      .select(col("vec_id"), col("embedding"))
-      .join(assign, Seq("vec_id"))
-      // r17 (guide §6, small files): cluster by the partition column so
-      // each cell writes ONE file instead of one per (task × cell) —
-      // the write-side analogue of Iceberg's hash distribution-mode
-      .repartition(col("cid"))
-      .write
-      .partitionBy("cid")
-      .mode("overwrite")
-      .parquet(s"$store/cells")
-    store
-  }
-
-  /** Probed-cell UNION as partition-pruning literals (int: the
-    * partition column's inferred read-back type — a long literal would
-    * cast the column and defeat pruning). Bounded by nList.
-    */
-  private def probeCellLiterals(qcells: DataFrame): Array[Int] =
-    qcells.select(col("cid")).distinct().collect().map(_.getLong(0).toInt).sorted
-
-  def ivfLayoutTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
-    val spark = emb.sparkSession
-    val store = writeRawCellStore(emb, nList, "sim_ivf_layout")
-    val vs = vecsN(emb)
-    // the query's probe cells: an nList-row collect, rendered as
-    // partition-pruning literals
-    val probeCells = centDists(emb, nList)
-      .filter(col("vec_id") === 0)
-      .orderBy(col("d2").asc, col("cid").asc)
-      .limit(nProbe)
-      .select(col("cid"))
-      .collect()
-      .map(_.getLong(0).toInt)
-    val cand = vecsN(
-      spark.read
-        .parquet(s"$store/cells")
-        .filter(col("cid").isin(probeCells: _*))
-        .select(col("vec_id"), col("embedding"), lit(0).as("label"))
+  private def rawStoreScore(
+      s: Scorer,
+      emb: DataFrame,
+      nList: Int,
+      nProbe: Int,
+      name: String,
+      queries: Column
+  ): DataFrame = {
+    val vs = vecsD(emb).select(col("vec_id"), col("v"))
+    val cents = centroidFrame(vs, nList, None)
+    val store = writeCellStore(
+      emb.select(col("vec_id"), col("embedding")).join(nearestCells(cellDists(vs, cents), 1), Seq("vec_id")),
+      name,
+      "cells"
     )
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-    // the query vector is ONE bounded row — embed it as literals and
-    // score row-locally (a constant-key join would plan a BNLJ; the
-    // per-term products commute exactly, so the literal-operand dot
-    // matches the oracle's va·vb bit-for-bit)
-    val qRow = vs.filter(col("vec_id") === 0).select(col("v"), col("nrm")).collect()(0)
-    val qLit = array(qRow.getSeq[Double](0).map(lit): _*)
-    val qNrm = qRow.getDouble(1)
-    // top-k of ONE query: orderBy + limit plans TakeOrderedAndProject
-    // (per-partition heaps, no global sort). A window partitioned by the
-    // constant qid folds to an EMPTY partition spec — WindowExec would
-    // move every candidate to one task (the r9 regression; the
-    // no-empty-partition-window audit in PlanAuditSpec now pins this)
-    cand
-      .select(
-        lit(0L).as("qid"),
-        col("vid"),
-        round(graft.functions.exprs.dot_d(qLit, col("vb")) / (lit(qNrm) * col("nb")), 6).as("cos")
-      )
-      .orderBy(col("cos").desc, col("vid").asc)
-      .limit(topK)
-  }
-
-  /** Single-query (qid = 0) twin of [[ivfTopkSql]] over raw embeddings
-    * — the oracle for the partition-pruned layout path.
-    */
-  def ivfLayoutTopkSql(nList: Int = 16, nProbe: Int = 4): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    "WITH vs AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid = 0), " +
-      "pairs AS (SELECT q.qid, s.vid, qa.v AS va, cb.v AS vb FROM qcells q JOIN assign s ON s.cid = q.cid " +
-      "JOIN vs qa ON qa.vec_id = q.qid JOIN vs cb ON cb.vec_id = s.vid WHERE q.qid <> s.vid), " +
-      s"scored AS (SELECT DISTINCT qid, vid, round($cosSqlExpr, 6) AS cos FROM pairs), " +
-      "ranked AS (SELECT qid, vid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, cos FROM ranked WHERE rank <= $topK"
-  }
-
-  /** BATCH ANN serving over the pruned layout — [[ivfLayoutTopk]]
-    * generalized from one collected query row to a query TABLE (the
-    * shape a real serving pass hits first). Per-query probed cells come
-    * from the same assignment window restricted to the query rows; the
-    * UNION of probed cells (bounded by `nList` at ANY query-batch size)
-    * renders as partition-pruning literals so the store scan still
-    * reads only the probed cell partitions (PlanAuditSpec pins the cid
-    * PartitionFilters); candidates arrive via ONE broadcast equi-join
-    * of the tiny (qid, cid) probe table against the pruned read — the
-    * corpus side never shuffles; the rank window partitions by the REAL
-    * `qid` key (nQueries partitions — the r9 constant-key lesson). Each
-    * (qid, vid) pair surfaces exactly once by construction (a vector
-    * lives in one cell), so no dedup pass is needed. The oracle is
-    * [[ivfTopkSql]] VERBATIM over raw embeddings: float arrays
-    * round-trip parquet losslessly, so serving through the layout must
-    * not change a single answer.
-    */
-  def ivfServeTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
-    val spark = emb.sparkSession
-    val store = writeRawCellStore(emb, nList, "sim_ivf_serve")
-    val vs = vecsN(emb)
-    // probe cells per QUERY row only — the nQueries-row filter pushes to
-    // the scan, so this branch never re-ranks the corpus
-    val qcells = centDists(emb, nList)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("cid"), row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id"))
-          .orderBy(col("d2").asc, col("cid").asc)
-      ).as("cr"))
-      .filter(col("cr") <= nProbe)
-      .select(col("qid"), col("cid"))
-      .localCheckpoint() // referenced by the literal collect AND the probe join
-    val probeCells = probeCellLiterals(qcells)
-    val cand = spark.read
-      .parquet(s"$store/cells")
-      .filter(col("cid").isin(probeCells: _*))
+    val probed = probeCellLiterals(probeCells(vs, cents, nProbe, queries))
+    val members = readCells(emb.sparkSession, store, probed)
       .select(
         col("cid").cast("long").as("cid"),
         col("vec_id").as("vid"),
         transform(col("embedding"), x => x.cast("double")).as("vb")
       )
       .withColumn("nb", sqrt(graft.functions.exprs.dot_d(col("vb"), col("vb"))))
-    val qtab = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    cand
-      .join(broadcast(qcells), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .join(broadcast(qtab), Seq("qid"))
-      .select(
-        col("qid"),
-        col("vid"),
-        round(graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("cos")
-      )
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(wr).as("rank"))
-      .filter(col("rank") <= topK)
+    scorePairs(s, probedPairs(members, probed))
+  }
+
+  /** Single-query serving through the pruned layout: query vec 0's
+    * probed cells only. Top-k of ONE query is orderBy + limit
+    * (TakeOrderedAndProject: per-partition heaps, no global sort) — a
+    * rank window over one key would sort every candidate in one task
+    * (the r9 lesson; PlanAuditSpec rejects partition-less windows).
+    */
+  def ivfLayoutTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
+    val s = cosScorer(emb)
+    rawStoreScore(s, emb, nList, nProbe, "sim_ivf_layout", col("vec_id") === 0)
+      .orderBy(nearestFirst(s): _*)
+      .limit(topK)
+  }
+
+  /** Single-query (qid = 0) twin of [[ivfTopkSql]] over raw embeddings
+    * — the oracle for the partition-pruned layout path.
+    */
+  def ivfLayoutTopkSql(nList: Int = 16, nProbe: Int = 4): String =
+    ivfCosSql(nList, nProbe, queries = "pid = 0", out = "qid, vid, cos")
+
+  /** BATCH ANN serving over the pruned layout — [[ivfLayoutTopk]]
+    * generalized to a query TABLE. The UNION of probed cells (bounded
+    * by `nList` at ANY query-batch size) renders as partition-pruning
+    * literals so the store scan reads only the probed cell partitions
+    * (PlanAuditSpec pins the cid PartitionFilters); the same literal
+    * probe table routes each candidate row to its probing queries
+    * row-locally and the query side joins broadcast — the corpus side
+    * never shuffles; the rank window partitions by the REAL `qid` key.
+    * The oracle is
+    * [[ivfTopkSql]] VERBATIM over raw embeddings.
+    */
+  def ivfServeTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame = {
+    val s = cosScorer(emb)
+    rankTopK(rawStoreScore(s, emb, nList, nProbe, "sim_ivf_serve", col("vec_id") < nQueries), s)
   }
 
   /** Row-local cell assignment against LITERAL centroids — the
@@ -2836,8 +2457,7 @@ object Similarity {
   }
 
   def semanticDupesSql(tau: Double = 0.4, nList: Int = 16): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
+    val d2 = d2Sql("a.v", "c.cv")
     "WITH vs AS MATERIALIZED (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
       s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
       s"dists AS (SELECT a.vec_id AS vid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
@@ -3206,41 +2826,12 @@ object Similarity {
       nProbe: Int = 4,
       labelKeep: Int = 1
   ): DataFrame = {
-    val vs = vecsN(emb)
-    val corpus = vs
-      .filter(col("label") === labelKeep)
-      .select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-    val q = vs
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-    val scored = ivfCandidates(emb, nList, nProbe)
-      .join(corpus, Seq("vid")) // the pre-filter: inner join drops non-label candidates
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("vid"), round(cosExpr, 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scored
-      .select(col("qid"), col("vid"), col("cos"), row_number().over(w).as("rank"))
-      .filter(col("rank") <= topK)
+    val s = cosScorer(emb, keep = col("label") === labelKeep)
+    rankTopK(ivfScore(s, emb, nList, nProbe), s)
   }
 
-  def filteredTopkSql(nList: Int = 16, nProbe: Int = 4, labelKeep: Int = 1): String = {
-    val d2 = "list_sum(list_transform(generate_series(1, 64), i -> " +
-      "(list_extract(a.v, i) - list_extract(c.cv, i)) * (list_extract(a.v, i) - list_extract(c.cv, i))))"
-    "WITH vs AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings), " +
-      s"cents AS (SELECT vec_id AS cid, v AS cv FROM vs WHERE vec_id < $nList), " +
-      s"dists AS (SELECT a.vec_id AS pid, c.cid AS cid, $d2 AS d2 FROM vs a CROSS JOIN cents c), " +
-      "rankedc AS (SELECT pid, cid, row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, cid ASC) AS cr FROM dists), " +
-      "assign AS (SELECT pid AS vid, cid FROM rankedc WHERE cr = 1), " +
-      s"qcells AS (SELECT pid AS qid, cid FROM rankedc WHERE cr <= $nProbe AND pid < $nQueries), " +
-      "pairs AS (SELECT q.qid, s.vid, qa.v AS va, cb.v AS vb FROM qcells q JOIN assign s ON s.cid = q.cid " +
-      "JOIN vs qa ON qa.vec_id = q.qid JOIN vs cb ON cb.vec_id = s.vid " +
-      s"WHERE q.qid <> s.vid AND cb.label = $labelKeep), " +
-      s"scored AS (SELECT DISTINCT qid, vid, round($cosSqlExpr, 6) AS cos FROM pairs), " +
-      "ranked AS (SELECT qid, vid, cos, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM scored) " +
-      s"SELECT qid, vid, cos, rank FROM ranked WHERE rank <= $topK"
-  }
+  def filteredTopkSql(nList: Int = 16, nProbe: Int = 4, labelKeep: Int = 1): String =
+    ivfCosSql(nList, nProbe, labelKeep = Some(labelKeep))
 
   // ---- Hybrid retrieval: reciprocal rank fusion (Cormack, Clarke &
   // Buettcher, SIGIR 2009) — the standard way production RAG stacks

@@ -592,8 +592,8 @@ object Sketches {
       )
   }
 
-  /** Shared CTE prefix: vals → level table → inserts → counter grid →
-    * exact lower-median anchor.
+  /** CTE prefix of [[quantileExtractSql]]: vals → level table →
+    * inserts → counter grid → exact lower-median anchor.
     */
   private def quantileCtes: String = {
     val ins = (0 until qDepth)
@@ -607,30 +607,6 @@ object Sketches {
       "med AS MATERIALIZED (SELECT g, vi AS xq, n FROM (" +
       "SELECT g, vi, row_number() OVER (PARTITION BY g ORDER BY o_totalprice, o_orderkey) AS rn, " +
       "count(*) OVER (PARTITION BY g) AS n FROM vals) WHERE rn = (n + 1) // 2)"
-  }
-
-  /** Oracle of the r17-retired `sketch_quantile` gate, retained as the
-    * cross-engine reference rendering of the dyadic range-query
-    * decomposition (the descent gate covers the build; see the
-    * gate-budget note in [[queries]]).
-    */
-  def quantileRankSql: String = {
-    val joins = (0 until qDepth)
-      .map(r =>
-        s"LEFT JOIN cnt c$r ON c$r.g = bits.g AND c$r.lvl = bits.lvl AND c$r.r = $r " +
-          s"AND c$r.b = ${qBucketSql(r, "bits.lvl", "bits.node")}"
-      )
-      .mkString(" ")
-    val mins = (0 until qDepth).map(r => s"coalesce(c$r.c, 0)").mkString(", ")
-    s"WITH $quantileCtes, " +
-      "exact AS (SELECT m.g, count(*) AS exact_rank FROM vals v JOIN med m ON v.g = m.g " +
-      "WHERE v.vi < m.xq GROUP BY m.g), " +
-      "bits AS MATERIALIZED (SELECT m.g, l.lvl, (m.xq // (2 * l.p2)) * 2 AS node " +
-      "FROM med m, lvls l WHERE (m.xq // l.p2) % 2 = 1), " +
-      s"est AS (SELECT bits.g, CAST(sum(least($mins)) AS BIGINT) AS est_rank FROM bits $joins GROUP BY bits.g) " +
-      "SELECT m.g AS o_orderpriority, m.n AS n_orders, m.xq AS median_floor, " +
-      "coalesce(x.exact_rank, 0) AS exact_rank, coalesce(e.est_rank, 0) AS est_rank " +
-      "FROM med m LEFT JOIN exact x ON x.g = m.g LEFT JOIN est e ON e.g = m.g"
   }
 
   /** Gate query: the EXTRACTION loop itself, cross-engine — per group

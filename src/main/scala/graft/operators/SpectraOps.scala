@@ -79,8 +79,8 @@ object SpectraOps {
     * exchanges when `presorted` (the caller guarantees channel-
     * partitioned, (channel, n)-sorted input, true straight off
     * Signal.long, same contract as FirOps.convPlus). Each full frame
-    * runs the fused detrend→window→|RFFT|² kernel (shared with the
-    * SpectrumSeg expression). Task memory is O(block + nfft) regardless
+    * runs the fused detrend→window→|RFFT|² kernel ([[graft.functions.Fft.Periodogram]]).
+    * Task memory is O(block + nfft) regardless
     * of channel length; stft boundary zeros are synthesized inside the
     * scan, so the head/tail union and the per-channel count broadcast
     * join disappear. This is the same rewrite that took the Hilbert
@@ -574,8 +574,7 @@ object SpectraOps {
 
   /** Segmented FFT Welch PSD — the large-nfft scale path: the same
     * streaming frame scan as [[periodograms]] at nfft=nfftF, O(nfft·log
-    * nfft) radix-2 kernel per frame (numerically identical to the
-    * previous WinRfftMag2 assembly: same left-associated mean, same
+    * nfft) radix-2 kernel per frame (left-associated mean,
     * (|X|²·norm)·2 association).
     */
   def psdWelchFast(sig: DataFrame, nfftF: Int, presorted: Boolean = false): DataFrame = {

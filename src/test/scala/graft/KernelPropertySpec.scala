@@ -256,7 +256,7 @@ class KernelPropertySpec extends AnyFunSuite {
   }
 }
 
-/** Non-power-of-two nfft goes through SpectrumSeg's direct-DFT branch;
+/** Non-power-of-two nfft goes through Fft.Periodogram's tabled-DFT branch;
   * verify the full Welch pipeline against an independent naive
   * implementation at nfft=48.
   */

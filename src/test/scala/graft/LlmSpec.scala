@@ -1618,6 +1618,25 @@ class IvfSpec extends org.scalatest.funsuite.AnyFunSuite {
       assert(rows.map(_.getInt(3)).sorted.sameElements(1 to rows.length))
     }
   }
+
+  // probing every cell routes every (query, other vector) pair, so the
+  // IVF router must reproduce brute force row for row — scores and
+  // ranks, not just recall
+  test("probing every cell equals brute force: ivfTopk ≡ topk, sq8TopkIvf ≡ sq8Topk") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val emb = (0 until 300)
+      .map(i => (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat), (i % 3).toLong))
+      .toDF("vec_id", "embedding", "label")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    val Sim = graft.llm.Similarity
+    val brute = rows(Sim.topk(emb))
+    assert(brute.size == 50)
+    assert(rows(Sim.ivfTopk(emb, nList = 16, nProbe = 16)) == brute)
+    val sq8 = rows(Sim.sq8Topk(emb))
+    assert(sq8.size == 50)
+    assert(rows(Sim.sq8TopkIvf(emb, nList = 16, nProbe = 16)) == sq8)
+  }
 }
 
 class SemDedupSpec extends org.scalatest.funsuite.AnyFunSuite {

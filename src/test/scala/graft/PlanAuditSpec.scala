@@ -185,6 +185,35 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  // The wide-payload rule, mechanical: a ranking window sorts
+  // (key, id, metric) only — embedding or code arrays join back after
+  // the prune. Checked on every action a flat ANN gate runs, the
+  // construction-time checkpoints and collects included.
+  test("flat ANN gates rank only narrow frames") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    import org.apache.spark.sql.types.ArrayType
+    def wideWindows(name: String, plans: Seq[SparkPlan]): Seq[String] =
+      plans.flatMap(SparkProbe.nodes).collect {
+        case w: WindowExecBase if w.child.output.exists(_.dataType.isInstanceOf[ArrayType]) =>
+          s"$name: ${w.nodeName} over ${w.child.output.filter(_.dataType.isInstanceOf[ArrayType]).map(_.name).mkString(", ")}"
+      }
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val probe = Seq((1L, Seq(1.0))).toDF("id", "v")
+      .withColumn("r", row_number().over(org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy("id")))
+    assert(wideWindows("probe", Seq(probe.queryExecution.executedPlan)).nonEmpty, "matcher is stale: misses an array under a window")
+    val gates = Seq(
+      "sim_topk", "sim_ivf_topk", "sim_filtered_topk", "sim_pq_topk", "sim_ivfpq_topk",
+      "sim_ivfpq_serve", "sim_ivfpq_trained", "sim_sq8_ivf", "sim_ivf_serve"
+    )
+    val bad = gates.flatMap { name =>
+      val (df, plans) = SparkProbe.actionPlans(SparkEntry.queries(name)(spark, sf))
+      wideWindows(name, plans :+ df.queryExecution.executedPlan)
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("star join broadcasts its dimension sides") {
     val plan = SparkEntry.queries("q2_join")(spark, sf).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"q2_join should broadcast dims:\n${plan.take(600)}")
