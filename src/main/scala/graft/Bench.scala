@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Prints ONE compact JSON line (the driver's contract)
@@ -14,11 +14,15 @@ import java.nio.file.{Files, Paths}
   * regressions); the detail file also records the warm spread (max−min)
   * so a noisy sample is visible as such. `cold_total` keeps the old
   * metric comparable. Seconds are rounded to 3 dp.
+  *
+  * A run is the whole answer: build plus a noop-sink write of every
+  * column (see `run`). A query that throws is listed under `failed`,
+  * left out of both totals, and makes the process exit 1 after the JSON
+  * line is printed.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // cwd-relative default so a git-worktree bench writes its OWN detail
     // file instead of clobbering the repo copy (r15 judge finding); the
     // env var still overrides for explicit placement
@@ -51,34 +55,15 @@ object Bench {
           """"([A-Za-z0-9_]+)":\{"cold":[-0-9.eE]+,"warm_median":([-0-9.eE]+),"warm_spread":([-0-9.eE]+)""".r
         re.findAllMatchIn(txt).map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble)).toMap
       } catch { case _: Throwable => Map.empty }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bench under the production extensions too (same session a
-      // cluster runs; rule overhead is part of the honest number)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.failOnGlobalWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // charge session/JIT warmup to a throwaway job, not the first query
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count()
+      try Harness.written(fn(spark, sfDir))
       catch { case _: Throwable => () }
     }
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
-    case class Timing(cold: Double, warmMedian: Double, warmSpread: Double)
-    val results = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }.map { case (name, fn) =>
-      val cold = time(fn)
-      val warms = Array(time(fn), time(fn), time(fn)).sorted
-      name -> Timing(cold, warms(1), warms(2) - warms(0))
-    }
+    val (results, failed) =
+      run(spark, sfDir, SparkEntry.queries.toSeq.filter { case (n, _) => only.forall(_.contains(n)) })
     def r3(d: Double): Double = math.rint(d * 1000) / 1000
     // The stdout line must survive the driver's byte-bounded stdout TAIL:
     // r8's full 156-query map (~4 KB) overflowed the window and the head
@@ -102,12 +87,14 @@ object Bench {
     val qs = results
       .collect { case (k, t) if headline.contains(k) => s"\"" + k + "\":" + r3(t.warmMedian) }
       .mkString("{", ",", "}")
-    val warmTotal = r3(results.values.map(_.warmMedian).sum)
-    val coldTotal = r3(results.values.map(_.cold).sum)
+    val warmTotal = r3(results.map(_._2.warmMedian).sum)
+    val coldTotal = r3(results.map(_._2.cold).sum)
     val soloTag = if (only.isDefined) s""""solo":true,""" else ""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$warmTotal,"unit":"sec",$soloTag"queries":$qs,""" +
-        s""""cold_total":$coldTotal,"n_queries":${results.size},"detail":"$detailPath","sf":"$sfDir"}"""
+        s""""cold_total":$coldTotal,"n_queries":${results.size},"failed":$failedJson,""" +
+        s""""detail":"$detailPath","sf":"$sfDir"}"""
     // regressed = delta exceeds both runs' observed noise plus a 50 ms
     // floor — spread-sized wobble on a co-tenant machine is not a signal
     def delta(k: String, t: Timing): Option[(Double, Boolean)] =
@@ -121,10 +108,11 @@ object Bench {
           .map { case (d, reg) => s""","prev_delta":$d,"regressed":$reg""" }
           .getOrElse("")
         s"\"" + k + s"\":{\"cold\":${r3(t.cold)},\"warm_median\":${r3(t.warmMedian)}," +
-          s"\"warm_spread\":${r3(t.warmSpread)}$trend}"
+          s"\"warm_spread\":${r3(t.warmSpread)},\"build_s\":${r3(t.build.seconds)}," +
+          s"\"exec_s\":${r3(t.exec.seconds)},\"build_jobs\":${t.build.jobs},\"exec_jobs\":${t.exec.jobs}$trend}"
       }
       .mkString("{", ",", "}")
-    val regressions = results.toSeq
+    val regressions = results
       .flatMap { case (k, t) => delta(k, t).collect { case (d, true) => s"""{"query":"$k","delta":$d}""" } }
       .mkString("[", ",", "]")
     try
@@ -132,10 +120,51 @@ object Bench {
         // a filtered dev run must not clobber the driver's artifact
         Paths.get(if (only.isDefined) detailPath + ".partial" else detailPath),
         s"""{"sf":"$sfDir",$soloTag"cold_total":$coldTotal,"warm_total":$warmTotal,""" +
-          s""""regressions":$regressions,"queries":$detail}"""
+          s""""failed":$failedJson,"regressions":$regressions,"queries":$detail}"""
       )
     catch { case _: Throwable => () }
     println(line)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[graft.Bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** One query's numbers: the cold run, the median and spread of three
+    * warm runs, and the median warm run's build/exec split.
+    */
+  final case class Timing(cold: Double, warmMedian: Double, warmSpread: Double, build: Harness.Run, exec: Harness.Run)
+
+  /** Times each query once cold and three times warm. A run is the
+    * query's construction (`fn()`, its eager checkpoint and collect jobs
+    * included) plus a noop-sink write of every column of the answer. A
+    * query that throws on any run gets no timing: it is returned, in
+    * order, in the failed list.
+    */
+  def run(
+      spark: SparkSession,
+      sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]
+  ): (Seq[(String, Timing)], Seq[String]) = {
+    def once(fn: (SparkSession, String) => DataFrame): (Harness.Run, Harness.Run) = {
+      val (df, build) = Harness.probe(spark)(fn(spark, sfDir))
+      val (_, exec) = Harness.probe(spark)(Harness.written(df))
+      (build, exec)
+    }
+    def total(r: (Harness.Run, Harness.Run)): Double = r._1.seconds + r._2.seconds
+    val outcomes = queries.map { case (name, fn) =>
+      try {
+        val cold = once(fn)
+        val warms = Vector.fill(3)(once(fn)).sortBy(total)
+        val (build, exec) = warms(1)
+        name -> Right(Timing(total(cold), total(warms(1)), total(warms(2)) - total(warms(0)), build, exec))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[graft.Bench] $name failed: ${e.getMessage}")
+          name -> Left(e)
+      }
+    }
+    (outcomes.collect { case (n, Right(t)) => n -> t }, outcomes.collect { case (n, Left(_)) => n })
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Throughput profiler at synthetic scale — the scale-up guard that the
@@ -21,26 +21,10 @@ object Prof {
     // NOT reduce the pair-phase spill (it is the data-sized external
     // sort of the true-positive pair stream, working as designed) and
     // added scheduling overhead on 32 cores — recorded in BASELINE.md.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("PROF_SHUFFLE", "32").toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // Decade runs set SPARK_GRAFT_CPUS=32 for the 32-core session.
+    val spark = Harness.session()
+    sys.env.get("PROF_SHUFFLE").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-
-    // per-phase task-memory high-water marks via listener
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          peakMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-          spilled.addAndGet(m.memoryBytesSpilled)
-          ()
-        }
-      }
-    })
 
     val nPerCh = sys.env.getOrElse("PROF_N", "2000000").toLong
     val nCh = 8
@@ -53,71 +37,48 @@ object Prof {
       )
     sig.persist()
     val total = sig.count()
-    // onTaskEnd delivery is async — drain the bus before resetting the
-    // counters or stragglers from the previous phase leak into this one
-    // (listenerBus is private[spark]; reflection, with a sleep fallback)
-    val drainBus: () => Unit = {
-      val sc = spark.sparkContext
-      try {
-        val m = sc.getClass.getMethod("listenerBus")
-        val bus = m.invoke(sc)
-        val wait = bus.getClass.getMethod("waitUntilEmpty")
-        () => { wait.invoke(bus); () }
-      } catch {
-        case _: Throwable => () => Thread.sleep(200)
-      }
-    }
     // PROF_ONLY=sub1,sub2 runs only phases whose name contains a listed
     // substring — lets a 100x-docs run target the linear selection stack
     // without paying the clique-quadratic-by-design pair phases
     val only: Option[Set[String]] = sys.env.get("PROF_ONLY").map(_.split(",").toSet)
     def t(name: String, denom: Long = total)(f: => Long): Unit = if (only.forall(_.exists(name.contains))) {
-      drainBus()
-      peakMem.set(0L); spilled.set(0L)
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      drainBus() // flush this phase's own onTaskEnd events before reading
+      val (rows, run) = Harness.probe(spark)(f)
+      val sec = run.seconds
       println(
         f"PROF $name%-22s ${sec}%7.2f s  ${denom / sec / 1e6}%8.2f Mrows/s  " +
-          f"peakTaskMem=${peakMem.get / (1 << 20)}%5d MiB  spill=${spilled.get / (1 << 20)}%4d MiB  rows=$rows"
+          f"peakTaskMem=${run.peakTaskMem / (1 << 20)}%5d MiB  spill=${run.spill / (1 << 20)}%4d MiB  rows=$rows"
       )
     }
-    // full materialization: a noop-sink write evaluates every column,
-    // where count() lets Catalyst prune the ones a kernel computes; the
-    // row count rides the same pass
-    def written(df: org.apache.spark.sql.DataFrame): Long = {
-      val obs = org.apache.spark.sql.Observation()
-      df.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
-      obs.get("rows").asInstanceOf[Long]
-    }
+    // a DataFrame phase times the whole answer: its build plus a
+    // noop-sink write of every column (rows counted in the same pass)
+    def phase(name: String, denom: Long = total)(df: => DataFrame): Unit = t(name, denom)(Harness.written(df))
     // channel-partitioned, (channel, n)-sorted copy — what Signal.long
     // hands the gate queries; isolates kernel+codec from the exchange
     val sigSorted = sig.repartition(col("channel"))
       .sortWithinPartitions(col("channel"), col("n")).persist()
     sigSorted.count()
-    t("warmup")(sig.limit(1000).count())
+    phase("warmup")(sig.limit(1000))
     val h75 = operators.HilbertOps.hilbertH
-    t("convPlus_75tap")(operators.FirOps.convPlus(sig, h75).count())
+    phase("convPlus_75tap")(operators.FirOps.convPlus(sig, h75))
     // the 8-kernel Morlet bank (17–121 taps, re + im) as ONE convBank scan
-    t("cwt_bank")(operators.CwtOps.cwtMorlet(sigSorted, presorted = true).count())
-    t("sosfilt_butter")(operators.IirOps.sosfilt(sig, operators.IirOps.butterLp).count())
-    t("sosfilt_presorted")(
-      operators.IirOps.sosfilt(sigSorted, operators.IirOps.butterLp, presorted = true).count()
+    phase("cwt_bank")(operators.CwtOps.cwtMorlet(sigSorted, presorted = true))
+    phase("sosfilt_butter")(operators.IirOps.sosfilt(sig, operators.IirOps.butterLp))
+    phase("sosfilt_presorted")(
+      operators.IirOps.sosfilt(sigSorted, operators.IirOps.butterLp, presorted = true)
     )
-    t("sosfiltfilt_presorted")(
-      operators.IirOps.sosfiltfilt(sigSorted, operators.IirOps.butterLp, presorted = true).count()
+    phase("sosfiltfilt_presorted")(
+      operators.IirOps.sosfiltfilt(sigSorted, operators.IirOps.butterLp, presorted = true)
     )
-    t("psd_welch_presorted")(
-      operators.SpectraOps.psdWelch(sigSorted, presorted = true).count()
+    phase("psd_welch_presorted")(
+      operators.SpectraOps.psdWelch(sigSorted, presorted = true)
     )
-    t("polyResample_3_2")(operators.ResampleOps.polyResample(sig, 3, 2, operators.ResampleOps.hRes32).count())
-    t("psd_welch_fft")(operators.SpectraOps.psdWelch(sig).count())
-    t("stft64_fft")(operators.SpectraOps.stft(sig).count())
-    t("hilbert_env")(operators.HilbertOps.hilbertEnv(sig).count())
+    phase("polyResample_3_2")(operators.ResampleOps.polyResample(sig, 3, 2, operators.ResampleOps.hRes32))
+    phase("psd_welch_fft")(operators.SpectraOps.psdWelch(sig))
+    phase("stft64_fft")(operators.SpectraOps.stft(sig))
+    phase("hilbert_env")(operators.HilbertOps.hilbertEnv(sig))
     // 257-tap Morlet quadrature pair through ONE segment assembly +
     // two SegConv FFT convolutions — the >128-tap CWT routing
-    t("cwt_long257")(operators.CwtOps.cwtMorletLong(sig).count())
+    phase("cwt_long257")(operators.CwtOps.cwtMorletLong(sig))
     // the signal cut along n into 8 recordings of 8 channels, through the
     // distributed EDF sink (one file per recording)
     t("edf_write") {
@@ -170,87 +131,87 @@ object Prof {
         .persist()
       val nDocs = docs.count()
       println(s"PROF docs corpus x$docsX = $nDocs docs")
-      t(s"docs${docsX}_exact", nDocs)(
-        docs.groupBy(md5(col("text")).as("h")).agg(count(lit(1))).count()
+      phase(s"docs${docsX}_exact", nDocs)(
+        docs.groupBy(md5(col("text")).as("h")).agg(count(lit(1)))
       )
-      t(s"docs${docsX}_quality", nDocs)(llm.Curation.curate(docs).count())
-      t(s"docs${docsX}_minhash_lsh", nDocs)(llm.Dedup.minhashCandidates(docs).count())
-      t(s"docs${docsX}_simhash_pairs", nDocs)(llm.Dedup.simhashPairs(docs).count())
-      t(s"docs${docsX}_components", nDocs) {
-        llm.Dedup.components(docs.select(col("doc_id")), llm.Dedup.simhashPairs(docs)).count()
+      phase(s"docs${docsX}_quality", nDocs)(llm.Curation.curate(docs))
+      phase(s"docs${docsX}_minhash_lsh", nDocs)(llm.Dedup.minhashCandidates(docs))
+      phase(s"docs${docsX}_simhash_pairs", nDocs)(llm.Dedup.simhashPairs(docs))
+      phase(s"docs${docsX}_components", nDocs) {
+        llm.Dedup.components(docs.select(col("doc_id")), llm.Dedup.simhashPairs(docs))
       }
       // round-7 selection stack: all must stay row-local/one-shuffle
-      t(s"docs${docsX}_gopher", nDocs)(llm.TextStats.gopher(docs).count())
-      t(s"docs${docsX}_c4_clean", nDocs)(llm.Curation.c4Clean(docs).count())
-      t(s"docs${docsX}_dsir", nDocs)(llm.Dsir.weights(docs).count())
-      t(s"docs${docsX}_langid_ngram", nDocs)(llm.TextStats.langidNgram(docs).count())
-      t(s"docs${docsX}_tokens_bpe", nDocs)(llm.Bpe.tokensBpe(docs).count())
+      phase(s"docs${docsX}_gopher", nDocs)(llm.TextStats.gopher(docs))
+      phase(s"docs${docsX}_c4_clean", nDocs)(llm.Curation.c4Clean(docs))
+      phase(s"docs${docsX}_dsir", nDocs)(llm.Dsir.weights(docs))
+      phase(s"docs${docsX}_langid_ngram", nDocs)(llm.TextStats.langidNgram(docs))
+      phase(s"docs${docsX}_tokens_bpe", nDocs)(llm.Bpe.tokensBpe(docs))
       // r16 mixture-optimizer decade: the unigram-LM shape (token
       // explode + tf join) plus source-row arithmetic — must track
       // text_unigram_lp's cost, never the corpus
-      t(s"docs${docsX}_mix_doremi", nDocs)(
-        llm.Curation.mixDoremi(docs).filter(col("mix_weight") >= 0).count()
+      phase(s"docs${docsX}_mix_doremi", nDocs)(
+        llm.Curation.mixDoremi(docs).filter(col("mix_weight") >= 0)
       )
       // r17: weights -> loader order — adds one per-source rank window
       // over the corpus + a 240-row schedule join on top of the chain
-      t(s"docs${docsX}_mix_schedule", nDocs)(
-        llm.Curation.mixSchedule(docs).filter(col("ord") >= 0).count()
+      phase(s"docs${docsX}_mix_schedule", nDocs)(
+        llm.Curation.mixSchedule(docs).filter(col("ord") >= 0)
       )
       // round-8 additions: incremental screen (store build + batch
       // screen) and header-directed video frame stats
-      t(s"docs${docsX}_bloom_screen", nDocs)(llm.Sketches.bloomScreen(docs).count())
-      t(s"docs${docsX}_sketch_hll", nDocs)(llm.Sketches.hllDistinct(docs).count())
-      t(s"docs${docsX}_corpus_profile", nDocs)(llm.Sketches.corpusProfile(docs).count())
+      phase(s"docs${docsX}_bloom_screen", nDocs)(llm.Sketches.bloomScreen(docs))
+      phase(s"docs${docsX}_sketch_hll", nDocs)(llm.Sketches.hllDistinct(docs))
+      phase(s"docs${docsX}_corpus_profile", nDocs)(llm.Sketches.corpusProfile(docs))
       // the SCALE banding (64 planes, 4x16-bit bands): the gate's
       // 4x6-bit config is sized for the 500-doc gate corpus — at 50k+
       // docs its 2^-6 per-band background collision rate admits tens of
       // millions of false candidates (measured: ~78M pairs, 30+ GB of
       // spill), exactly the widen-with-log(n) rule the scaladoc states
-      t(s"docs${docsX}_hash_embed_dup", nDocs)(
-        llm.Dedup.hashEmbedDupes(docs, 0.8, 64, 64, 4).count()
+      phase(s"docs${docsX}_hash_embed_dup", nDocs)(
+        llm.Dedup.hashEmbedDupes(docs, 0.8, 64, 64, 4)
       )
-      t(s"docs${docsX}_incremental", nDocs)(llm.Dedup.incrementalDedup(docs).count())
-      t(s"docs${docsX}_video_frames", nDocs)(
-        llm.Multimodal.videoFrames(llm.Multimodal.videoMediaFromIds(docs)).count()
+      phase(s"docs${docsX}_incremental", nDocs)(llm.Dedup.incrementalDedup(docs))
+      phase(s"docs${docsX}_video_frames", nDocs)(
+        llm.Multimodal.videoFrames(llm.Multimodal.videoMediaFromIds(docs))
       )
-      t(s"docs${docsX}_bpe_segments", nDocs)(llm.Bpe.segmentsBpe(docs).count())
+      phase(s"docs${docsX}_bpe_segments", nDocs)(llm.Bpe.segmentsBpe(docs))
       // round-10 additions: shift-robust CDC chunking, winnowing
       // fingerprints, and the full chunk→embed→retrieve composition
-      t(s"docs${docsX}_chunks_cdc", nDocs)(llm.TextStats.chunksCdc(docs).count())
-      t(s"docs${docsX}_winnow", nDocs)(written(llm.TextStats.winnow(docs)))
+      phase(s"docs${docsX}_chunks_cdc", nDocs)(llm.TextStats.chunksCdc(docs))
+      phase(s"docs${docsX}_winnow", nDocs)(llm.TextStats.winnow(docs))
       // the df-cap rule under the replica cliques: every original's fps
       // are shared by its docsX−1 siblings (true positives), so the cap
       // must WIDEN with the replica factor — 5·docsX keeps the 10×
       // behavior identical (cap 50 = the gate default) and de-vacuates
       // 100× (df ≈ 100 was silently capped out by the fixed 50; r16)
-      t(s"docs${docsX}_winnow_overlap", nDocs)(
-        written(llm.TextStats.winnowOverlap(docs, maxDf = 5 * docsX))
+      phase(s"docs${docsX}_winnow_overlap", nDocs)(
+        llm.TextStats.winnowOverlap(docs, maxDf = 5 * docsX)
       )
       // top-k report form: the s-cap bounds per-doc incidence and the
       // capped-fp-set class collapse removes exact-replica cliques; the
       // perturbed-replica residue stays clique-quadratic by design
-      t(s"docs${docsX}_winnow_topk", nDocs)(
-        written(llm.TextStats.winnowTopk(docs, maxDf = 5 * docsX))
+      phase(s"docs${docsX}_winnow_topk", nDocs)(
+        llm.TextStats.winnowTopk(docs, maxDf = 5 * docsX)
       )
       // scale banding (16 planes, 2×8-bit): the gate's 2×4-bit config is
       // sized for the 500-doc corpus; background candidates per query
       // grow ~nBands·nChunks·2^-width (the hePlanes widen rule)
-      t(s"docs${docsX}_retrieve_chunks", nDocs)(
-        written(llm.Dedup.retrieveChunks(docs, nPlanes = 16, nBands = 2))
+      phase(s"docs${docsX}_retrieve_chunks", nDocs)(
+        llm.Dedup.retrieveChunks(docs, nPlanes = 16, nBands = 2)
       )
       // r15: late-interaction MaxSim at the same scale banding — the
       // collision cap keeps stage 2 candidate-bounded, so the decade
       // pins that the full chunk-grid stage never goes corpus-sized
-      t(s"docs${docsX}_retrieve_maxsim", nDocs)(
-        written(llm.Dedup.retrieveMaxsim(docs, nPlanes = 16, nBands = 2))
+      phase(s"docs${docsX}_retrieve_maxsim", nDocs)(
+        llm.Dedup.retrieveMaxsim(docs, nPlanes = 16, nBands = 2)
       )
-      t(s"docs${docsX}_sketch_cms", nDocs)(llm.Sketches.cmsTopTokens(docs).count())
-      t(s"docs${docsX}_corpus_shard", nDocs)(llm.Curation.corpusShard(docs).count())
+      phase(s"docs${docsX}_sketch_cms", nDocs)(llm.Sketches.cmsTopTokens(docs))
+      phase(s"docs${docsX}_corpus_shard", nDocs)(llm.Curation.corpusShard(docs))
       // replicas of a >264-char doc share their clip prefix → hamming-0
       // cliques of size docsX; pair volume is clique-quadratic BY DESIGN
       // (every pair of a duplicate group IS a true positive)
-      t(s"docs${docsX}_wav_fp_pairs", nDocs)(
-        llm.Multimodal.wavFpPairs(llm.Multimodal.wavMediaFromDocs(docs)).count()
+      phase(s"docs${docsX}_wav_fp_pairs", nDocs)(
+        llm.Multimodal.wavFpPairs(llm.Multimodal.wavMediaFromDocs(docs))
       )
       // round-11 additions: URL curation (row-local canon + ONE
       // canon-keyed min window), chunk-level exact dedup (one
@@ -259,11 +220,11 @@ object Prof {
       // suffix, so every ≥runLen-token original body is a TRUE
       // multi-doc shared run group at every decade (run groups of
       // size docsX, never all-pairs: the gram aggregate is keyed)
-      t(s"docs${docsX}_curate_url", nDocs)(llm.Urls.curateUrl(docs).count())
+      phase(s"docs${docsX}_curate_url", nDocs)(llm.Urls.curateUrl(docs))
       // r17: redirect-chain resolution at the decade — 4 doubling
       // joins over the canon-keyed frame; the status filter forces the
       // join chain (the bare-count join-elimination trap)
-      t(s"docs${docsX}_crawl_redirects", nDocs)(
+      phase(s"docs${docsX}_crawl_redirects", nDocs)(
         llm.Urls
           .resolveRedirects(
             docs.select(
@@ -273,7 +234,6 @@ object Prof {
             )
           )
           .filter(col("status") === "ok")
-          .count()
       )
       // r17: the export capstone at the decade — keep-set window + BPE
       // count + ONE shard-keyed aggregation (manifest = 16 rows)
@@ -283,50 +243,48 @@ object Prof {
       // r17: PHYSICAL export + loader-side verification — shard files
       // really written, manifest recomputed from the files alone; the
       // ok filter forces the full-outer compare
-      t(s"docs${docsX}_export_verify", nDocs) {
+      phase(s"docs${docsX}_export_verify", nDocs) {
         val out = graft.sources.Scratch.dir("prof_export_verify")
         val ed = docs.select(col("doc_id"), col("text"))
         val merges = llm.Bpe.gateMerges(ed)
         val m = llm.Curation.exportShards(ed, out, merges).localCheckpoint()
-        llm.Curation.exportVerify(spark, out, m, merges).filter(col("ok")).count()
+        llm.Curation.exportVerify(spark, out, m, merges).filter(col("ok"))
       }
       // r17: incremental re-export — two manifest chains + a 16-row
       // join; the dirty filter forces both sides
-      t(s"docs${docsX}_export_manifest_inc", nDocs)(
+      phase(s"docs${docsX}_export_manifest_inc", nDocs)(
         llm.Curation
           .exportManifestInc(docs.filter(col("doc_id") % 1000 =!= 7), docs)
           .filter(col("dirty"))
-          .count()
       )
-      t(s"docs${docsX}_dedup_chunks", nDocs)(llm.Dedup.dedupChunks(docs).count())
-      t(s"docs${docsX}_dedup_runs", nDocs)(llm.Dedup.sharedRuns(docs).count())
+      phase(s"docs${docsX}_dedup_chunks", nDocs)(llm.Dedup.dedupChunks(docs))
+      phase(s"docs${docsX}_dedup_runs", nDocs)(llm.Dedup.sharedRuns(docs))
       // round-12 additions: line-level dedup (replicas share every
       // 8-token body line with their siblings EXCEPT the one carrying
       // the replica suffix → line-hash groups of size docsX, keyed,
       // never pairwise) and the row-local script histogram
-      t(s"docs${docsX}_dedup_lines", nDocs)(llm.Dedup.dedupLines(docs).count())
-      t(s"docs${docsX}_text_scripts", nDocs)(llm.TextStats.textScripts(docs).count())
+      phase(s"docs${docsX}_dedup_lines", nDocs)(llm.Dedup.dedupLines(docs))
+      phase(s"docs${docsX}_text_scripts", nDocs)(llm.TextStats.textScripts(docs))
       // round-12 second wave: char-level gear CDC (48-term lag-sum per
       // char — the priciest row-local family, ~2048 chars × 48 lags),
       // KN bigram scoring (four keyed aggs + joins back), and the
       // composed per-source dedup report / datasheet card
-      t(s"docs${docsX}_chunks_gear", nDocs)(llm.TextStats.chunksGear(docs).count())
-      t(s"docs${docsX}_bigram_kn", nDocs)(llm.TextStats.bigramKn(docs).count())
-      t(s"docs${docsX}_dedup_report", nDocs)(llm.Dedup.dedupReport(docs).count())
-      t(s"docs${docsX}_corpus_card", nDocs)(llm.Curation.corpusCard(docs).count())
+      phase(s"docs${docsX}_chunks_gear", nDocs)(llm.TextStats.chunksGear(docs))
+      phase(s"docs${docsX}_bigram_kn", nDocs)(llm.TextStats.bigramKn(docs))
+      phase(s"docs${docsX}_dedup_report", nDocs)(llm.Dedup.dedupReport(docs))
+      phase(s"docs${docsX}_corpus_card", nDocs)(llm.Curation.corpusCard(docs))
       // round-12 third wave: RAKE keywords (two doc-keyed windows + one
       // vocab agg), A-ES weighted sampling (row-local key + one
       // source-keyed top-k window), PageRank (8 edge-join+agg rounds on
       // a 20-node host graph — iteration scheduling, not data, is the
       // cost), and soft-dedup weights off the components pass
-      t(s"docs${docsX}_text_rake", nDocs)(llm.TextStats.textRake(docs).count())
-      t(s"docs${docsX}_sample_weighted", nDocs)(
+      phase(s"docs${docsX}_text_rake", nDocs)(llm.TextStats.textRake(docs))
+      phase(s"docs${docsX}_sample_weighted", nDocs)(
         llm.Curation
           .sampleWeighted(docs.withColumn("n_chars", length(col("text")).cast("long")))
-          .count()
       )
-      t(s"docs${docsX}_pagerank", nDocs)(llm.Urls.hostPagerank(docs).count())
-      t(s"docs${docsX}_dedup_weights", nDocs)(llm.Dedup.softDedupWeights(docs).count())
+      phase(s"docs${docsX}_pagerank", nDocs)(llm.Urls.hostPagerank(docs))
+      phase(s"docs${docsX}_dedup_weights", nDocs)(llm.Dedup.softDedupWeights(docs))
       // unigram-LM EM fit: corpus-sized work is the ONE word-count agg;
       // each round is a pass over the distinct-word frame vs the
       // broadcast vocab. Gate config first (the oracle-replayable
@@ -399,11 +357,11 @@ object Prof {
       // threshold curve rides the pairs pass; PMI is the vocab²-keyed
       // windowed-pair aggregation (the priciest text join family —
       // pair volume ~ 2·tokens)
-      t(s"docs${docsX}_threshold_curve", nDocs)(llm.Dedup.thresholdCurve(docs).count())
+      phase(s"docs${docsX}_threshold_curve", nDocs)(llm.Dedup.thresholdCurve(docs))
       // r13: containment rides the same banded candidates + row-local
       // shingle sets as jaccard — decade cost should track it
-      t(s"docs${docsX}_containment", nDocs)(llm.Dedup.containment(docs).count())
-      t(s"docs${docsX}_text_pmi", nDocs)(llm.TextStats.textPmi(docs).count())
+      phase(s"docs${docsX}_containment", nDocs)(llm.Dedup.containment(docs))
+      phase(s"docs${docsX}_text_pmi", nDocs)(llm.TextStats.textPmi(docs))
       docs.unpersist()
       ()
     }
@@ -420,7 +378,7 @@ object Prof {
           transform(sequence(lit(1), lit(64)), j => sin(col("id") * 0.37 + j.cast("double"))).as("embedding")
         )
         .withColumn("label", lit(0))
-      t(s"emb${embK}k_pca", embK * 1000L)(llm.Similarity.pcaTop(spark, emb).count())
+      phase(s"emb${embK}k_pca", embK * 1000L)(llm.Similarity.pcaTop(spark, emb))
       // r12: cell-scoped families at the decade. Candidate volume is
       // Σ|cell|², so nList MUST widen with n (the gate pins the
       // oracle-replayable 16; 16 cells at 100k vectors on this smooth
@@ -431,25 +389,25 @@ object Prof {
       // ELIMINATE the cardinality-preserving left join and skip the
       // pair scoring entirely (measured: 1.5 s "decade" that computed
       // nothing).
-      t(s"emb${embK}k_semdedup", embK * 1000L)(
-        llm.Similarity.semDedup(emb, nList = 128).filter(!col("kept")).count()
+      phase(s"emb${embK}k_semdedup", embK * 1000L)(
+        llm.Similarity.semDedup(emb, nList = 128).filter(!col("kept"))
       )
-      t(s"emb${embK}k_knn_graph", embK * 1000L)(
-        llm.Similarity.knnGraph(emb, nList = 128).count()
+      phase(s"emb${embK}k_knn_graph", embK * 1000L)(
+        llm.Similarity.knnGraph(emb, nList = 128)
       )
       // r14: the graph-walk consumer end-to-end (edge build + beam
       // walk + re-rank) at the scale config — budget per query is
       // seeds + rounds·beam·k, independent of |cell|
-      t(s"emb${embK}k_graph_serve", embK * 1000L)(
-        llm.Similarity.graphServe(emb, nList = 128, k = 8, beam = 16, rounds = 3).count()
+      phase(s"emb${embK}k_graph_serve", embK * 1000L)(
+        llm.Similarity.graphServe(emb, nList = 128, k = 8, beam = 16, rounds = 3)
       )
-      t(s"emb${embK}k_communities", embK * 1000L)(
-        llm.Similarity.lpCommunities(emb, nList = 128).count()
+      phase(s"emb${embK}k_communities", embK * 1000L)(
+        llm.Similarity.lpCommunities(emb, nList = 128)
       )
       // deflation reuses the ONE collected covariance; extra components
       // cost only driver iterate time — wall should track pcaTop
-      t(s"emb${embK}k_pca_k", embK * 1000L)(llm.Similarity.pcaTopK(spark, emb).count())
-      t(s"emb${embK}k_whiten", embK * 1000L)(llm.Similarity.pcaWhiten(spark, emb).count())
+      phase(s"emb${embK}k_pca_k", embK * 1000L)(llm.Similarity.pcaTopK(spark, emb))
+      phase(s"emb${embK}k_whiten", embK * 1000L)(llm.Similarity.pcaWhiten(spark, emb))
       // trained IVF+PQ end-to-end at the decade: a deterministic
       // 64-cluster corpus (sin-hashed latent center + hash-DECORRELATED
       // noise — a smooth sin(id·phase) noise term makes same-cluster
@@ -799,7 +757,7 @@ object Prof {
         .groupBy(col("h")).agg(count(lit(1)).as("d"))
         .agg(max(col("d"))).collect()(0).getLong(0)
       println(s"PROF tri graph: $mDist distinct edges, $nHosts hosts, maxDeg=$maxDeg")
-      t(s"tri${triK}k_oriented", mDist) {
+      phase(s"tri${triK}k_oriented", mDist) {
         val deg = edges
           .select(explode(array(col("u"), col("v"))).as("h"))
           .groupBy(col("h")).agg(count(lit(1)).as("deg"))
@@ -815,7 +773,6 @@ object Prof {
         e.as("e1")
           .join(e.as("e2"), col("e1.b") === col("e2.a"))
           .join(e.as("e3"), col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-          .count()
       }
       // r14: k-core peel on the same skewed graph — per round one
       // exploded degree count + two equi-joins on the SHRINKING edge
@@ -876,25 +833,24 @@ object Prof {
         sources.WarcOps.writeSpark(pages, warcDir, nFiles = 32)
         nPages
       }
-      t(s"web${webK}k_warc_read", nPages)(
-        sources.WarcOps.readSpark(spark, warcDir + "/part-*.warc").count()
+      phase(s"web${webK}k_warc_read", nPages)(
+        sources.WarcOps.readSpark(spark, warcDir + "/part-*.warc")
       )
-      t(s"web${webK}k_html_extract", nPages)(
-        llm.Curation.htmlExtractPages(pages).filter(col("n_kept") > 0).count()
+      phase(s"web${webK}k_html_extract", nPages)(
+        llm.Curation.htmlExtractPages(pages).filter(col("n_kept") > 0)
       )
       // r15 CDX decades: the index projection (row-local SURT/digest
       // off the parse) and ranged-read serving of a 1-in-20 sample —
       // the wayback consumer's O(record)-per-lookup contract at scale
-      t(s"web${webK}k_cdx_build", nPages)(
+      phase(s"web${webK}k_cdx_build", nPages)(
         sources.WarcOps
           .cdxIndex(sources.WarcOps.readSpark(spark, warcDir + "/part-*.warc"))
           .filter(col("digest").isNotNull)
-          .count()
       )
       // r15 revisit decade: crawl-2 egress against crawl-1's CDX —
       // the storage-dedup join + conditional render at page scale
       // (~1/3 of pages change inside the render window)
-      t(s"web${webK}k_warc_revisit", nPages) {
+      phase(s"web${webK}k_warc_revisit", nPages) {
         val cdx1 = sources.WarcOps
           .cdxIndex(sources.WarcOps.readSpark(spark, warcDir + "/part-*.warc"))
           .select(col("url").as("uri"), col("digest"))
@@ -913,9 +869,8 @@ object Prof {
         sources.WarcOps
           .readSpark(spark, revDir + "/part-*.warc")
           .filter(col("warc_type") === "revisit")
-          .count()
       }
-      t(s"web${webK}k_cdx_lookup", nPages / 20) {
+      phase(s"web${webK}k_cdx_lookup", nPages / 20) {
         val cdx = sources.WarcOps
           .cdxIndex(sources.WarcOps.readSpark(spark, warcDir + "/part-*.warc"))
           .select(
@@ -928,7 +883,6 @@ object Prof {
         sources.WarcOps
           .fetchRecords(cdx, warcDir)
           .filter(col("fetch_status") === "200")
-          .count()
       }
       // r16 dated-merge decade: THREE dated crawls (full base crawl +
       // two overlapping re-crawl subsets with changed text), CDX-indexed
@@ -966,19 +920,18 @@ object Prof {
           .unionByName(cdxOf(mrgRoot + "/c2", "c2"))
           .unionByName(cdxOf(mrgRoot + "/c3", "c3"))
       }
-      t(s"web${webK}k_cdx_merge3", nPages)(
+      phase(s"web${webK}k_cdx_merge3", nPages)(
         // latest_ts rides the max_by — filtering on it forces the full
         // argmax, not just the prunable capture count
         sources.WarcOps
           .cdxMergeLatest(mergeChain())
           .filter(col("latest_ts") > "0")
-          .count()
       )
       // r16 recrawl-priority decade: change-rate estimate + prioritized
       // politeness schedule off the same 3-crawl chain (urls rewritten
       // onto the 20-host site plant so the schedule's host-delay class
       // parses)
-      t(s"web${webK}k_crawl_priority", nPages) {
+      phase(s"web${webK}k_crawl_priority", nPages) {
         val chain = mergeChain().withColumn(
           "url",
           concat(
@@ -991,13 +944,12 @@ object Prof {
         sources.WarcOps
           .prioritySchedule(sources.WarcOps.recrawlPriority(chain))
           .filter(col("fetch_at_ms") >= 0)
-          .count()
       }
       // r16 fused-priority decade: the publisher-signal class join over
       // the same 3-crawl chain — a synthetic sitemap lists 8/9 of URLs
       // with ~half the lastmods after the latest capture, so both
       // classes populate and the join/window carry real selectivity
-      t(s"web${webK}k_priority_fused", nPages) {
+      phase(s"web${webK}k_priority_fused", nPages) {
         val chain = mergeChain().withColumn(
           "url",
           concat(
@@ -1019,12 +971,11 @@ object Prof {
         sources.WarcOps
           .fusedSchedule(sources.WarcOps.fusedPriority(chain, smAligned))
           .filter(col("fetch_at_ms") >= 0)
-          .count()
       }
       // byte-level BPE end-to-end (remap + trainer collect + encode)
       // on the same corpus — the ByteRemap expression's decade
-      t(s"web${webK}k_bpe_bytes", nPages)(
-        llm.Bpe.tokensBpeBytes(webDocs).filter(col("decode_ok")).count()
+      phase(s"web${webK}k_bpe_bytes", nPages)(
+        llm.Bpe.tokensBpeBytes(webDocs).filter(col("decode_ok"))
       )
       // r15 derivative-emission decades: WET (extraction text as
       // conversion records) and gzipped WARC (one member per record)
@@ -1042,8 +993,8 @@ object Prof {
         sources.WarcOps.writeWetSpark(texts, wetDir, nFiles = 32)
         nPages
       }
-      t(s"web${webK}k_wet_read", nPages)(
-        sources.WarcOps.readSpark(spark, wetDir + "/part-*.wet").count()
+      phase(s"web${webK}k_wet_read", nPages)(
+        sources.WarcOps.readSpark(spark, wetDir + "/part-*.wet")
       )
       texts.unpersist()
       val gzDir = sources.Scratch.dir("prof_warc_gz")
@@ -1051,16 +1002,15 @@ object Prof {
         sources.WarcOps.writeSpark(pages, gzDir, nFiles = 32, gzip = true)
         nPages
       }
-      t(s"web${webK}k_warc_gz_read", nPages)(
-        sources.WarcOps.readSpark(spark, gzDir + "/part-*.warc.gz").count()
+      phase(s"web${webK}k_warc_gz_read", nPages)(
+        sources.WarcOps.readSpark(spark, gzDir + "/part-*.warc.gz")
       )
       // r15 gz CDX decade: member splitting with compressed-byte
       // accounting (the Inflater path) at page scale
-      t(s"web${webK}k_cdx_gz_build", nPages)(
+      phase(s"web${webK}k_cdx_gz_build", nPages)(
         sources.WarcOps
           .cdxIndex(sources.WarcOps.readSparkGz(spark, gzDir + "/part-*.warc.gz"))
           .filter(col("digest").isNotNull)
-          .count()
       )
       // r16 sitemap decades: sharded render (protocol shape — one
       // host-keyed agg over entry strings, files capped at 100 URLs so
@@ -1078,12 +1028,10 @@ object Prof {
           ).as("canon")
         )
       val smSharded = llm.Sitemaps.sitemapRenderSharded(smUrls, maxPerFile = 100)
-      t(s"web${webK}k_sitemap_render", nPages) {
-        smSharded.localCheckpoint().count()
-      }
+      phase(s"web${webK}k_sitemap_render", nPages)(smSharded)
       val smCk = smSharded.localCheckpoint()
       t(s"web${webK}k_sitemap_parse", nPages) {
-        val n = llm.Sitemaps.sitemapParse(smCk.select(col("host"), col("xml"))).count()
+        val n = Harness.written(llm.Sitemaps.sitemapParse(smCk.select(col("host"), col("xml"))))
         require(n == nPages, s"sitemap parse tiling: $n != $nPages")
         n
       }
@@ -1116,7 +1064,7 @@ object Prof {
       // the operator, not an artificial 200k×1.4KB string-join shuffle
       t(s"web${webK}k_charset_decode", nPages) {
         val out = sources.Charsets.decodeFetched(sources.Charsets.fetchPlant(webDocs))
-        val n = out.filter(col("text_out") === col("page")).count()
+        val n = Harness.written(out.filter(col("text_out") === col("page")))
         require(n == nPages, s"charset roundtrip: $n != $nPages")
         n
       }
@@ -1196,7 +1144,7 @@ object Prof {
       runDocs.count()
       // scale config: 64-bit rolling ShingleHashes gram ids (the md5
       // gate form measured 1.5 GiB spill here — BASELINE.md r14)
-      t(s"runs${runsK}k_shared", nDocs)(llm.Dedup.sharedRunsFast(runDocs).count())
+      phase(s"runs${runsK}k_shared", nDocs)(llm.Dedup.sharedRunsFast(runDocs))
       runDocs.unpersist()
       ()
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,19 +20,10 @@ object Verify {
       new java.io.File(outDir).mkdirs()
       Files.writeString(Paths.get(s"$outDir/FILTERED_RUN"), msg)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the gate runs the session a CLUSTER would run: production
-      // extensions installed, analysis-time scale guard armed — any
-      // query GlobalWindowCheck rejects is a real finding
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.failOnGlobalWindow", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the gate runs the session a CLUSTER would run: production
+    // extensions installed, analysis-time scale guard armed — any
+    // query GlobalWindowCheck rejects is a real finding
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // a query that throws must leave NO output behind: a previous run's
     // parquet in a reused out dir would otherwise pass the compare

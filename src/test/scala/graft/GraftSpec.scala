@@ -26,6 +26,7 @@ object TestSpark {
 
 class HarnessSpec extends AnyFunSuite {
   import TestSpark._
+  import org.apache.spark.sql.functions.{col, expr}
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -44,10 +45,48 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("all queries run non-empty at sf0.001") {
+    // every column written, so a crash in a column count() would prune
+    // fails here too
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      val n = Harness.written(fn(spark, sf))
       assert(n > 0, s"query $name returned 0 rows")
     }
+  }
+
+  // count() succeeds on this frame: Catalyst prunes the failing column
+  private def prunedBoom =
+    spark.range(3).select(col("id"), expr("assert_true(id < 0)").as("boom"))
+
+  test("Harness.written evaluates the columns count() prunes") {
+    assert(prunedBoom.count() == 3)
+    intercept[Exception](Harness.written(prunedBoom))
+    assert(Harness.written(spark.range(3).select(col("id"), expr("assert_true(id >= 0)").as("ok"))) == 3)
+  }
+
+  test("Bench.run reports every query that throws as failed, never as a timing") {
+    val (timed, failed) = Bench.run(
+      spark,
+      sf,
+      Seq(
+        "good" -> ((s: SparkSession, _: String) => s.range(5).toDF("id")),
+        "throws_at_build" -> ((_: SparkSession, _: String) => throw new IllegalStateException("build")),
+        "throws_in_pruned_column" -> ((_: SparkSession, _: String) => prunedBoom)
+      )
+    )
+    assert(failed == Seq("throws_at_build", "throws_in_pruned_column"))
+    assert(timed.map(_._1) == Seq("good"))
+    val t = timed.head._2
+    assert(t.cold > 0 && t.warmMedian > 0 && t.exec.jobs > 0)
+  }
+
+  test("Harness.probe counts only its own block's jobs") {
+    val sc = spark.sparkContext
+    // another block's jobs, their listener events possibly still queued
+    (1 to 5).foreach(_ => sc.parallelize(1 to 100, 4).count())
+    val (n, one) = Harness.probe(spark)(sc.parallelize(1 to 10, 2).count())
+    assert(n == 10 && one.jobs == 1 && one.stages == 1, one)
+    val (_, three) = Harness.probe(spark)((1 to 3).foreach(_ => sc.parallelize(1 to 10, 2).count()))
+    assert(three.jobs == 3, three)
   }
 }
 
