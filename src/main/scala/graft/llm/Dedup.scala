@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Rounds, Tables}
 
 /** Deduplication family for training-data pipelines:
   * exact (hash-groupBy), MinHash-LSH candidates, shingle-Jaccard
@@ -596,7 +596,7 @@ object Dedup {
     * step (1) lowered. 0 means labels are constant along every edge,
     * hence equal to the component minimum, and the loop stops there (no
     * separate witness job, no sentinel). Every checkpoint's size
-    * estimate is its observed row count (see [[checkpointObserved]]).
+    * estimate is its observed row count (see [[graft.core.Rounds]]).
     *
     * Memory outside Spark's manager (neither spills): the per-partition
     * union-find ([[LongUnionFind]]) holds at most 40 bytes per distinct
@@ -619,42 +619,42 @@ object Dedup {
   private[graft] def componentLabels(pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val (edges, _) = checkpointObserved(
-      pairs
-        .select(
-          explode(
-            array(
-              struct(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")),
-              struct(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst"))
-            )
-          ).as("e")
-        )
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .repartition(col("dst"))
-    )
-    val (seed, split) = checkpointObserved(
-      edges
-        .as[(Long, Long)]
-        .mapPartitions { it =>
-          val uf = new LongUnionFind
-          it.foreach { case (s, d) => uf.union(s, d) }
-          Iterator.tabulate(uf.size)(i => (uf.id(i), uf.rootId(i)))
-        }
-        .toDF("doc_id", "root")
-        .groupBy(col("doc_id"))
-        .agg(min(col("root")).as("comp"), max(col("root")).as("hi")),
-      count(when(col("comp") =!= col("hi"), lit(1))).as("changed")
-    )
-    var labels = seed.select(col("doc_id"), col("comp"))
-    var changed = split("changed")
-    var rounds = 0
-    while (changed > 0 && rounds < maxIters) {
+    val (edges, seed, split) = Rounds.round("components", 0) {
+      val (edges, _) = Rounds.checkpoint(
+        pairs
+          .select(
+            explode(
+              array(
+                struct(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")),
+                struct(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst"))
+              )
+            ).as("e")
+          )
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .filter(col("src").isNotNull && col("dst").isNotNull)
+          .repartition(col("dst"))
+      )
+      val (seed, split) = Rounds.checkpoint(
+        edges
+          .as[(Long, Long)]
+          .mapPartitions { it =>
+            val uf = new LongUnionFind
+            it.foreach { case (s, d) => uf.union(s, d) }
+            Iterator.tabulate(uf.size)(i => (uf.id(i), uf.rootId(i)))
+          }
+          .toDF("doc_id", "root")
+          .groupBy(col("doc_id"))
+          .agg(min(col("root")).as("comp"), max(col("root")).as("hi")),
+        count(when(col("comp") =!= col("hi"), lit(1))).as("changed")
+      )
+      (edges, seed.select(col("doc_id"), col("comp")), split("changed"))
+    }
+    val run = Rounds.fixpoint("components", seed, maxIters, split) { labels =>
       val msgs = edges
         .join(labels.select(col("doc_id").as("dst"), col("comp").as("nc")).hint("SHUFFLE_HASH"), Seq("dst"))
         .select(col("src").as("doc_id"), col("nc").as("comp"), lit(null).cast("long").as("old"))
       // eager: stepped feeds the hook and both sides of the jump
-      val (stepped, lowered) = checkpointObserved(
+      val (stepped, lowered) = Rounds.checkpoint(
         labels
           .select(col("doc_id"), col("comp"), col("comp").as("old"))
           .unionByName(msgs)
@@ -662,9 +662,8 @@ object Dedup {
           .agg(min(col("comp")).as("comp"), min(col("old")).as("old")),
         count(when(col("comp") < col("old"), lit(1))).as("changed")
       )
-      changed = lowered("changed")
-      labels =
-        if (changed == 0) stepped.select(col("doc_id"), col("comp"))
+      val next =
+        if (lowered("changed") == 0) stepped.select(col("doc_id"), col("comp"))
         else {
           val hooked = stepped
             .select(col("doc_id"), col("comp"))
@@ -679,25 +678,10 @@ object Dedup {
             )
             .select(col("doc_id"), col("jcomp").as("comp"))
         }
-      rounds += 1
+      (next, lowered("changed"))
     }
-    require(changed == 0, s"components: not converged after $maxIters rounds")
-    (labels, rounds)
-  }
-
-  /** Eager localCheckpoint of `df` plus its row count and `metrics`
-    * (Long-valued), all observed on the checkpoint's own action. The
-    * checkpoint's size estimate is re-based on the observed row count
-    * ([[org.apache.spark.sql.graftbridge.Bridge.withRowCount]]): a
-    * checkpoint keeps its origin plan's estimate and joins multiply
-    * estimates, so over the rounds the estimate (a BigInt) squared every
-    * round and planning stalled after about 20 rounds.
-    */
-  private def checkpointObserved(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Long]) = {
-    val obs = Observation()
-    val ck = df.observe(obs, count(lit(1)).as("rows"), metrics: _*).localCheckpoint()
-    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    (org.apache.spark.sql.graftbridge.Bridge.withRowCount(ck, m("rows")), m)
+    require(run.converged, s"components: not converged after $maxIters rounds")
+    (run.frame, run.rounds)
   }
 
   /** Union-find over arbitrary 64-bit ids in primitive arrays; each root
@@ -1642,7 +1626,7 @@ object Dedup {
   private def chunkVectors(docs: DataFrame, nPlanes: Int, nBands: Int): DataFrame = {
     require(nPlanes % nBands == 0, s"nBands $nBands must divide plane count $nPlanes")
     val width = nPlanes / nBands
-    val (sums, obs) = checkpointObserved(
+    val (sums, obs) = Rounds.checkpoint(
       chunkSums(docs),
       (0 until rcDim).map(b => sum(element_at(col("s"), b + 1).cast("long")).as(s"t$b")): _*
     )

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Tables}
+import graft.core.{Dsp, Rounds, Tables}
 
 /** Similarity search over the embedding column (`embeddings.embedding`,
   * 64-dim float vectors).
@@ -805,13 +805,8 @@ object Similarity {
     * production probes the nProbe nearest cells per vector (the
     * sim_ivf multi-probe machinery) — same plan, more candidate rows.
     */
-  def knnGraph(emb: DataFrame, nList: Int = 16, k: Int = 3): DataFrame = {
-    val vs = vecsN(emb)
-    val cents = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    knnEdgesFrom(cellAssign(emb, cents), k)
-  }
+  def knnGraph(emb: DataFrame, nList: Int = 16, k: Int = 3): DataFrame =
+    knnEdgesFrom(firstCells(emb, nList), k)
 
   /** Argmin cell assignment of every vector against a broadcast
     * centroid frame — (vec_id, cid, v, nrm, d2), the min_by shape the
@@ -962,29 +957,25 @@ object Similarity {
   def knnGraphSql(nList: Int = 16, k: Int = 3): String =
     s"WITH ${knnCtes(nList)} SELECT vid_a, vid_b, cos, rank FROM r WHERE rank <= $k"
 
-  /** Graph-walk ANN serving over the materialized [[knnGraph]] edge
-    * table — the HNSW-layer-0 consumer the r13 verdict asked for: the
-    * k-NN graph finally has a serving path instead of being a terminal
-    * artifact. Per query: SEED at the query's `beam` nearest cell
-    * centroids (the IVF probe's entry points — centroids ARE corpus
-    * vectors in the deterministic config), then `rounds` bounded beam
-    * steps — score the visited set against the query, keep the top
-    * `beam` (rounded cos, vid tie-break — total order, the
-    * artifact_mask parity rule), expand their graph neighbors, union
-    * into visited — and finish with an exact re-rank of the visited
-    * set. Every step is an equi-join or a qid-partitioned window;
-    * per-round `localCheckpoint` stops the union fan-out re-evaluating
-    * the walk subtree (the components() rule). The candidate budget is
-    * seeds + rounds·beam·k rows per query — independent of cell size,
-    * which is the point: IVF's nProbe budget grows with |cell| ≈
-    * n/nList, the walk's doesn't, so at the 100k decade the walk
-    * reaches IVF-level recall at a tenth of the scored candidates
-    * (ScaleSpec pins recall ≥ IVF nProbe=4 at ≤ its budget). Gate
-    * config (nList=16, k=3, beam=4, rounds=2) is the SQL-replayable
-    * narrow one — the walk is deterministic by construction, so the
-    * oracle replays every round as chained CTEs (curate_pagerank
-    * precedent); ScaleSpec runs the scale config (k=8, beam=8,
-    * rounds=3) where the recall claim lives.
+  /** Graph-walk ANN serving over a k-NN edge table (HNSW layer 0). Per
+    * query: seeds, `rounds` best-first beam steps, an exact re-rank of
+    * the visited set. The candidate budget (seeds + rounds·beam·degree
+    * per query) does not grow with cell size, unlike IVF's nProbe
+    * budget (ScaleSpec pins recall ≥ IVF nProbe=4 at ≤ its budget). The
+    * four entry points are configurations of one path (edges × seeds ×
+    * walk scorer → [[beamWalk]] → [[walkRerank]]):
+    *
+    * | entry point         | edges ([[walkGraph]])                 | seeds                          | walk scorer  |
+    * |---------------------|---------------------------------------|--------------------------------|--------------|
+    * | `graphServe`        | k-NN over the first-nList cells       | the query's `beam` nearest cells | exact      |
+    * | `graphServeHier`    | k-NN ∪ in-cell hierarchy, same cells  | the same                       | exact        |
+    * | `graphServeHierSq8` | k-NN ∪ in-cell hierarchy, same cells  | the same                       | SQ8 codes    |
+    * | `graphServeTrained` | k-NN (∪ hierarchy) over trained cells | near + far entry of every cell | exact or SQ8 |
+    *
+    * The deterministic configs (nList=16, k=3, beam=4, rounds=2 at the
+    * gate) are SQL-replayable: the oracle replays every round as chained
+    * CTEs ([[walkServeSql]]). ScaleSpec runs the scale config (k=8,
+    * beam=8, rounds=3) where the recall claim lives.
     */
   def graphServe(
       emb: DataFrame,
@@ -993,17 +984,7 @@ object Similarity {
       beam: Int = 4,
       rounds: Int = 2,
       nQ: Int = nQueries
-  ): DataFrame = {
-    val visited = graphWalkVisited(emb, nList, k, beam, rounds, nQ)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scoreCands(cosScorer(emb, nQ), visited)
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vid"), col("cos"))
-  }
+  ): DataFrame = walkRerank(emb, nQ, graphWalkVisited(emb, nList, k, beam, rounds, nQ))
 
   /** The walk's visited set (qid, vid) — exposed so ScaleSpec can
     * count the candidate budget the serve pass actually scored. */
@@ -1014,49 +995,64 @@ object Similarity {
       beam: Int,
       rounds: Int,
       nQ: Int
+  ): DataFrame = deterministicWalk(emb, nList, k, None, beam, rounds, nQ, sq8 = false)
+
+  /** The walk over the first-nList cells, seeded at each query's `beam`
+    * nearest cells — their centroids are corpus vectors.
+    */
+  private def deterministicWalk(
+      emb: DataFrame,
+      nList: Int,
+      k: Int,
+      kDown: Option[Int],
+      beam: Int,
+      rounds: Int,
+      nQ: Int,
+      sq8: Boolean
   ): DataFrame = {
-    val edges = walkEdges(knnGraph(emb, nList, k).select(col("vid_a"), col("vid_b")))
-    val seeds = walkSeeds(emb, nList, beam, nQ)
-    beamWalk(emb, edges, seeds, beam, rounds, nQ)
-  }
-
-  /** Walk seeds (qid, vid): each query's `beam` nearest deterministic
-    * cells — their centroids are corpus vectors.
-    */
-  private def walkSeeds(emb: DataFrame, nList: Int, beam: Int, nQ: Int): DataFrame = {
     val vs = vecsD(emb).select(col("vec_id"), col("v"))
-    probeCells(vs, centroidFrame(vs, nList, None), beam, col("vec_id") < nQ)
+    val seeds = probeCells(vs, centroidFrame(vs, nList, None), beam, col("vec_id") < nQ)
       .select(col("qid"), col("cid").cast("long").as("vid"))
+    beamWalk(emb, walkGraph(firstCells(emb, nList), k, kDown), seeds, beam, rounds, nQ, sq8)
   }
 
-  /** The walk loop shared by the deterministic and trained paths —
-    * BEST-FIRST (r14 fix): each round expands the top `beam` of the
-    * NOT-YET-EXPANDED visited set. The first form re-ranked ALL of
-    * visited each round, so after round 1 the frontier was the same
-    * best-scoring nodes again and later rounds re-expanded them to the
-    * same neighbors — zero progress (measured: trained-quantizer
-    * recall stuck at 0.94 while trained IVF read 1.0; best-first
-    * closes it). Per-round `localCheckpoint` on every frame that fans
-    * out (the components() rule).
+  /** Cell assignment against the first `nList` vectors as centroids. */
+  private def firstCells(emb: DataFrame, nList: Int): DataFrame =
+    cellAssign(emb, vecsN(emb).filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv")))
+
+  /** Walk edges (vid_a, vid_b) over an assignment frame: the in-cell
+    * k-NN edges, with the in-cell hierarchy ([[hierEdges]]) unioned in
+    * when `kDown` is set.
     */
+  private def walkGraph(av: DataFrame, k: Int, kDown: Option[Int], dedup: Boolean = false): DataFrame = {
+    val knn = knnEdgesFrom(av, k, dedup).select(col("vid_a"), col("vid_b"))
+    kDown.fold(knn)(d => knn.unionByName(hierEdges(av, d)).distinct())
+  }
 
-  /** r17: walk edge tables are joined on vid_a every round — land the
-    * checkpoint pre-partitioned by it so each round's expansion join
-    * leaves the edge side untouched (guide §2.4). r18: NOT pre-sorted —
-    * the expansion joins are shuffled-hash (beam side builds), so the
-    * sort bought nothing, and a pre-SORTED checkpoint feeding codegen
-    * SMJ is the exact BufferedRowIterator-LinkedList OOM shape the
-    * components() docs100 run hit. */
-  private def walkEdges(e: DataFrame): DataFrame =
-    e.repartition(col("vid_a")).localCheckpoint()
+  /** The exact re-rank every walk ends with: the visited set scored by
+    * exact cosine, each query's top-k (itself excluded).
+    */
+  private def walkRerank(emb: DataFrame, nQ: Int, visited: DataFrame): DataFrame = {
+    val exact = cosScorer(emb, nQ)
+    rankTopK(scoreCands(exact, visited).filter(col("vid") =!= col("qid")), exact)
+      .select(col("qid"), col("vid"), col("cos"))
+  }
 
-  /** `score` maps a (qid, vid) frame to (qid, vid, cos); null means the
-    * exact [[cosScorer]]. Contract: a scorer must be
-    * deterministic per (qid, vid) and return round6-rounded scores. The
-    * walk scores a node once, when it enters the state, and ranks later
-    * rounds on that carried score, while the SQL oracles rescore the
-    * frontier every round — a stateful or unrounded scorer would
-    * diverge from them without any error.
+  /** The BEST-FIRST walk loop: each round expands the top `beam` of the
+    * NOT-YET-EXPANDED visited set (re-ranking ALL of visited re-expands
+    * the same nodes every round: trained recall stuck at 0.94). One
+    * flagged state (qid, vid, cos, expanded) carries visited and expanded
+    * set, and a node is scored once, when it enters, so a round's score
+    * join is O(new neighbors). The edge store is partitioned by the
+    * expansion key `vid_a`, unsorted (the expansion builds the beam side
+    * of a shuffled-hash join). The frontier `top` and the state each feed
+    * two consumers, so both take a [[Rounds.checkpoint]]. Witness: the
+    * rows left unexpanded — with none, a round expands nothing.
+    *
+    * The walk scores exact cosine, or SQ8 codes when `sq8`; the final
+    * re-rank stays exact. A scorer must be deterministic per (qid, vid)
+    * and round6-rounded: the walk scores a node once while the oracles
+    * rescore the frontier every round.
     */
   private def beamWalk(
       emb: DataFrame,
@@ -1065,76 +1061,57 @@ object Similarity {
       beam: Int,
       rounds: Int,
       nQ: Int,
-      score: DataFrame => DataFrame = null
+      sq8: Boolean
   ): DataFrame = {
-    // default scorer: exact cosine; the SQ8 serving path swaps in the
-    // code-dot approximation (the walk only needs ORDER, the final
-    // re-rank stays exact either way)
-    val sc: DataFrame => DataFrame =
-      if (score != null) score else (idx: DataFrame) => scoreCands(cosScorer(emb, nQ), idx)
-    // r17: visited and expanded fold into ONE flagged state frame —
-    // the not-yet-expanded candidates are a filter instead of a
-    // left-anti join, the two per-round union+distinct passes become
-    // one flag-merging aggregation, and each round runs TWO eager
-    // checkpoints instead of three. Set semantics identical (the
-    // anti-join was exactly this filter); the r14 best-first expansion
-    // rule is unchanged. (Fully LAZY per-round checkpoints were also
-    // tried — measured slower over order-balanced interleaved runs:
-    // fan-out consumers race a lazily persisted frame and recompute
-    // its subtree. Eager kept.)
-    // r18: the SCORE rides the state frame — the scorer is
-    // deterministic per (qid, vid), so scoring a node when it ENTERS
-    // the state (seeds once, each round's new neighbors once) and
-    // ranking rounds on the carried value is value-identical to the
-    // old rescore-the-frontier-every-round form, but the per-round
-    // score join shrinks from O(|visited not expanded|) to O(|new
-    // neighbors|) — at serving scale the visited set grows each round
-    // while the new-neighbor stream stays ~beam·degree. The flag-merge
-    // aggregation carries max(cos) (all duplicates hold the identical
-    // double).
-    var state = sc(seeds.distinct())
-      .select(col("qid"), col("vid"), col("cos"), lit(false).as("expanded"))
-      .localCheckpoint()
+    val sc: DataFrame => DataFrame = if (sq8) sq8Scorer(emb, nQ) else scoreCands(cosScorer(emb, nQ), _)
+    val (store, state) = Rounds.round("walk", 0) {
+      val (store, _) = Rounds.checkpoint(edges.repartition(col("vid_a")))
+      val (state, _) = Rounds.checkpoint(
+        sc(seeds.distinct()).select(col("qid"), col("vid"), col("cos"), lit(false).as("expanded"))
+      )
+      (store, state)
+    }
     val bw = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
-    for (_ <- 1 to rounds) {
-      val top = state
-        .filter(!col("expanded"))
-        .withColumn("rn", row_number().over(bw))
-        .filter(col("rn") <= beam)
-        .select(col("qid"), col("vid"))
-        .localCheckpoint() // feeds the expansion join AND the flag merge
+    val run = Rounds.fixpoint("walk", state, rounds) { state =>
+      val (top, _) = Rounds.checkpoint(
+        state
+          .filter(!col("expanded"))
+          .withColumn("rn", row_number().over(bw))
+          .filter(col("rn") <= beam)
+          .select(col("qid"), col("vid"))
+      )
       val newNeighbors = sc(
         top
           .hint("SHUFFLE_HASH") // build the beam side, stream the edge store
-          .join(edges, top("vid") === edges("vid_a"))
+          .join(store, top("vid") === store("vid_a"))
           .select(col("qid"), col("vid_b").as("vid"))
       ).select(col("qid"), col("vid"), col("cos"), lit(false).as("expanded"))
-      state = state
-        .join(top.hint("SHUFFLE_HASH").withColumn("hit", lit(true)), Seq("qid", "vid"), "left")
-        .select(
-          col("qid"),
-          col("vid"),
-          col("cos"),
-          (col("expanded") || coalesce(col("hit"), lit(false))).as("expanded")
-        )
-        .unionByName(newNeighbors)
-        .groupBy(col("qid"), col("vid"))
-        .agg(max(col("cos")).as("cos"), max(col("expanded")).as("expanded"))
-        .localCheckpoint()
+      val (next, m) = Rounds.checkpoint(
+        state
+          .join(top.hint("SHUFFLE_HASH").withColumn("hit", lit(true)), Seq("qid", "vid"), "left")
+          .select(
+            col("qid"),
+            col("vid"),
+            col("cos"),
+            (col("expanded") || coalesce(col("hit"), lit(false))).as("expanded")
+          )
+          .unionByName(newNeighbors)
+          .groupBy(col("qid"), col("vid"))
+          .agg(max(col("cos")).as("cos"), max(col("expanded")).as("expanded")),
+        count(when(!col("expanded"), lit(1))).as("changed")
+      )
+      (next, m("changed"))
     }
-    state.select(col("qid"), col("vid"))
+    run.frame.select(col("qid"), col("vid"))
   }
 
   /** [[graphServe]] over TRAINED kmeans‖ centroids — the production
     * composition (and the one [[annRetrain]]'s refreshed centroids
     * feed): cells come from `cents` instead of the first-nList
     * vectors, and since trained centroids are not corpus vectors, each
-    * probed cell seeds at its ENTRY POINT — the member vector closest
-    * to the centroid (one min_by over the assignment, the HNSW
-    * entry-node analogue). Everything downstream is the shared
-    * [[beamWalk]] + exact re-rank.
+    * cell seeds at member entry points (see [[trainedWalkVisited]]).
     */
   def graphServeTrained(
       emb: DataFrame,
@@ -1147,18 +1124,8 @@ object Similarity {
       hier: Boolean = false,
       kDown: Int = 4,
       sq8: Boolean = false
-  ): DataFrame = {
-    val visited =
-      trainedWalkVisited(emb, cents, k, beam, rounds, nQ, nProbeBuild, hier, kDown, sq8)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scoreCands(cosScorer(emb, nQ), visited)
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vid"), col("cos"))
-  }
+  ): DataFrame =
+    walkRerank(emb, nQ, trainedWalkVisited(emb, cents, k, beam, rounds, nQ, nProbeBuild, hier, kDown, sq8))
 
   /** The trained walk's visited set — exposed so ScaleSpec/Prof can
     * count the candidate budget the serve pass actually scored
@@ -1185,11 +1152,6 @@ object Similarity {
     val av =
       if (nProbeBuild <= 1) cellAssign(emb, centsDf)
       else cellAssignMulti(emb, centsDf, nProbeBuild)
-    val knn = knnEdgesFrom(av, k, dedup = nProbeBuild > 1)
-      .select(col("vid_a"), col("vid_b"))
-    // hier: union the in-cell hierarchy (fat-cell regime — the r14
-    // measured boundary this layer exists to cross)
-    val edges = walkEdges(if (hier) knn.unionByName(hierEdges(av, kDown)).distinct() else knn)
     // every cell seeds every query with TWO diverse entry points
     // (2·nList rows per query — the HNSW full-entry-coverage shape):
     // the centroid-NEAREST member and the boundary-MOST member. Under
@@ -1214,7 +1176,10 @@ object Similarity {
       .filter(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"))
       .join(broadcast(entryVids))
-    beamWalk(emb, edges, seeds, beam, rounds, nQ, if (sq8) sq8Scorer(emb, nQ) else null)
+    // hier: union the in-cell hierarchy (fat-cell regime — the r14
+    // measured boundary this layer exists to cross)
+    val edges = walkGraph(av, k, if (hier) Some(kDown) else None, dedup = nProbeBuild > 1)
+    beamWalk(emb, edges, seeds, beam, rounds, nQ, sq8)
   }
 
   /** SQ8 coded frame + the approx scorer over it — the walk-ranking
@@ -1317,29 +1282,7 @@ object Similarity {
       beam: Int = 4,
       rounds: Int = 2,
       nQ: Int = nQueries
-  ): DataFrame = {
-    val vs = vecsN(emb)
-    val cents = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val av = cellAssign(emb, cents)
-    val edges = walkEdges(
-      knnEdgesFrom(av, k)
-        .select(col("vid_a"), col("vid_b"))
-        .unionByName(hierEdges(av, kDown))
-        .distinct()
-    )
-    val seeds = walkSeeds(emb, nList, beam, nQ)
-    val visited = beamWalk(emb, edges, seeds, beam, rounds, nQ)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scoreCands(cosScorer(emb, nQ), visited)
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vid"), col("cos"))
-  }
+  ): DataFrame = walkRerank(emb, nQ, deterministicWalk(emb, nList, k, Some(kDown), beam, rounds, nQ, sq8 = false))
 
   /** [[graphServeHier]] walking on SQ8 CODE scores — the full
     * HNSW-over-quantized serving stack: the walk's per-round ranking
@@ -1358,30 +1301,7 @@ object Similarity {
       beam: Int = 4,
       rounds: Int = 2,
       nQ: Int = nQueries
-  ): DataFrame = {
-    val vs = vecsN(emb)
-    val cents = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val av = cellAssign(emb, cents)
-    val edges = walkEdges(
-      knnEdgesFrom(av, k)
-        .select(col("vid_a"), col("vid_b"))
-        .unionByName(hierEdges(av, kDown))
-        .distinct()
-    )
-    val scoreSq8 = sq8Scorer(emb, nQ)
-    val seeds = walkSeeds(emb, nList, beam, nQ)
-    val visited = beamWalk(emb, edges, seeds, beam, rounds, nQ, scoreSq8)
-    val wr = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid").asc)
-    scoreCands(cosScorer(emb, nQ), visited)
-      .filter(col("vid") =!= col("qid"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= topK)
-      .select(col("qid"), col("vid"), col("cos"))
-  }
+  ): DataFrame = walkRerank(emb, nQ, deterministicWalk(emb, nList, k, Some(kDown), beam, rounds, nQ, sq8 = true))
 
   /** Chained-CTE replay of [[graphServeHierSq8]]: the knn chain + the
     * hierarchy CTEs (md5-ordered pivot draw, up/down/pivot edges) +
@@ -1394,79 +1314,58 @@ object Similarity {
       kDown: Int = 2,
       beam: Int = 4,
       rounds: Int = 2
-  ): String = graphServeHierSqlBuilder(nList, k, kDown, beam, rounds)
-
-  private def graphServeHierSqlBuilder(
-      nList: Int,
-      k: Int,
-      kDown: Int,
-      beam: Int,
-      rounds: Int
   ): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH ${knnCtes(nList)}, "
-    sb ++= "hsz AS (SELECT cid, CAST(ceil(sqrt(count(*))) AS INT) AS np FROM assign GROUP BY cid), "
-    sb ++= "prnk AS (SELECT vid, cid, row_number() OVER (PARTITION BY cid " +
-      "ORDER BY md5(CAST(vid AS VARCHAR)) ASC, vid ASC) AS rn FROM assign), "
-    sb ++= "piv AS MATERIALIZED (SELECT p.cid, p.vid AS pid FROM prnk p " +
-      "JOIN hsz h ON h.cid = p.cid WHERE p.rn <= h.np), "
-    sb ++= "mp AS MATERIALIZED (SELECT a.vid, p.pid, " +
-      s"${d2Sql("x.v", "y.v")} AS d2 FROM assign a JOIN piv p ON p.cid = a.cid " +
-      "JOIN vs x ON x.vec_id = a.vid JOIN vs y ON y.vec_id = p.pid WHERE a.vid <> p.pid), "
-    sb ++= "up AS (SELECT vid AS vid_a, pid AS vid_b FROM (SELECT vid, pid, " +
-      "row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, pid ASC) AS rn FROM mp) WHERE rn = 1), "
-    sb ++= s"dn AS (SELECT pid AS vid_a, vid AS vid_b FROM (SELECT pid, vid, " +
-      s"row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, vid ASC) AS rn FROM mp) WHERE rn <= $kDown), "
-    sb ++= "pe AS (SELECT x.pid AS vid_a, y.pid AS vid_b FROM piv x " +
-      "JOIN piv y ON y.cid = x.cid AND x.pid <> y.pid), "
-    sb ++= s"edges AS MATERIALIZED (SELECT DISTINCT vid_a, vid_b FROM (" +
-      s"SELECT vid_a, vid_b FROM r WHERE rank <= $k " +
-      "UNION ALL SELECT vid_a, vid_b FROM up " +
-      "UNION ALL SELECT vid_a, vid_b FROM dn " +
-      "UNION ALL SELECT vid_a, vid_b FROM pe)), "
-    sb ++= s"qv AS MATERIALIZED (SELECT vec_id AS qid, v AS va FROM vs WHERE vec_id < $nQueries), "
-    sb ++= s"qt8 AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm, $sq8ScaleSql AS m FROM vs), "
-    sb ++= s"coded AS MATERIALIZED (SELECT vec_id, nrm, m, $sq8CodeSql AS q FROM qt8), "
-    sb ++= s"qv8 AS MATERIALIZED (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na " +
-      s"FROM coded WHERE vec_id < $nQueries), "
-    sb ++= s"v0 AS MATERIALIZED (SELECT DISTINCT pid AS qid, CAST(cid AS BIGINT) AS vid " +
-      s"FROM rankedc WHERE pid < $nQueries AND cr <= $beam), "
-    sb ++= "e0 AS (SELECT qid, vid FROM v0 WHERE 1 = 0), "
-    val dotq = dotSql("qa", "qb")
-    for (rd <- 1 to rounds) {
-      val prev = s"v${rd - 1}"
-      val prevE = s"e${rd - 1}"
-      sb ++= s"c$rd AS (SELECT qid, vid FROM $prev EXCEPT SELECT qid, vid FROM $prevE), "
-      sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.qa AS qa, q.ma AS ma, q.na AS na, " +
-        s"b.q AS qb, b.m AS mb, b.nrm AS nb FROM c$rd t " +
-        s"JOIN coded b ON b.vec_id = t.vid JOIN qv8 q ON q.qid = t.qid), "
-      sb ++= s"s$rd AS (SELECT qid, vid, " +
-        s"round(CAST($dotq AS DOUBLE) * ma * mb / (127.0e0 * 127.0e0) / (na * nb), 6) AS cos FROM p$rd), "
-      sb ++= s"b$rd AS MATERIALIZED (SELECT qid, vid FROM (SELECT qid, vid, " +
-        s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rn FROM s$rd) WHERE rn <= $beam), "
-      sb ++= s"e$rd AS MATERIALIZED (SELECT DISTINCT qid, vid FROM " +
-        s"(SELECT qid, vid FROM $prevE UNION ALL SELECT qid, vid FROM b$rd)), "
-      sb ++= s"v$rd AS MATERIALIZED (SELECT DISTINCT qid, vid FROM " +
-        s"(SELECT qid, vid FROM $prev UNION ALL " +
-        s"SELECT b.qid, e.vid_b AS vid FROM b$rd b JOIN edges e ON e.vid_a = b.vid)), "
-    }
-    sb ++= s"pf AS (SELECT t.qid, t.vid, q.va AS va, b.v AS vb FROM v$rounds t " +
-      s"JOIN vs b ON b.vec_id = t.vid JOIN qv q ON q.qid = t.qid WHERE t.vid <> t.qid), "
-    sb ++= s"sf AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM pf) "
-    sb ++= "SELECT qid, vid, cos FROM (SELECT qid, vid, cos, " +
-      s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM sf) WHERE rank <= $topK"
-    sb.toString
+    val hier =
+      "hsz AS (SELECT cid, CAST(ceil(sqrt(count(*))) AS INT) AS np FROM assign GROUP BY cid), " +
+        "prnk AS (SELECT vid, cid, row_number() OVER (PARTITION BY cid " +
+        "ORDER BY md5(CAST(vid AS VARCHAR)) ASC, vid ASC) AS rn FROM assign), " +
+        "piv AS MATERIALIZED (SELECT p.cid, p.vid AS pid FROM prnk p " +
+        "JOIN hsz h ON h.cid = p.cid WHERE p.rn <= h.np), " +
+        "mp AS MATERIALIZED (SELECT a.vid, p.pid, " +
+        s"${d2Sql("x.v", "y.v")} AS d2 FROM assign a JOIN piv p ON p.cid = a.cid " +
+        "JOIN vs x ON x.vec_id = a.vid JOIN vs y ON y.vec_id = p.pid WHERE a.vid <> p.pid), " +
+        "up AS (SELECT vid AS vid_a, pid AS vid_b FROM (SELECT vid, pid, " +
+        "row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, pid ASC) AS rn FROM mp) WHERE rn = 1), " +
+        s"dn AS (SELECT pid AS vid_a, vid AS vid_b FROM (SELECT pid, vid, " +
+        s"row_number() OVER (PARTITION BY pid ORDER BY d2 ASC, vid ASC) AS rn FROM mp) WHERE rn <= $kDown), " +
+        "pe AS (SELECT x.pid AS vid_a, y.pid AS vid_b FROM piv x " +
+        "JOIN piv y ON y.cid = x.cid AND x.pid <> y.pid), " +
+        s"edges AS MATERIALIZED (SELECT DISTINCT vid_a, vid_b FROM (" +
+        s"SELECT vid_a, vid_b FROM r WHERE rank <= $k " +
+        "UNION ALL SELECT vid_a, vid_b FROM up " +
+        "UNION ALL SELECT vid_a, vid_b FROM dn " +
+        "UNION ALL SELECT vid_a, vid_b FROM pe)), "
+    walkServeSql(nList, hier, beam, rounds, sq8 = true)
   }
 
   /** Chained-CTE replay of [[graphServe]]'s deterministic walk: the
     * knn CTE chain (vs/rankedc/assign/edges) + per-round score → beam
     * → expand → union CTEs, exact re-rank at the end.
     */
-  def graphServeSql(nList: Int = 16, k: Int = 3, beam: Int = 4, rounds: Int = 2): String = {
+  def graphServeSql(nList: Int = 16, k: Int = 3, beam: Int = 4, rounds: Int = 2): String =
+    walkServeSql(nList, s"edges AS MATERIALIZED (SELECT vid_a, vid_b FROM r WHERE rank <= $k), ", beam, rounds, sq8 = false)
+
+  /** The deterministic walk as chained CTEs: the knn chain, `edgeCtes`
+    * (ending at `edges`), the seeds `v0` (each query's `beam` nearest
+    * cells), then per round best-first candidates `c` (visited EXCEPT
+    * expanded), their scores `s` — exact cosine, or the SQ8 code dot
+    * when `sq8` — the beam `b`, the expanded set `e` and the visited set
+    * `v`; finally the exact re-rank of the visited set.
+    */
+  private def walkServeSql(nList: Int, edgeCtes: String, beam: Int, rounds: Int, sq8: Boolean): String = {
+    def exactScored(p: String, s: String, src: String, where: String): String =
+      s"$p AS (SELECT t.qid, t.vid, q.va AS va, b.v AS vb FROM $src t " +
+        s"JOIN vs b ON b.vec_id = t.vid JOIN qv q ON q.qid = t.qid$where), " +
+        s"$s AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM $p)"
     val sb = new StringBuilder
-    sb ++= s"WITH ${knnCtes(nList)}, "
-    sb ++= s"edges AS MATERIALIZED (SELECT vid_a, vid_b FROM r WHERE rank <= $k), "
+    sb ++= s"WITH ${knnCtes(nList)}, $edgeCtes"
     sb ++= s"qv AS MATERIALIZED (SELECT vec_id AS qid, v AS va FROM vs WHERE vec_id < $nQueries), "
+    if (sq8) {
+      sb ++= s"qt8 AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm, $sq8ScaleSql AS m FROM vs), "
+      sb ++= s"coded AS MATERIALIZED (SELECT vec_id, nrm, m, $sq8CodeSql AS q FROM qt8), "
+      sb ++= s"qv8 AS MATERIALIZED (SELECT vec_id AS qid, q AS qa, m AS ma, nrm AS na " +
+        s"FROM coded WHERE vec_id < $nQueries), "
+    }
     sb ++= s"v0 AS MATERIALIZED (SELECT DISTINCT pid AS qid, CAST(cid AS BIGINT) AS vid " +
       s"FROM rankedc WHERE pid < $nQueries AND cr <= $beam), "
     sb ++= "e0 AS (SELECT qid, vid FROM v0 WHERE 1 = 0), "
@@ -1475,9 +1374,13 @@ object Similarity {
       val prevE = s"e${rd - 1}"
       // best-first: candidates = visited not yet expanded
       sb ++= s"c$rd AS (SELECT qid, vid FROM $prev EXCEPT SELECT qid, vid FROM $prevE), "
-      sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.va AS va, b.v AS vb FROM c$rd t " +
-        s"JOIN vs b ON b.vec_id = t.vid JOIN qv q ON q.qid = t.qid), "
-      sb ++= s"s$rd AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM p$rd), "
+      if (sq8) {
+        sb ++= s"p$rd AS (SELECT t.qid, t.vid, q.qa AS qa, q.ma AS ma, q.na AS na, " +
+          s"b.q AS qb, b.m AS mb, b.nrm AS nb FROM c$rd t " +
+          s"JOIN coded b ON b.vec_id = t.vid JOIN qv8 q ON q.qid = t.qid), "
+        sb ++= s"s$rd AS (SELECT qid, vid, round(CAST(${dotSql("qa", "qb")} AS DOUBLE) * ma * mb " +
+          s"/ (127.0e0 * 127.0e0) / (na * nb), 6) AS cos FROM p$rd), "
+      } else sb ++= exactScored(s"p$rd", s"s$rd", s"c$rd", "") + ", "
       sb ++= s"b$rd AS MATERIALIZED (SELECT qid, vid FROM (SELECT qid, vid, " +
         s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rn FROM s$rd) WHERE rn <= $beam), "
       sb ++= s"e$rd AS MATERIALIZED (SELECT DISTINCT qid, vid FROM " +
@@ -1486,9 +1389,7 @@ object Similarity {
         s"(SELECT qid, vid FROM $prev UNION ALL " +
         s"SELECT b.qid, e.vid_b AS vid FROM b$rd b JOIN edges e ON e.vid_a = b.vid)), "
     }
-    sb ++= s"pf AS (SELECT t.qid, t.vid, q.va AS va, b.v AS vb FROM v$rounds t " +
-      s"JOIN vs b ON b.vec_id = t.vid JOIN qv q ON q.qid = t.qid WHERE t.vid <> t.qid), "
-    sb ++= s"sf AS (SELECT qid, vid, round($cosSqlExpr, 6) AS cos FROM pf) "
+    sb ++= exactScored("pf", "sf", s"v$rounds", " WHERE t.vid <> t.qid") + " "
     sb ++= "SELECT qid, vid, cos FROM (SELECT qid, vid, cos, " +
       s"row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vid ASC) AS rank FROM sf) WHERE rank <= $topK"
     sb.toString
@@ -1498,48 +1399,54 @@ object Similarity {
     * [[knnGraph]] edge table — the clustering that needs NO centroid
     * count: each synchronous round every vector adopts the most common
     * label among its k-NN neighbors (tie → smallest label; isolated
-    * vectors keep their own), 5 fixed rounds. Per round: ONE
-    * edge⋈label equi-join + one (node, label) count aggregation + one
-    * node-keyed argmax window — all hash-partitioned on real keys; the
-    * label frame is checkpointed per round (it feeds the join and the
-    * fallback — the components() fan-out lesson). Deterministic by
+    * vectors keep their own), at most 5 rounds. Deterministic by
     * construction (synchronous updates, total tie order), so the
     * oracle replays all rounds as chained CTEs.
     */
   def lpCommunities(emb: DataFrame, nList: Int = 16, k: Int = 3, rounds: Int = 5): DataFrame = {
-    val edges = knnGraph(emb, nList, k)
-      .select(col("vid_a").as("src"), col("vid_b").as("dst"))
-    // r17: pre-partition/pre-sort the undirected edge table by the
-    // per-round join key once (checkpoint preserves both), so each
-    // round shuffles only the labels side (guide §2.4)
-    val und = edges
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("dst"))
-      .sortWithinPartitions(col("dst"))
-      .localCheckpoint()
-    val nodes = vecsD(emb).select(col("vec_id").as("id")).localCheckpoint()
-    var labels = nodes.select(col("id"), col("id").as("lab")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val counts = und
-        .join(labels.select(col("id").as("dst"), col("lab")), Seq("dst"))
+    val edges = knnGraph(emb, nList, k).select(col("vid_a").as("src"), col("vid_b").as("dst"))
+    communityLabels(vecsD(emb).select(col("vec_id").as("id")), edges, rounds)._1
+      .select(col("id").as("vec_id"), col("lab").as("community"))
+  }
+
+  /** (id, lab) after at most `maxRounds` label-propagation rounds over
+    * the undirected closure of `edges` (src, dst) — the body of
+    * [[lpCommunities]] — plus the rounds run. Rounds are planned as
+    * [[Dedup.components]]' are: the edge store is partitioned by the
+    * round join key `dst` (unsorted), so a round shuffles only the
+    * labels side, which builds the SHUFFLE_HASH join. Per round one
+    * (node, label) count and one argmax aggregation; max_by on the
+    * (c, −lab) struct picks the (count desc, lab asc) winner, and its
+    * groupBy(src) output is already partitioned by id for the update.
+    * Witness: the labels the round changed; a round that changes none
+    * is a fixed point of the synchronous update.
+    */
+  private[graft] def communityLabels(nodes: DataFrame, edges: DataFrame, maxRounds: Int): (DataFrame, Int) = {
+    val (und, labels) = Rounds.round("lpa", 0) {
+      val (und, _) = Rounds.checkpoint(
+        edges
+          .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+          .distinct()
+          .repartition(col("dst"))
+      )
+      (und, Rounds.checkpoint(nodes.select(col("id"), col("id").as("lab")))._1)
+    }
+    val run = Rounds.fixpoint("lpa", labels, maxRounds) { labels =>
+      val picked = und
+        .join(labels.select(col("id").as("dst"), col("lab")).hint("SHUFFLE_HASH"), Seq("dst"))
         .groupBy(col("src"), col("lab"))
         .agg(count(lit(1)).as("c"))
-      // r17: argmax by aggregation instead of a rank window — max_by on
-      // the (c, -lab) struct picks the same (count desc, lab asc) winner
-      // without the window's sort, and its groupBy(src) output arrives
-      // hash-partitioned by src ≡ id, so the labels-update join needs no
-      // exchange on this side (guide §2.4). Values unchanged: (src, lab)
-      // rows are unique, so the (c, -lab) key is tie-free.
-      val picked = counts
         .groupBy(col("src").as("id"))
         .agg(max_by(col("lab"), struct(col("c"), -col("lab"))).as("newlab"))
-      labels = labels
-        .join(picked, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newlab"), col("lab")).as("lab"))
-        .localCheckpoint()
+      val (next, m) = Rounds.checkpoint(
+        labels
+          .join(picked.hint("SHUFFLE_HASH"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("newlab"), col("lab")).as("lab"), col("lab").as("old")),
+        count(when(col("lab") =!= col("old"), lit(1))).as("changed")
+      )
+      (next.select(col("id"), col("lab")), m("changed"))
     }
-    labels.select(col("id").as("vec_id"), col("lab").as("community"))
+    (run.frame, run.rounds)
   }
 
   def lpCommunitiesSql(nList: Int = 16, k: Int = 3, rounds: Int = 5): String = {

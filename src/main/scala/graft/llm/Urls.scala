@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Tables}
+import graft.core.{Dsp, Rounds, Tables}
 
 /** URL/domain-level curation — the FIRST screen real web-corpus
   * pipelines run (C4 §2.2 badwords/host filtering, RefinedWeb §3.1
@@ -807,36 +807,42 @@ object Urls {
         explode(array(expr("(doc_id * 3 + 1) % 20"), expr("(doc_id * 7 + 3) % 20"))).as("dst")
       )
       .filter(col("src") =!= col("dst") && col("src") < 17)
-    val ed = edges0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")).localCheckpoint()
-    val ow = ed.groupBy(col("src")).agg(sum(col("w")).as("wout")).localCheckpoint()
-    val e = ed.join(ow, "src").localCheckpoint()
-    val hosts0 = ed
-      .select(col("src").as("host"))
-      .unionByName(ed.select(col("dst").as("host")))
-      .distinct()
-    val nRow = hosts0.agg(count(lit(1)).as("n"))
-    val hosts = hosts0.crossJoin(broadcast(nRow)).localCheckpoint()
-    var r = hosts.withColumn("r", expr("1000000 div n")).select(col("host"), col("r")).localCheckpoint()
-    for (_ <- 1 to iters) {
+    val (e, ow, hosts, r0) = Rounds.round("pagerank", 0) {
+      val ed = Rounds.checkpoint(edges0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))._1
+      val ow = Rounds.checkpoint(ed.groupBy(col("src")).agg(sum(col("w")).as("wout")))._1
+      val e = Rounds.checkpoint(ed.join(ow, "src"))._1
+      val hosts0 = ed
+        .select(col("src").as("host"))
+        .unionByName(ed.select(col("dst").as("host")))
+        .distinct()
+      val nRow = hosts0.agg(count(lit(1)).as("n"))
+      val hosts = Rounds.checkpoint(hosts0.crossJoin(broadcast(nRow)))._1
+      (e, ow, hosts, Rounds.checkpoint(hosts.withColumn("r", expr("1000000 div n")).select(col("host"), col("r")))._1)
+    }
+    // no witness: a fixed-point check would cost a join per iteration,
+    // so every iteration reports a change and all `iters` run
+    val run = Rounds.fixpoint("pagerank", r0, iters) { r =>
       val contrib = e
-        .join(r, col("src") === col("host"))
+        .join(r.hint("SHUFFLE_HASH"), col("src") === col("host"))
         .select(col("dst"), expr("(r * w) div wout").as("c0"))
         .groupBy(col("dst"))
         .agg(sum(col("c0")).as("c"))
       val dang = r
-        .join(ow.select(col("src")), col("host") === col("src"), "left_anti")
+        .join(ow.select(col("src")).hint("SHUFFLE_HASH"), col("host") === col("src"), "left_anti")
         .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      r = hosts
-        .join(contrib, col("host") === col("dst"), "left")
-        .crossJoin(broadcast(dang))
-        .select(
-          col("host"),
-          expr("(150000 * (1000000 div n) + 850000 * (coalesce(c, 0) + dang div n)) div 1000000")
-            .as("r")
-        )
-        .localCheckpoint()
+      val next = Rounds.checkpoint(
+        hosts
+          .join(contrib.hint("SHUFFLE_HASH"), col("host") === col("dst"), "left")
+          .crossJoin(broadcast(dang))
+          .select(
+            col("host"),
+            expr("(150000 * (1000000 div n) + 850000 * (coalesce(c, 0) + dang div n)) div 1000000")
+              .as("r")
+          )
+      )._1
+      (next, 1L)
     }
-    r.select(col("host"), col("r").as("rank_micros"))
+    run.frame.select(col("host"), col("r").as("rank_micros"))
   }
 
   /** The oracle replays the plant + all `iters` power iterations as
@@ -943,10 +949,10 @@ object Urls {
     * metric next to [[hostTriangles]] (a k-core is a maximal subgraph
     * where every node keeps ≥ k neighbors; organic link neighborhoods
     * shed into low cores, farm cliques sit in deep ones). Iterative
-    * peel as `rounds` BOUNDED rounds of degree-count → keep-filter →
-    * edge semi-join, per-round `localCheckpoint` (the LPA fan-out
-    * rule); rounds exceeds the measured fixpoint (2 on this graph) so
-    * the gate also witnesses convergence stability. k = 5 bisects the
+    * peel as at most `rounds` rounds of degree-count → keep-filter →
+    * edge semi-join, one [[Rounds.checkpoint]] each; rounds exceeds the
+    * measured fixpoint (2 on this graph), so round 3 peels nothing and
+    * the loop stops there (the gate's answer is the same). k = 5 bisects the
     * 20-host graph 8/12 with a real CASCADE (three hosts start at
     * deg ≥ 5 and peel only after round-1 neighbors drop) — non-vacuity
     * verified at every sf (the doc_id % 20 plant covers all residues
@@ -955,7 +961,7 @@ object Urls {
     * — never more than O(m) per round, O(rounds·m) total.
     */
   def hostKcore(docs: DataFrame, k: Int = 5, rounds: Int = 4): DataFrame = {
-    val und = docs
+    val und0 = docs
       .select(
         expr("doc_id % 20").as("src"),
         explode(
@@ -969,24 +975,34 @@ object Urls {
       .filter(col("src") =!= col("dst") && col("src") < 17)
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .distinct()
-      .localCheckpoint() // feeds deg0 AND the peel chain (fan-out rule)
+    // und feeds deg0 AND the peel chain (fan-out rule)
+    val (und, seen) = Rounds.round("kcore", 0)(Rounds.checkpoint(und0))
     val deg0 = und
       .select(explode(array(col("u"), col("v"))).as("host"))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("deg0"))
-    var alive = und
-    for (_ <- 1 to rounds) {
-      val keep = alive
-        .select(explode(array(col("u"), col("v"))).as("h"))
-        .groupBy(col("h"))
-        .agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(col("h"))
-      alive = alive
-        .join(keep.select(col("h").as("u")), Seq("u"))
-        .join(keep.select(col("h").as("v")), Seq("v"))
-        .localCheckpoint() // referenced by next round's degree count AND semi-joins
-    }
+    // witness: the edges a round peeled — the edge set only shrinks, so
+    // an unchanged row count is the fixed point
+    var rows = seen("rows")
+    val alive = Rounds
+      .fixpoint("kcore", und, rounds) { alive =>
+        val keep = alive
+          .select(explode(array(col("u"), col("v"))).as("h"))
+          .groupBy(col("h"))
+          .agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k)
+          .select(col("h"))
+        // referenced by next round's degree count AND semi-joins
+        val (next, m) = Rounds.checkpoint(
+          alive
+            .join(keep.select(col("h").as("u")).hint("SHUFFLE_HASH"), Seq("u"))
+            .join(keep.select(col("h").as("v")).hint("SHUFFLE_HASH"), Seq("v"))
+        )
+        val peeled = rows - m("rows")
+        rows = m("rows")
+        (next, peeled)
+      }
+      .frame
     val fin = alive
       .select(explode(array(col("u"), col("v"))).as("host"))
       .distinct()
@@ -1048,36 +1064,48 @@ object Urls {
     * joins for the status — no per-hop scans, nothing pairwise.
     */
   def resolveRedirects(fetched: DataFrame, rounds: Int = 4): DataFrame = {
-    val base = fetched
-      .withColumn("_src_canon", canonCol(col("url")))
-      .withColumn("_dst_canon", when(col("location").isNotNull, canonCol(col("location"))))
-      .localCheckpoint() // feeds the map, the universe, and the final join
-    var j = base
-      .select(
-        col("_src_canon").as("jsrc"),
-        struct(
-          coalesce(col("_dst_canon"), col("_src_canon")).as("cur"),
-          when(col("_dst_canon").isNotNull, 1L).otherwise(0L).as("h")
-        ).as("st")
-      )
-      .groupBy(col("jsrc"))
-      .agg(max(col("st")).as("st")) // deterministic dedup of repeated fetches of one canon
-      .select(col("jsrc"), col("st.cur").as("cur"), col("st.h").as("h"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      j = j
-        .join(
-          j.select(col("jsrc").as("bsrc"), col("cur").as("bcur"), col("h").as("bh")),
-          col("cur") === col("bsrc"),
-          "left"
-        )
-        .select(
-          col("jsrc"),
-          coalesce(col("bcur"), col("cur")).as("cur"),
-          (col("h") + coalesce(col("bh"), lit(0L))).as("h")
-        )
-        .localCheckpoint()
+    val (base, j0) = Rounds.round("redirects", 0) {
+      val base = Rounds.checkpoint(
+        fetched
+          .withColumn("_src_canon", canonCol(col("url")))
+          .withColumn("_dst_canon", when(col("location").isNotNull, canonCol(col("location"))))
+      )._1 // feeds the map, the universe, and the final join
+      val j0 = Rounds.checkpoint(
+        base
+          .select(
+            col("_src_canon").as("jsrc"),
+            struct(
+              coalesce(col("_dst_canon"), col("_src_canon")).as("cur"),
+              when(col("_dst_canon").isNotNull, 1L).otherwise(0L).as("h")
+            ).as("st")
+          )
+          .groupBy(col("jsrc"))
+          .agg(max(col("st")).as("st")) // deterministic dedup of repeated fetches of one canon
+          .select(col("jsrc"), col("st.cur").as("cur"), col("st.h").as("h"))
+      )._1
+      (base, j0)
     }
+    // witness: the rows whose `h` grew. `h` grows exactly when `cur`
+    // still redirects, so 0 means every chain has landed; a cycle never
+    // lands and runs every round, so `loop` is decided as before
+    val j = Rounds.fixpoint("redirects", j0, rounds) { j =>
+      val (next, m) = Rounds.checkpoint(
+        j
+          .join(
+            j.select(col("jsrc").as("bsrc"), col("cur").as("bcur"), col("h").as("bh")).hint("SHUFFLE_HASH"),
+            col("cur") === col("bsrc"),
+            "left"
+          )
+          .select(
+            col("jsrc"),
+            coalesce(col("bcur"), col("cur")).as("cur"),
+            (col("h") + coalesce(col("bh"), lit(0L))).as("h"),
+            col("h").as("h0")
+          ),
+        count(when(col("h") =!= col("h0"), lit(1))).as("changed")
+      )
+      (next.select(col("jsrc"), col("cur"), col("h")), m("changed"))
+    }.frame
     val eSrc = base
       .filter(col("_dst_canon").isNotNull)
       .select(col("_src_canon").as("cur"))

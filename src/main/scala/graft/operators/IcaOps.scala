@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Signal
@@ -133,6 +133,13 @@ object IcaOps {
       )
       .select(col("n"), transform(col("cs"), e => e.getField("x")).as("v"))
 
+  /** `ds.reduce(f)` with the per-partition results merged on the driver
+    * in partition order. `Dataset.reduce` merges them in task-completion
+    * order, so the fitted model's last digits moved from run to run.
+    */
+  private def reduceInOrder[T: scala.reflect.ClassTag](ds: Dataset[T])(f: (T, T) => T): T =
+    ds.rdd.mapPartitions(_.reduceOption(f).iterator).collect().reduce(f)
+
   /** Fit FastICA (tanh contrast, deflation) on the per-sample channel
     * vectors. `nComp` defaults to the channel count (square model —
     * required by [[removeComponents]]).
@@ -147,9 +154,8 @@ object IcaOps {
     require(ds.take(1).nonEmpty, "no complete samples (every n must carry all channels)")
     // mean + covariance fused into ONE pass (cov = E[xxᵀ] − μμᵀ), so
     // the whiten-once materialization below adds no net data pass
-    val (sumV, sumXX, cnt) = ds
-      .map(v => (v, Array.tabulate(c * c)(idx => v(idx / c) * v(idx % c)), 1L))
-      .reduce { (a, b) =>
+    val (sumV, sumXX, cnt) =
+      reduceInOrder(ds.map(v => (v, Array.tabulate(c * c)(idx => v(idx / c) * v(idx % c)), 1L))) { (a, b) =>
         (
           Array.tabulate(c)(i => a._1(i) + b._1(i)),
           Array.tabulate(c * c)(i => a._2(i) + b._2(i)),
@@ -198,13 +204,11 @@ object IcaOps {
       while (it < maxIter && !done) {
         val bw = sc.broadcast(w)
         // ONE distributed aggregate: (Σ z·tanh(wᵀz), Σ (1 − tanh²))
-        val (sumZg, sumGp) = zs
-          .map { z =>
-            var d = 0.0; var i = 0; while (i < c) { d += bw.value(i) * z(i); i += 1 }
-            val g = math.tanh(d)
-            (Array.tabulate(c)(j => z(j) * g), 1.0 - g * g)
-          }
-          .reduce { (a, b) => (Array.tabulate(c)(i => a._1(i) + b._1(i)), a._2 + b._2) }
+        val (sumZg, sumGp) = reduceInOrder(zs.map { z =>
+          var d = 0.0; var i = 0; while (i < c) { d += bw.value(i) * z(i); i += 1 }
+          val g = math.tanh(d)
+          (Array.tabulate(c)(j => z(j) * g), 1.0 - g * g)
+        }) { (a, b) => (Array.tabulate(c)(i => a._1(i) + b._1(i)), a._2 + b._2) }
         bw.destroy()
         val wNew = orthNorm(Array.tabulate(c)(i => sumZg(i) / nRows - (sumGp / nRows) * w(i)))
         var dot = 0.0

@@ -38,7 +38,6 @@ object SpectraOps {
   lazy val cosTab: Array[Double] = Array.tabulate(nfft)(k => math.cos(2.0 * math.Pi * k / nfft))
   lazy val sinTab: Array[Double] = Array.tabulate(nfft)(k => math.sin(2.0 * math.Pi * k / nfft))
 
-  private def arrLit(xs: Array[Double]): Column = array(xs.map(lit): _*)
   private def arrSql(xs: Array[Double]): String = xs.map(Dsp.lit).mkString("[", ", ", "]")
 
   /** Welch/stft estimator parameters mirroring the reference psd()

@@ -126,6 +126,36 @@ class LlmSpec extends AnyFunSuite {
     assert(jobs > 0 && jobs <= 12, s"winnowTopk ran $jobs Spark jobs")
   }
 
+  test("sim_communities stays within a fixed Spark job budget") {
+    // k-NN edge build, edge store, labels, then one checkpoint per round
+    // until the labels stop changing: 42 jobs here. The sorted store with
+    // separate node and label checkpoints and five fixed rounds ran 51
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val (rows, jobs) = SparkProbe.jobs(Similarity.lpCommunities(emb).collect())
+    assert(rows.nonEmpty)
+    assert(jobs > 0 && jobs <= 42, s"lpCommunities ran $jobs Spark jobs")
+  }
+
+  test("sim_graph_serve stays within a fixed Spark job budget") {
+    // edge build, walk store, seeds, two checkpoints per round and the
+    // exact re-rank: 37 jobs here; 41 before the walk's checkpoint
+    // estimates were re-based on observed rows
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val (rows, jobs) = SparkProbe.jobs(Similarity.graphServe(emb).collect())
+    assert(rows.nonEmpty)
+    assert(jobs > 0 && jobs <= 37, s"graphServe ran $jobs Spark jobs")
+  }
+
+  test("sim_graph_hier_sq8 stays within a fixed Spark job budget") {
+    // the hierarchy build, the SQ8 codes, the walk and the exact
+    // re-rank: 55 jobs here; 59 before the walk's checkpoint estimates
+    // were re-based on observed rows
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val (rows, jobs) = SparkProbe.jobs(Similarity.graphServeHierSq8(emb).collect())
+    assert(rows.nonEmpty)
+    assert(jobs > 0 && jobs <= 55, s"graphServeHierSq8 ran $jobs Spark jobs")
+  }
+
   test("decontam counts shared shingles, clean docs emit no row") {
     val train = Seq(
       (1L, "secret bench phrase here plus extra words padding out"), // shares shingles
