@@ -19,6 +19,11 @@ import java.nio.file.{Files, Paths}
   * column (see `run`). A query that throws is listed under `failed`,
   * left out of both totals, and makes the process exit 1 after the JSON
   * line is printed.
+  *
+  * Per query the detail file carries the median warm run's `build_s`,
+  * `exec_s`, `build_jobs`, `exec_jobs`, and `compile_s` / `compiles`:
+  * the generated-code compile seconds and count of build plus exec
+  * (BENCHMARK.json's `functions.codegen_compile_s` layer).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -109,7 +114,9 @@ object Bench {
           .getOrElse("")
         s"\"" + k + s"\":{\"cold\":${r3(t.cold)},\"warm_median\":${r3(t.warmMedian)}," +
           s"\"warm_spread\":${r3(t.warmSpread)},\"build_s\":${r3(t.build.seconds)}," +
-          s"\"exec_s\":${r3(t.exec.seconds)},\"build_jobs\":${t.build.jobs},\"exec_jobs\":${t.exec.jobs}$trend}"
+          s"\"exec_s\":${r3(t.exec.seconds)},\"build_jobs\":${t.build.jobs},\"exec_jobs\":${t.exec.jobs}," +
+          s"\"compile_s\":${r3(t.build.compileSeconds + t.exec.compileSeconds)}," +
+          s"\"compiles\":${t.build.compiles + t.exec.compiles}$trend}"
       }
       .mkString("{", ",", "}")
     val regressions = results

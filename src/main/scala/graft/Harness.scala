@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{count, lit}
 
 /** The one instrument the in-repo tools share: the session they run in
@@ -12,9 +14,14 @@ object Harness {
 
   /** What one probed block ran: wall seconds, Spark jobs and stages
     * (skipped stages included), the largest per-task peak execution
-    * memory and the bytes spilled from memory.
+    * memory, the bytes spilled from memory, and the seconds and count of
+    * generated-code compilations (`CodeGenerator.compileTime` and
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`). The compile counters are
+    * JVM-wide: in local mode they include the executors' compiles, and
+    * any other work the JVM runs meanwhile.
     */
-  final case class Run(seconds: Double, jobs: Int, stages: Int, peakTaskMem: Long, spill: Long)
+  final case class Run(
+      seconds: Double, jobs: Int, stages: Int, peakTaskMem: Long, spill: Long, compileSeconds: Double, compiles: Long)
 
   /** The production session: `local[SPARK_GRAFT_CPUS]` (default 4), one
     * shuffle partition per core, UTC, UI off, the production extensions
@@ -76,12 +83,16 @@ object Harness {
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "graft probe")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
     try {
+      val compile0 = CodeGenerator.compileTime
+      val compiles0 = compiled.getCount
       val t0 = System.nanoTime()
       val out = body
       val sec = (System.nanoTime() - t0) / 1e9
       drain(spark)
-      (out, Run(sec, jobs.get, stages.get, peak.get, spill.get))
+      val compileSec = (CodeGenerator.compileTime - compile0) / 1e9
+      (out, Run(sec, jobs.get, stages.get, peak.get, spill.get, compileSec, compiled.getCount - compiles0))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -54,8 +54,7 @@ object Prof {
     def phase(name: String, denom: Long = total)(df: => DataFrame): Unit = t(name, denom)(Harness.written(df))
     // channel-partitioned, (channel, n)-sorted copy — what Signal.long
     // hands the gate queries; isolates kernel+codec from the exchange
-    val sigSorted = sig.repartition(col("channel"))
-      .sortWithinPartitions(col("channel"), col("n")).persist()
+    val sigSorted = core.ChannelScan.ordered(sig, presorted = false).persist()
     sigSorted.count()
     phase("warmup")(sig.limit(1000))
     val h75 = operators.HilbertOps.hilbertH

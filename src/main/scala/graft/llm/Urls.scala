@@ -409,8 +409,8 @@ object Urls {
 
   /** STREAMING frontier scheduling — the ingest twin of
     * [[crawlSchedule]]: URL candidates arrive in micro-batches, the
-    * robots screen runs row-local on the stream (the literal-rule
-    * `greatest` fold — no aggregation state), and per-host slot
+    * robots screen runs row-local on the stream (a longest-match test
+    * over the literal rules — no aggregation state), and per-host slot
     * counters persist in `flatMapGroupsWithState` (state = ONE long
     * per host: the next free slot), so politeness sequencing holds
     * ACROSS batches — a host's rate limit doesn't reset because a new
@@ -437,11 +437,22 @@ object Urls {
         col("host"),
         regexp_extract(expr("substr(canon, length(host) + 1)"), "^[^?]*", 0).as("path")
       )
-    val best = robotsBestCol(col("host"), col("path"))
-    u.withColumn("best", best)
-      .filter(col("best").isNull || col("best.a") === 1)
-      .select(col("doc_id"), col("host"), col("path"))
-      .as[(Long, String, String)]
+    // the robots screen is a Scala test over the literal rules: as a
+    // Column (robotsBestCol) the filter is pushed below the projections
+    // and inlines the host and path chains into every rule — a
+    // 1.6M-character condition that shipped a 13.8 MiB task binary
+    val rules = robotsRules.map { case (h, d, p) => (h, p, d == "allow") }.toArray
+    u.as[(Long, String, String)]
+      .filter { r =>
+        // the longest matching prefix governs; an allow wins a length tie
+        var len = -1
+        var allow = true
+        for ((h, p, a) <- rules)
+          if (h == r._2 && r._3.startsWith(p) && (p.length > len || (p.length == len && a))) {
+            len = p.length; allow = a
+          }
+        allow
+      }
       .groupByKey(_._2)
       .flatMapGroupsWithState[Long, (Long, String, String, Long, Long)](
         OutputMode.Append,

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Signal}
+import scala.collection.mutable.ArrayBuffer
+
+import graft.core.{ChannelScan, Dsp, Signal}
 
 /** FIR filtering over the long-format signal.
   *
@@ -122,48 +124,22 @@ object FirOps {
       s"SELECT channel, n, round($expr, 6) AS y FROM ext WINDOW w AS (PARTITION BY channel ORDER BY n)"
   }
 
-  /** Segmented overlap-add fast path for 'same' convolution — the
-    * reference's `oaconvolve` (numerical.py:158) re-expressed for
-    * Spark: samples scatter into fixed segments plus L-sample halos on
-    * both sides (explode, no neighbor shuffle beyond the channel
-    * partitioning), each extended segment runs one FFT convolution
-    * inside the custom `SegConv` expression, and the core region
-    * explodes back to rows. O(log S) per sample vs O(M) for the
-    * direct [[convBank]] scan — the win for kernels with hundreds+ taps.
-    */
-  /** The scatter/assemble half of [[sameFast]]: samples land in their
-    * own segment plus L-sample halos of both neighbors, and each
-    * (channel, s) group densifies into the `segLen + 2l`-long `xs`
-    * array. Shared by any long-kernel consumer that wants SEVERAL
-    * convolutions per assembled segment (the long-scale CWT runs the
-    * re and im Morlet kernels over one assembly).
-    */
-  /** Halo-extended segment assembly — (channel, s, len, xs[segLen + 2l])
-    * where xs covers global positions [s·segLen − l, s·segLen + segLen
-    * + l), zero-padded outside the signal. REQUIRES the Signal
-    * contract: contiguous n = 0..cnt−1 per channel (both call sites —
-    * sameFast and cwtMorletLong — feed it).
+  /** Halo-extended segment assembly: (channel, s, len, xs[segLen + 2l])
+    * where xs covers positions [s·segLen − l, s·segLen + segLen + l),
+    * zero outside the signal. Shared by the long-kernel consumers that
+    * run one or several FFT convolutions per assembled segment
+    * ([[sameFast]]; the long-scale CWT runs its re and im kernels over
+    * one assembly). REQUIRES the Signal contract: contiguous
+    * n = 0..cnt−1 per channel.
     *
-    * STREAMING SCAN (r13): the original form scattered every sample
-    * into its 3 destination segments (core + two halos) and
-    * reassembled with a groupBy(collect_list + sort_array) — a 3n-row
-    * shuffle whose aggregation buffers spilled 17.6 GB at the
-    * 128M-sample decade. This is the same explode-assembly shape the
-    * r5 frameScan rewrite removed from the periodogram path, so the
-    * same fix applies: one channel-partitioned sort (zero extra
-    * exchanges when the caller pre-sorts), then a rolling iterator
-    * emits each segment once with its halos — task memory
-    * O(block + extLen) at any channel length, no shuffle of scattered
-    * rows at all. Segment arrays are value-identical to the scatter
-    * form (zeros and sample placement agree position-for-position);
-    * trailing segments whose core lies wholly past the signal end are
-    * not emitted.
-    *
-    * Each segment also carries `len`, its number of in-signal core
-    * samples, min(segLen, cnt − s·segLen): the scan knows each channel's
-    * length as it streams, so callers clip their output to core
-    * positions j < 2l + len without a second pass over the signal for
-    * per-channel bounds.
+    * One [[ChannelScan]] pass emits each segment once with its halos —
+    * no scatter of samples into their three destination segments and no
+    * collect_list reassembly (that shuffle spilled 17.6 GB at the
+    * 128M-sample decade). Trailing segments whose core lies wholly past
+    * the signal end are not emitted. `len` is the segment's number of
+    * in-signal core samples, min(segLen, cnt − s·segLen), so callers
+    * clip their output to core positions j < 2l + len without a second
+    * pass for per-channel bounds.
     */
   private[graft] def segAssemble(
       sig: DataFrame,
@@ -175,76 +151,37 @@ object FirOps {
     val spark = sig.sparkSession
     import spark.implicits._
     val extLen = segLen + 2 * l
-    val blockSize = math.max(1 << 16, 4 * extLen)
-    val typed = sig.select(col("channel"), col("n"), col("x")).as[(String, Long, Double)]
-    val ordered =
-      if (presorted) typed
-      else typed.repartition(col("channel")).sortWithinPartitions(col("channel"), col("n"))
-    ordered
-      .mapPartitions { (it0: Iterator[(String, Long, Double)]) =>
-        val in = it0.buffered
-        new Iterator[Iterator[(String, Long, Int, Array[Double])]] {
-          private var ch: String = null
-          // extended coordinates m = n + l; segment s occupies
-          // m ∈ [s·segLen, s·segLen + extLen)
-          private val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          private var base = 0L
-          private var s = 0L
-          private var nData = 0L
-          // channel-in-progress flag: xs.isEmpty is NOT a safe sentinel —
-          // with l == 0 (1–2-tap kernels) extLen == segLen and an emit
-          // round can drain the buffer exactly at a block boundary
-          // mid-channel, which would re-initialize state for the same
-          // channel and emit duplicate segment ids (ADVICE r13).
-          private var active = false
-          def hasNext: Boolean = in.hasNext || active
-
-          def next(): Iterator[(String, Long, Int, Array[Double])] = {
-            if (!active) {
-              active = true
-              ch = in.head._1; base = 0L; s = 0L; nData = 0L
-              var i = 0
-              while (i < l) { xs += 0.0; i += 1 } // head halo zeros
+    // extended index m = n + l; segment s occupies [s·segLen, s·segLen + extLen)
+    ChannelScan
+      .scan(sig, presorted, math.max(1 << 16, 4 * extLen), headZeros = l) { () =>
+        new ChannelScan.Step[(String, Long, Int, Array[Double])] {
+          // pad so the last core segment, (cnt−1) div segLen, completes
+          override def padTo(count: Long): Long = lastSeg(count) * segLen + extLen
+          private def lastSeg(count: Long): Long = (count - 1).max(0L) / segLen
+          def emit(w: ChannelScan.Window, out: ArrayBuffer[(String, Long, Int, Array[Double])]): Long = {
+            while (w.next * segLen + extLen <= w.end && (!w.done || w.next <= lastSeg(w.count))) {
+              val s = w.next
+              // a segment emitted before its channel ends has a whole core
+              // in-signal (it needed l samples past it), so `count` is exact
+              val len = math.min(segLen.toLong, w.count - s * segLen).toInt
+              out += ((w.channel, s, len, w.read(s * segLen, new Array[Double](extLen))))
+              w.next += 1
             }
-            var read = 0
-            while (read < blockSize && in.hasNext && in.head._1 == ch) {
-              xs += in.next()._3; nData += 1; read += 1
-            }
-            val channelDone = !in.hasNext || in.head._1 != ch
-            if (channelDone) {
-              // pad the tail so the LAST core segment (s_max = (cnt−1)
-              // div segLen) completes: extended length E = s_max·segLen
-              // + extLen
-              val e = ((nData - 1).max(0L) / segLen) * segLen + extLen
-              var i = base + xs.length
-              while (i < e) { xs += 0.0; i += 1 }
-            }
-            val avail = base + xs.length
-            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Array[Double])]
-            // only segments with in-signal core: s ≤ (cnt−1) div segLen
-            while (s * segLen + extLen <= avail && (!channelDone || s <= (nData - 1).max(0L) / segLen)) {
-              val seg = new Array[Double](extLen)
-              var i = 0
-              while (i < extLen) { seg(i) = xs((s * segLen + i - base).toInt); i += 1 }
-              // a segment emitted before its channel ends has a whole
-              // core in-signal (it needed l samples past it), so the
-              // current count is exact here too
-              out += ((ch, s, math.min(segLen.toLong, nData - s * segLen).toInt, seg))
-              s += 1
-            }
-            if (channelDone) { xs.clear(); active = false }
-            else {
-              val dropTo = math.max(base, s * segLen)
-              val dropCount = (dropTo - base).toInt
-              if (dropCount > 0) { xs.remove(0, dropCount); base = dropTo }
-            }
-            out.iterator
+            w.next * segLen
           }
-        }.flatten
+        }
       }
       .toDF("channel", "s", "len", "xs")
   }
 
+  /** Segmented overlap-add fast path for 'same' convolution — the
+    * reference's `oaconvolve` (numerical.py:158) re-expressed for
+    * Spark: [[segAssemble]] cuts each channel into fixed segments with
+    * L-sample halos on both sides, each extended segment runs one FFT
+    * convolution inside the custom `SegConv` expression, and the core
+    * region explodes back to rows. O(log S) per sample vs O(M) for the
+    * direct [[convBank]] scan — the win for kernels with hundreds+ taps.
+    */
   def sameFast(sig: DataFrame, h: Array[Double], segLen: Int = 1024): DataFrame = {
     val m = h.length
     val l = (m - 1) / 2
@@ -277,8 +214,8 @@ object FirOps {
     convBank(sig, Seq(h), presorted, blockSizeHint)
       .select(col("channel"), col("n"), col("x"), col("ys")(0).as("y"))
 
-  /** 'same'-mode convolution of K kernels in ONE channel-parallel
-    * mapPartitions scan, bit-exact with [[sameExprSql]]: per kernel,
+  /** 'same'-mode convolution of K kernels in ONE [[ChannelScan]]
+    * pass, bit-exact with [[sameExprSql]]: per kernel,
     * terms accumulate in ascending-k left-associated order with
     * `h(k) * 0.0` contributions outside the signal.
     *
@@ -287,9 +224,8 @@ object FirOps {
     * kernel is one JIT'd loop over a shared sample buffer; channels
     * remain the parallel unit exactly like the IIR scan.
     *
-    * Memory-bounded: samples are consumed in fixed blocks with the
-    * longest kernel's halos carried between blocks, so peak task memory
-    * is O(blockSize + max m) regardless of channel length.
+    * Memory-bounded: the longest kernel's halos carry between blocks,
+    * so peak task memory is O(blockSize + max m) at any channel length.
     * Output: (channel, n, x, ys) with `ys(q)` = kernel q's convolution.
     */
   def convBank(
@@ -307,43 +243,18 @@ object FirOps {
     val mMax = bank.map(_.length).max
     val lookahead = (mMax - 1) / 2      // largest l: both halos grow with m
     val lookback = mMax - 1 - lookahead // largest m−1−l
-    val blockSize = math.max(blockSizeHint, 4 * mMax)
-    val typed = sig
-      .select(col("channel"), col("n"), col("x"))
-      .as[(String, Long, Double)]
     // presorted: caller guarantees channel-partitioned, (channel, n)-
     // sorted input — true when chaining directly off a convPlus output
     // (mapPartitions emits in order and Catalyst can't see it) — so the
     // redundant exchange+sort is skipped
-    val ordered =
-      if (presorted) typed
-      else typed.repartition(col("channel")).sortWithinPartitions(col("channel"), col("n"))
-    ordered
-      .mapPartitions { (it: Iterator[(String, Long, Double)]) =>
-        val in = it.buffered
-        new Iterator[Iterator[(String, Long, Double, Array[Double])]] {
-          private var ch: String = null
-          private val ns = scala.collection.mutable.ArrayBuffer.empty[Long]
-          private val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          private var base = 0L    // channel-absolute index of xs(0)
-          private var nextOut = 0L // channel-absolute index of next un-emitted output
-
-          def hasNext: Boolean = in.hasNext || xs.nonEmpty
-
-          def next(): Iterator[(String, Long, Double, Array[Double])] = {
-            if (xs.isEmpty) { ch = in.head._1; base = 0L; nextOut = 0L }
-            var read = 0
-            while (read < blockSize && in.hasNext && in.head._1 == ch) {
-              val row = in.next(); ns += row._2; xs += row._3; read += 1
-            }
-            val channelDone = !in.hasNext || in.head._1 != ch
-            val avail = base + xs.length // inputs read so far (channel-absolute)
-            val lastOut = if (channelDone) avail - 1 else avail - 1 - lookahead
-            val nOut = math.max(0L, lastOut - nextOut + 1).toInt
-            val out = new Array[(String, Long, Double, Array[Double])](nOut)
-            var j = 0
-            while (j < nOut) {
-              val i = nextOut + j
+    ChannelScan
+      .scan(sig, presorted, math.max(blockSizeHint, 4 * mMax), keepN = true) { () =>
+        new ChannelScan.Step[(String, Long, Double, Array[Double])] {
+          def emit(w: ChannelScan.Window, out: ArrayBuffer[(String, Long, Double, Array[Double])]): Long = {
+            val end = w.end
+            val last = if (w.done) end - 1 else end - 1 - lookahead
+            while (w.next <= last) {
+              val i = w.next
               val ys = new Array[Double](nk)
               var q = 0
               while (q < nk) {
@@ -353,28 +264,19 @@ object FirOps {
                 var k = 0
                 while (k < h.length) {
                   val idx = i + l - k
-                  val t = h(k) * (if (idx >= 0 && idx < avail) xs((idx - base).toInt) else 0.0)
+                  val t = h(k) * (if (idx >= 0 && idx < end) w.x(idx) else 0.0)
                   acc = if (k == 0) t else acc + t
                   k += 1
                 }
                 ys(q) = acc
                 q += 1
               }
-              val rel = (i - base).toInt
-              out(j) = (ch, ns(rel), xs(rel), ys)
-              j += 1
+              out += ((w.channel, w.n(i), w.x(i), ys))
+              w.next += 1
             }
-            nextOut = lastOut + 1
-            if (channelDone && nextOut >= avail) {
-              ns.clear(); xs.clear() // channel finished
-            } else {
-              val dropTo = math.max(0L, nextOut - lookback) // keep lookback halo
-              val dropCount = (dropTo - base).toInt
-              if (dropCount > 0) { ns.remove(0, dropCount); xs.remove(0, dropCount); base = dropTo }
-            }
-            out.iterator
+            math.max(0L, w.next - lookback) // keep the lookback halo
           }
-        }.flatten
+        }
       }
       .toDF("channel", "n", "x", "ys")
   }

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Iir, Signal}
+import scala.collection.mutable.ArrayBuffer
+
+import graft.core.{ChannelScan, Dsp, Iir, Signal}
 
 /** IIR filtering over the long-format signal.
   *
@@ -110,30 +112,18 @@ object IirOps {
     }
   }
 
-  /** Decode (channel, n)-ordered rows into blocks, once. */
+  /** Decode (channel, n)-ordered rows into blocks, once: each
+    * [[ChannelScan]] block is one block row.
+    */
   private def toBlocks(sig: DataFrame, presorted: Boolean): Dataset[Blk] = {
     val spark = sig.sparkSession
     import spark.implicits._
-    val typed = sig
-      .select(col("channel"), col("n"), col("x"))
-      .as[(String, Long, Double)]
-    val ordered =
-      if (presorted) typed
-      else typed.repartition(col("channel")).sortWithinPartitions(col("channel"), col("n"))
-    ordered.mapPartitions { it0 =>
-      val in = it0.buffered
-      new Iterator[Blk] {
-        def hasNext: Boolean = in.hasNext
-        def next(): Blk = {
-          val ch = in.head._1
-          val ns = new Array[Long](blockLen)
-          val xs = new Array[Double](blockLen)
-          var k = 0
-          while (k < blockLen && in.hasNext && in.head._1 == ch) {
-            val r = in.next(); ns(k) = r._2; xs(k) = r._3; k += 1
-          }
-          if (k == blockLen) (ch, ns(0), ns, xs)
-          else (ch, ns(0), java.util.Arrays.copyOf(ns, k), java.util.Arrays.copyOf(xs, k))
+    ChannelScan.scan(sig, presorted, blockLen, keepN = true) { () =>
+      new ChannelScan.Step[Blk] {
+        def emit(w: ChannelScan.Window, out: ArrayBuffer[Blk]): Long = {
+          val k = (w.end - w.base).toInt
+          out += ((w.channel, w.n(w.base), w.readN(w.base, new Array[Long](k)), w.read(w.base, new Array[Double](k))))
+          w.end
         }
       }
     }

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Signal}
+import scala.collection.mutable.ArrayBuffer
+
+import graft.core.{ChannelScan, Dsp, Signal}
 
 /** Rational resampling (reference: openseize `resampling/resampling.py`
   * downsample/upsample/resample via `core/numerical.py:523`
@@ -58,9 +60,9 @@ object ResampleOps {
     * lag-sum oracle exactly (ascending k, left-associated, literal 0.0
     * for stuffed/out-of-range slots) so hashes are unchanged.
     *
-    * Memory-bounded like FirOps.convPlus: fixed input blocks with a
-    * taps-wide halo; peak task memory O(block + taps) regardless of
-    * channel length. Assumes dense per-channel n starting at 0 (the
+    * One [[ChannelScan]] pass like FirOps.convPlus: fixed input blocks
+    * with a taps-wide halo; peak task memory O(block + taps) regardless
+    * of channel length. Assumes dense per-channel n starting at 0 (the
     * producer contract).
     */
   def polyResample(
@@ -78,67 +80,32 @@ object ResampleOps {
     val c = (taps - 1) / 2
     val L = l.toLong
     val M = m.toLong
-    val blockSize = math.max(blockSizeHint, 4 * taps)
-    val typed = sig
-      .select(col("channel"), col("n"), col("x"))
-      .as[(String, Long, Double)]
-    val ordered =
-      if (presorted) typed
-      else typed.repartition(col("channel")).sortWithinPartitions(col("channel"), col("n"))
-    ordered
-      .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[Iterator[(String, Long, Double)]] {
-          private var ch: String = null
-          private val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          private var base = 0L  // input-absolute index of xs(0)
-          private var nextJ = 0L // next un-emitted output index
-
-          def hasNext: Boolean = in.hasNext || xs.nonEmpty
-
-          def next(): Iterator[(String, Long, Double)] = {
-            if (xs.isEmpty) { ch = in.head._1; base = 0L; nextJ = 0L }
-            var read = 0
-            while (read < blockSize && in.hasNext && in.head._1 == ch) {
-              xs += in.next()._3; read += 1
-            }
-            val channelDone = !in.hasNext || in.head._1 != ch
-            val avail = base + xs.length
-            val gridLen = avail * L
+    ChannelScan
+      .scan(sig, presorted, math.max(blockSizeHint, 4 * taps)) { () =>
+        new ChannelScan.Step[(String, Long, Double)] {
+          def emit(w: ChannelScan.Window, out: ArrayBuffer[(String, Long, Double)]): Long = {
+            val gridLen = w.end * L
             // without full right context, output j needs grid up to jM + c
-            val lastGrid = if (channelDone) gridLen - 1 else gridLen - 1 - c
+            val lastGrid = if (w.done) gridLen - 1 else gridLen - 1 - c
             val lastJ = if (lastGrid < 0) -1L else lastGrid / M
-            val nOut = math.max(0L, lastJ - nextJ + 1).toInt
-            val out = new Array[(String, Long, Double)](nOut)
-            var q = 0
-            while (q < nOut) {
-              val j = nextJ + q
+            while (w.next <= lastJ) {
+              val j = w.next
               val t = j * M
               var acc = 0.0
               var k = 0
               while (k < taps) {
                 val g = t + c - k
-                val v =
-                  if (g < 0 || g >= gridLen || g % L != 0L) 0.0
-                  else xs(((g / L) - base).toInt)
+                val v = if (g < 0 || g >= gridLen || g % L != 0L) 0.0 else w.x(g / L)
                 val term = hl(k) * v
                 acc = if (k == 0) term else acc + term
                 k += 1
               }
-              out(q) = (ch, j, acc)
-              q += 1
+              out += ((w.channel, j, acc))
+              w.next += 1
             }
-            nextJ = lastJ + 1
-            if (channelDone) {
-              xs.clear() // all outputs emitted; channel finished
-            } else {
-              val dropTo = math.max(0L, Math.floorDiv(nextJ * M + c - (taps - 1), L))
-              val dropCount = (dropTo - base).toInt
-              if (dropCount > 0) { xs.remove(0, dropCount); base = dropTo }
-            }
-            out.iterator
+            math.max(0L, Math.floorDiv(w.next * M + c - (taps - 1), L))
           }
-        }.flatten
+        }
       }
       .toDF("channel", "n", "y")
       .select(col("channel"), col("n"), Dsp.round6(col("y")).as("y"))
@@ -159,35 +126,21 @@ object ResampleOps {
   ): DataFrame =
     polyResample(sig, l, m, h, presorted = presorted)
 
-  // ---- oracle SQL twins (reuse FirOps expression rendering) ----
-
-  private[graft] def sameExprSql(h: Array[Double]): String = {
-    val l = (h.length - 1) / 2
-    h.zipWithIndex
-      .map { case (c, k) =>
-        val j = l - k
-        val t =
-          if (j > 0) s"lead(x, $j) OVER w"
-          else if (j < 0) s"lag(x, ${-j}) OVER w"
-          else "x"
-        s"${Dsp.lit(c)} * coalesce($t, 0.0)"
-      }
-      .mkString(" + ")
-  }
+  // ---- oracle SQL twins (FirOps' lag-sum rendering) ----
 
   def downsampleSql(m: Int, h: Array[Double]): String =
-    s"${Signal.sigCte}, conv AS (SELECT channel, n, ${Dsp.round6Sql(sameExprSql(h))} AS y " +
+    s"${Signal.sigCte}, conv AS (SELECT channel, n, ${Dsp.round6Sql(FirOps.sameExprSql(h))} AS y " +
       "FROM sig WINDOW w AS (PARTITION BY channel ORDER BY n)) " +
       s"SELECT channel, n // $m AS n, y FROM conv WHERE n % $m = 0"
 
   def upsampleSql(l: Int, h: Array[Double]): String =
     s"${Signal.sigCte}, stuffed AS (${zeroStuffSql(l)}) " +
-      s"SELECT channel, n, ${Dsp.round6Sql(sameExprSql(h.map(_ * l)))} AS y " +
+      s"SELECT channel, n, ${Dsp.round6Sql(FirOps.sameExprSql(h.map(_ * l)))} AS y " +
       "FROM stuffed WINDOW w AS (PARTITION BY channel ORDER BY n)"
 
   def resampleSql(l: Int, m: Int, h: Array[Double]): String =
     s"${Signal.sigCte}, stuffed AS (${zeroStuffSql(l)}), " +
-      s"conv AS (SELECT channel, n, ${Dsp.round6Sql(sameExprSql(h.map(_ * l)))} AS y " +
+      s"conv AS (SELECT channel, n, ${Dsp.round6Sql(FirOps.sameExprSql(h.map(_ * l)))} AS y " +
       "FROM stuffed WINDOW w AS (PARTITION BY channel ORDER BY n)) " +
       s"SELECT channel, n // $m AS n, y FROM conv WHERE n % $m = 0"
 

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dsp, Signal}
+import scala.collection.mutable.ArrayBuffer
+
+import graft.core.{ChannelScan, Dsp, Signal}
 
 /** Spectral estimation (reference: openseize `spectra/estimators.py`
   * psd/stft over `core/numerical.py` modified_dft/periodogram/welch).
@@ -117,8 +119,11 @@ object SpectraOps {
     }
   }
 
-  /** The raw streaming frame iterator: `mk` builds the executor-local
-    * per-frame kernel (called once per partition).
+  /** The raw streaming frame scan, one [[ChannelScan]] pass: `mk`
+    * builds the executor-local per-frame kernel (called once per
+    * partition). Boundary mode prepends nfft/2 zeros and pads the tail
+    * to E = ceil(cnt/hop)·hop + nfft, the reference's stft
+    * zero-extension.
     */
   private def frameScanMk(
       sig: DataFrame,
@@ -130,61 +135,21 @@ object SpectraOps {
     val spark = sig.sparkSession
     import spark.implicits._
     require(nfftP % hopP == 0 && (!boundary || nfftP % 2 == 0), s"nfft $nfftP hop $hopP")
-    val blockSize = math.max(1 << 16, 4 * nfftP)
-    val typed = sig
-      .select(col("channel"), col("n"), col("x"))
-      .as[(String, Long, Double)]
-    val ordered =
-      if (presorted) typed
-      else typed.repartition(col("channel")).sortWithinPartitions(col("channel"), col("n"))
-    ordered
-      .mapPartitions { (it0: Iterator[(String, Long, Double)]) =>
-        val kernel = mk()
-        val in = it0.buffered
-        new Iterator[Iterator[(String, Long, Array[Double])]] {
-          private var ch: String = null
-          // extended-coordinate samples from index `base` (boundary mode
-          // prepends nfft/2 zeros and pads the tail to E = ceil(cnt/hop)
-          // ·hop + nfft, matching the reference's stft zero-extension)
-          private val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-          private var base = 0L
-          private var s = 0L // next frame index to emit
-          private var nData = 0L
-          def hasNext: Boolean = in.hasNext || xs.nonEmpty
-
-          def next(): Iterator[(String, Long, Array[Double])] = {
-            if (xs.isEmpty) {
-              ch = in.head._1; base = 0L; s = 0L; nData = 0L
-              if (boundary) { var i = 0; while (i < nfftP / 2) { xs += 0.0; i += 1 } }
+    ChannelScan
+      .scan(sig, presorted, math.max(1 << 16, 4 * nfftP), headZeros = if (boundary) nfftP / 2 else 0) { () =>
+        new ChannelScan.Step[(String, Long, Array[Double])] {
+          private val kernel = mk()
+          private val frame = new Array[Double](nfftP)
+          override def padTo(count: Long): Long =
+            if (boundary) ((count + hopP - 1) / hopP) * hopP + nfftP else 0L
+          def emit(w: ChannelScan.Window, out: ArrayBuffer[(String, Long, Array[Double])]): Long = {
+            while (w.next * hopP + nfftP <= w.end) {
+              out += ((w.channel, w.next, kernel(w.read(w.next * hopP, frame))))
+              w.next += 1
             }
-            var read = 0
-            while (read < blockSize && in.hasNext && in.head._1 == ch) {
-              xs += in.next()._3; nData += 1; read += 1
-            }
-            val channelDone = !in.hasNext || in.head._1 != ch
-            if (channelDone && boundary) {
-              val e = ((nData + hopP - 1) / hopP) * hopP + nfftP
-              var i = base + xs.length
-              while (i < e) { xs += 0.0; i += 1 }
-            }
-            val avail = base + xs.length
-            val frame = new Array[Double](nfftP)
-            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Array[Double])]
-            while (s * hopP + nfftP <= avail) {
-              var i = 0
-              while (i < nfftP) { frame(i) = xs((s * hopP + i - base).toInt); i += 1 }
-              out += ((ch, s, kernel(frame)))
-              s += 1
-            }
-            if (channelDone) xs.clear() // frames all emitted; next call starts fresh
-            else {
-              val dropTo = math.max(base, s * hopP)
-              val dropCount = (dropTo - base).toInt
-              if (dropCount > 0) { xs.remove(0, dropCount); base = dropTo }
-            }
-            out.iterator
+            w.next * hopP
           }
-        }.flatten
+        }
       }
       .toDF("channel", "s", "p2s")
   }

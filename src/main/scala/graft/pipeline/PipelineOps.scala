@@ -181,7 +181,7 @@ object PipelineOps {
       "inp AS MATERIALIZED (SELECT channel, n, x AS v FROM sig), " +
       IirOps.sosfiltCte(IirOps.notch15, "inp", "fwd", None) + ", " +
       "nf AS MATERIALIZED (SELECT channel, n, round(y, 6) AS x FROM fwd), " +
-      s"conv AS (SELECT channel, n, ${Dsp.round6Sql(ResampleOps.sameExprSql(ResampleOps.hDown2))} AS y " +
+      s"conv AS (SELECT channel, n, ${Dsp.round6Sql(FirOps.sameExprSql(ResampleOps.hDown2))} AS y " +
       "FROM nf WINDOW w AS (PARTITION BY channel ORDER BY n)), " +
       "ds AS MATERIALIZED (SELECT channel, n // 2 AS n, y AS x FROM conv WHERE n % 2 = 0), " +
       "mic AS MATERIALIZED (SELECT channel, n, CAST(floor(x * 1.0e6 + 0.5e0) AS BIGINT) AS m FROM ds), " +

@@ -88,6 +88,13 @@ class HarnessSpec extends AnyFunSuite {
     val (_, three) = Harness.probe(spark)((1 to 3).foreach(_ => sc.parallelize(1 to 10, 2).count()))
     assert(three.jobs == 3, three)
   }
+
+  test("Harness.probe records the generated-code compiles of its block") {
+    // a literal no earlier plan used makes new generated code: a cache miss
+    val k = 1.0 + (System.nanoTime() % 1000003L)
+    val (_, run) = Harness.probe(spark)(spark.range(10).selectExpr(s"id * $k + 1.5 AS v").collect())
+    assert(run.compiles >= 1 && run.compileSeconds > 0.0, run)
+  }
 }
 
 class ProToolsSpec extends AnyFunSuite {
