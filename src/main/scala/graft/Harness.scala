@@ -19,6 +19,15 @@ object Harness {
     * `CodegenMetrics.METRIC_COMPILATION_TIME`). The compile counters are
     * JVM-wide: in local mode they include the executors' compiles, and
     * any other work the JVM runs meanwhile.
+    *
+    * `peakTaskMem` counts only memory Spark's memory manager hands out
+    * (sorts, aggregation and hash-join buffers). It misses what a kernel
+    * holds in plain JVM objects, which never spills either:
+    * `core.ChannelScan`'s block windows (FIR, CWT, resample, Welch/STFT
+    * frames, IIR blocks) and their FFT segments, `Dedup.bandPairs`' current
+    * bucket, `Dedup.LongUnionFind` in components, and the per-document
+    * arrays of the row kernels (`chunkSums`, `winnowFps`, the curate and
+    * gopher counts). A 0 there means "no managed buffer", not "no memory".
     */
   final case class Run(
       seconds: Double, jobs: Int, stages: Int, peakTaskMem: Long, spill: Long, compileSeconds: Double, compiles: Long)

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
   * (perturbed so content hashes differ) and runs the text/dedup
   * pipeline at 10× corpus scale. Per phase it reports wall time,
   * throughput, the max per-task peak execution memory and total spill —
-  * the cliff detectors.
+  * the cliff detectors. Peak task memory is Spark-managed memory only:
+  * the kernels that buffer in plain JVM arrays (see [[Harness.Run]],
+  * `bandPairs` included) read 0 there.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -135,6 +137,12 @@ object Prof {
       )
       phase(s"docs${docsX}_quality", nDocs)(llm.Curation.curate(docs))
       phase(s"docs${docsX}_minhash_lsh", nDocs)(llm.Dedup.minhashCandidates(docs))
+      // bandPairs holds one bucket's docs at a time: its largest bucket
+      // bounds that task's memory outside Spark's manager
+      if (only.forall(_.exists(s"docs${docsX}_minhash_lsh".contains))) {
+        val big = llm.Dedup.bandedSignatures(docs).groupBy(col("band"), col("bh")).count().agg(max(col("count"))).head()
+        println(s"PROF docs${docsX}_minhash_lsh largest bucket ${big.get(0)} docs")
+      }
       phase(s"docs${docsX}_simhash_pairs", nDocs)(llm.Dedup.simhashPairs(docs))
       phase(s"docs${docsX}_components", nDocs) {
         llm.Dedup.components(docs.select(col("doc_id")), llm.Dedup.simhashPairs(docs))

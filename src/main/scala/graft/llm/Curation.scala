@@ -21,16 +21,75 @@ object Curation {
   /** The text_quality score as a reusable Column (same formula as the
     * gate query, unrounded — filters compare the raw value).
     */
-  def qualityScore: Column = {
-    val nTok = size(split(col("text"), " ")).cast("double")
-    val nChars = length(col("text")).cast("double")
-    val nDigit = length(regexp_replace(col("text"), "[^0-9]", "")).cast("double")
-    val nPunct = length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("double")
+  def qualityScore: Column =
+    qualityOf(
+      size(split(col("text"), " ")),
+      length(col("text")),
+      length(regexp_replace(col("text"), "[^0-9]", "")),
+      length(regexp_replace(col("text"), "[a-z0-9 ]", ""))
+    )
+
+  /** The quality formula over a document's counts: space-split tokens,
+    * characters (code points), ASCII digits, and characters outside
+    * `[a-z0-9 ]`.
+    */
+  private def qualityOf(nTok0: Column, nChars0: Column, nDigit0: Column, nPunct0: Column): Column = {
+    val Seq(nTok, nChars, nDigit, nPunct) = Seq(nTok0, nChars0, nDigit0, nPunct0).map(_.cast("double"))
     val awl = (nChars - (nTok - 1)) / nTok
     greatest(
       lit(0.0),
       least(lit(1.0), lit(0.5) + lit(0.1) * (awl - 4.0) - nDigit / nChars - nPunct / nChars)
     )
+  }
+
+  /** `docs` plus the [[qualityOf]] counts of its `text`, in one pass over
+    * each document's characters (a kernel, so no filter on the score can
+    * push the counting under itself and run it twice): `q_tok` (spaces
+    * + 1, Spark's `size(split(text, " "))`), `q_chars` (code points, its
+    * `length`), `q_digit` and `q_punct`. A null text has null counts.
+    */
+  private[graft] def withQualityCounts(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val ti = docs.schema.fieldIndex("text")
+    val out = Seq("q_tok", "q_chars", "q_digit", "q_punct").foldLeft(docs.schema)(_.add(_, LongType))
+    docs.mapPartitions { rows =>
+      rows.map { r =>
+        val t = r.getString(ti)
+        val counts =
+          if (t == null) Seq(null, null, null, null)
+          else {
+            var (space, lower, digit) = (0L, 0L, 0L)
+            var i = 0
+            while (i < t.length) {
+              val c = t.charAt(i)
+              if (c == ' ') space += 1
+              else if (c >= 'a' && c <= 'z') lower += 1
+              else if (c >= '0' && c <= '9') digit += 1
+              i += 1
+            }
+            val chars = t.codePointCount(0, t.length).toLong
+            Seq(space + 1, chars, digit, chars - space - lower - digit)
+          }
+        Row.fromSeq(r.toSeq ++ counts)
+      }
+    }(org.apache.spark.sql.Encoders.row(out))
+  }
+
+  /** The quality gate and the exact-dedup keeper rule every curation
+    * flow starts with: (doc_id, text, carry…, quality) of the docs with
+    * quality ≥ minQuality that hold the min doc_id of their exact-content
+    * group. The gate runs FIRST: a dropped document must not shadow its
+    * duplicates as their keeper.
+    */
+  private def keepers(docs: DataFrame, minQuality: Double, carry: String*): DataFrame = {
+    val cols = ("doc_id" +: "text" +: carry).map(col)
+    withQualityCounts(docs.select(cols: _*))
+      .select(cols :+ qualityOf(col("q_tok"), col("q_chars"), col("q_digit"), col("q_punct")).as("quality"): _*)
+      .filter(col("quality") >= minQuality)
+      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
+      .filter(col("doc_id") === col("keep_id"))
+      .drop("keep_id")
   }
 
   private[llm] val qualitySql: String =
@@ -57,14 +116,7 @@ object Curation {
     * split. Output: (doc_id, split, quality).
     */
   def curate(docs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    docs
-      .select(col("doc_id"), col("text"), qualityScore.as("quality"))
-      // quality gate FIRST: a dropped document must not shadow its
-      // duplicates as their keeper
-      .filter(col("quality") >= minQuality)
-      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
-      .filter(col("doc_id") === col("keep_id"))
-      .select(col("doc_id"), splitCol.as("split"), col("quality"))
+    keepers(docs, minQuality).select(col("doc_id"), splitCol.as("split"), col("quality"))
 
   /** Benchmark decontamination core: for each candidate training doc,
     * the number of distinct word w-shingles it shares with the
@@ -147,13 +199,7 @@ object Curation {
     // regexes + md5 dedup window feed the simhash pair graph, the
     // component node set AND the canon join; without it the subtree
     // runs three times. Materialized by the first components() action.
-    val kept = docs
-      .select(col("doc_id"), col("text"), qualityScore.as("quality"))
-      .filter(col("quality") >= minQuality)
-      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
-      .filter(col("doc_id") === col("keep_id"))
-      .select(col("doc_id"), col("text"), col("quality"))
-      .localCheckpoint(false)
+    val kept = keepers(docs, minQuality).localCheckpoint(false)
     val comp = Dedup.components(
       kept.select(col("doc_id")),
       Dedup.simhashPairs(kept).select(col("doc_a"), col("doc_b"))
@@ -827,11 +873,7 @@ object Curation {
   def curateLlm(docs: DataFrame, minQuality: Double = 0.45): DataFrame = {
     // lazy checkpoint: the kept subtree feeds the DSIR gram stream
     // (twice, via its train/score fan-out) and the final join
-    val kept = docs
-      .select(col("doc_id"), col("text"), col("source"), qualityScore.as("quality"))
-      .filter(col("quality") >= minQuality)
-      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
-      .filter(col("doc_id") === col("keep_id"))
+    val kept = keepers(docs, minQuality, "source")
       .select(col("doc_id"), col("text"), col("source"))
       .localCheckpoint(false)
     val w = Dsir.weights(kept).select(col("doc_id"), col("log_weight"))
@@ -915,12 +957,7 @@ object Curation {
     * count under the pinned merge table.
     */
   private def keyedOf(docs: DataFrame, merges: Seq[String], minQuality: Double): DataFrame = {
-    val kept = docs
-      .select(col("doc_id"), col("text"), qualityScore.as("quality"))
-      .filter(col("quality") >= minQuality)
-      .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(md5(col("text")))))
-      .filter(col("doc_id") === col("keep_id"))
-      .select(col("doc_id"), col("text"))
+    val kept = keepers(docs, minQuality).select(col("doc_id"), col("text"))
     kept.select(
       col("doc_id"),
       col("text"),

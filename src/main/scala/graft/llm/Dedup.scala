@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 import graft.core.{Rounds, Tables}
@@ -11,10 +12,10 @@ import graft.core.{Rounds, Tables}
   *
   * Scale design: MinHash signatures are conditional-aggregation minima
   * over (doc × seed) rows — map-side combine shrinks to n_docs×k before
-  * any shuffle; LSH candidates come from an equi-join on band hashes
-  * (never O(n²)); Jaccard verification touches only LSH candidates.
-  * Hot buckets are AQE skew territory; the band/row parameters trade
-  * recall vs candidate volume.
+  * any shuffle; LSH candidates come from one exchange on band hashes and
+  * a per-bucket scan (never O(n²), [[bandPairs]]); Jaccard verification
+  * touches only LSH candidates. A hot bucket is one task's quadratic
+  * scan; the band/row parameters trade recall vs candidate volume.
   */
 object Dedup {
 
@@ -36,7 +37,7 @@ object Dedup {
     * permutes replaces 9 md5s — ~9× less hashing and integer (not hex
     * string) min-aggregation.
     */
-  private val (permA, permB): (Array[Long], Array[Long]) = {
+  private[graft] val (permA, permB): (Array[Long], Array[Long]) = {
     val r = new scala.util.Random(13)
     val a = Array.fill(numHashes)(r.nextInt(1 << 30).toLong * 2 + 1)
     val b = Array.fill(numHashes)(r.nextInt(Int.MaxValue).toLong)
@@ -74,13 +75,22 @@ object Dedup {
       s"FROM dsh, generate_series(0, ${numHashes - 1}) g(j) GROUP BY doc_id, g.j)"
   }
 
-  /** Banded signature rows (doc_id, band, bh): bh = xxhash64 of the
-    * band index and the band's r contiguous minhash values — one 64-bit
-    * bucket key per band, so the LSH join shuffles a single long
-    * regardless of r. The oracle joins on the raw value triple instead;
-    * the sets agree up to a ~2⁻⁶⁴ xxhash64 collision.
+  /** Each document's banded bucket keys, one row per document with a
+    * full signature: (doc_id, keys), keys(b) = xxhash64 of the band index
+    * and the band's r contiguous minhash values — one 64-bit bucket key
+    * per band, so the LSH shuffle moves a single long regardless of r.
+    * The oracle joins on the raw value triple instead; the sets agree up
+    * to a ~2⁻⁶⁴ xxhash64 collision.
+    *
+    * The signature is projected once and banded in a typed kernel, so no
+    * filter can be pushed under it and re-evaluate it. Docs shorter than
+    * the shingle window carry an EMPTY signature (MinHashSig) and a null
+    * text a null one: both are dropped, as the oracle's shingles CTE
+    * emits no rows for them.
     */
-  private def bandedSignatures(docs: DataFrame): DataFrame =
+  private def minhashBands(docs: DataFrame): Dataset[(Long, Array[Long])] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     docs
       .select(
         col("doc_id"),
@@ -88,35 +98,72 @@ object Dedup {
           .minhash_sig(split(col("text"), " "), 3, TextStats.maxTokens, permA, permB)
           .as("ms")
       )
-      // docs shorter than the shingle window carry an EMPTY signature
-      // (MinHashSig, expressions.scala:243): element_at below would
-      // throw under ANSI, and with ANSI off every short doc would share
-      // one constant null-fed bucket per band. The oracle's shingles
-      // CTE emits no rows for them either, so dropping here is parity.
-      .filter(size(col("ms")) === numHashes)
-      .select(
-        col("doc_id"),
-        posexplode(
-          array((0 until numBands).map { b =>
-            xxhash64(
-              (lit(b) +: (0 until bandRows).map(r => element_at(col("ms"), b * bandRows + r + 1))): _*
-            )
-          }: _*)
-        ).as(Seq("band", "bh"))
-      )
+      .as[(Long, Array[Long])]
+      .flatMap { case (id, ms) =>
+        if (ms == null || ms.length != numHashes) None
+        else
+          // Spark's xxhash64(b, m0, m1, m2): seed 42, each column hashed
+          // into the running value by its type (the band index is an int)
+          Some(id -> Array.tabulate(numBands) { b =>
+            (0 until bandRows).foldLeft(XXH64.hashInt(b, 42L))((h, r) => XXH64.hashLong(ms(b * bandRows + r), h))
+          })
+      }
+  }
+
+  /** Banded signature rows (doc_id, band, bh) of [[minhashBands]]: the
+    * store format of the incremental and streaming dedup paths.
+    */
+  private[graft] def bandedSignatures(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    minhashBands(docs)
+      .flatMap { case (id, keys) => keys.indices.map(b => (id, b, keys(b))) }
+      .toDF("doc_id", "band", "bh")
+  }
+
+  /** Every pair of documents sharing a bucket in some band and passing
+    * `score`, each pair once: (doc_a, doc_b, score) with doc_a < doc_b.
+    * `docs` holds each document's bucket key per band. One row per
+    * (doc, band) goes through one exchange on (band, key); a sorted scan
+    * then buffers only the current bucket and pairs each arriving doc
+    * with the bucket's earlier ones. A pair is emitted only in the lowest
+    * band its two docs share, so no distinct follows, and only when
+    * `score` of the two key arrays is ≥ 0. A bucket of m docs holds m
+    * key arrays in task memory outside Spark's manager and emits up to
+    * m(m−1)/2 pairs: hot buckets cost quadratically, as in any banded
+    * self-join.
+    */
+  private def bandPairs(docs: Dataset[(Long, Array[Long])])(score: (Array[Long], Array[Long]) => Long): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .flatMap { case (id, keys) => keys.indices.map(b => (b, keys(b), id, keys)) }
+      .toDF("band", "key", "doc", "keys")
+      .repartition(col("band"), col("key"))
+      .sortWithinPartitions(col("band"), col("key"), col("doc"))
+      .as[(Int, Long, Long, Array[Long])]
+      .mapPartitions { rows =>
+        var bucket = (-1, 0L)
+        val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Long])]
+        rows.flatMap { case (band, key, id, keys) =>
+          if (bucket != ((band, key))) { bucket = (band, key); seen.clear() }
+          val out = seen.iterator.flatMap { case (a, ka) =>
+            val lowest = (0 until band).forall(j => ka(j) != keys(j))
+            val s = if (a < id && lowest) score(ka, keys) else -1L
+            if (s >= 0) Some((a, id, s)) else None
+          }.toArray
+          seen += ((id, keys))
+          out
+        }
+      }
+      .toDF("doc_a", "doc_b", "score")
+  }
 
   /** LSH candidate pairs: docs sharing ALL `bandRows` minhash values of
     * at least one band (banded MinHash-LSH, the corpus-scale default).
     */
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val sigs = bandedSignatures(docs)
-    val a = sigs.select(col("doc_id").as("doc_a"), col("band"), col("bh"))
-    val b = sigs.select(col("doc_id").as("doc_b"), col("band"), col("bh"))
-    a.join(b, Seq("band", "bh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
+  def minhashCandidates(docs: DataFrame): DataFrame =
+    bandPairs(minhashBands(docs))((_, _) => 0L).select(col("doc_a"), col("doc_b"))
 
   /** The retired 9-bands × 1-row config (any single shared minhash value
     * is a candidate). Test-only twin: high recall, but buckets keyed on
@@ -489,45 +536,30 @@ object Dedup {
   val simhashSql: String = s"WITH $simhashCtes SELECT doc_id, sim_hi, sim_lo FROM sig"
 
   /** SimHash near-duplicate pairs (Charikar): band the 64-bit signature
-    * into 4×16-bit chunks, candidates = docs sharing any chunk (an
-    * equi-join — by pigeonhole any pair within hamming ≤ 3 shares one of
-    * the 4 chunks, so recall is exact), verify popcount(xor) ≤ 3 on the
-    * two 32-bit halves. Never O(n²); hot chunks are AQE skew territory.
+    * into 4×16-bit chunks, candidates = docs sharing any chunk
+    * ([[bandPairs]] — by pigeonhole any pair within hamming ≤ 3 shares
+    * one of the 4 chunks, so recall is exact), verify popcount(xor) ≤ 3
+    * over the chunks, i.e. the two 32-bit halves. Never O(n²); a hot
+    * chunk is one bucket's quadratic scan.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    // signature halves ride along with the banded chunks: the pair row
-    // out of the equi-join already carries both signatures, so the
-    // simhash subtree appears exactly twice (two identical sides → one
-    // exchange, reused) instead of once per verification join
-    val chunks = simhash(docs).select(
-      col("doc_id"),
-      col("sim_hi"),
-      col("sim_lo"),
-      posexplode(
-        array(
-          shiftright(col("sim_hi"), 16),
-          col("sim_hi").bitwiseAND(lit(65535L)),
-          shiftright(col("sim_lo"), 16),
-          col("sim_lo").bitwiseAND(lit(65535L))
-        )
-      ).as(Seq("ci", "chunk"))
-    )
-    val a = chunks.select(
-      col("doc_id").as("doc_a"), col("sim_hi").as("hi_a"), col("sim_lo").as("lo_a"),
-      col("ci"), col("chunk"))
-    val b = chunks.select(
-      col("doc_id").as("doc_b"), col("sim_hi").as("hi_b"), col("sim_lo").as("lo_b"),
-      col("ci"), col("chunk"))
-    a.join(b, Seq("ci", "chunk"))
-      .filter(col("doc_a") < col("doc_b"))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // one SimHash64 per doc; its four 16-bit chunks are the band keys,
+    // and the chunks alone give the hamming distance of the halves
+    val chunks = docs
       .select(
-        col("doc_a"),
-        col("doc_b"),
-        (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) +
-          bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long").as("hamming")
+        col("doc_id"),
+        graft.functions.exprs.simhash64(split(col("text"), " "), TextStats.maxTokens).as("s2")
       )
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+      .as[(Long, Array[Long])]
+      .flatMap { case (id, s2) =>
+        Option(s2).map { case Array(hi, lo) => id -> Array(hi >> 16, hi & 65535L, lo >> 16, lo & 65535L) }
+      }
+    bandPairs(chunks) { (a, b) =>
+      val h = a.indices.map(i => java.lang.Long.bitCount(a(i) ^ b(i))).sum
+      if (h <= maxHamming) h.toLong else -1L
+    }.withColumnRenamed("score", "hamming")
   }
 
   /** CTE chain ending in `pairs(doc_a, doc_b, hamming)` — the verified

@@ -229,8 +229,8 @@ object Sitemaps {
     * (lastmod DESC, priority DESC, loc ASC) with the 3-class host
     * delay — the sitemap-driven twin of `Urls.crawlSchedule`.
     *
-    * The robots decision is the row-local literal fold
-    * ([[Urls.robotsBestCol]] — streaming-safe, no rule join), and the
+    * The robots decision is the row-local longest-match test
+    * ([[Urls.robotsAllowed]] — streaming-safe, no rule join), and the
     * only exchange is the per-host slot window the frontier shards by
     * anyway.
     */
@@ -248,11 +248,7 @@ object Sitemaps {
       host.as("host"),
       path.as("path")
     )
-    val best = Urls.robotsBestCol(col("host"), col("path"))
-    val allowed = u
-      .withColumn("best", best)
-      .filter(col("best").isNull || col("best.a") === 1)
-      .drop("best")
+    val allowed = u.filter(udf((h: String, p: String) => Urls.robotsAllowed(h, p)).apply(col("host"), col("path")))
     val delayMs =
       expr("500 * (1 + CAST(substr(host, 5, length(host) - 16) AS BIGINT) % 3)")
     val w = org.apache.spark.sql.expressions.Window

@@ -1265,45 +1265,70 @@ object TextStats {
       "FROM documents d LEFT JOIN r ON r.doc_id = d.doc_id AND r.rn = 1"
   }
 
-  /** The full Gopher quality rule set (Rae et al. 2021, Appendix A) as
-    * ONE row-local projection — word-count bounds, mean word length,
-    * symbol-to-word ratio, bullet/ellipsis line fractions, alphabetic
-    * word fraction, stop-word presence, and the conjunction `pass`.
-    * No shuffle, no UDF: the shape a 100 TB filter pass must have.
-    * Every ratio is round6'd and the flags compare on the ROUNDED
-    * values (artifact_mask precedent — a threshold can never straddle
-    * an engine ulp).
+  /** The full Gopher quality rule set (Rae et al. 2021, Appendix A) —
+    * word-count bounds, mean word length, symbol-to-word ratio,
+    * bullet/ellipsis line fractions, alphabetic word fraction, stop-word
+    * presence, and the conjunction `pass`. No shuffle: one count kernel
+    * per document ([[gopherCounts]]), then the ratios as Column
+    * arithmetic over the counts. Every ratio is round6'd and the flags
+    * compare on the ROUNDED values (artifact_mask precedent — a
+    * threshold can never straddle an engine ulp).
     */
   val gopherStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
+  /** The counts the Gopher rules read, from one pass over each document:
+    * (doc_id, n_words, sum_len, n_alpha, n_lines, n_bullet, n_ellip,
+    * n_sym, n_stopwords). Words are the non-empty tokens of
+    * `split(text, ' ')` and lines the pieces of `split(text, '\n')`
+    * (Java's split with limit −1, as Spark's); lengths count code points
+    * (Spark's `length`); `n_alpha` counts words holding an ASCII letter;
+    * a bullet line starts with `-`, `*` or `•`, an ellipsis line ends in
+    * `...` or `…`; `n_sym` counts `#` and `…`; `n_stopwords` counts the
+    * [[gopherStops]] that occur as a word. As the higher-order-function
+    * form did, a null text has null counts and 0 stop words.
+    */
+  private def gopherCounts(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        if (text == null) (id, None, None, None, None, None, None, None, 0L)
+        else {
+          val words = text.split(" ", -1).filter(_.nonEmpty)
+          val lines = text.split("\n", -1)
+          val nSym = text.count(c => c == '#' || c == '\u2026')
+          (
+            id,
+            Some(words.length.toLong),
+            Some(words.map(w => w.codePointCount(0, w.length).toLong).sum),
+            Some(words.count(_.exists(c => (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z'))).toLong),
+            Some(lines.length.toLong),
+            Some(lines.count(l => l.startsWith("-") || l.startsWith("*") || l.startsWith("\u2022")).toLong),
+            Some(lines.count(l => l.endsWith("...") || l.endsWith("\u2026")).toLong),
+            Some(nSym.toLong),
+            gopherStops.count(words.contains).toLong
+          )
+        }
+      }
+      .toDF("doc_id", "n_words", "sum_len", "n_alpha", "n_lines", "n_bullet", "n_ellip", "n_sym", "n_stopwords")
+  }
+
   def gopher(docs: DataFrame): DataFrame = {
     val r6 = graft.core.Dsp.round6 _
-    val toks = expr("filter(split(text, ' '), t -> t != '')")
-    val nw = size(toks).cast("long")
-    val sumLen = expr("aggregate(filter(split(text, ' '), t -> t != ''), CAST(0 AS BIGINT), (a, t) -> a + length(t))")
-    val nAlpha = expr("size(filter(filter(split(text, ' '), t -> t != ''), t -> t rlike '[A-Za-z]'))").cast("long")
-    val lines = expr("split(text, '\n')")
-    val nl = size(lines).cast("long")
-    val nBullet = expr("size(filter(split(text, '\n'), l -> l LIKE '-%' OR l LIKE '*%' OR l LIKE '•%'))").cast("long")
-    val nEllip = expr("size(filter(split(text, '\n'), l -> l LIKE '%...' OR l LIKE '%…'))").cast("long")
-    val nSym = ((length(col("text")) - length(regexp_replace(col("text"), "#", ""))) +
-      (length(col("text")) - length(regexp_replace(col("text"), "…", "")))).cast("long")
-    val nStop = gopherStops
-      .map(s => when(array_contains(toks, s), 1).otherwise(0))
-      .reduce(_ + _)
-      .cast("long")
-    val safe = (num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =>
-      r6(when(den > 0, num.cast("double") / den.cast("double")).otherwise(lit(0.0)))
-    docs
+    val safe = (num: String, den: String) =>
+      r6(when(col(den) > 0, col(num).cast("double") / col(den).cast("double")).otherwise(lit(0.0)))
+    gopherCounts(docs)
       .select(
         col("doc_id"),
-        nw.as("n_words"),
-        safe(sumLen, nw).as("mean_word_len"),
-        safe(nSym, nw).as("symbol_ratio"),
-        safe(nAlpha, nw).as("alpha_frac"),
-        safe(nBullet, nl).as("bullet_frac"),
-        safe(nEllip, nl).as("ellipsis_frac"),
-        nStop.as("n_stopwords")
+        col("n_words"),
+        safe("sum_len", "n_words").as("mean_word_len"),
+        safe("n_sym", "n_words").as("symbol_ratio"),
+        safe("n_alpha", "n_words").as("alpha_frac"),
+        safe("n_bullet", "n_lines").as("bullet_frac"),
+        safe("n_ellip", "n_lines").as("ellipsis_frac"),
+        col("n_stopwords")
       )
       .withColumn(
         "pass",

@@ -388,24 +388,30 @@ object Urls {
       "(slot - 1) * (500 * (1 + CAST(substr(host, 5, length(host) - 16) AS BIGINT) % 3)) AS fetch_at_ms " +
       "FROM sl"
 
-  /** Row-local robots decision as ONE generated expression — the
+  private val robotsTable: Array[(String, String, Boolean)] =
+    robotsRules.map { case (h, d, p) => (h, p, d == "allow") }.toArray
+
+  /** Row-local robots decision over the literal rules — the
     * streaming-safe twin of [[crawlRobots]]' join+aggregate (a stream
-    * can't run an unwatermarked per-doc aggregation, and the rule
-    * table is a LITERAL, so the longest-match argmax folds into a
-    * `greatest` over per-rule conditional structs at plan time).
-    * Null = no rule matched (allowed).
+    * can't run an unwatermarked per-doc aggregation): the longest
+    * matching prefix governs, an allow wins a length tie, and no match
+    * (or a null host or path) is allowed. A Scala test, not a Column: as
+    * a Column fold over the rules, a filter on it is pushed below the
+    * projections and inlines the host and path chains into every rule
+    * (a 1.6M-character condition and a 13.8 MiB task binary in the
+    * streaming frontier; a stage too big for whole-stage codegen in the
+    * sitemap frontier).
     */
-  private[llm] def robotsBestCol(host: Column, path: Column): Column =
-    greatest(robotsRules.map { case (h, d, p) =>
-      when(
-        host === h && path.startsWith(p),
-        struct(
-          lit(p.length).as("l"),
-          lit(if (d == "allow") 1 else 0).as("a"),
-          lit(p).as("p")
-        )
-      )
-    }: _*)
+  private[llm] def robotsAllowed(host: String, path: String): Boolean = {
+    var len = -1
+    var allow = true
+    if (path != null)
+      for ((h, p, a) <- robotsTable)
+        if (h == host && path.startsWith(p) && (p.length > len || (p.length == len && a))) {
+          len = p.length; allow = a
+        }
+    allow
+  }
 
   /** STREAMING frontier scheduling — the ingest twin of
     * [[crawlSchedule]]: URL candidates arrive in micro-batches, the
@@ -437,22 +443,8 @@ object Urls {
         col("host"),
         regexp_extract(expr("substr(canon, length(host) + 1)"), "^[^?]*", 0).as("path")
       )
-    // the robots screen is a Scala test over the literal rules: as a
-    // Column (robotsBestCol) the filter is pushed below the projections
-    // and inlines the host and path chains into every rule — a
-    // 1.6M-character condition that shipped a 13.8 MiB task binary
-    val rules = robotsRules.map { case (h, d, p) => (h, p, d == "allow") }.toArray
     u.as[(Long, String, String)]
-      .filter { r =>
-        // the longest matching prefix governs; an allow wins a length tie
-        var len = -1
-        var allow = true
-        for ((h, p, a) <- rules)
-          if (h == r._2 && r._3.startsWith(p) && (p.length > len || (p.length == len && a))) {
-            len = p.length; allow = a
-          }
-        allow
-      }
+      .filter(r => robotsAllowed(r._2, r._3))
       .groupByKey(_._2)
       .flatMapGroupsWithState[Long, (Long, String, String, Long, Long)](
         OutputMode.Append,

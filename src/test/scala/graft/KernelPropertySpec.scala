@@ -254,6 +254,154 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(want.nonEmpty)
     assert(out(withNull) == want)
   }
+
+  // ---- corpus_curation kernels: one evaluation per document (curate's
+  // quality counts, gopher's counts, the MinHash and SimHash signatures
+  // under bandPairs) vs the Column forms they replaced, kept here only as
+  // references ----
+
+  private lazy val curationDocs = {
+    val base = "the quick brown fox jumps over the lazy dog and runs far away from the old barn"
+    val texts: Seq[String] =
+      edgeTexts ++ Seq(
+        null,
+        "a   b    c     d", // runs of spaces: empty tokens
+        "• bullet 😀 line…\n- dash line...\n* star\n#tag … 𝔘𝔫𝔦 😀😀 x", // surrogate pairs, … and •
+        "Line one...\n\n•\n…\nDigits 123 and 4567 #### MIXED Case",
+        base, // with its exact copy below: shares every band and chunk
+        base,
+        base.replace("barn", "farm"), // near-dup: shares some bands, not all
+        base.replace("quick", "slow").replace("barn", "farm")
+      ) ++ Seq.fill(55)("one two three four five six seven eight nine ten") ++ // one bucket of 55 docs
+        Seq.fill(80)(randText(3 + textRnd.nextInt(60)))
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+  }
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Set[Seq[Any]]) = {
+    val rows = df.collect().map(_.toSeq).toSeq
+    (rows, rows.toSet)
+  }
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame, ref: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val (g, gs) = rowSet(got)
+    val (_, rs) = rowSet(ref)
+    assert(g.length == gs.size, s"$what: ${g.length - gs.size} rows emitted more than once")
+    assert(gs == rs, s"$what: kernel-only ${(gs -- rs).take(5)}; reference-only ${(rs -- gs).take(5)}")
+  }
+
+  test("minhashCandidates (bandPairs) equals the banded self-join form") {
+    import graft.llm.{Dedup, TextStats}
+    val sigs = curationDocs
+      .select(
+        col("doc_id"),
+        graft.functions.exprs.minhash_sig(split(col("text"), " "), 3, TextStats.maxTokens, Dedup.permA, Dedup.permB).as("ms")
+      )
+      .filter(size(col("ms")) === Dedup.numHashes)
+      .select(
+        col("doc_id"),
+        posexplode(array((0 until Dedup.numBands).map { b =>
+          xxhash64((lit(b) +: (0 until Dedup.bandRows).map(r => element_at(col("ms"), b * Dedup.bandRows + r + 1))): _*)
+        }: _*)).as(Seq("band", "bh"))
+      )
+    val a = sigs.select(col("doc_id").as("doc_a"), col("band"), col("bh"))
+    val b = sigs.select(col("doc_id").as("doc_b"), col("band"), col("bh"))
+    val ref = a.join(b, Seq("band", "bh")).filter(col("doc_a") < col("doc_b")).select(col("doc_a"), col("doc_b")).distinct()
+    // the reference's per-band hits: the exact copy shares all 3 bands,
+    // the near-dup fewer, and the 55-doc bucket makes 55·54/2 pairs
+    val bands = a.join(b, Seq("band", "bh")).filter(col("doc_a") < col("doc_b")).groupBy("doc_a", "doc_b").count()
+    assert(bands.filter(col("count") === Dedup.numBands).count() > 1000, "no pair shares every band")
+    assert(bands.filter(col("count") < Dedup.numBands).count() > 0, "no pair shares only some bands")
+    sameRows(Dedup.minhashCandidates(curationDocs), ref, "minhashCandidates")
+  }
+
+  test("simhashPairs (bandPairs) equals the chunk self-join form") {
+    import graft.llm.{Dedup, TextStats}
+    val chunks = curationDocs
+      .select(col("doc_id"), graft.functions.exprs.simhash64(split(col("text"), " "), TextStats.maxTokens).as("s2"))
+      .select(col("doc_id"), element_at(col("s2"), 1).as("sim_hi"), element_at(col("s2"), 2).as("sim_lo"))
+      .select(
+        col("doc_id"), col("sim_hi"), col("sim_lo"),
+        posexplode(array(
+          shiftright(col("sim_hi"), 16), col("sim_hi").bitwiseAND(lit(65535L)),
+          shiftright(col("sim_lo"), 16), col("sim_lo").bitwiseAND(lit(65535L))
+        )).as(Seq("ci", "chunk"))
+      )
+    def ref(maxHamming: Int) = {
+      val a = chunks.select(col("doc_id").as("doc_a"), col("sim_hi").as("hi_a"), col("sim_lo").as("lo_a"), col("ci"), col("chunk"))
+      val b = chunks.select(col("doc_id").as("doc_b"), col("sim_hi").as("hi_b"), col("sim_lo").as("lo_b"), col("ci"), col("chunk"))
+      a.join(b, Seq("ci", "chunk"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select(
+          col("doc_a"), col("doc_b"),
+          (bit_count(col("hi_a").bitwiseXOR(col("hi_b"))) + bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("long").as("hamming")
+        )
+        .filter(col("hamming") <= maxHamming)
+        .distinct()
+    }
+    for (h <- Seq(3, 12)) {
+      val r = ref(h)
+      assert(r.filter(col("hamming") > 0).count() > 0, s"maxHamming $h: no inexact pair")
+      sameRows(Dedup.simhashPairs(curationDocs, h), r, s"simhashPairs(maxHamming = $h)")
+    }
+  }
+
+  test("curate's count kernel equals the regexp quality form") {
+    import graft.llm.Curation
+    val splitRef = {
+      val h100 = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long") % 100
+      when(h100 < 90, "train").when(h100 < 95, "val").otherwise("test")
+    }
+    def ref(docs: org.apache.spark.sql.DataFrame, minQuality: Double) =
+      docs
+        .select(col("doc_id"), col("text"), Curation.qualityScore.as("quality"))
+        .filter(col("quality") >= minQuality)
+        .withColumn("keep_id", min(col("doc_id")).over(org.apache.spark.sql.expressions.Window.partitionBy(md5(col("text")))))
+        .filter(col("doc_id") === col("keep_id"))
+        .select(col("doc_id"), splitRef.as("split"), col("quality"))
+    // an empty text divides 0 by 0 chars: the score throws under ANSI in
+    // both forms, so it is checked apart
+    val docs = curationDocs.filter(col("text").isNull || col("text") =!= "")
+    for (q <- Seq(0.0, 0.45, 0.6)) sameRows(Curation.curate(docs, q), ref(docs, q), s"curate(minQuality = $q)")
+    val counts = Curation.withQualityCounts(curationDocs).filter(col("text").isNull).select("q_tok", "q_chars").head()
+    assert(counts.isNullAt(0) && counts.isNullAt(1), "a null text got counts")
+    val empty = Seq((1L, "")).toDF("doc_id", "text")
+    val refEmpty = scala.util.Try(ref(empty, 0.0).collect().toSeq.map(_.toSeq))
+    val gotEmpty = scala.util.Try(Curation.curate(empty, 0.0).collect().toSeq.map(_.toSeq))
+    assert(refEmpty.isFailure == gotEmpty.isFailure && (refEmpty.isFailure || refEmpty == gotEmpty), s"$refEmpty vs $gotEmpty")
+  }
+
+  test("gopher's count kernel equals the higher-order-function form") {
+    import graft.llm.TextStats
+    val r6 = graft.core.Dsp.round6 _
+    val toks = expr("filter(split(text, ' '), t -> t != '')")
+    val nw = size(toks).cast("long")
+    val sumLen = expr("aggregate(filter(split(text, ' '), t -> t != ''), CAST(0 AS BIGINT), (a, t) -> a + length(t))")
+    val nAlpha = expr("size(filter(filter(split(text, ' '), t -> t != ''), t -> t rlike '[A-Za-z]'))").cast("long")
+    val nl = size(expr("split(text, '\n')")).cast("long")
+    val nBullet = expr("size(filter(split(text, '\n'), l -> l LIKE '-%' OR l LIKE '*%' OR l LIKE '•%'))").cast("long")
+    val nEllip = expr("size(filter(split(text, '\n'), l -> l LIKE '%...' OR l LIKE '%…'))").cast("long")
+    val nSym = ((length(col("text")) - length(regexp_replace(col("text"), "#", ""))) +
+      (length(col("text")) - length(regexp_replace(col("text"), "…", "")))).cast("long")
+    val nStop = TextStats.gopherStops.map(s => when(array_contains(toks, s), 1).otherwise(0)).reduce(_ + _).cast("long")
+    val safe = (num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =>
+      r6(when(den > 0, num.cast("double") / den.cast("double")).otherwise(lit(0.0)))
+    val ref = curationDocs
+      .select(
+        col("doc_id"), nw.as("n_words"), safe(sumLen, nw).as("mean_word_len"), safe(nSym, nw).as("symbol_ratio"),
+        safe(nAlpha, nw).as("alpha_frac"), safe(nBullet, nl).as("bullet_frac"), safe(nEllip, nl).as("ellipsis_frac"),
+        nStop.as("n_stopwords")
+      )
+      .withColumn(
+        "pass",
+        col("n_words") >= 50 && col("n_words") <= 100000 && col("mean_word_len") >= 3.0 &&
+          col("mean_word_len") <= 10.0 && col("symbol_ratio") <= 0.1 && col("alpha_frac") >= 0.8 &&
+          col("bullet_frac") <= 0.9 && col("ellipsis_frac") <= 0.3 && col("n_stopwords") >= 2
+      )
+    val got = TextStats.gopher(curationDocs)
+    assert(ref.filter(col("bullet_frac") > 0 && col("ellipsis_frac") > 0 && col("symbol_ratio") > 0).count() > 0,
+      "no doc exercises bullets, ellipses and symbols")
+    sameRows(got, ref, "gopher")
+  }
 }
 
 /** Non-power-of-two nfft goes through Fft.Periodogram's tabled-DFT branch;

@@ -185,6 +185,41 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  // corpus_curation's per-document work runs once per document: in the
+  // plan of every action a gate runs, construction-time checkpoints
+  // included, no signature or text split appears twice, and no filter
+  // re-evaluates a signature, a regexp replace or a split (Catalyst
+  // pushes a filter on a projected column below the projection by
+  // inlining its expression, and CSE never merges two lambdas over one
+  // split)
+  test("per-document expressions are evaluated once") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, StringSplit}
+    import org.apache.spark.sql.execution.FilterExec
+    import graft.functions.{MinHashSig, SimHash64}
+    def costly(e: Expression): Boolean = e match {
+      case _: SimHash64 | _: MinHashSig | _: StringSplit => true
+      case _ => false
+    }
+    def offenders(name: String): Seq[String] = {
+      val (df, plans) = SparkProbe.actionPlans(SparkEntry.queries(name)(spark, sf))
+      (plans :+ df.queryExecution.executedPlan).flatMap { plan =>
+        val nodes = SparkProbe.nodes(plan)
+        val repeated = nodes
+          .flatMap(_.expressions.flatMap(_.collect { case e if costly(e) => e.nodeName }))
+          .groupBy(identity)
+          .collect { case (e, hits) if hits.size > 1 => s"$name: $e ${hits.size} times in one plan" }
+        val filtered = nodes.collect {
+          case f: FilterExec if f.condition.exists(e => costly(e) || e.isInstanceOf[RegExpReplace]) =>
+            s"$name: a Filter evaluates ${f.condition.collect { case e if costly(e) || e.isInstanceOf[RegExpReplace] => e.nodeName }.distinct.mkString(", ")}"
+        }
+        repeated ++ filtered
+      }.distinct
+    }
+    val bad = Seq("dedup_minhash", "dedup_simhash_pairs", "dedup_components", "curate_splits", "text_gopher")
+      .flatMap(offenders)
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   // The wide-payload rule, mechanical: a ranking window sorts
   // (key, id, metric) only — embedding or code arrays join back after
   // the prune. Checked on every action a flat ANN gate runs, the

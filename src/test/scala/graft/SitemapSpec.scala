@@ -138,6 +138,44 @@ class SitemapSpec extends AnyFunSuite {
     assert(bad == 0)
   }
 
+  // the robots screen is one Scala longest-match test, so the frontier's
+  // filter stage compiles within the method size limit: whole-stage
+  // codegen runs it instead of falling back to interpreted rows
+  test("the frontier's robots filter runs under whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every node Spark ran, through AQE's stages and the gate's cache
+    def ran(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => ran(a.executedPlan)
+      case q: QueryStageExec => ran(q.plan)
+      case m: InMemoryTableScanExec => ran(m.relation.cachedPlan)
+      case o => o.children.flatMap(ran)
+    })
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case o => o.children.flatMap(stage) })
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false") // the codegen stages are planned up front
+    val plan =
+      try SparkEntry.queries("sitemap_frontier")(spark, sf).queryExecution.executedPlan
+      finally spark.conf.set(key, prev)
+    val stages = ran(plan).collect { case w: WholeStageCodegenExec => w }
+    val limit = spark.sessionState.conf.hugeMethodLimit
+    val tooBig = stages.flatMap { w =>
+      val size = scala.util.Try(CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize).getOrElse(Int.MaxValue)
+      if (size > limit) Some(s"stage ${w.codegenStageId}: ${if (size == Int.MaxValue) "does not compile" else s"a $size-byte method"}")
+      else None
+    }
+    assert(tooBig.isEmpty, s"stages Spark would run interpreted: ${tooBig.mkString("; ")}")
+    val robots = stages.filter(w => stage(w.child).exists {
+      case f: FilterExec => f.condition.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])
+      case _ => false
+    })
+    assert(robots.size == 1, s"the robots filter is not in one codegen stage:\n$plan")
+  }
+
   test("sitemaps parse IN-STREAM and feed the politeness scheduler across batches") {
     // the discovery composition: a fetched sitemap page is just another
     // streamed document — sitemapParse is row-local (stream-safe), and
