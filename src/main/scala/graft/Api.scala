@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.{Dsp, Elliptic, Iir, Remez}
 import graft.operators.{CwtOps, FirOps, HilbertOps, IirOps, ProTools, ResampleOps, ResponseOps, SpectraOps, XcorrOps}
@@ -21,7 +20,9 @@ import graft.operators.{CwtOps, FirOps, HilbertOps, IirOps, ProTools, ResampleOp
   *
   * Data is the long-format signal `(channel, n, x)` — the distributed
   * analogue of the reference's producer; chunksize disappears because
-  * Spark owns partitioning.
+  * Spark owns partitioning. Only openseize call shapes live here: the
+  * LLM-data, streaming and scale operators are called in their own
+  * modules (the `llm` and `streaming` packages, `core.Scale`).
   */
 object Api {
 
@@ -41,7 +42,7 @@ object Api {
       * DataFrame: (k, freq, mag, db) over worN points in [0, fs/2).
       */
     def frequencyResponse(
-        spark: org.apache.spark.sql.SparkSession,
+        spark: SparkSession,
         fs: Double,
         worN: Int = 512,
         ropeDb: Double = -120.0
@@ -50,7 +51,7 @@ object Api {
     /** Reference FIRViewer.impulse_response (mixins.py:277): the taps
       * padded to a 1-second pulse response.
       */
-    def impulseResponse(spark: org.apache.spark.sql.SparkSession, fs: Double): DataFrame =
+    def impulseResponse(spark: SparkSession, fs: Double): DataFrame =
       ResponseOps.impulseFir(spark, coeffs, fs)
   }
 
@@ -86,7 +87,7 @@ object Api {
 
     /** Reference IIRViewer.frequency_response (mixins.py:240). */
     def frequencyResponse(
-        spark: org.apache.spark.sql.SparkSession,
+        spark: SparkSession,
         fs: Double,
         worN: Int = 512,
         ropeDb: Double = -120.0
@@ -95,7 +96,7 @@ object Api {
     /** Reference IIRViewer.impulse_response (mixins.py:226): a 1-second
       * unit pulse through the cascade.
       */
-    def impulseResponse(spark: org.apache.spark.sql.SparkSession, fs: Double): DataFrame =
+    def impulseResponse(spark: SparkSession, fs: Double): DataFrame =
       ResponseOps.impulseSos(spark, sos, fs)
   }
 
@@ -149,7 +150,6 @@ object Api {
   def carReref(sig: DataFrame): DataFrame = ProTools.carReref(sig)
   def artifactMask(sig: DataFrame, threshold: Double = 2.5): DataFrame =
     ProTools.artifactMask(sig, threshold)
-  def psdFast(sig: DataFrame, nfft: Int): DataFrame = SpectraOps.psdWelchFast(sig, nfft)
   def stft(sig: DataFrame): DataFrame = SpectraOps.stft(sig)
   def psdCi(sig: DataFrame): DataFrame = SpectraOps.psdCi(sig)
 
@@ -203,811 +203,10 @@ object Api {
   // ---- file I/O (reference file_io.edf / annotations) ----
 
   /** Distributed EDF read: (src, channel, n, x) one task per file. */
-  def readEdf(spark: org.apache.spark.sql.SparkSession, pathGlob: String): DataFrame =
+  def readEdf(spark: SparkSession, pathGlob: String): DataFrame =
     sources.Edf.readSpark(spark, pathGlob)
 
   /** Distributed per-recording EDF write (executor-side sink). */
   def writeEdf(sig: DataFrame, outDir: String, fs: Double, samplesPerRecord: Int = 256): Unit =
     sources.Edf.writeSpark(sig, outDir, fs, samplesPerRecord)
-
-  // ---- LLM-training-data operators (graft extensions) ----
-
-  /** Exact duplicate groups over a (doc_id, text) corpus. */
-  def dedupExact(docs: DataFrame): DataFrame =
-    docs
-      .groupBy(org.apache.spark.sql.functions.md5(org.apache.spark.sql.functions.col("text")).as("h"))
-      .agg(
-        org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")).as("keep_id"),
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n_dups")
-      )
-
-  /** MinHash-LSH candidate pairs (never all-pairs). */
-  def minhashCandidates(docs: DataFrame): DataFrame = llm.Dedup.minhashCandidates(docs)
-
-  /** Shingle-Jaccard similarity on the LSH candidates. */
-  def jaccard(docs: DataFrame): DataFrame = llm.Dedup.jaccard(docs)
-
-  /** 64-bit SimHash signatures / hamming≤k near-dup pairs. */
-  def simhash(docs: DataFrame): DataFrame = llm.Dedup.simhash(docs)
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame =
-    llm.Dedup.simhashPairs(docs, maxHamming)
-
-  /** Brute-force cosine top-k (baseline) and IVF ANN with optional
-    * k-means||-trained centroids (the scale path).
-    */
-  def simTopk(emb: DataFrame): DataFrame = llm.Similarity.topk(emb)
-  def ivfTopk(
-      emb: DataFrame,
-      nList: Int = 16,
-      nProbe: Int = 4,
-      centroids: Option[Array[Array[Double]]] = None
-  ): DataFrame = llm.Similarity.ivfTopk(emb, nList, nProbe, centroids)
-  def trainCentroids(emb: DataFrame, k: Int = 16): Array[Array[Double]] =
-    llm.Similarity.kmeansParallel(emb, k)
-
-  /** Embedding-cosine near-duplicate pairs (banded hyperplane LSH). */
-  /** SemDeDup-style semantic dedup: coarse-cell assignment bounds the
-    * candidate set; flags each vector whose cosine to a lower-id
-    * cell-mate reaches tau.
-    */
-  def semanticDupes(emb: DataFrame, tau: Double = 0.4,
-      centroids: Option[Array[Array[Double]]] = None): DataFrame =
-    llm.Similarity.semanticDupes(emb, tau, centroids = centroids)
-
-  def embedDupes(emb: DataFrame, tau: Double = 0.4): DataFrame =
-    llm.Similarity.embedDupes(emb, tau)
-
-  /** Connected components over near-dup pairs: every doc → the min
-    * doc_id reachable from it (the dedup-group canonicalizer).
-    */
-  /** Full MinHash dedup pipeline: LSH candidates → Jaccard ≥ minJ →
-    * components; every doc labeled with its dedup-group min.
-    */
-  def dedupGroups(docs: DataFrame, minJ: Double = 0.7): DataFrame =
-    llm.Dedup.components(
-      docs.select(org.apache.spark.sql.functions.col("doc_id")),
-      llm.Dedup
-        .jaccard(docs)
-        .filter(org.apache.spark.sql.functions.col("jaccard") >= minJ)
-        .select(
-          org.apache.spark.sql.functions.col("doc_a"),
-          org.apache.spark.sql.functions.col("doc_b")
-        )
-    )
-
-  def components(nodes: DataFrame, pairs: DataFrame): DataFrame =
-    llm.Dedup.components(nodes, pairs)
-
-  /** Product-quantization ANN: trained codebooks + asymmetric-distance
-    * top-k over the 32×-compressed corpus.
-    */
-  def pqTopk(emb: DataFrame, codebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame =
-    llm.Similarity.pqTopk(emb, codebooks)
-  def trainPqCodebooks(emb: DataFrame, iters: Int = 5): Array[Array[Array[Double]]] =
-    llm.Similarity.pqTrain(emb, iters)
-
-  /** IVF+PQ: coarse cells bound candidates, PQ codes the residual. */
-  def ivfPqTopk(emb: DataFrame, nList: Int = 16, nProbe: Int = 4): DataFrame =
-    llm.Similarity.ivfPqTopk(emb, nList, nProbe)
-
-  /** BM25 scored retrieval over the corpus for a fixed term set. */
-  def bm25(docs: DataFrame, terms: Seq[String]): DataFrame =
-    llm.TextStats.bm25(docs, terms)
-
-  /** Gopher-style 2-gram repetition screen. */
-  def repetition(docs: DataFrame): DataFrame = llm.TextStats.repetition(docs)
-
-  /** Corpus-LM quality proxies: per-doc average unigram / conditional
-    * bigram log-probability under the corpus's own counts.
-    */
-  def unigramLogProb(docs: DataFrame): DataFrame = llm.TextStats.unigramLogProb(docs)
-  def bigramLogProb(docs: DataFrame): DataFrame = llm.TextStats.bigramLogProb(docs)
-
-  /** Fixed-window doc chunking / concat-and-chunk sequence packing. */
-  def chunkDocs(docs: DataFrame, winTok: Int): DataFrame = llm.TextStats.chunks(docs, winTok)
-  def packDocs(docs: DataFrame): DataFrame = llm.TextStats.pack(docs)
-
-  /** Per-source corpus profile: doc/token counts, mean quality,
-    * exact-duplicate surplus.
-    */
-  def corpusStats(docs: DataFrame): DataFrame = llm.Curation.corpusStats(docs)
-
-  /** Exact-k deterministic per-source holdout sample. */
-  def sampleStratified(docs: DataFrame, k: Int = 50): DataFrame =
-    llm.Curation.sampleStratified(docs, k)
-
-  /** n-gram decontamination screen of `train` against `bench`. */
-  def decontam(train: DataFrame, bench: DataFrame, w: Int = 3): DataFrame =
-    llm.Curation.decontamCounts(train, bench, w)
-
-  /** Watermarked streaming decontam (train carries a `ts` column):
-    * finalized docs leave the state store — bounded state on an
-    * unbounded stream.
-    */
-  def decontamStream(train: DataFrame, bench: DataFrame, w: Int = 3): DataFrame =
-    llm.Curation.decontamStream(train, bench, w)
-
-  /** Quality-filter → dedup-keeper → train/val/test split pipeline. */
-  def curate(docs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    llm.Curation.curate(docs, minQuality)
-
-  /** The full pipeline: quality → exact dedup → near-dup components →
-    * splits → train-vs-test decontamination → per-split summary.
-    */
-  def curateFull(docs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    llm.Curation.curateFull(docs, minQuality)
-
-  /** The Gopher quality rule set (Rae et al. 2021) — per-doc screens +
-    * the conjunction `pass`, one row-local projection.
-    */
-  def gopherRules(docs: DataFrame): DataFrame = llm.TextStats.gopher(docs)
-
-  /** C4 line-level cleaning: kept-line counts, cleaned-text md5 and
-    * the page-drop flag.
-    */
-  def c4Clean(docs: DataFrame): DataFrame = llm.Curation.c4Clean(docs)
-
-  /** DSIR importance weights (Xie et al. 2023): per-doc
-    * log p_target − log p_raw under hashed-bigram models.
-    */
-  def dsirWeights(docs: DataFrame): DataFrame = llm.Dsir.weights(docs)
-
-  /** Multi-class char-trigram language ID, optionally with a separate
-    * training corpus.
-    */
-  def langId(docs: DataFrame, train: Option[DataFrame] = None): DataFrame =
-    llm.TextStats.langidNgram(docs, train)
-
-  /** BPE subword machinery: deterministic trainer, per-doc counts,
-    * token-budgeted packing, token-mass mixture weights.
-    */
-  def bpeMerges(docs: DataFrame): Seq[String] = llm.Bpe.gateMerges(docs)
-  def tokensBpe(docs: DataFrame): DataFrame = llm.Bpe.tokensBpe(docs)
-  def packDocsBpe(docs: DataFrame): DataFrame = llm.Bpe.packBpe(docs)
-  def mixWeightsBpe(docs: DataFrame, alpha: Double = 0.7): DataFrame =
-    llm.Bpe.mixBpe(docs, alpha)
-
-  /** The BPE segmentation surface: per-doc encoded form (md5), piece
-    * count, and the in-plan decode-identity witness.
-    */
-  def segmentsBpe(docs: DataFrame): DataFrame = llm.Bpe.segmentsBpe(docs)
-
-  /** Duplicate-span removal (Lee et al. 2022): excise cross-doc
-    * duplicate w-gram spans, emit removal counts + cleaned md5.
-    */
-  def removeDupSpans(docs: DataFrame): DataFrame = llm.Dedup.spanRemoval(docs)
-
-  /** Image perceptual-hash near-dup pairs through the PNG codec. */
-  def phashPairs(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    llm.Multimodal.phashPairs(media, maxHamming)
-
-  /** Audio fingerprint near-dup pairs through the WAV codec
-    * (Haitsma–Kalker-shaped integer band-energy-delta signature).
-    */
-  def wavFingerprint(media: DataFrame): DataFrame = llm.Multimodal.wavFingerprint(media)
-  def wavFpPairs(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    llm.Multimodal.wavFpPairs(media, maxHamming)
-
-  /** Corpus snapshot diff: per-doc added/removed/changed/unchanged
-    * between two snapshots — one full-outer id join, shuffle-free on
-    * the doc_id-bucketed layout.
-    */
-  def corpusDiff(oldSnap: DataFrame, newSnap: DataFrame): DataFrame =
-    llm.Curation.corpusDiff(oldSnap, newSnap)
-
-  /** Quality → exact dedup → DSIR weights → per-source selection
-    * profile (the LLM-selection composition).
-    */
-  def curateLlm(docs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    llm.Curation.curateLlm(docs, minQuality)
-
-  /** Multimodal: real PNG/WAV decode-feature passes + bilinear resize. */
-  def pngFeatures(media: DataFrame): DataFrame = llm.Multimodal.pngFeatures(media)
-
-  /** Spectral band-energy shares of decoded PCM16 audio clips. */
-  def wavSpectral(media: DataFrame): DataFrame = llm.Multimodal.wavSpectral(media)
-  def wavFeatures(media: DataFrame): DataFrame = llm.Multimodal.wavFeatures(media)
-  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = llm.Multimodal.resize(media, w, h)
-
-  /** Header-directed video frame sampling: every k-th frame's stats +
-    * motion vs the previous sampled frame, row-local per payload.
-    */
-  def videoFrames(media: DataFrame, everyK: Int = 4): DataFrame =
-    llm.Multimodal.videoFrames(media, everyK)
-
-  /** Ingest-batch near-dup screen against the persisted signature +
-    * shingle stores (the incremental-dedup cadence).
-    */
-  def incrementalDedup(docs: DataFrame, tau: Double = 0.7): DataFrame =
-    llm.Dedup.incrementalDedup(docs, tau)
-
-  /** Zero-state streaming LSH screen of an ingest stream against the
-    * persisted signature store (+ [[writeSignatureStore]] to seed/append).
-    */
-  def incrementalScreenStream(docs: DataFrame, sigStore: String): DataFrame =
-    llm.Dedup.incrementalScreenStream(docs, sigStore)
-  def writeSignatureStore(docs: DataFrame, path: String, append: Boolean = false): Unit =
-    llm.Dedup.writeSignatureStore(docs, path, append)
-
-  /** Boundary extension (zero/edge/even/odd — the filtfilt edge
-    * treatment) of each channel's head slice.
-    */
-  def extendBoundary(sig: DataFrame): DataFrame = operators.ProTools.proExtend(sig)
-
-  /** PAC comodulogram demo: synthetic phase-amplitude-coupled signal →
-    * carrier-band envelope per modulator-phase bin.
-    */
-  def pacDemo(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    operators.PacOps.pacDemo(spark)
-
-  /** Feature-hashing doc embeddings: vocabulary-free signed-bucket
-    * vectors, l2-normalized, long-form (doc_id, bucket, weight).
-    */
-  def hashEmbed(docs: DataFrame, dim: Int = 64): DataFrame =
-    llm.TextStats.hashEmbed(docs, dim)
-
-  /** Salted equi-join for hot-key skew (exact; dim side replicated per
-    * salt). See also core.Scale.bucketedJoin / saltedSumCount.
-    */
-  def saltedJoin(
-      big: DataFrame,
-      dim: DataFrame,
-      key: String,
-      saltFrom: org.apache.spark.sql.Column,
-      saltBuckets: Int = 16
-  ): DataFrame = core.Scale.saltedJoin(big, dim, key, saltFrom, saltBuckets)
-
-  /** Misra–Gries heavy hitters (mergeable summary, no shuffle): keys
-    * with frequency > n/k are guaranteed present; counts underestimate
-    * by at most n/k.
-    */
-  def heavyHitters(df: DataFrame, key: org.apache.spark.sql.Column, k: Int): Seq[(String, Long)] =
-    core.Scale.heavyHitters(df, key, k)
-
-  /** Bloom-filter decontamination screen: train docs with >= 1 shingle
-    * possibly in the benchmark split — m/8 bytes of broadcast state
-    * regardless of benchmark size, false positives only.
-    */
-  def bloomScreen(docs: DataFrame): DataFrame = llm.Sketches.bloomScreen(docs)
-
-  /** HyperLogLog per-source distinct-token estimate (m=64 registers) —
-    * the groupBy(source, register) MAX is the sketch merge, shuffling
-    * <= sources x m rows instead of every distinct value.
-    */
-  def hllDistinct(docs: DataFrame): DataFrame = llm.Sketches.hllDistinct(docs)
-
-  /** Count–Min token-frequency profile of the exact top-20 tokens:
-    * (tok, n_exact, est_cms); est never undercounts. Build is one
-    * map-side-combined (row, bucket) aggregation of ≤ d·w counters.
-    */
-  def cmsTopTokens(docs: DataFrame): DataFrame = llm.Sketches.cmsTopTokens(docs)
-
-  /** Top principal component of the embedding corpus (dim, loading,
-    * lambda1, var_ratio) — distributed covariance as one aggregation,
-    * power-iteration on the d²-row cov table.
-    */
-  def pcaTop(spark: org.apache.spark.sql.SparkSession, emb: DataFrame): DataFrame =
-    llm.Similarity.pcaTop(spark, emb)
-
-  /** Top-k principal components by deflation on the same collected
-    * covariance: (comp, dim, loading, lam, var_ratio).
-    */
-  def pcaTopK(spark: org.apache.spark.sql.SparkSession, emb: DataFrame, k: Int = llm.Similarity.pcaK): DataFrame =
-    llm.Similarity.pcaTopK(spark, emb, k)
-
-  /** PCA whitening over the top-k components: (vec_id, comp, y) with
-    * y_m = Σ L_m(i)(v_i − μ_i)/√λ_m — the SemDeDup pre-clustering
-    * projection.
-    */
-  def pcaWhiten(spark: org.apache.spark.sql.SparkSession, emb: DataFrame, k: Int = llm.Similarity.pcaK): DataFrame =
-    llm.Similarity.pcaWhiten(spark, emb, k)
-
-  /** Mergeable dyadic Count-Min quantile counters for `value` grouped
-    * by `group` (quantize to a non-negative BIGINT < 2^20 first);
-    * counters from disjoint slices add. Extract arbitrary quantiles
-    * from the collected grid with [[quantileFromCounters]].
-    */
-  def quantileCounters(rows: DataFrame, group: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column): DataFrame =
-    llm.Sketches.dyadicCounters(rows, group, value)
-
-  /** Driver-side quantile extraction off collected [[quantileCounters]]
-    * — O(L·d) lookups, corpus-independent.
-    */
-  def quantileFromCounters(counters: Map[(String, Int, Int, Long), Long], g: String, n: Long, q: Double): Long =
-    llm.Sketches.quantileFromCounters(counters, g, n, q)
-
-  /** One-scan sketch-only corpus profile: per source, exact doc/token
-    * counts, HLL distinct-token estimate, and doc-length rank estimates
-    * at fixed probes — the 100 TB first-profile pass.
-    */
-  def corpusProfile(docs: DataFrame): DataFrame = llm.Sketches.corpusProfile(docs)
-
-  /** Profile SERVICE — the continuous-ingest profile endpoint the
-    * one-scan corpus profile implies. The persisted state is the grid
-    * itself, a parquet table at `<store>/grid` with schema
-    * `(source STRING, kind STRING ∈ {h, q, c}, k1, k2, k3 BIGINT,
-    * mx, cnt, sm BIGINT)`:
-    *   - `h` rows: HLL registers — k1 = register, mx = max ρ;
-    *   - `q` rows: dyadic-CMS counters — (k1, k2, k3) = (level, row,
-    *     bucket), cnt = hits;
-    *   - `c` rows: exact doc/token totals — cnt = docs, sm = tokens.
-    * The grid is ≤ sources·(m + L·d·w + 1) rows — KBs at ANY corpus
-    * size — and merges by {max(mx), sum(cnt), sum(sm)}, so ingest
-    * never re-scans the corpus and serving reads ONLY the grid:
-    * `profile` finishes the per-source summary, `quantiles` descends
-    * arbitrary doc-length quantiles, both corpus-pass-free. The merge
-    * ≡ single-pass property is hash-gated (corpus_profile_inc) and the
-    * merged-extraction property spec-pinned; ApiSpec covers the
-    * service cadence end to end.
-    */
-  object ProfileService {
-
-    /** Initialize the store from a corpus slice (overwrites). */
-    def init(docs: DataFrame, store: String): Unit = {
-      llm.Sketches.profileGrid(docs).write.mode("overwrite").parquet(s"$store/grid")
-      ()
-    }
-
-    /** {max(mx), sum(cnt), sum(sm)} roll-up of a union of grids — the
-      * mergeability the grid schema is built around.
-      */
-    private def mergeGrids(grids: DataFrame): DataFrame = {
-      import org.apache.spark.sql.functions.{col, max, sum}
-      grids
-        .groupBy(col("source"), col("kind"), col("k1"), col("k2"), col("k3"))
-        .agg(max(col("mx")).as("mx"), sum(col("cnt")).as("cnt"), sum(col("sm")).as("sm"))
-    }
-
-    /** Publish a merged grid into `<store>/grid` via write-aside +
-      * rename (NOT mode("overwrite") on the live path, which deletes
-      * the old grid before the new write commits — a crash mid-write
-      * would permanently lose all accumulated sketch state on a
-      * service explicitly framed as continuous-ingest). The swap
-      * leaves either the complete old grid or the complete new one at
-      * every step boundary; rename is atomic on HDFS-like stores (on
-      * an object store, front this with the store's conditional-put
-      * committer).
-      */
-    private def publish(spark: org.apache.spark.sql.SparkSession, merged: DataFrame, store: String): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$store/grid")
-      val next = new org.apache.hadoop.fs.Path(s"$store/grid.next")
-      val prev = new org.apache.hadoop.fs.Path(s"$store/grid.prev")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      merged.write.mode("overwrite").parquet(next.toString)
-      fs.delete(prev, true)
-      if (fs.exists(live)) fs.rename(live, prev)
-      fs.rename(next, live)
-      fs.delete(prev, true)
-      ()
-    }
-
-    /** Ingest a batch: grid ONLY the batch, merge into the store. The
-      * merged grid is bounded (KBs), so it materializes via
-      * localCheckpoint before the write-aside swap replaces the path
-      * it was read from.
-      */
-    def ingest(docs: DataFrame, store: String): Unit = {
-      val spark = docs.sparkSession
-      val merged = mergeGrids(
-        spark.read
-          .parquet(s"$store/grid")
-          .unionByName(llm.Sketches.profileGrid(docs))
-      ).localCheckpoint()
-      publish(spark, merged, store)
-    }
-
-    /** STREAMING ingest cadence — profile a document stream into the
-      * store without ever holding corpus-sized state: each micro-batch
-      * grids ONLY its own rows (bounded sketch work) and merges into
-      * the persisted grid via the crash-safe publish; a missing store
-      * is seeded by the first batch. The streaming query itself holds
-      * ZERO state (foreachBatch sink, no stateful operators) — the
-      * accumulated knowledge lives entirely in the KB-sized grid, so
-      * an unbounded ingest stream profiles at bounded memory forever
-      * (the incrementalScreenStream zero-state discipline applied to
-      * the profile family).
-      */
-    def ingestStream(docs: DataFrame, store: String): org.apache.spark.sql.streaming.StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val grid = new org.apache.hadoop.fs.Path(s"$store/grid")
-          val fs = grid.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(grid)) ingest(batch, store) else init(batch, store)
-          ()
-        }
-        .start()
-
-    /** Consolidate TWO stores into `dest` (multi-cluster profile
-      * consolidation: each cluster ingests its own slice into its own
-      * store; the fleet-wide profile is one grid-sized merge — never a
-      * corpus pass). `dest` may alias either input store: the merged
-      * grid is checkpointed before the swap. Merge ≡ single-pass is
-      * pinned in ApiSpec.
-      */
-    def merge(spark: org.apache.spark.sql.SparkSession, storeA: String, storeB: String, dest: String): Unit = {
-      val merged = mergeGrids(
-        spark.read
-          .parquet(s"$storeA/grid")
-          .unionByName(spark.read.parquet(s"$storeB/grid"))
-      ).localCheckpoint()
-      publish(spark, merged, dest)
-    }
-
-    /** Per-source profile off the stored grid — NO corpus pass. */
-    def profile(spark: org.apache.spark.sql.SparkSession, store: String): DataFrame =
-      llm.Sketches.profileFinish(spark.read.parquet(s"$store/grid"))
-
-    /** p50/p90 doc-length probes descended off the stored grid — NO
-      * corpus pass (bounded grid collect + driver-side descent).
-      */
-    def quantiles(spark: org.apache.spark.sql.SparkSession, store: String): DataFrame =
-      llm.Sketches.profileQuantilesFromGrid(spark.read.parquet(s"$store/grid"))
-  }
-
-  /** Near-dup doc pairs by mean-centered hashed-embedding cosine —
-    * text→embedding→ANN closed natively (banded hyperplane LSH, exact
-    * integer verify).
-    */
-  def hashEmbedDupes(docs: DataFrame, tau: Double = 0.8): DataFrame =
-    llm.Dedup.hashEmbedDupes(docs, tau)
-
-  /** Near-dup components with the HIGHEST-QUALITY member flagged as
-    * keeper: (doc_id, comp_id, q, keep).
-    */
-  def keepBest(docs: DataFrame): DataFrame = llm.Dedup.keepBest(docs)
-
-  /** SemDeDup (Abbas et al. 2023): cluster-scoped semantic dedup —
-    * per vector (cid, kept); see [[llm.Similarity.semDedup]].
-    */
-  def semDedup(emb: DataFrame, tau: Double = 0.4): DataFrame =
-    llm.Similarity.semDedup(emb, tau = tau)
-
-  /** k-NN edge table over cell-scoped candidates. */
-  def knnGraph(emb: DataFrame, k: Int = 3): DataFrame =
-    llm.Similarity.knnGraph(emb, k = k)
-
-  /** Exact-k per-stratum weighted sample without replacement
-    * (Efraimidis–Spirakis A-ES over md5 uniforms — deterministic).
-    */
-  def sampleWeighted(docs: DataFrame, k: Int = 25): DataFrame =
-    llm.Curation.sampleWeighted(docs, k)
-
-  /** Duplication-aware sampling weights (10⁶ div |near-dup cluster|
-    * micros per doc) — the soft alternative to hard dropping.
-    */
-  def softDedupWeights(docs: DataFrame): DataFrame =
-    llm.Dedup.softDedupWeights(docs)
-
-  /** License/usage-restriction compliance screen. */
-  def licenseScreen(docs: DataFrame): DataFrame = llm.Curation.licenseScreen(docs)
-
-  /** Inverted-index build: per token df/cf + postings-list hash. */
-  def invertedIndex(docs: DataFrame): DataFrame = llm.TextStats.invertedIndex(docs)
-
-  /** RAKE keyword extraction (corpus top-k phrases). */
-  def rakeKeywords(docs: DataFrame, topK: Int = 30): DataFrame =
-    llm.TextStats.textRake(docs, topK)
-
-  /** Deterministic weighted-interleave loader order from DoReMi
-    * weights (largest-remainder quotas, md5 doc cycling with epoch
-    * upsampling, exact fractional-position interleave key).
-    */
-  def mixSchedule(docs: DataFrame, nSteps: Int = llm.Curation.mixScheduleSteps): DataFrame =
-    llm.Curation.mixSchedule(docs, nSteps)
-
-  /** Physical shard export: per-shard parquet files + the manifest
-    * computed from the frame the writer consumed.
-    */
-  def exportShards(docs: DataFrame, outDir: String, merges: Seq[String]): DataFrame =
-    llm.Curation.exportShards(docs, outDir, merges)
-
-  /** Loader-side shard integrity verification: recompute the manifest
-    * from the files alone (pinned tokenizer) and compare per shard.
-    */
-  def exportVerify(s: SparkSession, dir: String, expected: DataFrame, merges: Seq[String]): DataFrame =
-    llm.Curation.exportVerify(s, dir, expected, merges)
-
-  /** Continuous export: a doc stream feeding the same shard layout +
-    * manifest as the batch export (at-most-once-ever per content,
-    * dirty-shard-only manifest maintenance).
-    */
-  def exportStream(in: DataFrame, storeDir: String, manifestDir: String, seenDir: String, merges: Seq[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    llm.Curation.exportStream(in, storeDir, manifestDir, seenDir, merges)
-
-  /** Seed the persisted stores [[exportStream]] maintains. */
-  def seedExportStores(s: SparkSession, storeDir: String, manifestDir: String, seenDir: String): Unit =
-    llm.Curation.seedExportStores(s, storeDir, manifestDir, seenDir)
-
-  /** The loader's seek table over an exported store: (doc_id, shard,
-    * pos) with pos = the manifest's shard order.
-    */
-  def exportCoords(s: SparkSession, storeDir: String): DataFrame =
-    llm.Curation.exportCoords(s, storeDir)
-
-  /** Per-doc top-k winnow-overlap triage report over capped-fp-set
-    * classes (exact-dup/replica cliques collapse to one representative;
-    * clique-free pairing at any corpus size).
-    */
-  def winnowTopk(docs: DataFrame, s: Int = llm.TextStats.wtCap, k: Int = llm.TextStats.wtK, maxDf: Int = llm.TextStats.woMaxDf): DataFrame =
-    llm.TextStats.winnowTopk(docs, s, k, maxDf)
-
-  /** Host-graph PageRank in exact integer micros. */
-  def hostPagerank(docs: DataFrame, iters: Int = 8): DataFrame =
-    llm.Urls.hostPagerank(docs, iters)
-
-  /** Host-graph triangle count (degree-ordered orientation). */
-  def hostTriangles(docs: DataFrame): DataFrame = llm.Urls.hostTriangles(docs)
-
-  /** One-sided shingle containment per LSH candidate pair — the
-    * doc-in-doc / quote-inclusion near-dup measure Jaccard dilutes.
-    */
-  def containment(docs: DataFrame): DataFrame = llm.Dedup.containment(docs)
-
-  /** ANN centroid-drift retrain: sample refit + delta-sized cell
-    * rewrite; returns (new centroids, touched cells).
-    */
-  def annRetrain(spark: SparkSession, base: String, sampleFrac: Double = 0.1, k: Int = 16)
-      : (Array[Array[Double]], Seq[Long]) =
-    llm.Similarity.annRetrain(spark, base, sampleFrac, k)
-
-  /** WordPiece likelihood trainer (the BERT criterion). */
-  def fitWordpiece(docs: DataFrame, nMerges: Int = 24): llm.Unigram.Model =
-    llm.Unigram.fitWordpiece(docs, nMerges)
-
-  /** Streaming hopping-window aggregation (events_hopwin's twin). */
-  def hopWinStream(events: DataFrame): DataFrame =
-    streaming.StreamOps.hopWinStream(events)
-
-  /** Streaming cohort retention, 16 bytes of state per user. */
-  def retentionStream(events: DataFrame, horizonWeeks: Int = 63): DataFrame =
-    streaming.StreamOps.retentionStream(events, horizonWeeks)
-
-  /** Streaming event-transition (Markov bigram) stream, one-row state
-    * per user.
-    */
-  def markovStream(events: DataFrame): DataFrame =
-    streaming.StreamOps.markovStream(events)
-
-  /** Energy-based voice-activity detection over WAV payloads. */
-  def audioVad(media: DataFrame): DataFrame = llm.Multimodal.audioVad(media)
-
-  /** Join-key skew diagnostic (decides plain vs AQE vs salted). */
-  def skewReport(df: DataFrame, key: org.apache.spark.sql.Column): core.Scale.SkewReport =
-    core.Scale.skewReport(df, key)
-
-  /** Small-file compaction with a crash-safe swap. */
-  def compactFiles(spark: SparkSession, path: String, targetBytes: Long = 128L * 1024 * 1024)
-      : core.Scale.CompactReport =
-    core.Scale.compactFiles(spark, path, targetBytes)
-
-  /** Deterministic md5-keyed shuffle into training shards:
-    * (doc_id, shard, pos) — the same permutation on every run/engine.
-    */
-  def corpusShard(docs: DataFrame): DataFrame = llm.Curation.corpusShard(docs)
-
-  /** Edit-distance near-dup verification of LSH candidate pairs:
-    * (doc_a, doc_b, lev, len_max, norm_edit, is_dup) over the first
-    * 512 chars — bounded O(clip²) per candidate.
-    */
-  def editDupes(docs: DataFrame, maxNorm: Double = 0.3): DataFrame =
-    llm.Dedup.editDupes(docs, maxNorm)
-
-  /** Per-user conversion funnel view→click→purchase in one pass
-    * (chained running-min windows, single shuffle): (user_id, t_view,
-    * t_click, t_purchase, stage).
-    */
-  def funnel(events: DataFrame): DataFrame = BaseQueries.funnel(events)
-
-  /** Per-hour top-N most-active users (batch); see
-    * streaming.StreamOps.windowTopNStream for the streaming half.
-    */
-  def windowTopN(events: DataFrame, n: Int = 3): DataFrame =
-    streaming.StreamOps.windowTopN(events, n)
-
-  /** Z-order (Morton) key formula over two bucketized dims as a SQL
-    * expression string (`divOp` = "div" for Spark, "//" for DuckDB) —
-    * the multi-dimensional clustering layout key.
-    */
-  def zValueSql(ub: String, vb: String, divOp: String = "div", bits: Int = 4): String =
-    core.Scale.zValueSql(ub, vb, divOp, bits)
-
-  // ---- streaming ----
-
-  /** Gap-based sessions. `emitOpen` defaults to batch semantics (the
-    * trailing open session is final, emit it) for batch inputs and to
-    * hold-open for streaming inputs — an append-mode stream re-emitting
-    * the open session every microbatch would accumulate contradictory
-    * rows in the sink. Pass Some(...) to override.
-    */
-  def sessionize(
-      events: DataFrame,
-      gapNs: Long = 30L * 60 * 1000000000L,
-      emitOpen: Option[Boolean] = None
-  ): DataFrame =
-    streaming.StreamOps.sessionize(events, gapNs, emitOpen.getOrElse(!events.isStreaming))
-
-  /** Streaming sessionize whose idle users are finalized via
-    * EventTimeTimeout and REMOVED from the state store — bounded state
-    * over unbounded key cardinality.
-    */
-  def sessionizeStream(events: DataFrame, gapNs: Long = 30L * 60 * 1000000000L): DataFrame =
-    streaming.StreamOps.sessionizeStream(events, gapNs)
-
-  /** Streaming twin of [[funnel]]: per-user stage tracker with
-    * watermark eviction — final (t_view, t_click, t_purchase, stage)
-    * emitted once the watermark passes last activity + horizon.
-    */
-  def funnelStream(events: DataFrame, horizonNs: Long = 30L * 60 * 1000000000L): DataFrame =
-    streaming.StreamOps.funnelStream(events, horizonNs)
-
-  /** Keyed latest-wins upsert store (SCD Type-1 / MERGE INTO
-    * maintenance) — the service form of the `merge_upsert` gate, and
-    * its streaming cadence. The store holds ONE row per key:
-    * `(user_id, k, ts_us, event_id, n_events)` — the latest attribute
-    * value by (ts_us, event_id) plus a summed event count. Both the
-    * batch gate and the stream share [[UpsertStore.collapse]], so
-    * batch ≡ stream is true by code path, not by parallel
-    * implementations (the anomalyScore discipline).
-    *
-    * Scale: each ingest collapses ONLY its batch (delta-sized work)
-    * and merges store ∪ delta under the same associative keeper — at
-    * 100 TB the store lives doc-bucketed so the merge joins
-    * bucket-to-bucket; the stream itself holds ZERO state (foreachBatch
-    * sink), so unbounded streams upsert at bounded memory forever.
-    * Publishes are crash-safe (write-aside + rename — the
-    * ProfileService discipline): a crash mid-write can never lose the
-    * accumulated store.
-    */
-  object UpsertStore {
-    import org.apache.spark.sql.expressions.Window
-
-    /** Latest-wins collapse to one row per key: max (ts_us, event_id)
-      * carries the attribute, n_events sums (input rows without an
-      * n_events column count 1 each). Associative: collapse(a ∪
-      * collapse(b)) == collapse(a ∪ b) — the property the merge and
-      * the oracle both lean on.
-      */
-    def collapse(df: DataFrame): DataFrame = {
-      val withN =
-        if (df.columns.contains("n_events")) df
-        else df.withColumn("n_events", lit(1L))
-      val wu = Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("ts_us").desc, col("event_id").desc)
-      withN
-        .withColumn("rn", row_number().over(wu))
-        .withColumn("n_events", sum(col("n_events")).over(Window.partitionBy(col("user_id"))))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("k"), col("ts_us"), col("event_id"), col("n_events"))
-    }
-
-    private def publish(spark: SparkSession, merged: DataFrame, store: String): Unit = {
-      val live = new org.apache.hadoop.fs.Path(s"$store/table")
-      val next = new org.apache.hadoop.fs.Path(s"$store/table.next")
-      val prev = new org.apache.hadoop.fs.Path(s"$store/table.prev")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      merged.write.mode("overwrite").parquet(next.toString)
-      fs.delete(prev, true)
-      if (fs.exists(live)) fs.rename(live, prev)
-      fs.rename(next, live)
-      fs.delete(prev, true)
-      ()
-    }
-
-    /** Seed the store from a batch (collapses it first). */
-    def seed(df: DataFrame, store: String): Unit =
-      publish(df.sparkSession, collapse(df), store)
-
-    /** Upsert one delta batch: collapse the delta ALONE, then re-run
-      * the same keeper over store ∪ delta. Out-of-order deltas are
-      * fine — latest-wins is a max, not an append.
-      *
-      * No checkpoint here, deliberately: the merged plan is consumed
-      * exactly ONCE (the write-aside in publish), and that write reads
-      * the live table BEFORE either rename touches it — a
-      * localCheckpoint would materialize the whole store into
-      * block-manager memory per call with zero reuse to pay for it
-      * (the r12 bench measured exactly that as warm-run pressure).
-      */
-    def upsert(df: DataFrame, store: String): Unit = {
-      val spark = df.sparkSession
-      val merged = collapse(
-        spark.read.parquet(s"$store/table").unionByName(collapse(df))
-      )
-      publish(spark, merged, store)
-    }
-
-    /** Streaming upsert cadence: zero streaming state, each
-      * micro-batch upserts (or seeds a missing store).
-      */
-    def upsertStream(df: DataFrame, store: String): org.apache.spark.sql.streaming.StreamingQuery =
-      df.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val spark = batch.sparkSession
-          val live = new org.apache.hadoop.fs.Path(s"$store/table")
-          val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(live)) upsert(batch, store) else seed(batch, store)
-          ()
-        }
-        .start()
-
-    /** The current store contents. */
-    def serve(spark: SparkSession, store: String): DataFrame =
-      spark.read.parquet(s"$store/table")
-  }
-
-  // ---- r16: discovery + fetch-side surface ----
-
-  /** Render per-host sitemap XML from (doc_id, host, canon) URL rows. */
-  def sitemapRender(urls: DataFrame): DataFrame = llm.Sitemaps.sitemapRender(urls)
-
-  /** Parse fetched urlset XML (host, xml) → per-URL rows with
-    * freshness hints; row-local, stream-safe.
-    */
-  def sitemapParse(sm: DataFrame): DataFrame = llm.Sitemaps.sitemapParse(sm)
-
-  /** Robots-screened, freshness-ordered politeness slots off parsed
-    * sitemap URLs.
-    */
-  def sitemapFrontier(parsed: DataFrame): DataFrame = llm.Sitemaps.sitemapFrontier(parsed)
-
-  /** Charset sniff (BOM > header > meta prescan > UTF-8) + transcode
-    * over (doc_id, header, payload) fetched responses.
-    */
-  def decodeFetched(fetched: DataFrame): DataFrame = sources.Charsets.decodeFetched(fetched)
-
-  /** DoReMi-style one-round domain reweighting off the corpus unigram
-    * LM's per-source excess loss.
-    */
-  def mixDoremi(docs: DataFrame, eta: Double = 100.0): DataFrame =
-    llm.Curation.mixDoremi(docs, eta)
-
-  /** Fused recrawl prioritization: sitemap-lastmod freshness class over
-    * CDX change rate, scheduled into per-host politeness slots.
-    */
-  def fusedRecrawlSchedule(cdx: DataFrame, sitemap: DataFrame): DataFrame =
-    sources.WarcOps.fusedSchedule(sources.WarcOps.fusedPriority(cdx, sitemap))
-
-  // ---- r17: redirect resolution, archive serving, export ----
-
-  /** Resolve HTTP redirect chains over a (url, location) fetch log by
-    * pointer doubling on canonical keys: adds status (ok/dangling/
-    * loop), n_hops, final_canon — the canonical-dedup key after 3xx.
-    */
-  def resolveRedirects(fetched: DataFrame, rounds: Int = 4): DataFrame =
-    llm.Urls.resolveRedirects(fetched, rounds)
-
-  /** Archive serving view: the dated cross-crawl merge annotated with
-    * the publisher's sitemap lastmod (`publisher_ts`) and a `stale`
-    * flag (publisher strictly newer than the latest capture).
-    */
-  def archiveServeView(merged: DataFrame, sitemap: DataFrame): DataFrame =
-    sources.WarcOps.archiveServeView(merged, sitemap)
-
-  /** Per-shard export manifest of the curated+tokenized+packed corpus:
-    * doc count, exact capped token count, packed-bin count, and the
-    * shard-ordered content fingerprint.
-    */
-  def exportManifest(docs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    llm.Curation.exportManifest(docs, minQuality)
-
-  /** Incremental re-export between two corpus snapshots: the new
-    * manifest with a per-shard `dirty` flag — only flagged shard files
-    * need rewriting.
-    */
-  def exportManifestInc(oldDocs: DataFrame, newDocs: DataFrame, minQuality: Double = 0.45): DataFrame =
-    llm.Curation.exportManifestInc(oldDocs, newDocs, minQuality)
-
-  /** Streaming redirect resolution: micro-batched fetch results append
-    * (first-fetch-wins) to a persisted fetch-log store and the full
-    * store re-resolves per batch, so chains complete across batches.
-    */
-  def redirectIngest(
-      in: DataFrame,
-      store: String,
-      onBatch: DataFrame => Unit = _ => ()
-  ): org.apache.spark.sql.streaming.StreamingQuery = llm.Urls.redirectIngest(in, store, onBatch)
 }

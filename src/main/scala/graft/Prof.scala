@@ -764,47 +764,13 @@ object Prof {
         .groupBy(col("h")).agg(count(lit(1)).as("d"))
         .agg(max(col("d"))).collect()(0).getLong(0)
       println(s"PROF tri graph: $mDist distinct edges, $nHosts hosts, maxDeg=$maxDeg")
-      phase(s"tri${triK}k_oriented", mDist) {
-        val deg = edges
-          .select(explode(array(col("u"), col("v"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("deg"))
-        val fwd = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-        val e = edges
-          .join(deg.select(col("h").as("u"), col("deg").as("du")), Seq("u"))
-          .join(deg.select(col("h").as("v"), col("deg").as("dv")), Seq("v"))
-          .select(
-            when(fwd, col("u")).otherwise(col("v")).as("a"),
-            when(fwd, col("v")).otherwise(col("u")).as("b")
-          )
-          .localCheckpoint()
-        e.as("e1")
-          .join(e.as("e2"), col("e1.b") === col("e2.a"))
-          .join(e.as("e3"), col("e1.a") === col("e3.a") && col("e2.b") === col("e3.b"))
-      }
-      // r14: k-core peel on the same skewed graph — per round one
+      phase(s"tri${triK}k_oriented", mDist)(llm.Urls.triangles(edges))
+      // the gate's k-core peel on the same skewed graph — per round one
       // exploded degree count + two equi-joins on the SHRINKING edge
-      // set; k chosen near the mean degree so the peel actually bites
-      t(s"tri${triK}k_kcore", mDist) {
-        var alive = edges.localCheckpoint()
-        // mean degree is 2m/n ≈ 20 but the skew concentrates mass low:
-        // k at HALF the mean leaves a non-trivial deep core while
-        // peeling most hosts — both the cascade and the survivors real
-        val k = math.max(2L, mDist / nHosts)
-        var n = 0L
-        for (_ <- 1 to 8) {
-          val keep = alive
-            .select(explode(array(col("u"), col("v"))).as("h"))
-            .groupBy(col("h")).agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k)
-            .select(col("h"))
-          alive = alive
-            .join(keep.select(col("h").as("u")), Seq("u"))
-            .join(keep.select(col("h").as("v")), Seq("v"))
-            .localCheckpoint()
-          n = alive.count()
-        }
-        n
-      }
+      // set. Mean degree is 2m/n ≈ 20 but the skew concentrates mass
+      // low: k at HALF the mean leaves a non-trivial deep core while
+      // peeling most hosts — both the cascade and the survivors real
+      phase(s"tri${triK}k_kcore", mDist)(llm.Urls.kcore(edges, math.max(2L, mDist / nHosts), rounds = 8))
       edges.unpersist()
       ()
     }

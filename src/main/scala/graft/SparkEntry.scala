@@ -948,12 +948,12 @@ object BaseQueries {
           expr("(ts_ns - ts_ns % 1000) div 1000").as("ts_us"),
           regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("k")
         )
-      // the gate runs the SERVICE path (Api.UpsertStore — the same
-      // collapse the streaming cadence uses), so batch gate, batch
+      // the gate runs the SERVICE path (StreamOps.UpsertStore — the
+      // same collapse the streaming cadence uses), so batch gate, batch
       // service, and stream share one keeper implementation
-      Api.UpsertStore.seed(ev.filter(col("event_id") % 4 =!= 0), tmp)
-      Api.UpsertStore.upsert(ev.filter(col("event_id") % 4 === 0), tmp)
-      Api.UpsertStore
+      streaming.StreamOps.UpsertStore.seed(ev.filter(col("event_id") % 4 =!= 0), tmp)
+      streaming.StreamOps.UpsertStore.upsert(ev.filter(col("event_id") % 4 === 0), tmp)
+      streaming.StreamOps.UpsertStore
         .serve(s, tmp)
         .select(
           col("user_id"),

@@ -300,9 +300,8 @@ object Scale {
     * millions of KB-sized files and every scan pays an open/seek per
     * file plus a listing storm on object storage). Rewrites the
     * parquet directory into ceil(totalBytes / targetBytes) files and
-    * atomically swaps it into place (write-aside + rename — the
-    * ProfileService publish discipline, so a crash mid-compaction
-    * never loses the table). No-ops when the layout is already within
+    * swaps it into place with [[publish]], so a crash mid-compaction
+    * never loses the table. No-ops when the layout is already within
     * `toleranceX` of the target file count — compaction must be
     * idempotent-cheap enough to run on a schedule.
     *
@@ -310,20 +309,6 @@ object Scale {
     * through ONE round-robin repartition (no key assumptions — for a
     * sorted/bucketed layout use [[bucketedJoin]]'s writer instead,
     * compaction must not destroy bucket structure).
-    *
-    * ATOMICITY CAVEAT: the swap is two renames, and between
-    * rename(live→prev) and rename(next→live) the live path does not
-    * exist — a concurrent reader in that (milliseconds-wide) window
-    * gets FileNotFound, and a crash inside it leaves the table only at
-    * `$path.prev`. No DATA is ever lost (the table is always complete
-    * at live, prev, or next), but recovery is required before the next
-    * read: [[recoverCompaction]] restores live from next (compaction
-    * finished writing) or prev (it didn't) and runs automatically at
-    * the head of every compactFiles call. A true single-rename swap
-    * needs a metadata layer (symlinked current-version dirs or a table
-    * format's manifest) — out of scope for a raw parquet directory;
-    * schedulers should quiesce readers around the compaction tick or
-    * read via a snapshot listing.
     */
   def compactFiles(
       spark: SparkSession,
@@ -331,8 +316,7 @@ object Scale {
       targetBytes: Long = 128L * 1024 * 1024,
       toleranceX: Double = 2.0
   ): CompactReport = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, live, _, _) = swapPaths(spark, path)
     recoverCompaction(spark, path)
     val parts = fs
       .listStatus(live)
@@ -341,31 +325,76 @@ object Scale {
     val want = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     if (parts.length <= math.ceil(want * toleranceX).toInt)
       return CompactReport(parts.length, bytes, parts.length, compacted = false)
-    val next = new org.apache.hadoop.fs.Path(s"$path.next")
-    val prev = new org.apache.hadoop.fs.Path(s"$path.prev")
-    spark.read.parquet(path).repartition(want).write.mode("overwrite").parquet(next.toString)
-    fs.delete(prev, true)
-    fs.rename(live, prev)
-    fs.rename(next, live)
-    fs.delete(prev, true)
+    publish(spark.read.parquet(path).repartition(want), path)
     val after = fs
       .listStatus(live)
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
     CompactReport(parts.length, bytes, after, compacted = true)
   }
 
-  /** Crash recovery for [[compactFiles]]'s two-rename window: if the
-    * live path is missing, restore it from `$path.next` when the
-    * compacted write completed (prefer it — it IS the new layout,
-    * finishing the interrupted swap) else from `$path.prev`; leftover
-    * aside dirs are cleared either way. No-op when live exists.
-    * Returns true if a restore happened.
-    */
-  def recoverCompaction(spark: SparkSession, path: String): Boolean = {
+  private def swapPaths(spark: SparkSession, path: String) = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(s"$path.next")
-    val prev = new org.apache.hadoop.fs.Path(s"$path.prev")
+    (fs, live, new org.apache.hadoop.fs.Path(s"$path.next"), new org.apache.hadoop.fs.Path(s"$path.prev"))
+  }
+
+  /** Write-aside-and-rename publish of `df` as the parquet table at
+    * `path` — the one swap every rewritten store uses ([[compactFiles]],
+    * `llm.Sketches.ProfileService`, `streaming.StreamOps.UpsertStore`).
+    * Never mode("overwrite") on the live path: that deletes the old
+    * table before the new write commits, so a crash mid-write would
+    * lose it. `df` may read `path` itself: the write to `$path.next`
+    * completes before either rename. A missing live path is created.
+    *
+    * The swap is two renames, rename(live → `$path.prev`) then
+    * rename(`$path.next` → live), and between them the live path does
+    * not exist: a concurrent reader in that window gets FileNotFound,
+    * and a crash inside it leaves the old table only at `$path.prev`
+    * (the new one complete at `$path.next`). No data is lost, but the
+    * live path must be recovered before the next read or existence
+    * check: [[recoverCompaction]] runs at the head of this swap, of
+    * [[compactFiles]], of [[readPublished]] and of [[published]]. A
+    * rename that fails throws. A true single-rename swap needs a
+    * metadata layer (symlinked version dirs or a table format's
+    * manifest) — out of scope for a raw parquet directory; on an object
+    * store, front this with the store's conditional-put committer.
+    */
+  def publish(df: DataFrame, path: String): Unit = {
+    val spark = df.sparkSession
+    recoverCompaction(spark, path)
+    val (fs, live, next, prev) = swapPaths(spark, path)
+    df.write.mode("overwrite").parquet(next.toString)
+    if (fs.exists(live)) require(fs.rename(live, prev), s"publish: rename $live -> $prev failed")
+    require(fs.rename(next, live), s"publish: rename $next -> $live failed")
+    fs.delete(prev, true)
+    ()
+  }
+
+  /** Read a [[publish]]ed table, recovering an interrupted swap first. */
+  def readPublished(spark: SparkSession, path: String): DataFrame = {
+    recoverCompaction(spark, path)
+    spark.read.parquet(path)
+  }
+
+  /** Whether a [[publish]]ed table exists, after recovering an
+    * interrupted swap (a crash between the renames leaves no live path
+    * but a complete table aside).
+    */
+  def published(spark: SparkSession, path: String): Boolean = {
+    recoverCompaction(spark, path)
+    val (fs, live, _, _) = swapPaths(spark, path)
+    fs.exists(live)
+  }
+
+  /** Crash recovery for [[publish]]'s two-rename window: if the live
+    * path is missing, restore it from `$path.next` when the write
+    * completed (prefer it — it IS the new table, finishing the
+    * interrupted swap) else from `$path.prev`; leftover aside dirs are
+    * cleared either way. No-op when live exists. Returns true if a
+    * restore happened.
+    */
+  def recoverCompaction(spark: SparkSession, path: String): Boolean = {
+    val (fs, live, next, prev) = swapPaths(spark, path)
     if (fs.exists(live)) {
       // a finished swap may still leave .prev behind if the final
       // delete crashed; a crash BEFORE the first rename leaves .next.
@@ -374,11 +403,11 @@ object Scale {
       fs.delete(next, true)
       false
     } else if (fs.exists(next) && fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))) {
-      fs.rename(next, live)
+      require(fs.rename(next, live), s"recover: rename $next -> $live failed")
       fs.delete(prev, true)
       true
     } else if (fs.exists(prev)) {
-      fs.rename(prev, live)
+      require(fs.rename(prev, live), s"recover: rename $prev -> $live failed")
       fs.delete(next, true)
       true
     } else false

@@ -69,20 +69,13 @@ object Sitemaps {
     "CASE WHEN doc_id % 3 = 0 THEN '1.0' WHEN doc_id % 3 = 1 THEN '0.8' ELSE '0.5' END"
 
   // ---- XML escaping (minimal sitemap set: & < > — & FIRST on escape,
-  // LAST on unescape, or '&lt;' round-trips wrong) ----
+  // LAST on unescape in `entries`, or '&lt;' round-trips wrong) ----
 
   private def xmlEsc(c: Column): Column =
     regexp_replace(
       regexp_replace(regexp_replace(c, "&", "&amp;"), "<", "&lt;"),
       ">",
       "&gt;"
-    )
-
-  private def xmlUnesc(c: Column): Column =
-    regexp_replace(
-      regexp_replace(regexp_replace(c, "&lt;", "<"), "&gt;", ">"),
-      "&amp;",
-      "&"
     )
 
   private val urlsetHeader =
@@ -160,21 +153,25 @@ object Sitemaps {
     * lastmod (the hint real indexes carry so a crawler can skip
     * unchanged shards).
     */
-  def sitemapIndexRender(sharded: DataFrame): DataFrame = {
-    val lastmodOf = regexp_extract(col("chunk"), "<lastmod>([^<]*)</lastmod>", 1)
-    val perShard = sharded
-      .select(col("host"), col("sm_file"), explode(split(col("xml"), "</url>")).as("chunk"))
-      .filter(col("chunk").contains("<loc>"))
+  def sitemapIndexRender(sharded: DataFrame): DataFrame = indexXml(shardStats(sharded))
+
+  /** Per-shard statistics of a sharded render: (host, sm_file, n_urls,
+    * max_lastmod) over the entries [[sitemapParse]] reads back.
+    */
+  private def shardStats(sharded: DataFrame): DataFrame =
+    entries(sharded.select(col("host"), col("sm_file"), col("xml")), "url", "loc", Seq("lastmod" -> "lastmod"))
       .groupBy(col("host"), col("sm_file"))
-      .agg(max(lastmodOf).as("max_lastmod"))
-    perShard
+      .agg(count(lit(1)).as("n_urls"), max(col("lastmod")).as("max_lastmod"))
+
+  private def indexXml(stats: DataFrame): DataFrame =
+    stats
       .withColumn(
         "entry",
         concat(
           lit("<sitemap><loc>"),
           xmlEsc(concat(lit("https://"), col("host"), lit("/"), col("sm_file"))),
           lit("</loc><lastmod>"),
-          col("max_lastmod"),
+          coalesce(col("max_lastmod"), lit("")),
           lit("</lastmod></sitemap>")
         )
       )
@@ -186,42 +183,56 @@ object Sitemaps {
           lit("</sitemapindex>")
         ).as("xml")
       )
-  }
 
   /** Parse urlset documents: (host, xml) → (host, loc, lastmod,
     * changefreq, sm_priority); absent optional fields parse to NULL
     * (only `<loc>` is required by the protocol). Row-local: split on
     * the entry terminator, one regexp per field per entry.
     */
-  def sitemapParse(sm: DataFrame): DataFrame = {
-    def field(name: String): Column =
-      nullif(regexp_extract(col("chunk"), s"<$name>([^<]*)</$name>", 1), lit(""))
-    sm.select(col("host"), explode(split(col("xml"), "</url>")).as("chunk"))
-      .filter(col("chunk").contains("<url>") && col("chunk").contains("<loc>"))
-      .select(
-        col("host"),
-        xmlUnesc(regexp_extract(col("chunk"), "<loc>([^<]*)</loc>", 1)).as("loc"),
-        field("lastmod").as("lastmod"),
-        field("changefreq").as("changefreq"),
-        field("priority").as("sm_priority")
-      )
-      .filter(col("loc") =!= "")
-  }
+  def sitemapParse(sm: DataFrame): DataFrame =
+    entries(
+      sm.select(col("host"), col("xml")),
+      "url",
+      "loc",
+      Seq("lastmod" -> "lastmod", "changefreq" -> "changefreq", "priority" -> "sm_priority")
+    )
 
   /** Parse a `<sitemapindex>` document: (host, xml) → (host, sm_loc,
     * lastmod) — one row per child sitemap file.
     */
   def sitemapIndexParse(idx: DataFrame): DataFrame =
-    idx
-      .select(col("host"), explode(split(col("xml"), "</sitemap>")).as("chunk"))
-      .filter(col("chunk").contains("<sitemap>") && col("chunk").contains("<loc>"))
-      .select(
-        col("host"),
-        xmlUnesc(regexp_extract(col("chunk"), "<loc>([^<]*)</loc>", 1)).as("sm_loc"),
-        nullif(regexp_extract(col("chunk"), "<lastmod>([^<]*)</lastmod>", 1), lit(""))
-          .as("lastmod")
-      )
-      .filter(col("sm_loc") =!= "")
+    entries(idx.select(col("host"), col("xml")), "sitemap", "sm_loc", Seq("lastmod" -> "lastmod"))
+
+  /** The entry kernel every parse reads: each row's `xml` is split
+    * once on `</tag>`, and every chunk holding `<tag>` and a non-empty
+    * `<loc>` becomes one row — the row's other columns, the unescaped
+    * loc as `locCol`, and each `(element, column)` of `fields` (absent
+    * or empty → NULL). A typed kernel so the loc chain runs once per
+    * entry: in Column form Catalyst pushes the non-empty-loc filter
+    * below the projection and evaluates the chain in both.
+    */
+  private def entries(df: DataFrame, tag: String, locCol: String, fields: Seq[(String, String)]): DataFrame = {
+    import java.util.regex.Pattern
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructType}
+    val xi = df.schema.fieldIndex("xml")
+    val keep = df.schema.fields.indices.filter(_ != xi)
+    val out = (locCol +: fields.map(_._2)).foldLeft(StructType(keep.map(df.schema.fields(_))))(_.add(_, StringType))
+    val (open, sep) = (s"<$tag>", Pattern.quote(s"</$tag>"))
+    val pats = ("loc" +: fields.map(_._1)).map(e => Pattern.compile(s"<$e>([^<]*)</$e>"))
+    df.mapPartitions { rows =>
+      rows.flatMap { r =>
+        val xml = r.getString(xi)
+        val chunks = if (xml == null) Array.empty[String] else xml.split(sep, -1)
+        chunks.iterator.filter(c => c.contains(open) && c.contains("<loc>")).flatMap { c =>
+          val v = pats.map { p => val m = p.matcher(c); if (m.find()) m.group(1) else "" }
+          val loc = v.head.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
+          if (loc.isEmpty) None
+          else Some(Row.fromSeq(keep.map(r.get) ++ (loc +: v.tail.map(x => if (x.isEmpty) null else x))))
+        }
+      }
+    }(org.apache.spark.sql.Encoders.row(out))
+  }
 
   /** Frontier composition: parsed sitemap URLs → RFC 9309 robots
     * screen (a sitemap listing never overrides robots) → per-host
@@ -276,28 +287,17 @@ object Sitemaps {
     sitemapParse(sitemapRender(keeperUrls(docs)))
 
   /** sitemap_index: sharded render (gate shard size 2 so every sf
-    * multi-shards) → index render → parse the INDEX and every shard →
-    * per-shard (count, max lastmod) — proving index completeness and
-    * shard membership against the oracle's windowed replay.
+    * multi-shards) → parse every shard into per-shard (count, max
+    * lastmod) → index render → parse the INDEX back — proving index
+    * completeness and shard membership against the oracle's windowed
+    * replay.
     */
   def sitemapIndexGate(docs: DataFrame): DataFrame = {
-    val sharded = sitemapRenderSharded(keeperUrls(docs), gateMaxPerFile).localCheckpoint()
-    val idx = sitemapIndexParse(sitemapIndexRender(sharded))
-    // per-shard stats off the same entry-level chunking the parser runs
-    val shardStats = sharded
-      .select(col("host"), col("sm_file"), explode(split(col("xml"), "</url>")).as("chunk"))
-      .filter(col("chunk").contains("<url>") && col("chunk").contains("<loc>"))
-      .groupBy(col("host"), col("sm_file"))
-      .agg(
-        count(lit(1)).as("n_urls"),
-        max(regexp_extract(col("chunk"), "<lastmod>([^<]*)</lastmod>", 1)).as("max_lastmod")
-      )
-    idx
+    // referenced by the index render AND the join (fan-out rule)
+    val stats = shardStats(sitemapRenderSharded(keeperUrls(docs), gateMaxPerFile)).localCheckpoint()
+    sitemapIndexParse(indexXml(stats))
       .join(
-        shardStats.withColumn(
-          "sm_loc",
-          concat(lit("https://"), col("host"), lit("/"), col("sm_file"))
-        ),
+        stats.withColumn("sm_loc", concat(lit("https://"), col("host"), lit("/"), col("sm_file"))),
         Seq("host", "sm_loc")
       )
       .select(col("host"), col("sm_loc"), col("lastmod"), col("n_urls"))

@@ -856,13 +856,21 @@ object Sketches {
     // seed ingest: the even-bucket slice's grid becomes the store
     profileGrid(docs.filter(h2 === 0)).write.mode("overwrite").parquet(s"$store/grid")
     // ingest batch: grid the odd slice only, merge with the store
-    val merged = spark.read
-      .parquet(s"$store/grid")
-      .unionByName(profileGrid(docs.filter(h2 === 1)))
-      .groupBy(col("source"), col("kind"), col("k1"), col("k2"), col("k3"))
-      .agg(max(col("mx")).as("mx"), sum(col("cnt")).as("cnt"), sum(col("sm")).as("sm"))
+    val merged = mergeGrids(
+      spark.read
+        .parquet(s"$store/grid")
+        .unionByName(profileGrid(docs.filter(h2 === 1)))
+    )
     profileFinish(merged)
   }
+
+  /** {max(mx), sum(cnt), sum(sm)} roll-up of a union of grids — the
+    * mergeability the grid schema is built around.
+    */
+  private def mergeGrids(grids: DataFrame): DataFrame =
+    grids
+      .groupBy(col("source"), col("kind"), col("k1"), col("k2"), col("k3"))
+      .agg(max(col("mx")).as("mx"), sum(col("cnt")).as("cnt"), sum(col("sm")).as("sm"))
 
   /** CTE chain ending in the `grid` profile state — shared by the
     * profile finish and the quantile-descent oracles.
@@ -943,6 +951,100 @@ object Sketches {
         }
       }
       .toDF("source", "q", "n_docs", "est_len")
+  }
+
+  /** Profile SERVICE — the continuous-ingest profile endpoint the
+    * one-scan corpus profile implies. The persisted state is the grid
+    * itself, a parquet table at `<store>/grid` with schema
+    * `(source STRING, kind STRING ∈ {h, q, c}, k1, k2, k3 BIGINT,
+    * mx, cnt, sm BIGINT)`:
+    *   - `h` rows: HLL registers — k1 = register, mx = max ρ;
+    *   - `q` rows: dyadic-CMS counters — (k1, k2, k3) = (level, row,
+    *     bucket), cnt = hits;
+    *   - `c` rows: exact doc/token totals — cnt = docs, sm = tokens.
+    * The grid is ≤ sources·(m + L·d·w + 1) rows — KBs at ANY corpus
+    * size — and merges by {max(mx), sum(cnt), sum(sm)}, so ingest
+    * never re-scans the corpus and serving reads ONLY the grid:
+    * `profile` finishes the per-source summary, `quantiles` descends
+    * arbitrary doc-length quantiles, both corpus-pass-free. The merge
+    * ≡ single-pass property is hash-gated (corpus_profile_inc) and the
+    * merged-extraction property spec-pinned; ApiSpec's ProfileService
+    * tests cover the service cadence end to end.
+    *
+    * Every rewrite of the grid goes through [[graft.core.Scale.publish]]
+    * (write-aside + rename, NOT mode("overwrite") on the live path,
+    * which deletes the old grid before the new write commits), and
+    * every read and existence check recovers an interrupted swap first,
+    * so a crash never loses or silently re-seeds the accumulated
+    * sketch state.
+    */
+  object ProfileService {
+    import graft.core.Scale
+
+    /** Initialize the store from a corpus slice (replaces any grid). */
+    def init(docs: DataFrame, store: String): Unit =
+      Scale.publish(profileGrid(docs), s"$store/grid")
+
+    /** Ingest a batch: grid ONLY the batch, merge into the store. The
+      * merged grid is bounded (KBs), so it materializes via
+      * localCheckpoint before the write-aside swap replaces the path
+      * it was read from.
+      */
+    def ingest(docs: DataFrame, store: String): Unit = {
+      val spark = docs.sparkSession
+      val merged = mergeGrids(
+        Scale
+          .readPublished(spark, s"$store/grid")
+          .unionByName(profileGrid(docs))
+      ).localCheckpoint()
+      Scale.publish(merged, s"$store/grid")
+    }
+
+    /** STREAMING ingest cadence — profile a document stream into the
+      * store without ever holding corpus-sized state: each micro-batch
+      * grids ONLY its own rows (bounded sketch work) and merges into
+      * the persisted grid via the crash-safe publish; a missing store
+      * is seeded by the first batch. The streaming query itself holds
+      * ZERO state (foreachBatch sink, no stateful operators) — the
+      * accumulated knowledge lives entirely in the KB-sized grid, so
+      * an unbounded ingest stream profiles at bounded memory forever
+      * (the incrementalScreenStream zero-state discipline applied to
+      * the profile family).
+      */
+    def ingestStream(docs: DataFrame, store: String): org.apache.spark.sql.streaming.StreamingQuery =
+      docs.writeStream
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          if (Scale.published(batch.sparkSession, s"$store/grid")) ingest(batch, store) else init(batch, store)
+          ()
+        }
+        .start()
+
+    /** Consolidate TWO stores into `dest` (multi-cluster profile
+      * consolidation: each cluster ingests its own slice into its own
+      * store; the fleet-wide profile is one grid-sized merge — never a
+      * corpus pass). `dest` may alias either input store: the merged
+      * grid is checkpointed before the swap. Merge ≡ single-pass is
+      * pinned in ApiSpec.
+      */
+    def merge(spark: SparkSession, storeA: String, storeB: String, dest: String): Unit = {
+      val merged = mergeGrids(
+        Scale
+          .readPublished(spark, s"$storeA/grid")
+          .unionByName(Scale.readPublished(spark, s"$storeB/grid"))
+      ).localCheckpoint()
+      Scale.publish(merged, s"$dest/grid")
+    }
+
+    /** Per-source profile off the stored grid — NO corpus pass. */
+    def profile(spark: SparkSession, store: String): DataFrame =
+      profileFinish(Scale.readPublished(spark, s"$store/grid"))
+
+    /** p50/p90 doc-length probes descended off the stored grid — NO
+      * corpus pass (bounded grid collect + driver-side descent).
+      */
+    def quantiles(spark: SparkSession, store: String): DataFrame =
+      profileQuantilesFromGrid(Scale.readPublished(spark, s"$store/grid"))
   }
 
   def corpusProfileQuantilesSql: String = {

@@ -80,7 +80,14 @@ object Urls {
     * row-local column function, reusable wherever a SECOND url column
     * must canonicalize in the same frame (redirect Location targets).
     */
-  def canonCol(u: Column): Column = {
+  def canonCol(u: Column): Column = concat(hostCol(u), pathQueryCol(u))
+
+  /** The canonical key after the host: the path without trailing
+    * slashes, then `?` and the sorted non-utm params when any remain.
+    * The params are built once (`nullif`, not a CASE that tests and
+    * then rebuilds them: neither CSE nor the lambda would share them).
+    */
+  private def pathQueryCol(u: Column): Column = {
     val rest = regexp_replace(u, "^[A-Za-z]+://", "")
     val hostport = regexp_extract(rest, "^[^/?#]+", 0)
     val pathqf = substring(rest, length(hostport) + 1, lit(1 << 20))
@@ -93,15 +100,13 @@ object Urls {
       ),
       "&"
     )
-    concat(hostCol(u), path, when(params =!= "", concat(lit("?"), params)).otherwise(lit("")))
+    concat(path, coalesce(concat(lit("?"), nullif(params, lit(""))), lit("")))
   }
 
-  private def parsed(df: DataFrame): DataFrame = {
-    val host = hostCol(col("url"))
-    df.withColumn("host", host)
-      .withColumn("canon", canonCol(col("url")))
-      .withColumn("blocked", host.isin(blockedHosts: _*))
-  }
+  private def parsed(df: DataFrame): DataFrame =
+    df.withColumn("host", hostCol(col("url")))
+      .withColumn("canon", concat(col("host"), pathQueryCol(col("url"))))
+      .withColumn("blocked", col("host").isin(blockedHosts: _*))
 
   private def withKeep(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("canon"))
@@ -890,8 +895,13 @@ object Urls {
     * raw hub degree. Two equi-joins total; per-host participation is
     * one corner explode + count.
     */
-  def hostTriangles(docs: DataFrame): DataFrame = {
-    val und = docs
+  def hostTriangles(docs: DataFrame): DataFrame = triangles(hostGraph(docs))
+
+  /** The deterministic 20-host link graph [[hostTriangles]] and
+    * [[hostKcore]] read: undirected edges (u, v), u < v, distinct.
+    */
+  def hostGraph(docs: DataFrame): DataFrame =
+    docs
       .select(
         expr("doc_id % 20").as("src"),
         // the pagerank generators alone are PARITY-FLIPPING affine maps
@@ -909,6 +919,12 @@ object Urls {
       .filter(col("src") =!= col("dst") && col("src") < 17)
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .distinct()
+
+  /** Per-node triangle count (host, n_tri) of an undirected edge set
+    * (u, v), u < v, distinct, by degree-ordered orientation (see
+    * [[hostTriangles]]); nodes on no triangle are absent.
+    */
+  def triangles(und: DataFrame): DataFrame = {
     val deg = und
       .select(explode(array(col("u"), col("v"))).as("h"))
       .groupBy(col("h"))
@@ -963,21 +979,15 @@ object Urls {
     * exploded degree count + two equi-joins on the shrinking edge set
     * — never more than O(m) per round, O(rounds·m) total.
     */
-  def hostKcore(docs: DataFrame, k: Int = 5, rounds: Int = 4): DataFrame = {
-    val und0 = docs
-      .select(
-        expr("doc_id % 20").as("src"),
-        explode(
-          array(
-            expr("(doc_id * 3 + 1) % 20"),
-            expr("(doc_id * 7 + 3) % 20"),
-            expr("(doc_id * 9 + 4) % 20")
-          )
-        ).as("dst")
-      )
-      .filter(col("src") =!= col("dst") && col("src") < 17)
-      .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+  def hostKcore(docs: DataFrame, k: Int = 5, rounds: Int = 4): DataFrame =
+    kcore(hostGraph(docs), k, rounds)
+
+  /** k-core membership (host, deg0, in_core) of an undirected edge set
+    * (u, v), u < v, distinct: at most `rounds` peel rounds (see
+    * [[hostKcore]]) under [[Rounds.fixpoint]], stopping at the first
+    * round that peels no edge.
+    */
+  def kcore(und0: DataFrame, k: Long, rounds: Int): DataFrame = {
     // und feeds deg0 AND the peel chain (fan-out rule)
     val (und, seen) = Rounds.round("kcore", 0)(Rounds.checkpoint(und0))
     val deg0 = und

@@ -36,10 +36,10 @@ class InvariantSpec extends AnyFunSuite {
         rows.toDF("user_id", "k", "ts_us", "event_id")
       // production shape: fresh rows carry n_events = 1, a collapsed
       // store carries its accumulated n_events
-      val merged = Api.UpsertStore.collapse(
-        df(a).withColumn("n_events", lit(1L)).unionByName(Api.UpsertStore.collapse(df(b)))
+      val merged = streaming.StreamOps.UpsertStore.collapse(
+        df(a).withColumn("n_events", lit(1L)).unionByName(streaming.StreamOps.UpsertStore.collapse(df(b)))
       )
-      val direct = Api.UpsertStore.collapse(df(a ++ b))
+      val direct = streaming.StreamOps.UpsertStore.collapse(df(a ++ b))
       assert(canon(merged) == canon(direct), s"associativity broke on |A|=${a.length} |B|=${b.length}")
     }
   }

@@ -215,8 +215,10 @@ class PlanAuditSpec extends AnyFunSuite {
         repeated ++ filtered
       }.distinct
     }
-    val bad = Seq("dedup_minhash", "dedup_simhash_pairs", "dedup_components", "curate_splits", "text_gopher")
-      .flatMap(offenders)
+    val bad = Seq(
+      "dedup_minhash", "dedup_simhash_pairs", "dedup_components", "curate_splits", "text_gopher",
+      "sitemap_extract", "sitemap_index", "sitemap_frontier"
+    ).flatMap(offenders)
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
