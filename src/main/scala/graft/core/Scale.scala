@@ -300,7 +300,8 @@ object Scale {
     * millions of KB-sized files and every scan pays an open/seek per
     * file plus a listing storm on object storage). Rewrites the
     * parquet directory into ceil(totalBytes / targetBytes) files and
-    * swaps it into place with [[publish]], so a crash mid-compaction
+    * swaps it into place with [[publish]]'s write-aside-and-rename
+    * (after recovering an interrupted swap), so a crash mid-compaction
     * never loses the table. No-ops when the layout is already within
     * `toleranceX` of the target file count — compaction must be
     * idempotent-cheap enough to run on a schedule.
@@ -325,7 +326,7 @@ object Scale {
     val want = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     if (parts.length <= math.ceil(want * toleranceX).toInt)
       return CompactReport(parts.length, bytes, parts.length, compacted = false)
-    publish(spark.read.parquet(path).repartition(want), path)
+    swap(spark.read.parquet(path).repartition(want), path)
     val after = fs
       .listStatus(live)
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -343,26 +344,34 @@ object Scale {
     * `llm.Sketches.ProfileService`, `streaming.StreamOps.UpsertStore`).
     * Never mode("overwrite") on the live path: that deletes the old
     * table before the new write commits, so a crash mid-write would
-    * lose it. `df` may read `path` itself: the write to `$path.next`
-    * completes before either rename. A missing live path is created.
+    * lose it. A missing live path is created.
     *
-    * The swap is two renames, rename(live → `$path.prev`) then
-    * rename(`$path.next` → live), and between them the live path does
-    * not exist: a concurrent reader in that window gets FileNotFound,
-    * and a crash inside it leaves the old table only at `$path.prev`
-    * (the new one complete at `$path.next`). No data is lost, but the
-    * live path must be recovered before the next read or existence
-    * check: [[recoverCompaction]] runs at the head of this swap, of
-    * [[compactFiles]], of [[readPublished]] and of [[published]]. A
-    * rename that fails throws. A true single-rename swap needs a
-    * metadata layer (symlinked version dirs or a table format's
-    * manifest) — out of scope for a raw parquet directory; on an object
-    * store, front this with the store's conditional-put committer.
+    * The swap first recovers an interrupted earlier swap at `path`
+    * ([[recoverCompaction]]), then builds `df` — by name, so a
+    * read-modify-write `df` reads the recovered live table — and writes
+    * it to `$path.next`. That write completes before either rename, so
+    * `df` may read `path` itself. Then two renames, rename(live →
+    * `$path.prev`) and rename(`$path.next` → live); between them the
+    * live path does not exist, and a crash inside that window leaves
+    * the old table only at `$path.prev` and the new one complete at
+    * `$path.next`. No data is lost: [[readPublished]] and [[published]]
+    * resolve that state without changing it, and the next publish or
+    * [[compactFiles]] recovers it. A rename that fails throws. One
+    * writer per `path`: the recovery clears aside dirs, so a second
+    * concurrent writer would delete the first one's `.next`. A true
+    * single-rename swap needs a metadata layer (symlinked version dirs
+    * or a table format's manifest) — out of scope for a raw parquet
+    * directory; on an object store, front this with the store's
+    * conditional-put committer.
     */
-  def publish(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
+  def publish(spark: SparkSession, path: String)(df: => DataFrame): Unit = {
     recoverCompaction(spark, path)
-    val (fs, live, next, prev) = swapPaths(spark, path)
+    swap(df, path)
+  }
+
+  /** [[publish]]'s write and two renames, on a recovered `path`. */
+  private def swap(df: DataFrame, path: String): Unit = {
+    val (fs, live, next, prev) = swapPaths(df.sparkSession, path)
     df.write.mode("overwrite").parquet(next.toString)
     if (fs.exists(live)) require(fs.rename(live, prev), s"publish: rename $live -> $prev failed")
     require(fs.rename(next, live), s"publish: rename $next -> $live failed")
@@ -370,28 +379,39 @@ object Scale {
     ()
   }
 
-  /** Read a [[publish]]ed table, recovering an interrupted swap first. */
-  def readPublished(spark: SparkSession, path: String): DataFrame = {
-    recoverCompaction(spark, path)
-    spark.read.parquet(path)
-  }
-
-  /** Whether a [[publish]]ed table exists, after recovering an
-    * interrupted swap (a crash between the renames leaves no live path
-    * but a complete table aside).
+  /** Read a [[publish]]ed table. A pure read: it renames and deletes
+    * nothing, so it is safe while a writer runs. Inside an interrupted
+    * swap it reads where the table is (see [[publishedDir]]); a reader
+    * whose files a concurrent rename moves mid-read gets FileNotFound.
     */
-  def published(spark: SparkSession, path: String): Boolean = {
-    recoverCompaction(spark, path)
-    val (fs, live, _, _) = swapPaths(spark, path)
-    fs.exists(live)
+  def readPublished(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(publishedDir(spark, path).getOrElse(path))
+
+  /** Whether a [[publish]]ed table exists, counting one left aside by
+    * an interrupted swap. A pure check, like [[readPublished]].
+    */
+  def published(spark: SparkSession, path: String): Boolean =
+    publishedDir(spark, path).isDefined
+
+  /** The directory holding the current contents of the table at
+    * `path`, chosen as [[recoverCompaction]] would restore it: the live
+    * path; else `$path.next` when its write completed; else
+    * `$path.prev`; else none.
+    */
+  private def publishedDir(spark: SparkSession, path: String): Option[String] = {
+    val (fs, live, next, prev) = swapPaths(spark, path)
+    Seq(live -> live, new org.apache.hadoop.fs.Path(next, "_SUCCESS") -> next, prev -> prev)
+      .collectFirst { case (probe, dir) if fs.exists(probe) => dir.toString }
   }
 
-  /** Crash recovery for [[publish]]'s two-rename window: if the live
-    * path is missing, restore it from `$path.next` when the write
-    * completed (prefer it — it IS the new table, finishing the
-    * interrupted swap) else from `$path.prev`; leftover aside dirs are
-    * cleared either way. No-op when live exists. Returns true if a
-    * restore happened.
+  /** Crash recovery for the two-rename window of every [[publish]],
+    * [[compactFiles]]' included: if the live path is missing, restore
+    * it from `$path.next` when the write completed (prefer it — it IS
+    * the new table, finishing the interrupted swap) else from
+    * `$path.prev`; leftover aside dirs are cleared either way. No
+    * restore when live exists. Returns true if a restore happened.
+    * Writers only ([[publish]], [[compactFiles]]): it renames and
+    * deletes, so readers resolve the window with [[readPublished]].
     */
   def recoverCompaction(spark: SparkSession, path: String): Boolean = {
     val (fs, live, next, prev) = swapPaths(spark, path)

@@ -973,31 +973,30 @@ object Sketches {
     *
     * Every rewrite of the grid goes through [[graft.core.Scale.publish]]
     * (write-aside + rename, NOT mode("overwrite") on the live path,
-    * which deletes the old grid before the new write commits), and
-    * every read and existence check recovers an interrupted swap first,
-    * so a crash never loses or silently re-seeds the accumulated
-    * sketch state.
+    * which deletes the old grid before the new write commits), which
+    * recovers an interrupted swap before it reads the grid; serving and
+    * the stream's existence check resolve that swap without changing
+    * the store. So a crash never loses or silently re-seeds the
+    * accumulated sketch state, and serving may run while a stream
+    * ingests.
     */
   object ProfileService {
     import graft.core.Scale
 
     /** Initialize the store from a corpus slice (replaces any grid). */
     def init(docs: DataFrame, store: String): Unit =
-      Scale.publish(profileGrid(docs), s"$store/grid")
+      Scale.publish(docs.sparkSession, s"$store/grid")(profileGrid(docs))
 
-    /** Ingest a batch: grid ONLY the batch, merge into the store. The
-      * merged grid is bounded (KBs), so it materializes via
-      * localCheckpoint before the write-aside swap replaces the path
-      * it was read from.
-      */
+    /** Ingest a batch: grid ONLY the batch, merge into the store. */
     def ingest(docs: DataFrame, store: String): Unit = {
       val spark = docs.sparkSession
-      val merged = mergeGrids(
-        Scale
-          .readPublished(spark, s"$store/grid")
-          .unionByName(profileGrid(docs))
-      ).localCheckpoint()
-      Scale.publish(merged, s"$store/grid")
+      Scale.publish(spark, s"$store/grid")(
+        mergeGrids(
+          Scale
+            .readPublished(spark, s"$store/grid")
+            .unionByName(profileGrid(docs))
+        )
+      )
     }
 
     /** STREAMING ingest cadence — profile a document stream into the
@@ -1023,18 +1022,18 @@ object Sketches {
     /** Consolidate TWO stores into `dest` (multi-cluster profile
       * consolidation: each cluster ingests its own slice into its own
       * store; the fleet-wide profile is one grid-sized merge — never a
-      * corpus pass). `dest` may alias either input store: the merged
-      * grid is checkpointed before the swap. Merge ≡ single-pass is
-      * pinned in ApiSpec.
+      * corpus pass). `dest` may alias either input store: the swap
+      * writes the merged grid aside before it renames. Merge ≡
+      * single-pass is pinned in ApiSpec.
       */
-    def merge(spark: SparkSession, storeA: String, storeB: String, dest: String): Unit = {
-      val merged = mergeGrids(
-        Scale
-          .readPublished(spark, s"$storeA/grid")
-          .unionByName(Scale.readPublished(spark, s"$storeB/grid"))
-      ).localCheckpoint()
-      Scale.publish(merged, s"$dest/grid")
-    }
+    def merge(spark: SparkSession, storeA: String, storeB: String, dest: String): Unit =
+      Scale.publish(spark, s"$dest/grid")(
+        mergeGrids(
+          Scale
+            .readPublished(spark, s"$storeA/grid")
+            .unionByName(Scale.readPublished(spark, s"$storeB/grid"))
+        )
+      )
 
     /** Per-source profile off the stored grid — NO corpus pass. */
     def profile(spark: SparkSession, store: String): DataFrame =

@@ -593,9 +593,10 @@ object StreamOps {
     * bucket-to-bucket; the stream itself holds ZERO state (foreachBatch
     * sink), so unbounded streams upsert at bounded memory forever.
     * Publishes go through [[graft.core.Scale.publish]] (write-aside +
-    * rename) and every read and existence check recovers an
-    * interrupted swap first: a crash mid-write can never lose the
-    * accumulated store.
+    * rename), which recovers an interrupted swap before it reads the
+    * store; serving and the stream's existence check resolve that swap
+    * without changing the store. A crash mid-write can never lose the
+    * accumulated store, and serving may run while a stream upserts.
     */
   object UpsertStore {
     import org.apache.spark.sql.expressions.Window
@@ -623,7 +624,7 @@ object StreamOps {
 
     /** Seed the store from a batch (collapses it first). */
     def seed(df: DataFrame, store: String): Unit =
-      Scale.publish(collapse(df), s"$store/table")
+      Scale.publish(df.sparkSession, s"$store/table")(collapse(df))
 
     /** Upsert one delta batch: collapse the delta ALONE, then re-run
       * the same keeper over store ∪ delta. Out-of-order deltas are
@@ -636,12 +637,10 @@ object StreamOps {
       * block-manager memory per call with zero reuse to pay for it
       * (the r12 bench measured exactly that as warm-run pressure).
       */
-    def upsert(df: DataFrame, store: String): Unit = {
-      val merged = collapse(
-        Scale.readPublished(df.sparkSession, s"$store/table").unionByName(collapse(df))
+    def upsert(df: DataFrame, store: String): Unit =
+      Scale.publish(df.sparkSession, s"$store/table")(
+        collapse(Scale.readPublished(df.sparkSession, s"$store/table").unionByName(collapse(df)))
       )
-      Scale.publish(merged, s"$store/table")
-    }
 
     /** Streaming upsert cadence: zero streaming state, each
       * micro-batch upserts (or seeds a missing store).

@@ -207,7 +207,7 @@ class ApiSpec extends AnyFunSuite {
         canon(llm.Sketches.corpusProfileQuantiles(docs))
     )
     // dest may alias an input: consolidating INTO storeA must serve the
-    // same fleet-wide profile (the checkpoint-before-swap guarantee)
+    // same fleet-wide profile (the swap writes aside before it renames)
     llm.Sketches.ProfileService.merge(spark, storeA, storeB, storeA)
     assert(canon(llm.Sketches.ProfileService.profile(spark, storeA)) == canon(llm.Sketches.corpusProfile(docs)))
     // no stray swap debris
@@ -350,6 +350,66 @@ class ApiSpec extends AnyFunSuite {
       assert(canon(UpsertStore.serve(spark, uStore)) == canon(uWant), s"upsert $tag")
       swept(s"$uStore/table")
     }
+  }
+
+  // Serving is a pure read. A complete `.next` beside the live table (a
+  // writer between its write and its renames) is left alone; a reader
+  // inside the rename window serves the table the swap is publishing,
+  // or the old one when `.next` never completed; no read renames or
+  // deletes anything.
+  test("serving reads an interrupted swap in place and never changes the store") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import llm.Sketches.ProfileService
+    import streaming.StreamOps.UpsertStore
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fs = path(sources.Scratch.dir("serve_window_fs")).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def canon(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    def layout(table: String) = Seq(table, s"$table.next", s"$table.next/_SUCCESS", s"$table.prev").map(p => fs.exists(path(p)))
+    // `table` holds the old state; `aside` (a second store's table) the
+    // new one, complete. Moves it to `table.next`, then walks the swap.
+    def walk(table: String, aside: String)(serve: () => Seq[Seq[Any]], old: Seq[Seq[Any]], nu: Seq[Seq[Any]]): Unit = {
+      def served(want: Seq[Seq[Any]], state: String): Unit = {
+        val before = layout(table)
+        assert(core.Scale.published(spark, table), state)
+        assert(serve() == want, state)
+        assert(layout(table) == before, s"serving changed the store: $state")
+      }
+      assert(fs.rename(path(aside), path(s"$table.next")))
+      served(old, "complete .next beside the live table")
+      assert(fs.rename(path(table), path(s"$table.prev")))
+      served(nu, "between the two renames")
+      assert(fs.delete(path(s"$table.next"), true))
+      served(old, "live moved aside, .next never completed")
+    }
+
+    val docs = core.Tables.documents(spark, sf).select("doc_id", "text", "lang", "source")
+    val h2 = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long") % 2
+    val Seq(dA, dB) = (0 to 1).map(i => docs.filter(h2 === i))
+    val (pStore, pAside) = (sources.Scratch.dir("serve_window_profile"), sources.Scratch.dir("serve_window_profile_aside"))
+    ProfileService.init(dA, pStore)
+    ProfileService.init(dA, pAside)
+    ProfileService.ingest(dB, pAside)
+    def profiled(p: () => DataFrame, q: () => DataFrame) = canon(p()) ++ canon(q())
+    walk(s"$pStore/grid", s"$pAside/grid")(
+      () => profiled(() => ProfileService.profile(spark, pStore), () => ProfileService.quantiles(spark, pStore)),
+      profiled(() => llm.Sketches.corpusProfile(dA), () => llm.Sketches.corpusProfileQuantiles(dA)),
+      profiled(() => llm.Sketches.corpusProfile(docs), () => llm.Sketches.corpusProfileQuantiles(docs))
+    )
+
+    def evDf(rows: Seq[(Long, Long, Long, Long)]) = rows.toDF("user_id", "event_id", "ts_us", "k")
+    val eA = Seq((1L, 10L, 100L, 7L), (2L, 11L, 50L, 3L))
+    val eB = Seq((1L, 12L, 300L, 9L), (3L, 13L, 10L, 1L))
+    val (uStore, uAside) = (sources.Scratch.dir("serve_window_upsert"), sources.Scratch.dir("serve_window_upsert_aside"))
+    UpsertStore.seed(evDf(eA), uStore)
+    UpsertStore.seed(evDf(eA), uAside)
+    UpsertStore.upsert(evDf(eB), uAside)
+    walk(s"$uStore/table", s"$uAside/table")(
+      () => canon(UpsertStore.serve(spark, uStore)),
+      canon(UpsertStore.collapse(evDf(eA))),
+      canon(UpsertStore.collapse(evDf(eA ++ eB)))
+    )
   }
 
   test("IIR band facade mirrors 2-element reference specs") {

@@ -90,6 +90,28 @@ class SitemapSpec extends AnyFunSuite {
     assert(perShard.groupBy(_._1).exists(_._2.length > 1))
   }
 
+  // The index lists a shard for the entries sitemapParse reads back: a
+  // chunk needs `<url>` and a non-empty `<loc>`. A shard of `<loc>`-only
+  // or empty-`<loc>` chunks gets no index entry, and such chunks'
+  // lastmods do not raise a listed shard's max lastmod.
+  test("the index lists only shards whose entries parse, with their max lastmod") {
+    val head = "<?xml version=\"1.0\"?><urlset>"
+    val sharded = Seq(
+      ("h", "sitemap-0.xml", head + "<url><loc>https://h/a</loc><lastmod>2024-01-01</lastmod></url>" +
+        "<url><loc></loc><lastmod>2024-09-09</lastmod></url><url><loc>https://h/b</loc></url></urlset>"),
+      ("h", "sitemap-1.xml", head + "<loc>https://h/c</loc><lastmod>2024-05-05</lastmod></urlset>"),
+      ("h", "sitemap-2.xml", head + "<url><loc></loc><lastmod>2024-06-06</lastmod></url></urlset>")
+    ).toDF("host", "sm_file", "xml")
+    val idx = Sitemaps.sitemapIndexRender(sharded).select("host", "xml").as[(String, String)].collect().toSeq
+    assert(
+      idx == Seq(
+        "h" -> ("<?xml version=\"1.0\" encoding=\"UTF-8\"?>" +
+          "<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">" +
+          "<sitemap><loc>https://h/sitemap-0.xml</loc><lastmod>2024-01-01</lastmod></sitemap></sitemapindex>")
+      )
+    )
+  }
+
   test("frontier honors robots over the sitemap listing and freshness-orders slots") {
     val parsed = Sitemaps.sitemapParse(Sitemaps.sitemapRender(keepers))
     val front = Sitemaps.sitemapFrontier(parsed).cache()
