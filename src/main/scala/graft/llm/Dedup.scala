@@ -45,26 +45,11 @@ object Dedup {
   }
   private val mod32 = 4294967296L
 
-  /** MinHash signature rows (doc_id, j, minh): h = first 8 md5 hex chars
-    * of the shingle as a 32-bit int; minh_j = min over shingles of the
-    * j-th multiply-add permutation of h. Identical on both engines
-    * (a_j·h + b_j < 2^63, no overflow).
+  /** MinHash signature SQL: rows (doc_id, j, minh), h = first 8 md5 hex
+    * chars of the shingle as a 32-bit int; minh_j = min over shingles of
+    * the j-th multiply-add permutation of h. Identical to the Spark
+    * `minhash_sig` kernel (a_j·h + b_j < 2^63, no overflow).
     */
-  private def signatures(docs: DataFrame): DataFrame =
-    // row-local MinHashSig (r5; the r3 form was k min-aggregates over
-    // an exploded-shingle shuffle): the k minima come straight off the
-    // parquet scan as a projection, then unpivot to (doc_id, j, minh)
-    // for the band join. Values unchanged — min over shingle
-    // occurrences equals min over the distinct set.
-    docs
-      .select(
-        col("doc_id"),
-        graft.functions.exprs
-          .minhash_sig(split(col("text"), " "), 3, TextStats.maxTokens, permA, permB)
-          .as("ms")
-      )
-      .select(col("doc_id"), posexplode(col("ms")).as(Seq("j", "minh")))
-
   private val signaturesSql: String = {
     val aSql = permA.mkString("[", ", ", "]")
     val bSql = permB.mkString("[", ", ", "]")
@@ -81,14 +66,24 @@ object Dedup {
     * per band, so the LSH shuffle moves a single long regardless of r.
     * The oracle joins on the raw value triple instead; the sets agree up
     * to a ~2⁻⁶⁴ xxhash64 collision.
-    *
-    * The signature is projected once and banded in a typed kernel, so no
-    * filter can be pushed under it and re-evaluate it. Docs shorter than
-    * the shingle window carry an EMPTY signature (MinHashSig) and a null
-    * text a null one: both are dropped, as the oracle's shingles CTE
-    * emits no rows for them.
     */
-  private def minhashBands(docs: DataFrame): Dataset[(Long, Array[Long])] = {
+  private def minhashBands(docs: DataFrame): Dataset[(Long, Array[Long])] =
+    minhashKeys(docs) { ms =>
+      // Spark's xxhash64(b, m0, m1, m2): seed 42, each column hashed
+      // into the running value by its type (the band index is an int)
+      Array.tabulate(numBands) { b =>
+        (0 until bandRows).foldLeft(XXH64.hashInt(b, 42L))((h, r) => XXH64.hashLong(ms(b * bandRows + r), h))
+      }
+    }
+
+  /** (doc_id, keys(signature)) for every document with a full MinHash
+    * signature. The signature is projected once and keyed in a typed
+    * kernel, so no filter can be pushed under it and re-evaluate it. Docs
+    * shorter than the shingle window carry an EMPTY signature
+    * (MinHashSig) and a null text a null one: both are dropped, as the
+    * oracle's shingles CTE emits no rows for them.
+    */
+  private def minhashKeys(docs: DataFrame)(keys: Array[Long] => Array[Long]): Dataset[(Long, Array[Long])] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
@@ -99,15 +94,7 @@ object Dedup {
           .as("ms")
       )
       .as[(Long, Array[Long])]
-      .flatMap { case (id, ms) =>
-        if (ms == null || ms.length != numHashes) None
-        else
-          // Spark's xxhash64(b, m0, m1, m2): seed 42, each column hashed
-          // into the running value by its type (the band index is an int)
-          Some(id -> Array.tabulate(numBands) { b =>
-            (0 until bandRows).foldLeft(XXH64.hashInt(b, 42L))((h, r) => XXH64.hashLong(ms(b * bandRows + r), h))
-          })
-      }
+      .flatMap { case (id, ms) => if (ms == null || ms.length != numHashes) None else Some(id -> keys(ms)) }
   }
 
   /** Banded signature rows (doc_id, band, bh) of [[minhashBands]]: the
@@ -131,9 +118,10 @@ object Dedup {
     * `score` of the two key arrays is ≥ 0. A bucket of m docs holds m
     * key arrays in task memory outside Spark's manager and emits up to
     * m(m−1)/2 pairs: hot buckets cost quadratically, as in any banded
-    * self-join.
+    * self-join. Every banded screen of the engine is a configuration of
+    * this kernel: its band keys and its `score`.
     */
-  private def bandPairs(docs: Dataset[(Long, Array[Long])])(score: (Array[Long], Array[Long]) => Long): DataFrame = {
+  private[graft] def bandPairs(docs: Dataset[(Long, Array[Long])])(score: (Array[Long], Array[Long]) => Long): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
@@ -171,15 +159,8 @@ object Dedup {
     * ScaleSpec demonstrates the candidate-volume gap vs the banded
     * default.
     */
-  def minhashCandidatesR1(docs: DataFrame): DataFrame = {
-    val sigs = signatures(docs)
-    val a = sigs.select(col("doc_id").as("doc_a"), col("j"), col("minh"))
-    val b = sigs.select(col("doc_id").as("doc_b"), col("j"), col("minh"))
-    a.join(b, Seq("j", "minh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
+  def minhashCandidatesR1(docs: DataFrame): DataFrame =
+    bandPairs(minhashKeys(docs)(identity))((_, _) => 0L).select(col("doc_a"), col("doc_b"))
 
   /** `bands(doc_id, band, m0..m{r-1})` CTE appended to the signature
     * chain — the oracle's value-tuple form of [[bandedSignatures]].
@@ -537,30 +518,43 @@ object Dedup {
 
   /** SimHash near-duplicate pairs (Charikar): band the 64-bit signature
     * into 4×16-bit chunks, candidates = docs sharing any chunk
-    * ([[bandPairs]] — by pigeonhole any pair within hamming ≤ 3 shares
-    * one of the 4 chunks, so recall is exact), verify popcount(xor) ≤ 3
-    * over the chunks, i.e. the two 32-bit halves. Never O(n²); a hot
-    * chunk is one bucket's quadratic scan.
+    * ([[hammingPairs]]). Never O(n²); a hot chunk is one bucket's
+    * quadratic scan.
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // one SimHash64 per doc; its four 16-bit chunks are the band keys,
-    // and the chunks alone give the hamming distance of the halves
+    // one SimHash64 per doc; its four 16-bit chunks are the band keys
     val chunks = docs
       .select(
         col("doc_id"),
         graft.functions.exprs.simhash64(split(col("text"), " "), TextStats.maxTokens).as("s2")
       )
       .as[(Long, Array[Long])]
-      .flatMap { case (id, s2) =>
-        Option(s2).map { case Array(hi, lo) => id -> Array(hi >> 16, hi & 65535L, lo >> 16, lo & 65535L) }
-      }
+      .flatMap { case (id, s2) => Option(s2).map { case Array(hi, lo) => id -> chunks16(hi, lo) } }
+    hammingPairs(chunks, maxHamming)
+  }
+
+  /** The four 16-bit chunks of a 64-bit signature held as two
+    * non-negative 32-bit halves: the band keys of [[hammingPairs]].
+    */
+  private[graft] def chunks16(hi: Long, lo: Long): Array[Long] = Array(hi >> 16, hi & 65535L, lo >> 16, lo & 65535L)
+
+  /** Pairs of 64-bit signatures within hamming distance `maxHamming`,
+    * each signature given as its [[chunks16]]: (doc_a, doc_b, hamming)
+    * through [[bandPairs]]. By pigeonhole any pair within hamming ≤ 3
+    * shares one of the 4 chunks, so recall is exact up to 3. The chunks'
+    * hamming distance is that of the two halves.
+    */
+  private[graft] def hammingPairs(chunks: Dataset[(Long, Array[Long])], maxHamming: Int): DataFrame =
     bandPairs(chunks) { (a, b) =>
-      val h = a.indices.map(i => java.lang.Long.bitCount(a(i) ^ b(i))).sum
+      // runs once per candidate pair (millions in a hot low-entropy
+      // chunk): no per-pair collection
+      var h = 0
+      var i = 0
+      while (i < a.length) { h += java.lang.Long.bitCount(a(i) ^ b(i)); i += 1 }
       if (h <= maxHamming) h.toLong else -1L
     }.withColumnRenamed("score", "hamming")
-  }
 
   /** CTE chain ending in `pairs(doc_a, doc_b, hamming)` — the verified
     * hamming≤3 near-dup pairs; shared by the pair dump and the
@@ -1369,7 +1363,7 @@ object Dedup {
     * Returns (dense(key…, bucket, cv), sig(key…, n2, bv0..)) — both
     * localCheckpointed (each fans out into downstream joins).
     */
-  private def gridBandSignatures(
+  private[graft] def gridBandSignatures(
       keys: DataFrame,
       sums: DataFrame,
       keyCols: Seq[String],
@@ -1437,16 +1431,11 @@ object Dedup {
       nPlanes,
       nBands
     )
-    val bands = sig.select(
-      col("doc_id"),
-      posexplode(array((0 until nBands).map(j => col(s"bv$j")): _*)).as(Seq("bi", "bv"))
-    )
-    val cand = bands
-      .select(col("doc_id").as("doc_a"), col("bi"), col("bv"))
-      .join(bands.select(col("doc_id").as("doc_b"), col("bi"), col("bv")), Seq("bi", "bv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct() // a pair can share several bands; score it once
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val cand = bandPairs(
+      sig.select(col("doc_id"), array((0 until nBands).map(j => col(s"bv$j")): _*)).as[(Long, Array[Long])]
+    )((_, _) => 0L).select(col("doc_a"), col("doc_b"))
     // ARRAY-PACKED verify (r16): the grid-join form shuffled pairs × 64
     // bucket rows into a pair-keyed aggregate — at the 500k-doc decade
     // (where the replica corpus holds ~20M TRUE pairs) that 1.3e9-row

@@ -492,8 +492,8 @@ object Multimodal {
   /** Near-dup pairs over a 64-bit row-local signature split into two
     * 32-bit halves (`hiCol`/`loCol` on `sig` alongside `media_id`):
     * band into 4×16-bit chunks, candidates = signatures sharing any
-    * chunk (equi-join; pigeonhole makes hamming ≤ 3 recall exact),
-    * verify popcount(xor) ≤ maxHamming — the dedup_simhash_pairs shape.
+    * chunk, verify popcount(xor) ≤ maxHamming — the dedup_simhash_pairs
+    * configuration ([[Dedup.hammingPairs]]).
     *
     * Scale shape (r17, the hash_embed array-packed lesson applied to
     * the pair-stream class): the banded join runs over DISTINCT
@@ -502,13 +502,11 @@ object Multimodal {
     * (the dominant mass of a near-dup corpus: every exact re-encode,
     * every replica) are expanded ONLY at output, where they are the
     * answer and hence inherently output-sized. Each inter-signature
-    * pair is emitted exactly once by a row-local first-matching-chunk
-    * predicate on the xor (all chunks below the joined `ci` must
-    * differ), which removes the `distinct()` shuffle over the
-    * candidate stream entirely. Measured at the 500k-doc decade: the
-    * row-banded form exhausted the spill disk (≥36 GB, cut at ≥35 min,
-    * r16); this form's candidate join is bounded by distinct-sig
-    * collisions alone.
+    * pair is emitted once, in its lowest shared chunk, with no
+    * `distinct()` over the candidate stream. Measured at the 500k-doc
+    * decade: the row-banded form exhausted the spill disk (≥36 GB, cut
+    * at ≥35 min, r16); this form's candidate scan is bounded by
+    * distinct-sig collisions alone.
     */
   private def sigPairs64(sig: DataFrame, hiCol: String, loCol: String, maxHamming: Int): DataFrame = {
     // decode/fingerprint is the expensive subtree and fans out below —
@@ -520,45 +518,16 @@ object Multimodal {
     // unique per distinct signature, so rep order is a total order on
     // signatures). Reused by the intra expansion and both inter sides.
     val mem = s.join(sigs, Seq("hi", "lo")).select(col("rep"), col("media_id")).localCheckpoint()
-    val chunked = sigs.select(
-      col("rep"),
-      col("hi"),
-      col("lo"),
-      posexplode(
-        array(
-          shiftright(col("hi"), 16),
-          col("hi").bitwiseAND(lit(65535L)),
-          shiftright(col("lo"), 16),
-          col("lo").bitwiseAND(lit(65535L))
-        )
-      ).as(Seq("ci", "chunk"))
-    )
-    val a = chunked.select(
-      col("rep").as("rep_a"), col("hi").as("hi_a"), col("lo").as("lo_a"), col("ci"), col("chunk"))
-    val b = chunked.select(
-      col("rep").as("rep_b"), col("hi").as("hi_b"), col("lo").as("lo_b"), col("ci"), col("chunk"))
-    val xh = col("hi_a").bitwiseXOR(col("hi_b"))
-    val xl = col("lo_a").bitwiseXOR(col("lo_b"))
-    // chunk j of the xor is zero iff the signatures agree on chunk j;
-    // keeping a candidate row only when every chunk BELOW the joined
-    // index differs makes the emission exactly-once without a shuffle
-    val eq0 = shiftright(xh, 16) === 0L
-    val eq1 = xh.bitwiseAND(lit(65535L)) === 0L
-    val eq2 = shiftright(xl, 16) === 0L
-    val firstMatch = (col("ci") === 0) or
-      (col("ci") === 1 && !eq0) or
-      (col("ci") === 2 && !eq0 && !eq1) or
-      (col("ci") === 3 && !eq0 && !eq1 && !eq2)
-    val sigPairs = a
-      .join(b, Seq("ci", "chunk"))
-      .filter(col("rep_a") < col("rep_b"))
-      .filter(firstMatch)
-      .select(
-        col("rep_a"),
-        col("rep_b"),
-        (bit_count(xh) + bit_count(xl)).cast("long").as("hamming")
+    val spark = sig.sparkSession
+    import spark.implicits._
+    val sigPairs = Dedup
+      .hammingPairs(
+        sigs.select(col("rep"), col("hi"), col("lo")).as[(Long, Long, Long)].map { case (r, hi, lo) =>
+          r -> Dedup.chunks16(hi, lo)
+        },
+        maxHamming
       )
-      .filter(col("hamming") <= maxHamming)
+      .toDF("rep_a", "rep_b", "hamming")
     // expansion back to media pairs: cliques (hamming 0 by identity)
     // plus the cross product of the two cliques of each qualifying
     // signature pair — both are the answer set itself. The merge hints

@@ -132,26 +132,35 @@ object Similarity {
       case None => vs.filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv"))
     }
 
-  /** (vec_id, cid, d2) from every point of `points` (vec_id, v) to every
-    * broadcast centroid: the narrow frame the cell ranking reads.
+  /** (vec_id, cid, d2, ride…) from every point of `points` (vec_id, v,
+    * ride…) to every broadcast centroid: the frame the cell ranking reads.
     */
-  private def cellDists(points: DataFrame, cents: DataFrame): DataFrame =
+  private def cellDists(points: DataFrame, cents: DataFrame, ride: Seq[String] = Nil): DataFrame =
     points
       .join(broadcast(cents))
-      .select(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"))
+      .select(
+        Seq(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2")) ++
+          ride.map(col): _*
+      )
 
-  /** The cell ranking: each vec_id's `n` nearest cells under the total
-    * order (d2 asc, cid asc). n = 1 (corpus assignment) is a map-side
-    * combinable `min_by`, no sort; n > 1 (query probes) is a per-id
-    * rank. Emits (vec_id, cid).
+  /** The cell ranking, the one argmin and probe order of the engine:
+    * each vec_id's `n` nearest cells under the total order (d2 asc, cid
+    * asc). n = 1 (corpus assignment) is a map-side combinable `min_by`,
+    * no sort, and the `ride` columns of the winning row come with it, so
+    * a payload needs no join back; n > 1 (query probes, multi-probe
+    * assignment) is a per-id rank, and its `ride` columns must be narrow
+    * (no vector rides a window sort). Emits (vec_id, cid, ride…).
     */
-  private def nearestCells(d: DataFrame, n: Int): DataFrame =
-    if (n == 1) d.groupBy(col("vec_id")).agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
+  private def nearestCells(d: DataFrame, n: Int, ride: Seq[String] = Nil): DataFrame =
+    if (n == 1)
+      d.groupBy(col("vec_id"))
+        .agg(min_by(struct(("cid" +: ride).map(col): _*), struct(col("d2"), col("cid"))).as("p"))
+        .select(col("vec_id") +: ("cid" +: ride).map(c => col(s"p.$c").as(c)): _*)
     else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id"))
         .orderBy(col("d2").asc, col("cid").asc)
-      d.withColumn("cr", row_number().over(w)).filter(col("cr") <= n).select(col("vec_id"), col("cid"))
+      d.withColumn("cr", row_number().over(w)).filter(col("cr") <= n).select(col("vec_id") +: ("cid" +: ride).map(col): _*)
     }
 
   /** Probed cells (qid, cid) of the `queries` rows of `vs` (vec_id, v). */
@@ -559,7 +568,7 @@ object Similarity {
 
   /** Banded LSH candidate pairs: split a |ps|-bit hyperplane signature
     * into `nBands` equal-width bands; candidates = vectors sharing any
-    * band value (an equi-join, never all-pairs), deduped before scoring.
+    * band value ([[Dedup.bandPairs]], never all-pairs), each pair once.
     *
     * Band width is the recall/candidate-volume dial, and it must WIDEN
     * with corpus size: a random pair collides per band with p = 2^-width,
@@ -579,19 +588,13 @@ object Similarity {
     val width = ps.length / nBands
     require(width < 64, "band width must leave headroom in a BIGINT")
     val mask = (1L << width) - 1
-    val sig = lshBuckets(emb, ps).select(col("vec_id"), col("bucket"))
-    val bands = sig.select(
-      col("vec_id"),
-      posexplode(
-        array((0 until nBands).map(b => shiftright(col("bucket"), width * b).bitwiseAND(lit(mask))): _*)
-      ).as(Seq("bi", "bv"))
-    )
-    bands
-      .select(col("vec_id").as("vid_a"), col("bi"), col("bv"))
-      .join(bands.select(col("vec_id").as("vid_b"), col("bi"), col("bv")), Seq("bi", "bv"))
-      .filter(col("vid_a") < col("vid_b"))
-      .select(col("vid_a"), col("vid_b"))
-      .distinct() // a pair can share several bands; score it once
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val bands = lshBuckets(emb, ps)
+      .select(col("vec_id"), col("bucket"))
+      .as[(Long, Long)]
+      .map { case (id, bucket) => id -> Array.tabulate(nBands)(b => (bucket >> (width * b)) & mask) }
+    Dedup.bandPairs(bands)((_, _) => 0L).select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"))
   }
 
   /** Embedding-cosine near-duplicate pairs: banded-LSH candidates
@@ -645,55 +648,30 @@ object Similarity {
     * Gate config uses the oracle-replayable deterministic centroids
     * (first `nList` vectors — the sim_ivf convention); production
     * swaps in [[kmeansParallel]] centroids, which changes WHERE pairs
-    * are compared, not the semantics. The threshold compares the
-    * ROUNDED cosine on both engines (artifact_mask precedent), and
-    * the argmin assignment rides the exact (d2, cid) struct order via
-    * one min_by aggregation (the [[nearestCells]] n = 1 shape — no rank window, no
-    * wide payload through a sort).
+    * are compared, not the semantics. The assignment is [[cellArgmin]]
+    * and the pair step [[cellDupPairs]].
     */
   def semDedup(emb: DataFrame, nList: Int = 16, tau: Double = 0.4): DataFrame = {
-    val vs = vecsN(emb)
-    val centsDf = vs
-      .filter(col("vec_id") < nList)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // one row per vector after the map-side-combinable argmin; the
-    // frame feeds both sides of the pair join AND the final verdict —
-    // eager-checkpoint before the fan-out (components() precedent)
-    val av = vs
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(centsDf))
-      .select(
-        col("vec_id"),
-        struct(
-          graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"),
-          col("cid")
-        ).as("key"),
-        struct(col("cid"), col("v"), col("nrm")).as("pay")
-      )
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("pay"), col("key")).as("pay"))
-      .select(
-        col("vec_id"),
-        col("pay.cid").as("cid"),
-        col("pay.v").as("v"),
-        col("pay.nrm").as("nrm")
-      )
-      .localCheckpoint()
-    val dropped = av
-      .select(col("cid"), col("vec_id").as("vid_a"), col("v").as("va"), col("nrm").as("na"))
-      .join(
-        av.select(col("cid"), col("vec_id").as("vid_b"), col("v").as("vb"), col("nrm").as("nb")),
-        Seq("cid")
-      )
-      .filter(col("vid_a") < col("vid_b"))
-      .select(col("vid_b"), round(cosExpr, 6).as("cos"))
-      .filter(col("cos") >= tau)
-      .select(col("vid_b").as("dropped"))
-      .distinct()
+    // the frame feeds both pair sides and the verdict: checkpoint it
+    val av = cellArgmin(emb, centroidFrame(vecsD(emb), nList, None)).localCheckpoint()
+    val dropped = cellDupPairs(av, tau).select(col("vid_b").as("dropped")).distinct()
     av.select(col("vec_id"), col("cid"))
       .join(dropped, col("vec_id") === col("dropped"), "left")
       .select(col("vec_id"), col("cid"), col("dropped").isNull.as("kept"))
   }
+
+  /** The within-cell near-duplicate pairs of an assignment frame
+    * (vec_id, cid, v, nrm): every cell-mate pair vid_a < vid_b whose
+    * rounded cosine reaches `tau`, as (vid_a, vid_b). The pair step of
+    * [[semDedup]] and [[semanticDupes]]; the threshold compares the
+    * ROUNDED cosine on both engines (artifact_mask precedent).
+    */
+  private def cellDupPairs(av: DataFrame, tau: Double): DataFrame =
+    av.select(col("cid"), col("vec_id").as("vid_a"), col("v").as("va"), col("nrm").as("na"))
+      .join(av.select(col("cid"), col("vec_id").as("vid_b"), col("v").as("vb"), col("nrm").as("nb")), Seq("cid"))
+      .filter(col("vid_a") < col("vid_b"))
+      .filter(round(cosExpr, 6) >= tau)
+      .select(col("vid_a"), col("vid_b"))
 
   /** D4-style cluster-proportional sampling (Tirumala et al. 2023 —
     * "D4: Improving LLM Pretraining via Document De-Duplication and
@@ -809,36 +787,17 @@ object Similarity {
     knnEdgesFrom(firstCells(emb, nList), k)
 
   /** Argmin cell assignment of every vector against a broadcast
-    * centroid frame — (vec_id, cid, v, nrm, d2), the min_by shape the
-    * semDedup/knnGraph family shares (no rank window, no wide payload
-    * through a sort). Checkpointed: every consumer fans out over it.
+    * centroid frame — (vec_id, cid, v, nrm, d2): [[nearestCells]] at
+    * n = 1 with the payload riding the `min_by`.
+    */
+  private def cellArgmin(emb: DataFrame, cents: DataFrame): DataFrame =
+    nearestCells(cellDists(vecsN(emb), cents, Seq("v", "nrm")), 1, Seq("v", "nrm", "d2"))
+
+  /** [[cellArgmin]] checkpointed for the k-NN and walk consumers, which
+    * all fan out over it.
     */
   private def cellAssign(emb: DataFrame, cents: DataFrame): DataFrame =
-    vecsN(emb)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .join(broadcast(cents))
-      .select(
-        col("vec_id"),
-        struct(
-          graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"),
-          col("cid")
-        ).as("key"),
-        struct(
-          col("cid"),
-          col("v"),
-          col("nrm"),
-          graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2")
-        ).as("pay")
-      )
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("pay"), col("key")).as("pay"))
-      .select(
-        col("vec_id"),
-        col("pay.cid").as("cid"),
-        col("pay.v").as("v"),
-        col("pay.nrm").as("nrm"),
-        col("pay.d2").as("d2")
-      )
+    cellArgmin(emb, cents)
       // r17: every consumer keys on cid (the in-cell pair self-join,
       // hierEdges' member×pivot joins, the entry-point groupBy) — land
       // the checkpoint pre-partitioned by cid so the self-join reads
@@ -851,31 +810,13 @@ object Similarity {
     * fragmentation (a latent neighborhood split across cells has no
     * single-cell pair group containing its true-neighbor pairs; with
     * nProbe ≥ 2 adjacent fragments co-occur in a shared cell).
-    * Candidate volume scales ~nProbe² per pair group.
+    * Candidate volume scales ~nProbe² per pair group. The ranking reads
+    * the narrow (vec_id, cid, d2) frame; the payload joins back after
+    * the prune. `vs` feeds both: checkpoint before the fan-out.
     */
   private def cellAssignMulti(emb: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    // rank on the NARROW (vec_id, cid, d2) frame only — the wide
-    // embedding array must not ride the window sort (the r10
-    // ivfPqTopkTrained spill lesson; r15 ADVICE fix) — and join the
-    // payload back after the prune. `vs` feeds both the distance
-    // compute and the payload join: checkpoint before the fan-out.
-    val vs = vecsN(emb)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .localCheckpoint()
-    val picks = vs
-      .join(broadcast(cents))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2")
-      )
-      .withColumn("cr", row_number().over(w))
-      .filter(col("cr") <= nProbe)
-      .select(col("vec_id"), col("cid"), col("d2"))
-    picks
+    val vs = vecsN(emb).select(col("vec_id"), col("v"), col("nrm")).localCheckpoint()
+    nearestCells(cellDists(vs, cents), nProbe, Seq("d2"))
       .join(vs, Seq("vec_id"))
       .select(col("vec_id"), col("cid"), col("v"), col("nrm"), col("d2"))
       .localCheckpoint()
@@ -1018,7 +959,7 @@ object Similarity {
 
   /** Cell assignment against the first `nList` vectors as centroids. */
   private def firstCells(emb: DataFrame, nList: Int): DataFrame =
-    cellAssign(emb, vecsN(emb).filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv")))
+    cellAssign(emb, centroidFrame(vecsD(emb), nList, None))
 
   /** Walk edges (vid_a, vid_b) over an assignment frame: the in-cell
     * k-NN edges, with the in-cell hierarchy ([[hierEdges]]) unioned in
@@ -1142,13 +1083,7 @@ object Similarity {
       kDown: Int = 4,
       sq8: Boolean = false
   ): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }
-      .toSeq
-      .toDF("cid", "cv")
-      .localCheckpoint() // feeds assignment AND query probing
+    val centsDf = centroidFrame(emb, 0, Some(cents)).localCheckpoint() // feeds assignment AND query probing
     val av =
       if (nProbeBuild <= 1) cellAssign(emb, centsDf)
       else cellAssignMulti(emb, centsDf, nProbeBuild)
@@ -1250,17 +1185,12 @@ object Similarity {
         graft.functions.exprs.sq_dist(col("v"), col("pv")).as("d2")
       )
       .localCheckpoint() // feeds up-links AND down-links
-    val up = mp
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("pid"), struct(col("d2"), col("pid"))).as("pid"))
-      .select(col("vec_id").as("vid_a"), col("pid").as("vid_b"))
-    val wPiv = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid"))
-      .orderBy(col("d2").asc, col("vec_id").asc)
-    val down = mp
-      .withColumn("rn", row_number().over(wPiv))
-      .filter(col("rn") <= kDown)
-      .select(col("pid").as("vid_a"), col("vec_id").as("vid_b"))
+    // both link sets are the cell ranking with pivots as cells: up-links
+    // rank each member's pivots, down-links each pivot's members
+    val up = nearestCells(mp.select(col("vec_id"), col("pid").as("cid"), col("d2")), 1)
+      .select(col("vec_id").as("vid_a"), col("cid").as("vid_b"))
+    val down = nearestCells(mp.select(col("pid").as("vec_id"), col("vec_id").as("cid"), col("d2")), kDown)
+      .select(col("vec_id").as("vid_a"), col("cid").as("vid_b"))
     val pedges = pvecs
       .select(col("cid"), col("pid").as("pa"))
       .join(pvecs.select(col("cid"), col("pid").as("pb")), Seq("cid"))
@@ -2129,14 +2059,21 @@ object Similarity {
     * the index size. The spec pins: view ≡ rebuild-minus-deleted,
     * cold-cell file immutability under compaction, and view
     * invariance across the compaction.
+    *
+    * The sidecar is a [[graft.core.Scale.publish]]ed table: compaction
+    * swaps its rewrite in, readers go through `Scale.readPublished`, and
+    * an append first recovers a swap a crash interrupted (appending into
+    * the missing live path would recreate it, and the next recovery
+    * would then discard the aside copies).
     */
   def annDelete(ids: DataFrame, tombDir: String): Unit = {
+    graft.core.Scale.recoverCompaction(ids.sparkSession, tombDir)
     ids.select(col("vec_id")).write.mode("append").parquet(tombDir)
     ()
   }
 
   def annServeView(spark: SparkSession, base: String, tombDir: String): DataFrame =
-    spark.read.parquet(base).join(spark.read.parquet(tombDir), Seq("vec_id"), "left_anti")
+    spark.read.parquet(base).join(graft.core.Scale.readPublished(spark, tombDir), Seq("vec_id"), "left_anti")
 
   def annCompact(
       spark: SparkSession,
@@ -2145,9 +2082,9 @@ object Similarity {
       minDeletedShare: Double = 0.3
   ): Seq[Long] = {
     val store = spark.read.parquet(base)
-    val tombs = spark.read.parquet(tombDir).localCheckpoint()
+    val tombs = graft.core.Scale.readPublished(spark, tombDir).localCheckpoint()
     val per = store
-      .join(spark.read.parquet(tombDir).withColumn("del", lit(true)), Seq("vec_id"), "left")
+      .join(tombs.withColumn("del", lit(true)), Seq("vec_id"), "left")
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), sum(when(col("del"), 1L).otherwise(0L)).as("nd"))
     // nd < n: a FULLY-dead cell has no live rows for dynamic overwrite
@@ -2171,14 +2108,8 @@ object Similarity {
         .localCheckpoint()
       val retired = store.filter(col("cid").isin(hot: _*)).select(col("vec_id"))
       val remaining = tombs.join(retired, Seq("vec_id"), "left_anti").localCheckpoint()
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try live.write.partitionBy("cid").mode("overwrite").parquet(base)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      remaining.write.mode("overwrite").parquet(tombDir)
+      live.write.partitionBy("cid").mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(base)
+      graft.core.Scale.publish(spark, tombDir)(remaining)
     }
     hot
   }
@@ -2237,13 +2168,7 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("cid_new").as("cid"))
         .localCheckpoint() // materialize before overwriting what it reads
       val populated = newMembers.select(col("cid")).distinct().collect().map(_.getLong(0)).toSet
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try newMembers.write.partitionBy("cid").mode("overwrite").parquet(base)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      newMembers.write.partitionBy("cid").mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(base)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       touched.filterNot(populated).foreach { cid =>
@@ -2330,38 +2255,10 @@ object Similarity {
       tau: Double = 0.4,
       nList: Int = 16,
       centroids: Option[Array[Array[Double]]] = None
-  ): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val vs = vecsN(emb)
-    val cents = centroids match {
-      case Some(cs) =>
-        cs.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv")
-      case None => vs.filter(col("vec_id") < nList).select(col("vec_id").as("cid"), col("v").as("cv"))
-    }
-    val d = vs
-      .join(broadcast(cents))
-      .select(
-        col("vec_id"),
-        col("cid"),
-        graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2")
-      )
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc, col("cid").asc)
-    val assign = d
-      .select(col("vec_id"), col("cid"), row_number().over(w).as("cr"))
-      .filter(col("cr") === 1)
-      .select(col("vec_id"), col("cid"))
-    val sides = assign.join(vs, Seq("vec_id"))
-    val a = sides.select(col("cid"), col("vec_id").as("dup_of"), col("v").as("va"), col("nrm").as("na"))
-    val b = sides.select(col("cid"), col("vec_id"), col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("cid"))
-      .filter(col("dup_of") < col("vec_id"))
-      .filter(round(cosExpr, 6) >= tau)
-      .groupBy(col("vec_id"))
-      .agg(min(col("dup_of")).as("dup_of"), count(lit(1)).as("n_near"))
-  }
+  ): DataFrame =
+    cellDupPairs(cellArgmin(emb, centroidFrame(vecsD(emb), nList, centroids)), tau)
+      .groupBy(col("vid_b").as("vec_id"))
+      .agg(min(col("vid_a")).as("dup_of"), count(lit(1)).as("n_near"))
 
   def semanticDupesSql(tau: Double = 0.4, nList: Int = 16): String = {
     val d2 = d2Sql("a.v", "c.cv")

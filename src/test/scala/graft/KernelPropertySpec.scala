@@ -345,6 +345,175 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  // ---- the near-duplicate candidate layer: every banded screen under
+  // bandPairs and every cell assignment under nearestCells, each against
+  // the self-join or rank-window form it replaced ----
+
+  /** The banded self-join every screen used to hand-roll: (id, bi, bv)
+    * rows joined on (bi, bv), each pair a < b once after a distinct.
+    */
+  private def bandSelfJoin(bands: org.apache.spark.sql.DataFrame, a: String, b: String) =
+    bands
+      .select(col("id").as(a), col("bi"), col("bv"))
+      .join(bands.select(col("id").as(b), col("bi"), col("bv")), Seq("bi", "bv"))
+      .filter(col(a) < col(b))
+      .select(col(a), col(b))
+
+  /** Pairs sharing exactly one band and pairs sharing several: the
+    * lowest-shared-band rule is exercised only when both occur.
+    */
+  private def assertBandOverlap(bands: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val shared = bandSelfJoin(bands, "a", "b").groupBy("a", "b").count()
+    assert(shared.filter(col("count") === 1).count() > 0, s"$what: no pair shares exactly one band")
+    assert(shared.filter(col("count") > 1).count() > 0, s"$what: no pair shares several bands")
+  }
+
+  /** The gate embeddings plus near-copies of the first 40 vectors, each
+    * nudged in a few coordinates: near-copies share some hyperplane bands,
+    * not all.
+    */
+  private lazy val dupeEmbeddings = {
+    val emb = core.Tables.embeddings(spark, sf)
+    val rnd = new scala.util.Random(5)
+    val copies = emb.filter(col("vec_id") < 40).collect().toSeq.map { r =>
+      val v = r.getSeq[Float](1).toArray
+      (0 until 1 + r.getLong(0).toInt % 4).foreach(_ => v(rnd.nextInt(v.length)) += 0.05f * rnd.nextGaussian().toFloat)
+      (r.getLong(0) + 100000L, v.toSeq, r.getInt(2))
+    }
+    emb.unionByName(copies.toDF("vec_id", "embedding", "label"))
+  }
+
+  test("embedDupeCandidates (bandPairs) equals the banded self-join form") {
+    import graft.llm.Similarity
+    for ((ps, nBands) <- Seq((Similarity.planes, 2), (Similarity.planes64, 4))) {
+      val width = ps.length / nBands
+      val bands = Similarity
+        .lshBuckets(dupeEmbeddings, ps)
+        .select(
+          col("vec_id").as("id"),
+          posexplode(array((0 until nBands).map(b => shiftright(col("bucket"), width * b).bitwiseAND(lit((1L << width) - 1))): _*))
+            .as(Seq("bi", "bv"))
+        )
+      assertBandOverlap(bands, s"${ps.length} planes")
+      sameRows(
+        Similarity.embedDupeCandidates(dupeEmbeddings, ps, nBands),
+        bandSelfJoin(bands, "vid_a", "vid_b").distinct(),
+        s"embedDupeCandidates(${ps.length} planes, $nBands bands)"
+      )
+    }
+  }
+
+  test("hashEmbedDupes candidates (bandPairs) equal the banded self-join form") {
+    import graft.llm.{Dedup, TextStats}
+    val docs = core.Tables.documents(spark, sf).select("doc_id", "text")
+    val wi = TextStats
+      .hashEmbed(docs, 64)
+      .select(col("doc_id"), col("bucket"), expr("CAST(floor(weight * 1.0e6 + 0.5e0) AS BIGINT)").as("s"))
+    val (_, sig) =
+      Dedup.gridBandSignatures(docs.select(col("doc_id")).distinct(), wi, Seq("doc_id"), 64, Dedup.hePlanes, Dedup.heBands)
+    val bands = sig.select(
+      col("doc_id").as("id"),
+      posexplode(array((0 until Dedup.heBands).map(j => col(s"bv$j")): _*)).as(Seq("bi", "bv"))
+    )
+    assertBandOverlap(bands, "hashEmbedDupes")
+    // every candidate scores a cosine ≥ −1, so at tau = −2 the output is
+    // the whole candidate set
+    sameRows(
+      Dedup.hashEmbedDupes(docs, tau = -2.0).select(col("doc_a"), col("doc_b")),
+      bandSelfJoin(bands, "doc_a", "doc_b").distinct(),
+      "hashEmbedDupes candidates"
+    )
+  }
+
+  test("phashPairs and wavFpPairs (bandPairs) equal the first-matching-chunk join form") {
+    import graft.llm.Multimodal
+    // the distinct-signature join sigPairs64 ran before bandPairs: each
+    // signature pair once, in the first chunk the two share
+    def ref(sig: org.apache.spark.sql.DataFrame, maxHamming: Int) = {
+      val s = sig.toDF("media_id", "hi", "lo")
+      val sigs = s.groupBy(col("hi"), col("lo")).agg(min(col("media_id")).as("rep"))
+      val mem = s.join(sigs, Seq("hi", "lo")).select(col("rep"), col("media_id"))
+      val chunked = sigs.select(
+        col("rep"), col("hi"), col("lo"),
+        posexplode(array(
+          shiftright(col("hi"), 16), col("hi").bitwiseAND(lit(65535L)),
+          shiftright(col("lo"), 16), col("lo").bitwiseAND(lit(65535L))
+        )).as(Seq("ci", "chunk"))
+      )
+      val xh = col("hi_a").bitwiseXOR(col("hi_b"))
+      val xl = col("lo_a").bitwiseXOR(col("lo_b"))
+      val eq0 = shiftright(xh, 16) === 0L
+      val eq1 = xh.bitwiseAND(lit(65535L)) === 0L
+      val eq2 = shiftright(xl, 16) === 0L
+      val firstMatch = (col("ci") === 0) or (col("ci") === 1 && !eq0) or
+        (col("ci") === 2 && !eq0 && !eq1) or (col("ci") === 3 && !eq0 && !eq1 && !eq2)
+      val sigPairs = chunked
+        .select(col("rep").as("rep_a"), col("hi").as("hi_a"), col("lo").as("lo_a"), col("ci"), col("chunk"))
+        .join(chunked.select(col("rep").as("rep_b"), col("hi").as("hi_b"), col("lo").as("lo_b"), col("ci"), col("chunk")), Seq("ci", "chunk"))
+        .filter(col("rep_a") < col("rep_b") && firstMatch)
+        .select(
+          col("rep_a"), col("rep_b"), (bit_count(xh) + bit_count(xl)).cast("long").as("hamming"),
+          Seq(eq0, eq1, eq2, xl.bitwiseAND(lit(65535L)) === 0L).map(e => when(e, 1).otherwise(0)).reduce(_ + _).as("shared")
+        )
+        .filter(col("hamming") <= maxHamming)
+      val intra = mem.as("x").join(mem.as("y"), col("x.rep") === col("y.rep") && col("x.media_id") < col("y.media_id"))
+        .select(col("x.media_id").as("media_a"), col("y.media_id").as("media_b"), lit(0L).as("hamming"))
+      val inter = sigPairs
+        .join(mem.select(col("rep").as("rep_a"), col("media_id").as("id_a")), Seq("rep_a"))
+        .join(mem.select(col("rep").as("rep_b"), col("media_id").as("id_b")), Seq("rep_b"))
+        .select(least(col("id_a"), col("id_b")).as("media_a"), greatest(col("id_a"), col("id_b")).as("media_b"), col("hamming"))
+      (intra.unionByName(inter), sigPairs.filter(col("hamming") > 0 && col("shared") > 1))
+    }
+    val cases = Seq(
+      ("phashPairs", Multimodal.phash(Multimodal.pngMedia(spark, sf)), Multimodal.phashPairs _, Multimodal.pngMedia(spark, sf)),
+      ("wavFpPairs", Multimodal.wavFingerprint(Multimodal.wavMediaText(spark, sf)), Multimodal.wavFpPairs _, Multimodal.wavMediaText(spark, sf))
+    )
+    for ((what, sig, pairs, media) <- cases; h <- Seq(3, 12)) {
+      val (r, several) = ref(sig, h)
+      // distinct signatures sharing several chunks exercise the lowest-
+      // shared-band rule
+      if (h == 12) assert(several.count() > 0, s"$what: no inexact signature pair shares several chunks")
+      sameRows(pairs(media, h), r, s"$what(maxHamming = $h)")
+    }
+  }
+
+  test("semanticDupes (nearestCells) equals the row_number assignment form") {
+    import graft.llm.Similarity
+    val emb = dupeEmbeddings
+    // the rank-window assignment and pair step semanticDupes ran before
+    // nearestCells, against centroid frame `cents` (cid, cv)
+    def ref(cents: org.apache.spark.sql.DataFrame, tau: Double) = {
+      val vs = emb.select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+        .withColumn("nrm", sqrt(graft.functions.exprs.dot_d(col("v"), col("v"))))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
+      val assign = vs.join(broadcast(cents))
+        .select(col("vec_id"), col("cid"), graft.functions.exprs.sq_dist(col("v"), col("cv")).as("d2"))
+        .select(col("vec_id"), col("cid"), row_number().over(w).as("cr"))
+        .filter(col("cr") === 1)
+        .select(col("vec_id"), col("cid"))
+      val sides = assign.join(vs, Seq("vec_id"))
+      sides.select(col("cid"), col("vec_id").as("dup_of"), col("v").as("va"), col("nrm").as("na"))
+        .join(sides.select(col("cid"), col("vec_id"), col("v").as("vb"), col("nrm").as("nb")), Seq("cid"))
+        .filter(col("dup_of") < col("vec_id"))
+        .filter(round(graft.functions.exprs.dot_d(col("va"), col("vb")) / (col("na") * col("nb")), 6) >= tau)
+        .groupBy(col("vec_id"))
+        .agg(min(col("dup_of")).as("dup_of"), count(lit(1)).as("n_near"))
+    }
+    val first = emb.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), transform(col("embedding"), x => x.cast("double")).as("cv"))
+    val trained = Similarity.kmeansParallel(emb, 8)
+    // a repeated centroid ties every d2 to it: the cid tie-break decides
+    val tied = trained :+ trained(0)
+    val tiedDf = tied.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }.toSeq.toDF("cid", "cv")
+    for ((what, got, r) <- Seq(
+        ("first 16 cells", Similarity.semanticDupes(emb), ref(first, 0.4)),
+        ("trained cells", Similarity.semanticDupes(emb, centroids = Some(tied)), ref(tiedDf, 0.4))
+      )) {
+      assert(r.filter(col("n_near") > 1).count() > 0, s"$what: no vector with several near cell-mates")
+      sameRows(got, r, s"semanticDupes($what)")
+    }
+  }
+
   test("curate's count kernel equals the regexp quality form") {
     import graft.llm.Curation
     val splitRef = {

@@ -222,6 +222,44 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 
+  // The banded screens run through Dedup.bandPairs: one exchange on
+  // (band, key) and a per-bucket scan emitting each pair once. In the plan
+  // of every action such a gate runs, construction-time checkpoints
+  // included, no join is keyed on a band column and no aggregate groups
+  // by exactly a pair's two ids (the distinct after a self-join).
+  test("banded near-dup screens plan no band self-join and no pair distinct") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val bandCols = Set("bi", "ci", "band")
+    val pairCols = Seq(Set("vid_a", "vid_b"), Set("doc_a", "doc_b"), Set("rep_a", "rep_b"), Set("media_a", "media_b"))
+    def names(es: Seq[Expression]): Seq[String] = es.flatMap(_.collect { case a: Attribute => a.name })
+    def offenders(name: String, plans: Seq[SparkPlan]): Seq[String] =
+      plans.flatMap(SparkProbe.nodes).collect {
+        case j: HashJoin if names(j.leftKeys ++ j.rightKeys).exists(bandCols) => s"$name: ${j.nodeName} on a band column"
+        case j: SortMergeJoinExec if names(j.leftKeys ++ j.rightKeys).exists(bandCols) => s"$name: ${j.nodeName} on a band column"
+        case a: BaseAggregateExec if a.groupingExpressions.nonEmpty && pairCols.contains(names(a.groupingExpressions).toSet) =>
+          s"$name: ${a.nodeName} by the pair columns"
+      }.distinct
+    val bands = Seq((1L, 0, 5L), (2L, 0, 5L)).toDF("doc_id", "bi", "bv")
+    val probe = bands.select(col("doc_id").as("doc_a"), col("bi"), col("bv"))
+      .join(bands.select(col("doc_id").as("doc_b"), col("bi"), col("bv")), Seq("bi", "bv"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b")
+      .distinct()
+    assert(offenders("probe", Seq(probe.queryExecution.executedPlan)).size == 2, "matcher is stale: misses the banded self-join")
+    val bad = Seq(
+      "dedup_embed", "dedup_hash_embed", "mm_phash_pairs", "mm_wav_fp_pairs", "dedup_minhash", "dedup_simhash_pairs"
+    ).flatMap { name =>
+      val (df, plans) = SparkProbe.actionPlans(SparkEntry.queries(name)(spark, sf))
+      offenders(name, plans :+ df.queryExecution.executedPlan)
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   // The wide-payload rule, mechanical: a ranking window sorts
   // (key, id, metric) only — embedding or code arrays join back after
   // the prune. Checked on every action a flat ANN gate runs, the

@@ -113,6 +113,57 @@ class StreamServeSpec extends AnyFunSuite {
     assert(spark.read.parquet(tomb).count() == 0L)
   }
 
+  // A crash between the two renames of the tombstone rewrite leaves no
+  // live sidecar: the old tombstones at `.prev` and, when the rewrite
+  // had completed, its table at `.next`. Serving must read that state in
+  // place, a delete must recover it before appending, and compaction
+  // must publish over it — deleted vectors never come back.
+  test("ANN delete cadence survives a tombstone rewrite interrupted between its renames") {
+    import spark.implicits._
+    val emb = core.Tables.embeddings(spark, sf)
+    val cents = emb
+      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
+      .filter(col("vec_id") < 16)
+      .orderBy(col("vec_id"))
+      .collect()
+      .map(_.getSeq[Double](1).toArray)
+    val assigned = graft.llm.Similarity.ivfAssign(emb, cents).localCheckpoint()
+    val hotCid = assigned.groupBy(col("cid")).count().orderBy(col("count").desc, col("cid").asc).head.getLong(0)
+    val doomed = assigned
+      .filter(col("cid") === hotCid)
+      .select(col("vec_id"))
+      .orderBy(col("vec_id"))
+      .collect()
+      .map(_.getLong(0))
+      .zipWithIndex
+      .collect { case (id, i) if i % 2 == 0 => id }
+    val (first, later) = doomed.splitAt(doomed.length / 2)
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    def canon(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
+    def minus(ids: Seq[Long]) = canon(assigned.filter(!col("vec_id").isInCollection(ids)))
+    for (nextDone <- Seq(true, false); deleteFirst <- Seq(true, false)) {
+      val tag = s"${if (nextDone) "next" else "prev"}_${if (deleteFirst) "delete" else "compact"}"
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_tomb_window_$tag").toString
+      val (base, tomb) = (s"$dir/store", s"$dir/t")
+      val fs = path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assigned.write.partitionBy("cid").mode("overwrite").parquet(base)
+      graft.llm.Similarity.annDelete(first.toSeq.toDF("vec_id"), tomb)
+      assert(fs.rename(path(tomb), path(s"$tomb.prev")))
+      if (nextDone) graft.llm.Similarity.annDelete(first.toSeq.toDF("vec_id"), s"$tomb.next")
+      assert(!fs.exists(path(tomb)))
+      assert(canon(graft.llm.Similarity.annServeView(spark, base, tomb)) == minus(first), tag)
+      val deleted = if (deleteFirst) {
+        graft.llm.Similarity.annDelete(later.toSeq.toDF("vec_id"), tomb)
+        assert(canon(graft.llm.Similarity.annServeView(spark, base, tomb)) == minus(doomed), tag)
+        doomed.toSeq
+      } else first.toSeq
+      graft.llm.Similarity.annCompact(spark, base, tomb, minDeletedShare = 0.1)
+      assert(canon(graft.llm.Similarity.annServeView(spark, base, tomb)) == minus(deleted), tag)
+      assert(canon(spark.read.parquet(base)) == minus(deleted), s"$tag: compaction left deleted rows in the store")
+      assert(!fs.exists(path(s"$tomb.prev")) && !fs.exists(path(s"$tomb.next")), s"$tag: swap debris")
+    }
+  }
+
   test("annRetrain: view equals a full rebuild under the new centroids; untouched cells keep their files") {
     val emb = core.Tables.embeddings(spark, sf)
     val vd = emb.select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
